@@ -53,10 +53,6 @@ LAYER_KEYS = (
 )
 
 
-def _progress(p, key: str):
-    return p[key] if isinstance(p, dict) else getattr(p, key)
-
-
 class _Layers:
     """Installs the traced run's wrappers on the public functions the
     round goes through and turns the spans into per-round numbers."""
@@ -255,8 +251,8 @@ def run(bench) -> dict:
             "visible_ms": visible_ms, "drain_s": drain_s,
         }
         if traced:
-            progress = [p for p in query.recentProgress if _progress(p, "numInputRows")]
-            dur = [_progress(p, "durationMs") for p in progress]
+            progress = [p for p in query.recentProgress if p.numInputRows]
+            dur = [p.durationMs for p in progress]
             drain = {
                 "streaming.drain_ms": drain_s * 1000.0,
                 "streaming.batches": len(progress),
