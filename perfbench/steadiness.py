@@ -6,8 +6,8 @@
 Runs ``perfbench/run.py`` once per seed (1..runs) for each workload,
 one run at a time, and writes per workload and metric the median,
 quartiles (``statistics.quantiles(values, n=4)``) and IQR/median, plus
-each run's record (environment, host diagnostics, sample counts), to
-``--out`` (JSON). Exits non-zero if any
+each run's record (environment, host diagnostics, sample counts), as
+one more entry of ``"sets"`` in ``--out`` (JSON). Exits non-zero if any
 run fails or reports failed operations.
 """
 
@@ -51,7 +51,9 @@ def main() -> int:
     ap.add_argument("--out", default=os.path.join(ROOT, ".perfbench_work", "steadiness.json"))
     args = ap.parse_args()
 
-    report = {"seconds": args.seconds, "trace": args.trace, "workloads": {}}
+    report = {"seconds": args.seconds, "trace": args.trace,
+              "seeds": [args.first_seed, args.first_seed + args.runs - 1],
+              "workloads": {}}
     ok = True
     for w in args.workload or WORKLOADS:
         runs = []
@@ -74,8 +76,12 @@ def main() -> int:
             "spread": {m: common.spread([r["metrics"][m] for r in runs]) for m in names},
         }
     os.makedirs(os.path.dirname(os.path.abspath(args.out)), exist_ok=True)
+    sets = []
+    if os.path.exists(args.out):  # keep earlier sets: their medians are compared
+        with open(args.out) as fh:
+            sets = json.load(fh)["sets"]
     with open(args.out, "w") as fh:
-        json.dump(report, fh, indent=1)
+        json.dump({"sets": sets + [report]}, fh, indent=1)
     for w, rep in report["workloads"].items():
         for m, s in rep["spread"].items():
             print(f"{w:13s} {m:12s} median {s['median']:10.4f}  IQR/median {s['iqr_over_median']:.3f}")
