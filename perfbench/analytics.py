@@ -9,6 +9,11 @@ reuses its shuffle outputs and skips its map stages.
 Every result is compared with the digest of the query's DuckDB oracle
 (``registry.ORACLES``) on the same generated files, using the
 oracle-parity normalisation.
+
+The per-operation figure ``op_ms`` is the geometric mean over the seven
+queries of each query's median latency across the timed passes, so a
+change to any one query moves it by its share (a median over all
+latencies would follow whichever query ranks fourth).
 """
 
 from __future__ import annotations
@@ -33,18 +38,22 @@ HEADLINE = (
 )
 TABLES = ("nation", "customer", "orders", "lineitem", "events")
 # Untimed passes after the cold one. Warm-up is a fixed amount of work,
-# not a fixed time, so moving work into it shows in setup_s. JIT
-# compilation keeps one to two CPUs busy for the first ~14 passes (on
-# 4 CPUs the median of passes 9-14 ranged 1.71-2.32 s across four
-# processes, that of passes 15-20 only 1.76-1.83 s), but that much
-# warm-up does not fit the per-run time budget.
-WARMUP_PASSES = 5
-
-LAYER_KEYS = (
-    "operators.build_ms", "plan.analysis_ms", "plan.optimization_ms",
-    "plan.planning_ms", "exec.jobs", "exec.stages", "exec.tasks",
-    "exec.task_run_ms", "exec.shuffle_write_bytes", "exec.spill_bytes",
-    *layers.PY_METRICS.values(),
+# not a fixed time, so moving work into it shows in setup_s. On 4 CPUs
+# a pass takes ~8 s cold, ~3.5 s next and ~1.8 s from the fifth on,
+# while JIT compilation falls from ~7 s to ~1 s of CPU per pass and
+# keeps falling slowly for another ~15 passes; those do not fit the
+# run budget (jvm.jit_ms_window in the run record shows what is left).
+WARMUP_PASSES = 4
+# Layers no headline query reaches: no Python worker, no service,
+# pipeline, streaming or fact-table writes.
+UNREACHED = (
+    "python.bytes_sent", "python.bytes_received", "python.boot_ms",
+    "service.share_lookup_jobs", "pipeline.catalog_ms",
+    "streaming.drain_ms", "streaming.batches", "streaming.jobs_per_drain",
+    "streaming.add_batch_ms", "streaming.latest_offset_ms",
+    "streaming.wal_commit_ms", "writers.append_ms", "writers.compact_ms",
+    "writers.compactions", "writers.read_snapshot_ms", "writers.fact_files",
+    "writers.bytes_per_doc",
 )
 
 
@@ -84,8 +93,10 @@ def run(bench) -> dict:
     results: list[tuple[str, str | None]] = []  # (query, digest or None)
 
     def one_pass(traced: bool) -> dict:
-        op_ms, lay = [], dict.fromkeys(LAYER_KEYS, 0.0)
-        for _, q in HEADLINE:
+        by_query, lay = {}, {}
+        if traced:
+            compiles = counters.codegen_compiles()
+        for name, q in HEADLINE:
             if traced:
                 first_job = counters.next_job_id()
                 tracer.op = f"{len(results)}:{q}"
@@ -101,16 +112,18 @@ def run(bench) -> dict:
                 results.append((q, None))
                 bench.tally.record(False, f"{q}: {type(e).__name__}: {e}")
                 continue
-            op_ms.append((c - a) * 1000.0)
+            by_query[name] = (c - a) * 1000.0
             results.append((q, common.frame_digest(pdf)))
             if traced:
-                lay["operators.build_ms"] += (b - a) * 1000.0
-                for part in (layers.plan_phases(df), counters.jobs_since(first_job),
-                             counters.python_since_mark()):
+                parts = ({"operators.build_ms": (b - a) * 1000.0},
+                         layers.plan_phases(df), counters.jobs_since(first_job))
+                for part in parts:
                     for k, v in part.items():
-                        lay[k] += v
-        out = {"seconds": sum(op_ms) / 1000.0, "op_ms": op_ms}
+                        lay[k] = lay.get(k, 0.0) + v
+        out = {"seconds": sum(by_query.values()) / 1000.0,
+               "op_ms": list(by_query.values()), "by_query": by_query}
         if traced:
+            lay["plan.codegen_compiles"] = counters.codegen_compiles() - compiles
             out["layers"] = lay
         return out
 
@@ -126,9 +139,12 @@ def run(bench) -> dict:
     for q, digest in results:
         if digest is not None:
             bench.tally.record(digest == oracle[q], f"{q}: result digest differs from oracle")
-    if all(len(p["op_ms"]) == len(HEADLINE) for p in plain):
-        bench.record["per_query_ms_p50"] = {
-            name: statistics.median(p["op_ms"][i] for p in plain)
-            for i, (name, _) in enumerate(HEADLINE)
-        }
-    return bench.metrics(plain, traced, len(HEADLINE))
+    per_query = {
+        name: statistics.median(p["by_query"][name] for p in plain if name in p["by_query"])
+        for name, _ in HEADLINE
+    }
+    bench.record["per_query_ms_p50"] = per_query
+    return bench.metrics(
+        plain, traced, len(HEADLINE),
+        op_ms=statistics.geometric_mean(per_query.values()), unreached=UNREACHED,
+    )

@@ -23,13 +23,13 @@ import pandas as pd
 
 E2E_UNITS = {
     "setup_s": "s",
-    "op_ms_p50": "ms",
+    "op_ms": "ms",
     "ops_per_s": "1/s",
 }
 
 # Per pass of the workload's operation mix, means over the traced
 # passes, unless the name says otherwise; 0 where the workload does not
-# reach the layer.
+# reach the layer (each workload lists those layers as UNREACHED).
 LAYER_UNITS = {
     "session.start_s": "s",
     "catalog.cache_fill_s": "s",
@@ -37,6 +37,7 @@ LAYER_UNITS = {
     "plan.analysis_ms": "ms",
     "plan.optimization_ms": "ms",
     "plan.planning_ms": "ms",
+    "plan.codegen_compiles": "count",
     "exec.jobs": "count",
     "exec.stages": "count",
     "exec.tasks": "count",

@@ -30,6 +30,9 @@ import layers
 N_TENANTS = 4
 DOCS_PER_TENANT = 3
 # Untimed rounds after the cold one (fixed work, see analytics.py).
+# JIT compilation is still ~4 s of CPU per ~4 s round in the window
+# (jvm.jit_ms_window), with three warm-up rounds as with one; warming
+# up until it settles would take far more rounds than fit a run.
 WARMUP_ROUNDS = 1
 KPI_META = [
     {"name": "Total Amount ($)", "sample_value": "$1.00", "type": "number"},
@@ -39,23 +42,15 @@ CATALOG_METHODS = (
     "create_folder", "folders", "get_folder", "resolve_folder_for_read",
     "add_share", "shares", "effective_share", "can_read",
 )
-LAYER_KEYS = (
-    "plan.analysis_ms", "plan.optimization_ms", "plan.planning_ms",
-    "exec.jobs", "exec.stages", "exec.tasks", "exec.task_run_ms",
-    "exec.shuffle_write_bytes", "exec.spill_bytes",
-    *layers.PY_METRICS.values(),
-    "service.share_lookup_jobs", "pipeline.catalog_ms",
-    "streaming.drain_ms", "streaming.batches", "streaming.jobs_per_drain",
-    "streaming.add_batch_ms", "streaming.latest_offset_ms",
-    "streaming.wal_commit_ms", "writers.append_ms", "writers.compact_ms",
-    "writers.compactions", "writers.read_snapshot_ms", "writers.fact_files",
-    "writers.bytes_per_doc",
-)
+# Layers no round reaches: no table cache fill, no registry operator.
+UNREACHED = ("catalog.cache_fill_s", "operators.build_ms")
 
 
 class _Layers:
     """Installs the traced run's wrappers on the public functions the
-    round goes through and turns the spans into per-round numbers."""
+    round goes through and turns the spans into per-round numbers.
+    Compactions come every few rounds, so they are timed in every
+    round of the window, traced or not."""
 
     def __init__(self, bench, facts: str):
         from pdf_etl_engine_spark import pipeline
@@ -66,16 +61,28 @@ class _Layers:
         self.tracer = tr = bench.tracer
         self.read_dfs: list = []
         self.share_jobs = 0
+        self.compact_ms: list[float] = []
         counters = bench.counters
 
         for m in CATALOG_METHODS:
             tr.wrap(pipeline.Catalog, m, f"pipeline.catalog.{m}")
         tr.wrap(pipeline, "latest_folder_metas", "pipeline.catalog.latest_folder_metas")
         tr.wrap(writers, "append_rows", "writers.append")
-        tr.wrap(writers, "compact_fact_table", "writers.compact")
         tr.wrap(writers, "read_fact_table", "writers.read_snapshot")
 
         outer = self
+
+        def time_compaction(compact):
+            def compact_fact_table(*a, **kw):
+                idx = tr.open("writers.compact")
+                t0 = time.perf_counter()
+                try:
+                    return compact(*a, **kw)
+                finally:
+                    outer.compact_ms.append((time.perf_counter() - t0) * 1000.0)
+                    tr.close(idx)
+
+            return compact_fact_table
 
         def count_share_jobs(share):
             def effective_share(*a, **kw):
@@ -98,32 +105,35 @@ class _Layers:
 
             return capture
 
+        tr.patch(writers, "compact_fact_table", time_compaction)
         tr.patch(pipeline.Catalog, "effective_share", count_share_jobs)
         tr.patch(pipeline, "read_results", keep_frame)
 
-    def round_layers(self, op, first_job: int, drain: dict, n_docs: int) -> dict:
+    def round_layers(self, op, first_job: int, compiles: int, drain: dict,
+                     n_docs: int) -> dict:
+        """Layer numbers of one traced round. A public function the
+        round should have called but did not is left out, which fails
+        the run."""
         from pdf_etl_engine_spark.sources import writers
 
         counters = self.bench.counters
-        lay = dict.fromkeys(LAYER_KEYS, 0.0)
-        lay.update(counters.jobs_since(first_job))
+        lay = counters.jobs_since(first_job)
         lay.update(counters.python_since_mark())
+        lay["plan.codegen_compiles"] = counters.codegen_compiles() - compiles
         for df in self.read_dfs:
             for k, v in layers.plan_phases(df).items():
-                lay[k] += v
+                lay[k] = lay.get(k, 0.0) + v
         self.read_dfs.clear()
         lay["service.share_lookup_jobs"] = self.share_jobs
         self.share_jobs = 0
-        for prefix, key, count_key in (
-            ("pipeline.catalog.", "pipeline.catalog_ms", None),
-            ("writers.append", "writers.append_ms", None),
-            ("writers.compact", "writers.compact_ms", "writers.compactions"),
-            ("writers.read_snapshot", "writers.read_snapshot_ms", None),
+        for prefix, key in (
+            ("pipeline.catalog.", "pipeline.catalog_ms"),
+            ("writers.append", "writers.append_ms"),
+            ("writers.read_snapshot", "writers.read_snapshot_ms"),
         ):
             t = self.tracer.totals(prefix)
-            lay[key] = t["ms"].get(op, 0.0)
-            if count_key:
-                lay[count_key] = t["calls"].get(op, 0)
+            if op in t["calls"]:
+                lay[key] = t["ms"][op]
         lay.update(drain)
         files = writers.committed_files(self.facts) or []
         lay["writers.fact_files"] = len(files)
@@ -207,6 +217,7 @@ def run(bench) -> dict:
         if traced:
             bench.tracer.op = rnd
             first_job = counters.next_job_id()
+            compiles = counters.codegen_compiles()
         t_round = time.perf_counter()
         upload_ms, acks = [], {}
         for i in range(N_TENANTS):
@@ -257,11 +268,13 @@ def run(bench) -> dict:
                 "streaming.drain_ms": drain_s * 1000.0,
                 "streaming.batches": len(progress),
                 "streaming.jobs_per_drain": drain_jobs,
-                "streaming.add_batch_ms": sum(d.get("addBatch", 0) for d in dur),
-                "streaming.latest_offset_ms": sum(d.get("latestOffset", 0) for d in dur),
-                "streaming.wal_commit_ms": sum(d.get("walCommit", 0) for d in dur),
+                "streaming.add_batch_ms": sum(d["addBatch"] for d in dur),
+                "streaming.latest_offset_ms": sum(d["latestOffset"] for d in dur),
+                "streaming.wal_commit_ms": sum(d["walCommit"] for d in dur),
             }
-            out["layers"] = trace_layers.round_layers(rnd, first_job, drain, len(uploaded))
+            out["layers"] = trace_layers.round_layers(
+                rnd, first_job, compiles, drain, len(uploaded)
+            )
             bench.tracer.op = None
         return out
 
@@ -271,13 +284,22 @@ def run(bench) -> dict:
         one_round(rnd, False)
         if rnd == 0:
             bench.record["cold_round_s"] = time.perf_counter() - t0
+    if trace_layers:
+        trace_layers.compact_ms.clear()
 
     def next_round(traced: bool) -> dict:
         nonlocal rnd
         rnd += 1
         return one_round(rnd, traced)
 
-    plain, traced = bench.measure(next_round)
+    plain, traced = bench.measure(
+        next_round, more=trace_layers and (lambda: not trace_layers.compact_ms)
+    )
+    if trace_layers:  # over every round of the window, traced or not
+        bench.layer["writers.compactions"] = (
+            len(trace_layers.compact_ms) / (len(plain) + len(traced))
+        )
+        bench.layer["writers.compact_ms"] = statistics.fmean(trace_layers.compact_ms)
 
     # End-of-run audit: every acknowledged upload landed exactly once.
     facts_df = writers.read_fact_table(spark, facts).select(
@@ -305,4 +327,8 @@ def run(bench) -> dict:
             bench.record[f"{key}_p{p:g}"] = common.percentile(xs, p)
         bench.record[f"{key}_samples"] = len(xs)
     bench.record["drain_s_p50"] = statistics.median(r["drain_s"] for r in plain)
-    return bench.metrics(plain, traced, N_TENANTS * DOCS_PER_TENANT)
+    return bench.metrics(
+        plain, traced, N_TENANTS * DOCS_PER_TENANT,
+        op_ms=statistics.median(x for r in plain for x in r["op_ms"]),
+        unreached=UNREACHED,
+    )

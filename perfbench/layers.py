@@ -177,7 +177,13 @@ class SparkCounters:
         self._jit_bean = mf.getCompilationMXBean()
         self.jvm_pid = int(mf.getRuntimeMXBean().getPid())
         self.heap_max_mb = mf.getMemoryMXBean().getHeapMemoryUsage().getMax() / 2**20
+        self._codegen = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics
         self._next_exec = 0
+
+    def codegen_compiles(self) -> int:
+        """Whole-stage and expression code compilations so far (each
+        one a code-cache miss)."""
+        return int(self._codegen.METRIC_COMPILATION_TIME().getCount())
 
     def next_job_id(self) -> int:
         return int(self._sc.dagScheduler().nextJobId())
@@ -216,7 +222,11 @@ class SparkCounters:
         for j in range(first_job, last):
             try:
                 jd = self._store.job(j)
-            except Exception:  # evicted from the store or never registered
+            except Exception as e:
+                if "NoSuchElementException" not in str(e):
+                    raise
+                # a job over no partitions takes an id but never runs
+                out["exec.jobs"] -= 1
                 continue
             out["exec.tasks"] += jd.numCompletedTasks()
             for sid in _seq(jd.stageIds()):
@@ -225,8 +235,10 @@ class SparkCounters:
                 seen.add(sid)
                 try:
                     st = self._store.lastStageAttempt(sid)
-                except Exception:
-                    continue
+                except Exception as e:
+                    if "NoSuchElementException" not in str(e):
+                        raise
+                    continue  # never submitted
                 if str(st.status()) != "COMPLETE":
                     continue  # skipped: its map output was reused
                 out["exec.stages"] += 1
@@ -239,9 +251,11 @@ class SparkCounters:
 
     def python_since_mark(self) -> dict:
         """Python-worker SQL metrics summed over the SQL executions that
-        ran since the last ``mark_sql`` (or call of this method)."""
+        ran since the last ``mark_sql`` (or call of this method). Only
+        metrics some plan reported are returned, so a renamed metric
+        shows as missing rather than as 0."""
         self.settle()
-        out = {v: 0.0 for v in PY_METRICS.values()}
+        out = {}
         while True:
             opt = self._sql.execution(self._next_exec)
             if not opt.isDefined():
@@ -260,20 +274,24 @@ class SparkCounters:
             values = self._sql.executionMetrics(eid)
             for acc, key in names.items():
                 v = values.get(acc)
-                if v.isDefined():
-                    out[key] += parse_metric(v.get())
+                out[key] = out.get(key, 0.0) + (
+                    parse_metric(v.get()) if v.isDefined() else 0.0
+                )
         return out
+
+
+PLAN_PHASES = ("plan.analysis_ms", "plan.optimization_ms", "plan.planning_ms")
 
 
 def plan_phases(df) -> dict:
     """Driver planning time of an executed DataFrame, from its
-    QueryExecution's phase tracker (analysis, optimization, planning)."""
-    out = {"plan.analysis_ms": 0.0, "plan.optimization_ms": 0.0,
-           "plan.planning_ms": 0.0}
+    QueryExecution's phase tracker (analysis, optimization, planning);
+    a phase the tracker did not record is missing, not 0."""
+    out = {}
     it = df._jdf.queryExecution().tracker().phases().iterator()
     while it.hasNext():
         kv = it.next()
         key = f"plan.{kv._1()}_ms"
-        if key in out:
-            out[key] += float(kv._2().durationMs())
+        if key in PLAN_PHASES:
+            out[key] = out.get(key, 0.0) + float(kv._2().durationMs())
     return out

@@ -43,6 +43,14 @@ import layers  # noqa: E402
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORKLOADS = ("analytics", "ingest_serve")
+# Spark keeps compiled whole-stage code in a cache of 100 entries by
+# default, split into 4 LRU segments of 25. The analytics mix needs
+# about 70 entries besides the cache fill's, and in most processes one
+# segment overflows: from then on every pass recompiles about 25
+# classes (and JIT-compiles them anew), and the process stays 1.3-1.8x
+# slower for good, in some processes and not others. A larger cache
+# makes every process like the fast ones.
+CODEGEN_CACHE_ENTRIES = 2000
 
 
 def _program_present() -> bool:
@@ -67,67 +75,82 @@ class Bench:
     def elapsed(self) -> float:
         return time.perf_counter() - T_PROCESS
 
-    def measure(self, one_pass) -> tuple[list[dict], list[dict]]:
+    def measure(self, one_pass, more=None) -> tuple[list[dict], list[dict]]:
         """End the set-up and run whole passes in a closed loop for
-        ``--seconds``; with ``--trace 1`` the second half is traced.
-        ``one_pass(traced)`` returns ``{"seconds", "op_ms", ...}`` and,
-        when traced, ``"layers"``. Host and JVM diagnostics of the
-        window go into the run record."""
+        ``--seconds``. With ``--trace 1`` untraced and traced passes
+        alternate, so JIT warm-up and host drift fall on both alike,
+        and ``more()``, if given, asks for passes past the window until
+        the traced run has seen what it reports. ``one_pass(traced)``
+        returns ``{"seconds", "op_ms", ...}`` and, when traced,
+        ``"layers"``. Host and JVM diagnostics of the window go into
+        the run record."""
         counters = self.counters
         ref_before = common.host_ref_ms()
         jvm0, ticks0 = counters.jvm_ms(), common.cpu_ticks()
+        compiles0 = counters.codegen_compiles()
         self.setup_s = self.elapsed()
-        traced_run = bool(self.args.trace)
+        trace = bool(self.args.trace)
         t_start = time.perf_counter()
         deadline = t_start + self.args.seconds
-        split = t_start + self.args.seconds / 2 if traced_run else deadline
         plain, traced = [], []
-        jvm_split = None
+        traced_jvm = [0.0, 0.0]  # GC, JIT ms inside traced passes
         while (time.perf_counter() < deadline or not plain
-               or (traced_run and not traced)):
-            in_trace = traced_run and time.perf_counter() >= split
-            if in_trace and jvm_split is None:
+               or (trace and (not traced or (more is not None and more())))):
+            if trace and len(traced) < len(plain):
                 counters.mark_sql()
-                jvm_split = counters.jvm_ms()
+                a = counters.jvm_ms()
                 self.tracer.enabled = True
-            (traced if in_trace else plain).append(one_pass(in_trace))
-        self.tracer.enabled = False
+                try:
+                    traced.append(one_pass(True))
+                finally:
+                    self.tracer.enabled = False
+                b = counters.jvm_ms()
+                traced_jvm = [traced_jvm[i] + b[i] - a[i] for i in (0, 1)]
+            else:
+                plain.append(one_pass(False))
         window_s = time.perf_counter() - t_start
         jvm1 = counters.jvm_ms()
         self.record.update({
             "window_s": window_s,
             "passes": len(plain),
+            "traced_passes": len(traced),
             "host.ref_ms_before": ref_before,
             "host.ref_ms_after": common.host_ref_ms(),
             "host.steal_pct_window": common.steal_pct(ticks0, common.cpu_ticks()),
             "jvm.gc_ms_window": jvm1[0] - jvm0[0],
             "jvm.jit_ms_window": jvm1[1] - jvm0[1],
+            "codegen.compiles_window": counters.codegen_compiles() - compiles0,
         })
         if traced:
-            self.layer["jvm.gc_ms"] = (jvm1[0] - jvm_split[0]) / len(traced)
-            self.layer["jvm.jit_ms"] = (jvm1[1] - jvm_split[1]) / len(traced)
+            self.layer["jvm.gc_ms"] = traced_jvm[0] / len(traced)
+            self.layer["jvm.jit_ms"] = traced_jvm[1] / len(traced)
             self.layer["jvm.peak_rss_mb"] = counters.peak_rss_mb()
         return plain, traced
 
-    def metrics(self, plain: list[dict], traced: list[dict], ops_per_pass: int) -> dict:
-        """End-to-end metrics of the untraced passes, or with ``--trace 1``
-        the per-layer means over the traced passes."""
+    def metrics(self, plain: list[dict], traced: list[dict], ops_per_pass: int,
+                op_ms: float, unreached=()) -> dict:
+        """End-to-end metrics of the untraced passes (``op_ms`` is the
+        workload's per-operation latency figure), or with ``--trace 1``
+        the per-layer means over the traced passes. Only the layers in
+        ``unreached`` read 0 without being measured; any other layer
+        left unmeasured fails the run."""
         pass_s = [p["seconds"] for p in plain]
-        op_ms = [x for p in plain for x in p["op_ms"]]
+        lat = [x for p in plain for x in p["op_ms"]]
         self.record["pass_s"] = pass_s
-        self.record["op_samples"] = len(op_ms)
-        tail = common.reportable_percentile(len(op_ms))
-        if tail:
-            self.record[f"op_ms_p{tail:g}"] = common.percentile(op_ms, tail)
+        self.record["op_samples"] = len(lat)
+        self.record["op_ms_p50"] = statistics.median(lat)
+        tail = common.reportable_percentile(len(lat))
+        if tail and tail > 50:
+            self.record[f"op_ms_p{tail:g}"] = common.percentile(lat, tail)
         if not traced:
             return {
                 "setup_s": self.setup_s,
-                "op_ms_p50": statistics.median(op_ms),
+                "op_ms": op_ms,
                 "ops_per_s": ops_per_pass / statistics.median(pass_s),
             }
-        out = dict.fromkeys(common.LAYER_UNITS, 0.0)
+        out = dict.fromkeys(unreached, 0.0)
         out.update(self.layer)
-        for k in traced[0]["layers"]:  # mean: compactions come every few passes
+        for k in {k for p in traced for k in p["layers"]}:
             out[k] = statistics.fmean(p["layers"][k] for p in traced)
         traced_s = statistics.median(p["seconds"] for p in traced)
         out["trace.overhead_pct"] = 100.0 * (traced_s / statistics.median(pass_s) - 1.0)
@@ -184,15 +207,19 @@ def main() -> int:
     work_root = os.path.join(ROOT, ".perfbench_work")
     work = os.path.join(work_root, f"{args.workload}-{os.getpid()}")
     os.makedirs(work, exist_ok=True)
-    # The session sees exactly what the test command sets. The temp
-    # dirs and the JVM's perf-data switch only keep every file the run
-    # writes inside the checkout.
+    # The session sees what the test command sets, plus one Spark
+    # setting (see CODEGEN_CACHE_ENTRIES). The temp dirs and the JVM's
+    # perf-data switch only keep every file the run writes inside the
+    # checkout.
     tmp = os.path.join(work, "tmp")
     os.makedirs(tmp, exist_ok=True)
     os.environ["SPARK_GRAFT_CPUS"] = str(common.nproc())
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(work, "spark-local")
     os.environ["TMPDIR"] = tmp
-    os.environ["JAVA_TOOL_OPTIONS"] = f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
+    os.environ["JAVA_TOOL_OPTIONS"] = (
+        f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData "
+        f"-Dspark.sql.codegen.cache.maxEntries={CODEGEN_CACHE_ENTRIES}"
+    )
     import tempfile
 
     tempfile.tempdir = None  # re-read TMPDIR
@@ -227,6 +254,7 @@ def main() -> int:
         "nproc": common.nproc(),
         "SPARK_GRAFT_CPUS": os.environ["SPARK_GRAFT_CPUS"],
         "spark.driver.memory": heap,
+        "spark.sql.codegen.cache.maxEntries": CODEGEN_CACHE_ENTRIES,
         "jvm_heap_max_mb": heap_max,
         "versions": common.versions(),
         "load1_start": load_start,

@@ -1,13 +1,14 @@
 #!/usr/bin/env python3
 """Repeat the benchmark and record how steady its figures are.
 
-    python3 perfbench/steadiness.py --runs 10 --seconds 10 [--workload W ...] [--out FILE]
+    python3 perfbench/steadiness.py --runs 10 --seconds 18 [--first-seed N] [--workload W ...] [--out FILE]
 
-Runs ``perfbench/run.py`` once per seed (1..runs) for each workload,
-one run at a time, and writes per workload and metric the median,
-quartiles (``statistics.quantiles(values, n=4)``) and IQR/median, plus
-each run's record (environment, host diagnostics, sample counts), as
-one more entry of ``"sets"`` in ``--out`` (JSON). Exits non-zero if any
+Runs ``perfbench/run.py --trace 0`` once per seed (``--runs`` seeds
+from ``--first-seed``) for each workload, one run at a time, and
+writes per workload and metric the median, quartiles
+(``statistics.quantiles(values, n=4)``) and IQR/median, plus each
+run's record (environment, host diagnostics, sample counts), as one
+more entry of ``"sets"`` in ``--out`` (JSON). Exits non-zero if any
 run fails or reports failed operations.
 """
 
@@ -24,12 +25,12 @@ import common
 from run import ROOT, WORKLOADS
 
 
-def _run(workload: str, seed: int, seconds: float, trace: int) -> tuple[dict, dict, float]:
+def _run(workload: str, seed: int, seconds: float) -> tuple[dict, dict, float]:
     t0 = time.perf_counter()
     proc = subprocess.run(
         [sys.executable, os.path.join("perfbench", "run.py"),
          "--workload", workload, "--seed", str(seed),
-         "--seconds", str(seconds), "--trace", str(trace)],
+         "--seconds", str(seconds), "--trace", "0"],
         cwd=ROOT, capture_output=True, text=True, timeout=900,
     )
     wall = time.perf_counter() - t0
@@ -46,19 +47,18 @@ def main() -> int:
     ap.add_argument("--runs", type=int, default=10)
     ap.add_argument("--first-seed", type=int, default=1)
     ap.add_argument("--seconds", type=float, required=True)
-    ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--workload", action="append", choices=WORKLOADS)
     ap.add_argument("--out", default=os.path.join(ROOT, ".perfbench_work", "steadiness.json"))
     args = ap.parse_args()
 
-    report = {"seconds": args.seconds, "trace": args.trace,
+    report = {"seconds": args.seconds,
               "seeds": [args.first_seed, args.first_seed + args.runs - 1],
               "workloads": {}}
     ok = True
     for w in args.workload or WORKLOADS:
         runs = []
         for seed in range(args.first_seed, args.first_seed + args.runs):
-            record, result, wall = _run(w, seed, args.seconds, args.trace)
+            record, result, wall = _run(w, seed, args.seconds)
             ok &= result["correct"] and result["failed"] == 0
             runs.append({
                 "seed": seed, "wall_s": wall,

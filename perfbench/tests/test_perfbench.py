@@ -186,3 +186,87 @@ def test_tracer_totals_count_nested_spans_once():
     with tr.span("writers.read"):
         pass
     assert len(tr.spans) == 3
+
+
+# -- closed loop and metrics -------------------------------------------------
+
+
+class _FakeCounters:
+    def jvm_ms(self):
+        return 0.0, 0.0
+
+    def codegen_compiles(self):
+        return 0
+
+    def mark_sql(self):
+        pass
+
+    def peak_rss_mb(self):
+        return 100.0
+
+
+def _bench(trace: int, seconds: float = 0.0):
+    import argparse
+
+    import run
+
+    b = run.Bench(argparse.Namespace(trace=trace, seconds=seconds, workload="x"), "")
+    b.counters = _FakeCounters()
+    return b
+
+
+def _pass(traced, layers_=None):
+    out = {"seconds": 1.0, "op_ms": [10.0, 20.0]}
+    if traced:
+        out["layers"] = dict(layers_ or {"exec.jobs": 3.0})
+    return out
+
+
+def test_traced_run_alternates_passes_and_extends_until_more_is_false():
+    b = _bench(trace=1)
+    seen = []
+
+    def one_pass(traced):
+        seen.append(traced)
+        assert b.tracer.enabled == traced
+        return _pass(traced)
+
+    left = [3]  # ask for three passes past the window
+
+    def more():
+        left[0] -= 1
+        return left[0] >= 0
+
+    plain, traced = b.measure(one_pass, more=more)
+    assert seen == [False, True, False, True, False]
+    assert (len(plain), len(traced)) == (3, 2)
+    assert b.record["traced_passes"] == 2
+
+
+def test_untraced_run_reports_the_end_to_end_metrics():
+    b = _bench(trace=0)
+    plain, traced = b.measure(lambda traced: _pass(traced))
+    assert traced == [] and len(plain) == 1
+    m = b.metrics(plain, traced, 2, op_ms=14.1)
+    assert common.with_units(m, common.E2E_UNITS)["ops_per_s"]["value"] == 2.0
+
+
+def test_only_unreached_layers_read_zero():
+    b = _bench(trace=1)
+    plain = [_pass(False)]
+    traced = [_pass(True)]
+    unreached = [k for k in common.LAYER_UNITS if k not in ("exec.jobs", "trace.overhead_pct")]
+    m = common.with_units(b.metrics(plain, traced, 2, op_ms=1.0, unreached=unreached),
+                          common.LAYER_UNITS)
+    assert m["exec.jobs"]["value"] == 3.0 and m["python.bytes_sent"]["value"] == 0.0
+    # a reached layer that no pass measured fails the run
+    with pytest.raises(KeyError, match="python.bytes_sent"):
+        common.with_units(
+            b.metrics(plain, traced, 2, op_ms=1.0,
+                      unreached=[k for k in unreached if k != "python.bytes_sent"]),
+            common.LAYER_UNITS,
+        )
+    # ... as does one measured in some traced passes only
+    with pytest.raises(KeyError):
+        b.metrics(plain, [_pass(True), _pass(True, {"plan.analysis_ms": 1.0})], 2,
+                  op_ms=1.0, unreached=unreached)
