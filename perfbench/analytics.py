@@ -8,7 +8,8 @@ reuses its shuffle outputs and skips its map stages.
 
 Every result is compared with the digest of the query's DuckDB oracle
 (``registry.ORACLES``) on the same generated files, using the
-oracle-parity normalisation.
+oracle-parity normalisation, with one fragment of two oracles made
+exact (see ``EXACT_FRAGMENTS``).
 
 The per-operation figure ``op_ms`` is the geometric mean over the seven
 queries of each query's median latency across the timed passes, so a
@@ -56,6 +57,32 @@ UNREACHED = (
     "writers.bytes_per_doc",
 )
 
+# The oracles of q_pricing_summary and q_join_revenue round a money
+# sum at scale 10^4 to cents as a double plus a 5e-10 nudge, which is
+# meant to round an exact half-cent up as Spark's ``round`` does. At
+# these sums' magnitude (10^8 to 10^10) the nudge is below half an ulp
+# and vanishes, so on an exact tie DuckDB rounds the binary value, down
+# about half the time, while the engine rounds the exact decimal up
+# (seed 2009173456: 4420503619.485 -> oracle .48, engine .49); 2 of
+# 131 seeds tried had such a tie. The reference sums these values
+# as exact decimals and rounds half up, which is what the nudge is
+# meant to do; the values are non-negative, so half away from zero is
+# half up. An oracle without the fragment is used as it stands.
+_DISC_PRICE = "l_extendedprice * (1 - l_discount)"
+EXACT_FRAGMENTS = {
+    f"round((CAST(sum(CAST(round(({_DISC_PRICE}) * 10000) AS BIGINT)) AS DOUBLE)"
+    " / 10000) + 5e-10, 2)":
+    f"CAST(round(CAST(sum(CAST(round(({_DISC_PRICE}) * 10000) AS BIGINT))"
+    " AS DECIMAL(38,0)) * 0.0001, 2) AS DOUBLE)",
+}
+
+
+def reference_sql(oracle: str) -> str:
+    """The oracle SQL with every fragment in ``EXACT_FRAGMENTS`` made exact."""
+    for frag, exact in EXACT_FRAGMENTS.items():
+        oracle = oracle.replace(frag, exact)
+    return oracle
+
 
 def _oracle_digests(sf_dir: str) -> dict[str, str]:
     import duckdb
@@ -67,7 +94,7 @@ def _oracle_digests(sf_dir: str) -> dict[str, str]:
             path = os.path.join(sf_dir, f"{t}.parquet")
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
         return {
-            q: common.frame_digest(con.execute(registry.ORACLES[q]).df())
+            q: common.frame_digest(con.execute(reference_sql(registry.ORACLES[q])).df())
             for _, q in HEADLINE
         }
     finally:
@@ -136,6 +163,9 @@ def run(bench) -> dict:
     plain, traced = bench.measure(one_pass)
 
     oracle = _oracle_digests(sf_dir)
+    bench.record["exact_reference"] = [
+        q for _, q in HEADLINE if reference_sql(registry.ORACLES[q]) != registry.ORACLES[q]
+    ]
     for q, digest in results:
         if digest is not None:
             bench.tally.record(digest == oracle[q], f"{q}: result digest differs from oracle")

@@ -19,6 +19,37 @@ import common  # noqa: E402
 import datagen  # noqa: E402
 import layers  # noqa: E402
 
+# -- analytics reference -----------------------------------------------------
+
+
+def test_reference_makes_the_cent_rounding_of_money_sums_exact():
+    from pdf_etl_engine_spark import registry
+
+    import analytics
+
+    registry.load_all()
+    rewritten = {
+        q for _, q in analytics.HEADLINE
+        if analytics.reference_sql(registry.ORACLES[q]) != registry.ORACLES[q]
+    }
+    assert rewritten == {"a2_groupby_pricing_summary", "j5_multiway_equi"}
+
+
+def test_reference_rounds_an_exact_half_cent_up_where_the_oracle_does_not():
+    import duckdb
+
+    import analytics
+
+    (frag, _), = analytics.EXACT_FRAGMENTS.items()
+    sql = f"SELECT {frag} AS v FROM lineitem"
+    con = duckdb.connect()
+    # one line worth exactly 4420503619.4850 at scale 10^4
+    con.execute("CREATE TABLE lineitem AS SELECT 4420503619.485::DOUBLE AS l_extendedprice,"
+                " 0.0::DOUBLE AS l_discount")
+    assert con.execute(sql).fetchone()[0] == 4420503619.48
+    assert con.execute(analytics.reference_sql(sql)).fetchone()[0] == 4420503619.49
+
+
 # -- percentile rule ---------------------------------------------------------
 
 
