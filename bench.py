@@ -253,10 +253,10 @@ SF1_HEAVY_BUDGET_S = 1400.0
 # aren't in the heavy crossover set — recorded once per round, single
 # settle + single timed run per engine under a hard per-execution cap.
 #
-# r16 pruning (VERDICT r15 #1b — measurement-harness change, declared
-# in OPTIMIZATION_r16.md with the old numbers retained in
-# BENCH_r15/BENCH_LAST history): the lane is cut from 17 to 12 live
-# rows so the whole bench fits a driver timeout.
+# r16 pruning (VERDICT r15 #1b — measurement-harness change; the old
+# numbers are retained in BENCH_r15.json and the BENCH_LAST history):
+# the lane is cut from 17 to 12 live rows so the whole bench fits a
+# driver timeout.
 # MOVED TO BASELINE.md one-time records (Spark row removed):
 #   x_pq_adc_hof_exhibit (x47g) — the deliberately-interpreted HOF
 #     exhibit, 3.1x by design, adjudicated r14; re-measuring it every

@@ -17,19 +17,22 @@ is pure bytes→JSON parsing.
 
 Catalog (folders, shares) replaces the Firestore documents
 (main.py:393-403, 617-629) with two small parquet tables — read into
-broadcast joins, never a per-row lookup.
+broadcast joins for ingest, and on the driver for point lookups;
+never a per-row lookup.
 """
 
 from __future__ import annotations
 
+import datetime
 import json
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from pdf_etl_engine_spark.functions import kernel
 from pdf_etl_engine_spark.sources import writers
@@ -51,13 +54,87 @@ SHARES_SCHEMA = (
     "permission string, created_at timestamp"
 )
 
+# The same two schemas for the driver-side reader (pyarrow.dataset).
+# Spark writes ``timestamp`` as INT96, read back at microseconds.
+_FOLDERS_ARROW = pa.schema(
+    [
+        ("tenant_id", pa.string()),
+        ("folder_id", pa.string()),
+        ("display_name", pa.string()),
+        ("context_hint", pa.string()),
+        ("is_trained", pa.bool_()),
+        ("status", pa.string()),
+        ("owner", pa.string()),
+        ("created_at", pa.timestamp("us")),
+        (
+            "kpi_metadata",
+            pa.list_(
+                pa.struct(
+                    [
+                        ("name", pa.string()),
+                        ("sample_value", pa.string()),
+                        ("type", pa.string()),
+                    ]
+                )
+            ),
+        ),
+        ("selected_kpis", pa.list_(pa.string())),
+        ("kpi_samples", pa.map_(pa.string(), pa.string())),
+    ]
+)
+
+_SHARES_ARROW = pa.schema(
+    [
+        ("owner_id", pa.string()),
+        ("folder_id", pa.string()),
+        ("shared_email", pa.string()),
+        ("permission", pa.string()),
+        ("created_at", pa.timestamp("us")),
+    ]
+)
+
+
+def _recency(row: dict) -> tuple:
+    """``desc_nulls_last(created_at)`` as a key for ``max``: a stamped
+    row beats a NULL one, a later stamp an earlier one. ``_ts`` is the
+    stamp in microseconds, compared exactly."""
+    return (row["_ts"] is not None, row["_ts"] or 0)
+
+
+def _share_recency(row: dict) -> tuple:
+    """Share order: newest first, 'edit' winning a timestamp tie."""
+    return (*_recency(row), row["permission"] == "edit")
+
+
+def _public(row: dict) -> dict:
+    return {k: v for k, v in row.items() if k != "_ts"}
+
+
+def _newest_by(rows: list[dict], key, order=_recency) -> dict:
+    """``{key(row): newest row}`` — the append-only catalog's upsert
+    replayed; on a tie of ``order`` the first row read stays."""
+    newest: dict = {}
+    for row in rows:
+        k = key(row)
+        if k not in newest or order(row) > order(newest[k]):
+            newest[k] = row
+    return newest
+
 
 @dataclass
 class Catalog:
     """Parquet-backed metadata catalog replacing the Firestore docs.
 
-    Tiny by construction (one row per folder / share), so every use is
-    a broadcast join against fact data.
+    Tiny by construction (one row per folder / share). Writes,
+    ``folders()``/``shares()`` (the broadcast-join side of batch
+    ingest) and ``compact_metadata`` run on Spark. Point lookups —
+    ``get_folder``, ``resolve_folder_for_read``, ``effective_share``,
+    ``can_read``, ``live_shares`` and ``latest_folder_metas`` — read
+    the parquet on the driver with ``pyarrow.dataset`` and apply
+    newest-wins in Python, so the upload, read and ingest paths run
+    no Spark job for metadata (the reference's single Firestore doc
+    read, main.py:617-630). Nothing is cached: every lookup sees
+    every committed write.
     """
 
     spark: SparkSession
@@ -126,6 +203,45 @@ class Catalog:
             return self.spark.createDataFrame([], schema)
         return self.spark.read.schema(schema).parquet(path)
 
+    @staticmethod
+    def _rows(path: str, schema: pa.Schema, where=None) -> list[dict]:
+        """Rows of a catalog table matching the ``pyarrow.dataset``
+        expression ``where``, read on the driver. Values match what a
+        Spark ``collect()`` + ``asDict(recursive=True)`` returns:
+        timestamps become naive datetimes the way PySpark converts
+        them, maps become dicts. Each row carries its stamp in
+        microseconds as ``_ts`` (see ``_recency``)."""
+        import os
+
+        if not os.path.exists(path):
+            return []
+        fmt = ds.ParquetFileFormat(
+            read_options={"coerce_int96_timestamp_unit": "us"}
+        )
+        table = ds.dataset(path, schema=schema, format=fmt).to_table(
+            filter=where
+        )
+        stamps = table.column("created_at").cast(pa.int64()).to_pylist()
+        maps = [f.name for f in schema if pa.types.is_map(f.type)]
+        rows = table.to_pylist()
+        for row, ts in zip(rows, stamps):
+            row["_ts"] = ts
+            row["created_at"] = (
+                None
+                if ts is None
+                # TimestampType.fromInternal's conversion, exactly
+                else datetime.datetime.fromtimestamp(ts // 1_000_000).replace(
+                    microsecond=ts % 1_000_000
+                )
+            )
+            for m in maps:
+                if row[m] is not None:
+                    row[m] = dict(row[m])
+        return rows
+
+    def _folder_rows(self, where=None) -> list[dict]:
+        return self._rows(self.folders_path, _FOLDERS_ARROW, where)
+
     def get_folder(self, tenant_id: str, folder_id: str) -> dict | None:
         """Folder metadata get (main.py:675-687) — STRICT: exact
         (tenant_id, folder_id) match only, newest generation wins.
@@ -144,17 +260,11 @@ class Catalog:
         in the reference); ordering by created_at makes the latest
         KPI set authoritative instead of an arbitrary generation.
         """
-        rows = (
-            self.folders()
-            .filter(
-                (F.col("tenant_id") == tenant_id)
-                & (F.col("folder_id") == folder_id)
-            )
-            .orderBy(F.desc_nulls_last("created_at"))
-            .limit(1)
-            .collect()
+        rows = self._folder_rows(
+            (ds.field("tenant_id") == tenant_id)
+            & (ds.field("folder_id") == folder_id)
         )
-        return rows[0].asDict(recursive=True) if rows else None
+        return _public(max(rows, key=_recency)) if rows else None
 
     def resolve_folder_for_read(
         self, requester_id: str, requester_email: str, folder_id: str
@@ -163,30 +273,19 @@ class Catalog:
         hit first, else a global search by folder_id gated per
         candidate owner by ``can_read`` (owner or explicit share) —
         the requester never sees metadata of a folder no one shared.
+        Candidates are the newest generation per owner, newest first.
         """
         own = self.get_folder(requester_id, folder_id)
         if own is not None:
             return own
-        # newest generation PER OWNER selected Spark-side, so the
-        # collect is bounded by distinct owners of this folder_id
-        # (VERDICT r5 #8) — not by total generations across re-trains
-        w = Window.partitionBy(
-            F.coalesce(F.col("owner"), F.col("tenant_id"))
-        ).orderBy(F.desc_nulls_last("created_at"))
-        candidates = (
-            self.folders()
-            .filter(F.col("folder_id") == folder_id)
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-            .orderBy(F.desc_nulls_last("created_at"))
-            .collect()
+        newest = _newest_by(
+            self._folder_rows(ds.field("folder_id") == folder_id),
+            lambda r: r["owner"] if r["owner"] is not None else r["tenant_id"],
         )
-        for row in candidates:
-            meta = row.asDict(recursive=True)
-            owner = meta.get("owner") or meta.get("tenant_id")
+        for row in sorted(newest.values(), key=_recency, reverse=True):
+            owner = row.get("owner") or row.get("tenant_id")
             if self.can_read(requester_id, requester_email, owner, folder_id):
-                return meta
+                return _public(row)
         return None
 
     def add_share(
@@ -230,21 +329,29 @@ class Catalog:
         rows, which all read NULL — break toward 'edit', preserving
         the old any-edit-row-wins semantics for grandfathered shares
         instead of picking whichever row file listing yields first."""
-        rows = (
-            self.shares()
-            .filter(
-                (F.col("owner_id") == owner_id)
-                & (F.col("folder_id") == folder_id)
-                & (F.col("shared_email") == shared_email.lower())
-            )
-            .orderBy(
-                F.desc_nulls_last("created_at"),
-                F.desc(F.col("permission") == "edit"),
-            )
-            .limit(1)
-            .collect()
+        rows = self._rows(
+            self.shares_path,
+            _SHARES_ARROW,
+            (ds.field("owner_id") == owner_id)
+            & (ds.field("folder_id") == folder_id)
+            & (ds.field("shared_email") == shared_email.lower()),
         )
-        return rows[0]["permission"] if rows else None
+        return max(rows, key=_share_recency)["permission"] if rows else None
+
+    def live_shares(self, shared_email: str) -> dict[tuple[str, str], str]:
+        """``{(owner_id, folder_id): permission}`` of every folder shared
+        with ``shared_email``, each the live (newest) share as
+        ``effective_share`` picks it."""
+        live = _newest_by(
+            self._rows(
+                self.shares_path,
+                _SHARES_ARROW,
+                ds.field("shared_email") == shared_email.lower(),
+            ),
+            lambda r: (r["owner_id"], r["folder_id"]),
+            _share_recency,
+        )
+        return {k: r["permission"] for k, r in live.items()}
 
     def can_read(
         self, requester: str, requester_email: str, owner_id: str, folder_id: str
@@ -439,21 +546,13 @@ def extract_kpis(
 # ---------------------------------------------------------------------------
 
 def latest_folder_metas(catalog: Catalog) -> list[dict]:
-    """All folders, newest generation per (tenant_id, folder_id) —
-    the catalog is tiny by construction (one row per folder per
-    train), so one driver-side collect is the broadcast pattern."""
-    by_pair: dict[tuple[str, str], dict] = {}
-    for row in catalog.folders().collect():
-        d = row.asDict(recursive=True)
-        key = (d["tenant_id"], d["folder_id"])
-        cur = by_pair.get(key)
-        ts = d.get("created_at")
-        if cur is None or (
-            ts is not None
-            and (cur.get("created_at") is None or ts > cur["created_at"])
-        ):
-            by_pair[key] = d
-    return list(by_pair.values())
+    """All folders, newest generation per (tenant_id, folder_id) — the
+    catalog is tiny by construction (one row per folder per train), so
+    it is read on the driver, with no Spark job."""
+    newest = _newest_by(
+        catalog._folder_rows(), lambda r: (r["tenant_id"], r["folder_id"])
+    )
+    return [_public(r) for r in newest.values()]
 
 
 class RateLimiter:
@@ -627,11 +726,11 @@ def _align_to_existing_types(
     table's type (try_cast — unrepresentable values become NULL, the
     same outcome as a per-value coercion failure). Without this, a
     batch whose folder mix degrades a shared column to string would
-    write string files into a double column and every subsequent
-    ``mergeSchema`` read of the table would fail."""
-    try:
-        existing = writers.read_fact_table(spark, fact_path).schema
-    except Exception:  # noqa: BLE001 — no table yet: first batch defines types
+    retype a double column, which the commit log refuses. The table's
+    types come from the log (``writers.table_schema``): no Spark job
+    unless the table predates schema logging."""
+    existing = writers.table_schema(spark, fact_path)
+    if existing is None:  # no table yet: the first batch defines types
         return typed
     tmap = {f.name: f.dataType.simpleString() for f in existing.fields}
     cur = dict(typed.dtypes)

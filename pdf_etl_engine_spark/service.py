@@ -382,22 +382,13 @@ class Service:
     # directly for this; a library/service consumer needs a route) ------
     def list_folders(self, token: str | None) -> tuple[int, dict]:
         """Folders the caller owns plus folders shared with them
-        (newest generation each, permission attached). Driver-side
-        iteration over the tiny catalog — the same broadcast-scale
-        metadata every route reads."""
+        (newest generation each, live permission attached). Driver-side
+        reads of the tiny catalog — no Spark job."""
         ident = self.verifier.verify(token)
         if not ident:
             return 401, {"error": "Unauthorized"}
-        from pyspark.sql import functions as F
-
         own, shared = [], []
-        share_rows = {
-            (r["owner_id"], r["folder_id"]): r["permission"]
-            for r in self.catalog.shares()
-            .filter(F.col("shared_email") == ident["email"])
-            .orderBy(F.asc_nulls_first("created_at"))  # newest last wins
-            .collect()
-        }
+        share_rows = self.catalog.live_shares(ident["email"])
         for m in pipeline.latest_folder_metas(self.catalog):
             entry = {
                 "folder_id": m["folder_id"],

@@ -23,6 +23,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+CODEGEN_CACHE_MAX_ENTRIES = "2000"
 
 
 def get_spark(
@@ -65,6 +66,15 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_DRIVER_MEMORY", "16g"),
         )
         .config("spark.driver.maxResultSize", "4g")
+        # Compiled whole-stage code cache: Spark's default 100 entries
+        # (4 LRU segments of 25) overflow on a mix of a few dozen
+        # distinct plans; from then on every pass recompiles ~25
+        # classes and runs 1.3-1.8x slower for the life of the JVM
+        # (perfbench/README.md, "Codegen cache"). A static conf, read
+        # once when the JVM's codegen cache is built.
+        .config(
+            "spark.sql.codegen.cache.maxEntries", CODEGEN_CACHE_MAX_ENTRIES
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

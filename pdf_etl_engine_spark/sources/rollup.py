@@ -161,6 +161,7 @@ def refresh_rollup(spark: SparkSession, rollup_path: str) -> dict:
         files,
         base=True,
         stats=writers._stats_for(rollup_path, files),
+        schema=writers._written_schema(merged, rollup_path),
     )
     spec["fact_version"] = v1
     writers.set_table_property(rollup_path, "rollup_spec", spec)

@@ -10,10 +10,17 @@ ALTER TABLE ADD COLUMN schema sync (/root/reference/main.py:256-351,
   the reference's table-per-tenant×folder explosion (SURVEY.md §1.4);
 * append = write new files into the partition dirs — no rewrite of
   existing data;
-* evolution = appending files whose schema has MORE columns; readers
-  union schemas with ``mergeSchema`` so old rows surface NULL for new
-  columns — exactly the reference's add-only semantics (columns never
-  dropped or retyped, main.py:277-291);
+* evolution = appending files whose schema has MORE columns. Every
+  commit that adds files records the Spark schema it wrote, and the
+  log folds those schemas in commit order, so readers pass the table
+  schema to the parquet reader instead of inferring it from file
+  footers (Delta keeps the schema in its log for the same reason):
+  old rows surface NULL for new columns — exactly the reference's
+  add-only semantics (columns never dropped or retyped,
+  main.py:277-291; a retype is refused at publish and raises in the
+  fold). Partition columns keep the type the writer gave them. Only
+  snapshots the log cannot describe (no log, or commits written
+  before schemas were logged) fall back to ``mergeSchema`` inference;
 * commit visibility: plain parquet lacks Delta's atomic log, so this
   module carries a minimal one — each append stages its files, moves
   them into the partition layout, then atomically publishes a commit
@@ -235,13 +242,115 @@ def _load_checkpoint(path: str, version: int | None = None) -> dict | None:
     return None
 
 
+_EMPTY_SCHEMA = {"type": "struct", "fields": []}
+
+
+def _nullable_json(dt):
+    """``DataType.jsonValue()`` with every nullability flag set and
+    field metadata dropped — the form the log stores. A parquet read
+    makes every column nullable anyway, so two commits that differ
+    only there wrote the same schema."""
+    if not isinstance(dt, dict):
+        return dt  # atomic type name: "string", "decimal(10,2)", …
+    t = dt.get("type")
+    if t == "struct":
+        return {
+            "type": "struct",
+            "fields": [
+                {
+                    "name": f["name"],
+                    "type": _nullable_json(f["type"]),
+                    "nullable": True,
+                    "metadata": {},
+                }
+                for f in dt["fields"]
+            ],
+        }
+    if t == "array":
+        return {
+            "type": "array",
+            "elementType": _nullable_json(dt["elementType"]),
+            "containsNull": True,
+        }
+    if t == "map":
+        return {
+            "type": "map",
+            "keyType": _nullable_json(dt["keyType"]),
+            "valueType": _nullable_json(dt["valueType"]),
+            "valueContainsNull": True,
+        }
+    return dt
+
+
+def _merge_schema(cur, new, where: str = "table"):
+    """Add-only union of two logged schemas: struct fields unknown to
+    ``cur`` are appended in ``new``'s order (recursively for nested
+    structs, arrays and maps); a column whose type changed raises
+    ValueError — the table never retypes (main.py:277-291), the same
+    pairs Spark's own parquet schema merge rejects."""
+    if isinstance(cur, dict) and isinstance(new, dict):
+        kind = cur.get("type")
+        if kind == new.get("type") == "struct":
+            fields = list(cur["fields"])
+            at = {f["name"]: i for i, f in enumerate(fields)}
+            for f in new["fields"]:
+                i = at.get(f["name"])
+                if i is None:
+                    at[f["name"]] = len(fields)
+                    fields.append(f)
+                else:
+                    fields[i] = {
+                        **fields[i],
+                        "type": _merge_schema(
+                            fields[i]["type"], f["type"], f"{where}.{f['name']}"
+                        ),
+                    }
+            return {"type": "struct", "fields": fields}
+        if kind == new.get("type") == "array":
+            return {
+                **cur,
+                "elementType": _merge_schema(
+                    cur["elementType"], new["elementType"], f"{where}[]"
+                ),
+            }
+        if kind == new.get("type") == "map":
+            return {
+                **cur,
+                "keyType": _merge_schema(cur["keyType"], new["keyType"], f"{where}{{key}}"),
+                "valueType": _merge_schema(
+                    cur["valueType"], new["valueType"], f"{where}{{value}}"
+                ),
+            }
+    if cur != new:
+        raise ValueError(
+            f"column {where} retyped from {_type_name(cur)} to "
+            f"{_type_name(new)}; the table's columns are add-only"
+        )
+    return cur
+
+
+def _type_name(dt) -> str:
+    from pyspark.sql.types import _parse_datatype_json_value
+
+    return _parse_datatype_json_value(dt).simpleString()
+
+
 def _fold_state(path: str, version: int | None = None) -> dict | None:
     """Snapshot state as of ``version`` (default latest):
-    ``{version, files, stats, bloom, txn_high}`` — resolved from the
-    newest checkpoint at or below ``version`` plus ONLY the commits
-    after it. Resolution cost is O(K + commits since checkpoint), not
-    O(commits since last compaction) — the operational coupling the
-    r5 verdict flagged. None when the table has no log."""
+    ``{version, files, stats, bloom, txn_high, dv, schema}`` — resolved
+    from the newest checkpoint at or below ``version`` plus ONLY the
+    commits after it. Resolution cost is O(K + commits since
+    checkpoint), not O(commits since last compaction) — the
+    operational coupling the r5 verdict flagged. None when the table
+    has no log.
+
+    ``schema`` is the folded table schema (``_nullable_json`` form):
+    every commit that adds files contributes the schema it wrote,
+    columns are added in commit order and a retype raises ValueError.
+    It is None when the log cannot describe the snapshot — some live
+    generation was added by a commit that logged no schema (written
+    before schemas were logged, or by a bare ``_publish_commit``) —
+    until a ``base`` commit that logs one rewrites the snapshot."""
     entries = _commit_entries(path)
     if entries is None:
         return None
@@ -252,9 +361,12 @@ def _fold_state(path: str, version: int | None = None) -> dict | None:
         bloom = dict(cp.get("bloom", {}))
         txn_high = dict(cp.get("txn_high", {}))
         dv = dict(cp.get("dv", {}))
+        # checkpoints older than schema logging carry no key: unknown
+        schema = cp.get("schema")
         floor = int(cp["version"])
     else:
         files, stats, bloom, txn_high, dv = [], {}, {}, {}, {}
+        schema = _EMPTY_SCHEMA
         floor = -1
     cdir = _os.path.join(path, _COMMITS_DIR)
     last = floor
@@ -264,13 +376,17 @@ def _fold_state(path: str, version: int | None = None) -> dict | None:
         if version is not None and v > version:
             break
         rec = _load_commit(path, fn)
+        wrote = rec.get("schema")
         if rec.get("base"):
             # compaction snapshot: rewritten files carry no masked rows
             files = list(rec.get("files", []))
             stats = {}
             bloom = {}
             dv = {}
+            schema = wrote or (None if files else _EMPTY_SCHEMA)
         else:
+            if rec.get("files"):
+                schema = _merge_schema(schema, wrote) if schema and wrote else None
             dropped = set(rec.get("remove", ()))
             if dropped:
                 files = [f for f in files if f not in dropped]
@@ -296,6 +412,7 @@ def _fold_state(path: str, version: int | None = None) -> dict | None:
         "bloom": bloom,
         "txn_high": txn_high,
         "dv": dv,
+        "schema": schema,
     }
 
 
@@ -350,6 +467,7 @@ def _publish_commit(
     read_version: int | None = None,
     conflict_files: list[str] | None = None,
     op: str | None = None,
+    schema: StructType | None = None,
 ) -> int:
     """Atomically add the NEXT commit record and return its version.
 
@@ -375,6 +493,11 @@ def _publish_commit(
     positions — merge-on-read DELETE, see ``delete_rows(mode="mor")``).
     Each DV is cumulative for its file, so the newest entry per file
     supersedes earlier ones when the log folds.
+    ``schema`` is the Spark schema the added files were written with
+    (see ``_written_schema``); readers fold it instead of inferring the
+    table schema from footers. A non-base commit whose schema retypes a
+    column of the current snapshot raises ValueError and publishes
+    nothing.
     """
     cdir = _os.path.join(path, _COMMITS_DIR)
     _os.makedirs(cdir, exist_ok=True)
@@ -392,6 +515,8 @@ def _publish_commit(
         rec["bloom"] = bloom
     if dv:
         rec["dv"] = dv
+    if schema is not None and files:
+        rec["schema"] = _nullable_json(schema.jsonValue())
     manifest_rel = None
     n_entries = len(files) + len(remove or ()) + len(dv or {})
     if n_entries > _MANIFEST_INLINE_MAX:
@@ -404,6 +529,12 @@ def _publish_commit(
         while True:
             entries = _commit_entries(path) or []
             version = (entries[-1][0] + 1) if entries else 0
+            if "schema" in rec and not base:
+                # refuse a retype before it is published — re-checked
+                # on every claim retry, like the conflict check below
+                cur = (_fold_state(path) or {}).get("schema")
+                if cur:
+                    _merge_schema(cur, rec["schema"])
             # Optimistic-concurrency re-validation (Delta's commit
             # protocol): before claiming a version, check the commits
             # that landed AFTER this writer's read snapshot. A base
@@ -952,6 +1083,7 @@ def append_rows(
         stats=_stats_for(path, moved),
         bloom=_blooms_for(path, moved),
         op="APPEND",
+        schema=_written_schema(df, path),
     )
     return True
 
@@ -1176,6 +1308,7 @@ def delete_rows(
             read_version=read_version,
             conflict_files=affected,
             op="DELETE_COW",
+            schema=_written_schema(survivors, path),
         )
         return n_deleted
     finally:
@@ -1274,6 +1407,7 @@ def update_rows(
                 read_version=read_version,
                 conflict_files=affected,
                 op="UPDATE_MOR",
+                schema=_written_schema(updated, path),
             )
             return n_updated
         rewritten = _apply_set(
@@ -1293,6 +1427,7 @@ def update_rows(
             read_version=read_version,
             conflict_files=affected,
             op="UPDATE_COW",
+            schema=_written_schema(rewritten, path),
         )
         return n_updated
     finally:
@@ -1341,6 +1476,7 @@ def merge_rows(
             stats=_stats_for(path, staged),
             bloom=_blooms_for(path, staged),
             op="MERGE",
+            schema=_written_schema(source, path),
         )
     # identification scan pruned by the source's own key range —
     # derived bounds, so it can never miss a matching file (see
@@ -1380,6 +1516,7 @@ def merge_rows(
                 read_version=read_version,
                 conflict_files=affected,
                 op="MERGE_MOR",
+                schema=_written_schema(source, path),
             )
         finally:
             matched.unpersist()
@@ -1411,6 +1548,7 @@ def merge_rows(
             read_version=read_version,
             conflict_files=hits,
             op="MERGE_COW",
+            schema=_written_schema(out, path),
         )
     finally:
         hit_files.unpersist()
@@ -1429,7 +1567,8 @@ def read_changes(
     needs a real format's row tracking), and the feed for a version
     range is readable until vacuum reclaims a removed file in it."""
     entries = _commit_entries(path) or []
-    cdir = _os.path.join(path, _COMMITS_DIR)
+    # columns are add-only: the latest schema reads every generation
+    schema = _logged_schema(_fold_state(path))
     parts = []
     for v, fn in entries:
         if v <= since_version:
@@ -1438,10 +1577,9 @@ def read_changes(
         if rec.get("base") or not rec.get("files"):
             continue
         parts.append(
-            spark.read.option("mergeSchema", "true")
-            .option("basePath", path)
-            .parquet(*[_os.path.join(path, f) for f in rec["files"]])
-            .withColumn("_commit_version", F.lit(v))
+            _scan(spark, path, schema, rec["files"]).withColumn(
+                "_commit_version", F.lit(v)
+            )
         )
     if not parts:
         return (
@@ -1503,6 +1641,17 @@ def _apply_partition_spec(df: DataFrame, path: str) -> tuple[DataFrame, list[str
         else:
             df = df.withColumn(c, F.expr(expr))
     return df, [c for c in spec.get("cols", []) if c in df.columns]
+
+
+def _written_schema(df: DataFrame, path: str) -> StructType:
+    """The schema ``_stage_files(df, path)`` writes: ``df``'s columns
+    plus the generated partition columns it computes (analysis only —
+    no Spark job). Its commit logs this for readers."""
+    spec = table_properties(path).get("partition_spec") or {}
+    for c, expr in (spec.get("generated") or {}).items():
+        if c not in df.columns:
+            df = df.withColumn(c, F.expr(expr))
+    return df.schema
 
 
 def _stage_files(df: DataFrame, path: str) -> list[str]:
@@ -1703,6 +1852,7 @@ def compact_fact_table(
         bloom=_blooms_for(path, files),
         read_version=read_version,
         op="COMPACT",
+        schema=_written_schema(current, path),
     )
 
 
@@ -1897,6 +2047,42 @@ def _apply_dv(
     )
 
 
+def _logged_schema(state: dict | None) -> StructType | None:
+    """The schema a read of ``state``'s files has, from the log alone:
+    the folded schema with the partition columns (the ``k=v``
+    directories of the file paths) moved last, as Spark's reader
+    orders them. None when the log cannot describe the snapshot or it
+    has no files."""
+    if not state or not state["files"] or not state.get("schema"):
+        return None
+    parts = [
+        seg.split("=", 1)[0]
+        for seg in _os.path.dirname(state["files"][0]).split(_os.sep)
+        if "=" in seg
+    ]
+    fields = state["schema"]["fields"]
+    ordered = [f for f in fields if f["name"] not in parts] + [
+        f for p in parts for f in fields if f["name"] == p
+    ]
+    return StructType.fromJson({"type": "struct", "fields": ordered})
+
+
+def _scan(
+    spark: SparkSession, path: str, schema: StructType | None, rels: list[str]
+) -> DataFrame:
+    """Read the table files ``rels``. A logged ``schema`` spares the
+    footer-inference job and keeps partition columns typed as written
+    ("007" stays a string); without one, ``mergeSchema`` infers it."""
+    reader = (
+        spark.read.schema(schema)
+        if schema is not None
+        else spark.read.option("mergeSchema", "true")
+    )
+    return reader.option("basePath", path).parquet(
+        *[_os.path.join(path, f) for f in rels]
+    )
+
+
 def _read_snapshot(
     spark: SparkSession,
     path: str,
@@ -1914,6 +2100,7 @@ def _read_snapshot(
     if files is None:
         df = spark.read.option("mergeSchema", "true").parquet(path)
         return _with_pos(df, path) if with_pos else df
+    schema = _logged_schema(state)
     if prune and files:
         stats, blooms = state["stats"], state["bloom"]
         kept = [
@@ -1926,30 +2113,22 @@ def _read_snapshot(
             files = kept
         else:
             # provably-empty result: serve the snapshot schema without
-            # scanning data (one file read at planning, zero rows)
-            one = (
-                spark.read.option("mergeSchema", "true")
-                .option("basePath", path)
-                .parquet(*[_os.path.join(path, f) for f in files])
-            )
+            # scanning data
+            one = _scan(spark, path, schema, files)
             if with_pos:
                 one = _with_pos(one, path)
             return one.limit(0)
     if not files:
-        schema = _read_sidecar_schema(path)
-        if schema is not None:
-            df = spark.createDataFrame([], schema)
+        sidecar = _read_sidecar_schema(path)
+        if sidecar is not None:
+            df = spark.createDataFrame([], sidecar)
             if with_pos:
                 df = df.withColumn(
                     "_src_file", F.lit(None).cast("string")
                 ).withColumn("_row_idx", F.lit(None).cast("long"))
             return df
         raise FileNotFoundError(f"empty committed table at {path}")
-    df = (
-        spark.read.option("mergeSchema", "true")
-        .option("basePath", path)
-        .parquet(*[_os.path.join(path, f) for f in files])
-    )
+    df = _scan(spark, path, schema, files)
     live = set(files)
     dvmap = {f: d for f, d in state["dv"].items() if f in live}
     if not dvmap:
@@ -1966,7 +2145,10 @@ def read_fact_table(
     as_of_ts: float | None = None,
 ) -> DataFrame:
     """Read with schema union across file generations (S5 read side):
-    rows written before a column existed read NULL for it.
+    rows written before a column existed read NULL for it. The schema
+    comes from the commit log (``table_schema``), so building the
+    DataFrame runs no Spark job; only snapshots the log cannot
+    describe are read with ``mergeSchema`` footer inference.
 
     File resolution honors the commit log when one exists — data
     files a crashed append moved into place but never published are
@@ -1997,6 +2179,25 @@ def read_fact_table(
             raise ValueError("pass either version or as_of_ts, not both")
         version = version_at(path, as_of_ts)
     return _read_snapshot(spark, path, version=version, prune=prune)
+
+
+def table_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The schema ``read_fact_table(spark, path)`` has, or None when
+    there is no table. Taken from the commit log — no Spark job and no
+    footer read — whenever the log describes the snapshot; a table
+    with no data yet answers its ``create_fact_table`` schema. Only a
+    snapshot the log cannot describe (a table with no log, or commits
+    written before schemas were logged) is inferred from the data
+    files, by one Spark read."""
+    state = _fold_state(path)
+    if state is not None and not state["files"]:
+        return _read_sidecar_schema(path)
+    schema = _logged_schema(state)
+    if schema is not None:
+        return schema
+    if state is None and not _list_parquet_files(path):
+        return None
+    return _read_snapshot(spark, path).schema
 
 
 def _read_sidecar_schema(path: str) -> StructType | None:

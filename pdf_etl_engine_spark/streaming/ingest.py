@@ -203,7 +203,8 @@ def archive_from_manifest(
     a fully successful pass so a crashed archive re-runs on replay."""
     if not Path(manifest_dir).exists():
         return 0
-    df = spark.read.parquet(manifest_dir)
+    # the manifest's one column is known: no schema-inference job
+    df = spark.read.schema("rel_path string").parquet(manifest_dir)
     root = bucket_root
 
     def move_partition(rows) -> "list[int]":

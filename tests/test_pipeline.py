@@ -201,9 +201,11 @@ def test_multi_folder_batch_is_one_extraction_job(tmp_path, spark):
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     # Fixed pipeline overhead only (counts/collects/save + AQE
     # broadcast-stage jobs) — must NOT scale with folder count.
-    # Measured: 19 jobs at 20 folders, 20 jobs at 40 folders; the old
+    # Measured on 4 CPUs: 13 jobs at 20 folders, 14 at 40, with the
+    # catalog read on the driver and the table schema from the commit
+    # log (no folders collect, no footer-inference read); the old
     # per-folder loop ran 3+ jobs PER folder (60+ here).
-    assert n_jobs <= 25, f"{n_jobs} jobs for {n_folders} folders"
+    assert n_jobs <= 14, f"{n_jobs} jobs for {n_folders} folders"
 
     # every folder's row landed with its own KPI column typed
     out = writers.read_fact_table(spark, facts)
@@ -353,3 +355,59 @@ def test_catalog_reads_pre_r5_schema(tmp_path, spark):
     cat.add_share("u1", "f1", "e@x.com", "view")  # stamped row wins
     assert cat.effective_share("u1", "f1", "e@x.com") == "view"
     assert cat.can_read("u2", "e@x.com", "u1", "f1")
+
+
+def test_catalog_driver_reads_match_spark(tmp_path, spark):
+    """Catalog lookups read the parquet on the driver. They must answer
+    exactly what a Spark collect with newest-wins ordering answers:
+    same dicts (naive datetimes, maps as dicts, structs as dicts), the
+    newest generation per key, 'edit' winning a timestamp tie."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    def shape(schema):  # list item names and the UTC zone aside
+        return [
+            (f.name, str(f.type).replace("element:", "item:").replace(", tz=UTC", ""))
+            for f in schema
+        ]
+
+    for ddl, arrow in ((pipeline.FOLDERS_SCHEMA, pipeline._FOLDERS_ARROW),
+                       (pipeline.SHARES_SCHEMA, pipeline._SHARES_ARROW)):
+        want = to_arrow_schema(spark.createDataFrame([], ddl).schema)
+        assert shape(want) == shape(arrow)
+
+    cat = pipeline.Catalog(spark, str(tmp_path / "catalog"))
+    cat.create_folder("u1", "inv", "Old", kpi_metadata=[
+        {"name": "A", "sample_value": "1", "type": "number"}])
+    cat.create_folder("u1", "inv", "New", "hint", kpi_metadata=[
+        {"name": "B", "sample_value": "x", "type": "string"}],
+        selected_kpis=["B"], kpi_samples={"B": "x"})
+    cat.create_folder("u2", "inv", "Other")
+    # legacy generation with no timestamp: every stamped one beats it
+    spark.createDataFrame(
+        [("u3", "inv", "Legacy", "", False, "x", None, None, None, None,
+          None)],
+        pipeline.FOLDERS_SCHEMA,
+    ).write.mode("append").parquet(cat.folders_path)
+    folders = [r.asDict(recursive=True) for r in cat.folders().collect()]
+    for tenant in ("u1", "u2", "u3"):
+        rows = [r for r in folders if r["tenant_id"] == tenant]
+        newest = max(rows, key=lambda r: (r["created_at"] is not None,
+                                          r["created_at"] or 0))
+        assert cat.get_folder(tenant, "inv") == newest
+    assert cat.get_folder("u1", "inv")["kpi_samples"] == {"B": "x"}
+    assert sorted(
+        (m["tenant_id"], m["display_name"])
+        for m in pipeline.latest_folder_metas(cat)
+    ) == [("u1", "New"), ("u2", "Other"), ("u3", "Legacy")]
+
+    # two legacy (unstamped) shares tie: 'edit' wins, a stamped one beats both
+    spark.createDataFrame(
+        [("u2", "inv", "e@x.com", p, None) for p in ("edit", "view")],
+        pipeline.SHARES_SCHEMA,
+    ).write.parquet(cat.shares_path)
+    assert cat.effective_share("u2", "inv", "E@x.com") == "edit"
+    assert cat.live_shares("e@x.com") == {("u2", "inv"): "edit"}
+    assert cat.resolve_folder_for_read("u9", "e@x.com", "inv")["owner"] == "u2"
+    cat.add_share("u2", "inv", "e@x.com", "view")
+    assert cat.effective_share("u2", "inv", "e@x.com") == "view"
+    assert cat.live_shares("E@X.com") == {("u2", "inv"): "view"}

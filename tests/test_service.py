@@ -446,3 +446,69 @@ def test_list_folders_owned_and_shared(tmp_path, spark):
         "is_trained": True, "status": "active",
         "owner_id": "user_abc", "permission": "view",
     }]
+
+
+def _job_count(spark, fn):
+    """(fn(), number of Spark jobs fn ran) via a statusTracker job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"service-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "service job probe")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_get_results_runs_one_job_and_upload_none(tmp_path, spark):
+    """Metadata lookups read the catalog and the fact table's schema
+    from the driver: an upload runs no Spark job, and a read runs only
+    the top-k collect (the reference answers both with point reads,
+    main.py:617-630, 764-811)."""
+    from pyspark.sql import functions as F
+
+    from pdf_etl_engine_spark.sources import writers
+
+    svc, verifier = _service(tmp_path, spark)
+    owner = verifier.issue("user_abc", "owner@example.com")
+    editor = verifier.issue("user_ed", "editor@example.com")
+    viewer = verifier.issue("user_vw", "viewer@example.com")
+    svc.create_folder(owner, {"name": "Docs", "kpi_metadata": KPI_META})
+    for email, perm in (("editor@example.com", "edit"),
+                        ("viewer@example.com", "view")):
+        svc.share_folder(owner, {
+            "folder_id": "docs", "shared_email": email, "permission": perm,
+        })
+    writers.append_rows(
+        spark.range(3).select(
+            F.lit("user_abc").alias("tenant_id"),
+            F.lit("docs").alias("folder_id"),
+            F.col("id").cast("string").alias("row_id"),
+            F.lit("x.pdf").alias("file_name"),
+            F.current_timestamp().alias("uploaded_at"),
+        ),
+        svc.fact_path,
+    )
+
+    (status, body), n_jobs = _job_count(
+        spark, lambda: svc.upload_batch_file(editor, {
+            "folder_id": "docs", "owner_id": "user_abc",
+            "filename": "y.pdf", "content": build_pdf(["Status: ok"]),
+        })
+    )
+    assert status == 200 and n_jobs == 0
+    for token, owner_id in ((owner, None), (viewer, "user_abc"), (viewer, None)):
+        (status, body), n_jobs = _job_count(
+            spark, lambda: svc.get_results(token, "docs", owner_id=owner_id)
+        )
+        assert status == 200 and len(body["results"]) == 3
+        assert n_jobs == 1, (owner_id, n_jobs)
+    (status, _), n_jobs = _job_count(
+        spark, lambda: svc.upload_batch_file(viewer, {
+            "folder_id": "docs", "owner_id": "user_abc",
+            "filename": "z.pdf", "content": build_pdf(["Status: ok"]),
+        })
+    )
+    assert status == 403 and n_jobs == 0
