@@ -234,13 +234,14 @@ SF1_X_HEAVY = (
     "x_pii_redact",
 )
 # At sf1 the near-dup runs at its PRODUCTION bucket width (k=10,
-# x4j) — the graded k=3 instance (x4i) is corpus-sized for the ~2k
-# grading vectors and goes dense at 20k, which is a parameterization
-# artifact, not the operator's scale behavior (same substitution as
-# tools/sf1_parity.py; VERDICT r9 #4). Recorded in the payload so the
-# ratio is never silently measured on a different query.
+# x4j2 — the same arithmetic-plane binding of fused_lsh_pairs) — the
+# graded k=3 instance (x4i) is corpus-sized for the ~2k grading
+# vectors and goes dense at 20k, which is a parameterization
+# artifact, not the operator's scale behavior (VERDICT r9 #4).
+# Recorded in the payload so the ratio is never silently measured on
+# a different query.
 SF1_HEAVY_SUBSTITUTE = {
-    "x_embedding_near_dup": "x4j_lsh_near_dup_k10",
+    "x_embedding_near_dup": "x4j2_lsh_near_dup_colocated",
 }
 # wall-clock guard: if the heavy section exceeds this budget, the
 # remaining queries are skipped WITH A NOTE in the payload (no silent
@@ -259,8 +260,8 @@ SF1_HEAVY_BUDGET_S = 1400.0
 # driver timeout.
 # MOVED TO BASELINE.md one-time records (Spark row removed):
 #   x_pq_adc_hof_exhibit (x47g) — the deliberately-interpreted HOF
-#     exhibit, 3.1x by design, adjudicated r14; re-measuring it every
-#     round re-litigates a settled trade at ~38 s/round.
+#     exhibit, 3.1x by design, adjudicated r14; the query itself has
+#     since been deleted (x47b reproduces its oracle answer).
 #   x_near_dup_colocated (x4j2)  — superseded as the production config
 #     by x_near_dup_multiprobe (x4n, kept); its completing twin cost
 #     ~278 s/round; correctness stays driver-graded (CORRECTNESS x4j2).
@@ -583,9 +584,9 @@ def bench_sf1_anchors(spark) -> dict:
     block kernel finishes the exact 400M-pair k-NN in ~1 min where
     the SQL form exceeds the cap). x14b has no oracle by nature (LSH
     edge recall is approximate) — its comparator is x14c's exact-edge
-    recursive-CTE oracle under the same cap. x4j2 shares x4j's oracle
-    byte-for-byte, so its DuckDB twin is the sf1_heavy
-    x_embedding_near_dup number — not re-measured; likewise x4l
+    recursive-CTE oracle under the same cap. x4j2's DuckDB twin is
+    the sf1_heavy x_embedding_near_dup number (x4j2 is that lane's
+    sf1 substitute) — not re-measured; likewise x4l
     shares x4k's. METHODOLOGY ASYMMETRY, stated (ADVICE r11): only
     Spark gets a settle run here — the DuckDB anchor numbers are COLD
     (an untimed duck settle would double a section whose twins are

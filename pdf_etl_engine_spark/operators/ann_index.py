@@ -570,17 +570,9 @@ def x47b_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical fused twin read 0.30×; the kernel reproduces the
     HOF fold's float sequence exactly (pinned row-for-row by
     tests/test_pq_spans.py), so the oracle and the answer are
-    unchanged. The interpreted HOF-fold encode remains measurable as
-    the explicitly-named exhibit x47g_pq_adc_hof_exhibit."""
+    unchanged."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return _pq_adc_plan(emb, pq_encode_arrow(emb))
-
-
-def _pq_adc_plan(emb: DataFrame, enc: DataFrame) -> DataFrame:
-    """The ADC scan + per-query top-5 over an encoded
-    (vec_id, pq_code) relation — shared by x47b/x47f (Arrow-kernel
-    encode, canonical since r14) and x47g (HOF-fold exhibit), so the
-    scan half cannot drift between them."""
+    enc = pq_encode_arrow(emb)
     cbflat = _pq_cb_flat()
     lut = F.transform(
         F.sequence(F.lit(0), F.lit(_PQ_S * _PQ_K - 1)),
@@ -617,34 +609,6 @@ def _pq_adc_plan(emb: DataFrame, enc: DataFrame) -> DataFrame:
             "rank",
         )
     )
-
-
-@query("x47f_pq_adc_fused", oracle=_X47B_ORACLE)
-def x47f_pq_adc_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X47f: the fused-encode ADC top-k, kept under its r13 name for
-    continuity — since the r14 swap (VERDICT r13 #2) this IS x47b's
-    canonical plan, so it delegates to x47b_pq_adc_topk outright and
-    cannot drift from it. The HOF-vs-Arrow measured statement this
-    name used to carry now lives in the exhibit pair
-    (x47b canonical vs x47g_pq_adc_hof_exhibit)."""
-    return x47b_pq_adc_topk(spark, sf_dir)
-
-
-@query("x47g_pq_adc_hof_exhibit", oracle=_X47B_ORACLE)
-def x47g_pq_adc_hof_exhibit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X47g: x47b's plan with the encode half as the interpreted
-    HIGHER-ORDER-FUNCTION fold (pq_encode) — the EXHIBIT side of the
-    repo's measured "when is an Arrow kernel the fast path" statement
-    (VERDICT r13 #2 moved the fused kernel to the canonical name; the
-    HOF form stays registered, explicitly labeled, so the trade-off
-    stays measurable: same oracle, hash-identical answer, ~2× vs the
-    DuckDB twin at sf1 where the fused form reads ~0.3×). The fold
-    stays inside Catalyst but runs ~1024 interpreted lambda steps per
-    row (HOFs are CodegenFallback); the kernel runs the same
-    arithmetic — same float sequence, pinned row-for-row by
-    tests/test_pq_spans.py — as 64 vectorized array ops per batch."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return _pq_adc_plan(emb, pq_encode(emb))
 
 
 # ---------------------------------------------------------------------------

@@ -847,8 +847,8 @@ def x27_ngram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     final 4-decimal round then sits ~1e-9 away from any boundary.
 
     Scale shape: ONE map-only Arrow kernel turns each document into
-    its per-doc trigram COUNTS (doc-local pre-aggregation — the x4j
-    Arrow-kernel discipline applied to strings), so the only rows that
+    its per-doc trigram COUNTS (doc-local pre-aggregation — the LSH
+    bucket kernels' Arrow discipline applied to strings), so the only rows that
     ever shuffle are (doc_id, tri, k) with the trigram packed into a
     single BIGINT: three 21-bit Unicode code points in 63 bits, a
     bijection with the oracle's 3-char substring key, so every group

@@ -174,11 +174,11 @@ def x3_dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries the candidate generation, never an all-pairs product —
     and the banded rows are ID-ONLY (r12: the 16-long signature used
     to ride the band shuffle 4× per doc and both sides of the
-    self-join — the payload-through-the-shuffle pattern the x4j
-    docstring flags; signatures now re-attach to the deduped pairs
-    via two doc_id equi-joins against the corpus-bounded sig
-    relation). The estimated Jaccard (signature agreement) filters
-    candidates at the end."""
+    self-join — the payload-through-the-shuffle pattern
+    fused_lsh_pairs' docstring flags; signatures now re-attach to the
+    deduped pairs via two doc_id equi-joins against the
+    corpus-bounded sig relation). The estimated Jaccard (signature
+    agreement) filters candidates at the end."""
     docs = load_table(spark, sf_dir, "documents")
     sig = docs.select("doc_id", minhash_signature(F.col("text")).alias("sig"))
     rows_per_band = _N_HASHES // _BANDS
@@ -808,66 +808,27 @@ def x4c_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def lsh_near_dup_pairs(
-    emb: DataFrame,
-    n_tables: int = 12,
-    n_bits: int = 3,
-    threshold: float = 0.25,
-) -> DataFrame:
-    """LSH-bucketed near-dup pair generation (x4d's core, reused as the
-    edge source for x14b clustering): candidates from shared (t, bucket)
-    keys, exact cosine rescoring, dedup across tables. No cross join
-    anywhere — the quadratic part rides the shuffle key."""
-    v = emb.select(
-        "vec_id",
-        F.explode(_lsh_buckets(n_tables, n_bits)).alias("tb"),
-        _as_double(F.col("embedding")).alias("e"),
-        F.sqrt(_dot(_as_double(F.col("embedding")),
-                    _as_double(F.col("embedding")))).alias("nrm"),
-    ).select("vec_id", "tb.t", "tb.b", "e", "nrm")
-    a, b = v.alias("a"), v.alias("b")
-    cos = _dot(F.col("a.e"), F.col("b.e")) / (F.col("a.nrm") * F.col("b.nrm"))
-    return (
-        a.join(
-            b,
-            (F.col("a.t") == F.col("b.t"))
-            & (F.col("a.b") == F.col("b.b"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .filter(cos >= threshold)  # raw cos, same boundary as exact x4c
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            stable_round(cos, 4).alias("cos_sim"),
-        )
-        .dropDuplicates(["vec_a", "vec_b"])
-        .orderBy("vec_a", "vec_b")
-    )
+# --- the LSH near-dup family: bindings of ONE engine ------------------------
+# Every near-dup pair query below (x4d, x4i, x4j2, x4m, x4n) and x14b's
+# edge source is a parameter binding of fused_lsh_pairs: L tables, k
+# bits, modulus M, plane family and probe radius. The arithmetic family
+# has deterministic integer-component planes (component_j of plane p =
+# (31p + 17j) mod M − ⌊M/2⌋) and every dot product is a LEFT-FOLD — the
+# x4g discipline — so both engines run identical IEEE sequences and
+# every bucket bit agrees exactly.
 
 
 @query("x4d_embedding_near_dup_lsh")  # rows-only: approximate recall
 def x4d_embedding_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale path for x4c: MULTI-TABLE LSH pair generation. A pair is
-    a candidate if the two vectors share a bucket in ANY of L=12
-    tables of k=3 bits (the permissive x4c threshold cos≥0.25 means
-    p as low as ≈0.58, so recall needs small k and many tables:
-    1-(1-0.58³)^12 ≈ 0.92 at the threshold, higher for closer pairs —
-    measured ≥0.8 by tests/test_extensions_recall.py). The self-join
-    key is (t, bucket) — shuffle-partitioned pair generation, no
-    cross join; exact cosine then filters candidates only."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return lsh_near_dup_pairs(emb, n_tables=12, n_bits=3, threshold=0.25)
-
-
-# --- x4i: the LSH near-dup path, ORACLE-GRADED (VERDICT r6 #1) --------------
-# Same (L=12, k=3) multi-table sign-LSH shape as x4d, with the
-# hyperplanes replaced by deterministic integer-component planes
-# (component_j of plane p = (31p + 17j) mod 61 − 30; 61 > 36 planes so
-# no two planes repeat, unlike a mod-13 scheme) and every dot product
-# computed as a LEFT-FOLD — the x4g discipline — so both engines run
-# identical IEEE sequences and every bucket bit agrees exactly.
-
-_X4I_L, _X4I_K = 12, 3
+    """Scale path for x4c: MULTI-TABLE LSH pair generation with the
+    hash-mixed plane family. A pair is a candidate if the two vectors
+    share a bucket in ANY of L=12 tables of k=3 bits (the permissive
+    x4c threshold cos≥0.25 means p as low as ≈0.58, so recall needs
+    small k and many tables: 1-(1-0.58³)^12 ≈ 0.92 at the threshold,
+    higher for closer pairs — measured ≥0.8 by
+    tests/test_extensions_recall.py). Candidate generation and exact
+    cosine rescoring run per (table, bucket) group — no cross join."""
+    return _lsh_near_dup(spark, sf_dir, 12, 3, 61, plane="mixed")
 
 
 def _arith_bucket_sql(t: int, k: int, mod: int) -> str:
@@ -875,7 +836,7 @@ def _arith_bucket_sql(t: int, k: int, mod: int) -> str:
     has integer components (31p + 17j) mod M − ⌊M/2⌋, and each dot is
     the same left-fold sequence the Spark side runs, so the bucket
     integers agree bit-for-bit. M must exceed L·k so no two planes
-    coincide (x4i: M=61 covers 36 planes; x4j: M=127 covers 120)."""
+    coincide (x4i: M=61 covers 36 planes; x4j2: M=127 covers 120)."""
     half = mod // 2
     bits = []
     for i in range(k):
@@ -891,132 +852,10 @@ def _arith_bucket_sql(t: int, k: int, mod: int) -> str:
     return " + ".join(bits)
 
 
-def _x4i_bucket_sql(t: int) -> str:
-    return _arith_bucket_sql(t, _X4I_K, 61)
-
-
-_X4I_ORACLE = f"""
-    WITH v AS (
-      SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e,
-             sqrt(list_sum(list_transform(embedding,
-                  x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-      FROM embeddings
-    ), tb AS (
-      {" UNION ALL ".join(
-          f"SELECT vec_id, {t} AS t, {_x4i_bucket_sql(t)} AS b FROM embeddings"
-          for t in range(_X4I_L)
-      )}
-    ), cand AS (
-      SELECT DISTINCT a.vec_id AS va, b2.vec_id AS vb
-      FROM tb a JOIN tb b2
-        ON a.t = b2.t AND a.b = b2.b AND a.vec_id < b2.vec_id
-    )
-    SELECT c.va AS vec_a, c.vb AS vec_b,
-           round(list_sum(list_transform(list_zip(x.e, y.e),
-                 s -> s[1] * s[2])) / (x.nrm * y.nrm) + 5e-10, 4) AS cos_sim
-    FROM cand c JOIN v x ON x.vec_id = c.va JOIN v y ON y.vec_id = c.vb
-    WHERE list_sum(list_transform(list_zip(x.e, y.e), s -> s[1] * s[2]))
-          / (x.nrm * y.nrm) >= 0.25
-"""
-
-
-def _arith_buckets(n_tables: int, n_bits: int, mod: int) -> Column:
-    """Array of (t, bucket) structs from the deterministic integer
-    planes, fold order = index order; the Spark twin of
-    ``_arith_bucket_sql``. Each plane dot is ONE fused aggregate fold
-    — acc + e[j]·coef(j) per step — not a transform-then-aggregate
-    pair: higher-order functions are interpreted (CodegenFallback),
-    so the fused form halves the lambda steps and skips materializing
-    a 64-element product array per plane while running the IDENTICAL
-    IEEE add sequence (same products, same order, same 0.0 seed)."""
-    vd = F.transform(F.col("embedding"), lambda v: v.cast("double"))
-    half = mod // 2
-    tables = []
-    for t in range(n_tables):
-        b = F.lit(0)
-        for i in range(n_bits):
-            p = t * n_bits + i
-
-            # two-arg closure (p captured at the immediate
-            # F.aggregate call below): acc is the running sum, j the
-            # sequence element — NOT the array-index second argument
-            # a two-arg transform lambda would receive
-            def step(acc, j):
-                return acc + F.element_at(vd, j + 1) * (
-                    (F.lit(31 * p) + 17 * j) % mod - half
-                ).cast("double")
-
-            dot = F.aggregate(
-                F.sequence(F.lit(0), F.lit(63)), F.lit(0.0), step
-            )
-            b = b + F.when(dot > 0, F.lit(1 << i)).otherwise(0)
-        tables.append(F.struct(F.lit(t).alias("t"), b.alias("b")))
-    return F.array(*tables)
-
-
-def _x4i_buckets() -> Column:
-    return _arith_buckets(_X4I_L, _X4I_K, 61)
-
-
-@query("x4i_lsh_near_dup_arith", oracle=_X4I_ORACLE)
-def x4i_lsh_near_dup_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4 near-dup, LSH SCALE PATH, oracle-graded end to end: pair
-    candidates come from shared (table, bucket) keys — an equi-join
-    whose shuffle key carries the pair generation, never a cross join
-    — then exact cosine rescoring keeps only true near-dups
-    (cos ≥ 0.25). Deterministic integer hyperplanes + fold-ordered
-    dots make every bucket bit AND every rescored cosine bit-identical
-    across engines, so the whole pipeline (blocking + rescore) grades
-    hash-exact, not just the arithmetic twins. Recall vs the exact
-    x4c baseline is measured at ~0.90 on the graded corpus
-    (tests/test_extensions_recall.py); x4c remains registered in the
-    tail as the exactness anchor.
-
-    100 TB shape: bucket assignment is map-side codegen; the self-join
-    shuffles on (t, bucket) — candidate volume is bucket-bounded, and
-    a hot bucket splits under AQE skew handling. No O(n²) anywhere.
-
-    Scale parameterization: the bucket width k is a CORPUS-SIZE
-    parameter (k ≈ log2(n / target_bucket)); this graded instance pins
-    k=3 for the ~6k-vector grading corpora so the oracle SQL stays a
-    fixed string. At sf1 (20k vectors) k=3 buckets go dense — the sf1
-    parity sweep (tools/sf1_parity.py) records exactly that blow-up —
-    while the production entry point (lsh_near_dup_pairs, same
-    machinery) exposes n_bits and completes sf1 at k=10 (294k
-    near-dup pairs, measured). A deployment raises k with n; recall
-    is then re-tuned via L (tests/test_extensions_recall.py)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    v = emb.select(
-        "vec_id",
-        F.explode(_x4i_buckets()).alias("tb"),
-        _as_double(F.col("embedding")).alias("e"),
-        F.sqrt(_dot(_as_double(F.col("embedding")),
-                    _as_double(F.col("embedding")))).alias("nrm"),
-    ).select("vec_id", "tb.t", "tb.b", "e", "nrm")
-    a, b = v.alias("a"), v.alias("b")
-    cos = _dot(F.col("a.e"), F.col("b.e")) / (F.col("a.nrm") * F.col("b.nrm"))
-    return (
-        a.join(
-            b,
-            (F.col("a.t") == F.col("b.t"))
-            & (F.col("a.b") == F.col("b.b"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .filter(cos >= 0.25)
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            stable_round(cos, 4).alias("cos_sim"),
-        )
-        .dropDuplicates(["vec_a", "vec_b"])
-    )
-
-
 def _arith_lsh_oracle(n_tables: int, n_bits: int, mod: int) -> str:
     """DuckDB oracle for the arithmetic-LSH near-dup pipeline at any
-    (L, k, M) parameterization — same candidate-then-rescore shape as
-    ``_X4I_ORACLE``."""
+    (L, k, M) parameterization: distinct (table, bucket) candidate
+    pairs, then the exact fold-ordered cosine at cos ≥ 0.25."""
     branches = " UNION ALL ".join(
         f"SELECT vec_id, {t} AS t,"
         f" {_arith_bucket_sql(t, n_bits, mod)} AS b FROM embeddings"
@@ -1045,30 +884,33 @@ def _arith_lsh_oracle(n_tables: int, n_bits: int, mod: int) -> str:
 """
 
 
+@query("x4i_lsh_near_dup_arith", oracle=_arith_lsh_oracle(12, 3, 61))
+def x4i_lsh_near_dup_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X4 near-dup, LSH SCALE PATH, oracle-graded end to end: the
+    arithmetic-plane binding at the grading corpora's bucket width
+    (L=12, k=3, M=61 covering 36 distinct planes). Pair candidates
+    come from shared (table, bucket) groups, never a cross join, and
+    exact cosine rescoring keeps only true near-dups (cos ≥ 0.25).
+    Deterministic integer planes + fold-ordered dots make every
+    bucket bit AND every rescored cosine bit-identical across
+    engines, so blocking and rescore grade hash-exact. Recall vs the
+    exact x4c baseline is ~0.90 on the graded corpus
+    (tests/test_extensions_recall.py).
+
+    k is a CORPUS-SIZE parameter (k ≈ log2(n / target_bucket)): k=3
+    keeps this oracle a fixed string for the ~2k-vector grading
+    corpora, and its buckets go dense at sf1's 20k vectors. x4j2 is
+    the same family at k=10 (M=127), the width sf1 runs at."""
+    return _lsh_near_dup(spark, sf_dir, 12, 3, 61)
+
+
 _X4J_L, _X4J_K, _X4J_MOD = 12, 10, 127
-
-
-def _x4j_bucket_kernel(n_tables: int, n_bits: int, mod: int):
-    """Arrow-vectorized sign-LSH bucket assignment: one pandas_udf
-    computing all L·k plane dots per vector with numpy, in the SAME
-    strict fold order the oracle's list_reduce runs — ``dots`` starts
-    at 0.0 and accumulates ``e_j · c_{p,j}`` in index order, each
-    operation an IEEE float64 multiply/add identical to the JVM's, so
-    every bucket integer is bit-identical to the fold form (checked:
-    the fused-fold twin and this kernel produce the same sum(b) over
-    sf1's 240k bucket rows). Spark has no native dense linear algebra
-    — the fold form (``_arith_buckets``) interprets one lambda call
-    per element (CodegenFallback) and measured 34 s for sf1's
-    20k × 120 × 64 steps; this kernel does the identical arithmetic
-    in 1-2 s of vectorized numpy over Arrow batches."""
-    coefs = _arith_plane_coefs(n_tables * n_bits, mod)
-    return _bucket_kernel_from_coefs(coefs, n_tables, n_bits)
 
 
 def _arith_plane_coefs(n_planes: int, mod: int):
     """[n_planes, 64] float64 arithmetic-family coefficients
     ((31p + 17j) % mod − mod//2) — THE bit-exactness contract with
-    _arith_bucket_sql; every consumer (x4j kernel, fused_lsh_pairs)
+    _arith_bucket_sql; every consumer (fused_lsh_pairs, the tests)
     must build planes through here so the families can't drift."""
     import numpy as np
 
@@ -1081,9 +923,17 @@ def _arith_plane_coefs(n_planes: int, mod: int):
 
 
 def _bucket_kernel_from_coefs(coefs, n_tables: int, n_bits: int):
-    """The _x4j_bucket_kernel body for ANY [L·k, 64] float64 plane
-    matrix (arithmetic or hash-mixed family) — identical strict fold
-    order, so each family stays bit-exact against its own SQL twin."""
+    """Arrow-vectorized sign-LSH bucket assignment for ANY [L·k, 64]
+    float64 plane matrix (arithmetic or hash-mixed family): one
+    pandas_udf computing all L·k plane dots per vector with numpy, in
+    the SAME strict fold order the oracle's list_reduce runs — ``dots``
+    starts at 0.0 and accumulates ``e_j · c_{p,j}`` in index order,
+    each operation an IEEE float64 multiply/add identical to the
+    JVM's, so each family stays bit-exact against its own SQL twin.
+    Spark has no native dense linear algebra: a higher-order-function
+    fold interprets one lambda call per element (CodegenFallback) and
+    measured 34 s for sf1's 20k × 120 × 64 steps, where this kernel
+    does the identical arithmetic in 1-2 s over Arrow batches."""
     import numpy as np
     import pandas as pd
 
@@ -1120,9 +970,10 @@ class _VectorMatrixHandle:
     2-entry module cache keyed by path. Norms accumulate in strict
     j-order so they match the oracles' list_sum/list_reduce folds
     bit-for-bit; the flat-values decode is the identical f32→f64
-    widening the old driver-side toPandas build produced. Past
-    per-process-matrix range the rescore stage swaps for the bucketed
-    co-located kernel (rescore_mode="colocated", x4j2)."""
+    widening the old driver-side toPandas build produced. x4k is the
+    one consumer: exact kNN needs every vector, while the LSH
+    near-dup bindings hold one bucket of vectors per group
+    (fused_lsh_pairs)."""
 
     def __init__(self, path: str):
         self.path = path
@@ -1176,197 +1027,6 @@ def _vector_matrix(sf_dir: str) -> _VectorMatrixHandle:
     return _VectorMatrixHandle(table_path(sf_dir, "embeddings"))
 
 
-def _pair_cosine_kernel(handle: _VectorMatrixHandle):
-    """mapInPandas kernel: (vec_a, vec_b) ID pairs → + cos_raw, via
-    the lazily-built per-process vector matrix. Strict j-order
-    float64 accumulation — bit-identical to the oracles' list_sum
-    folds (see _x4j_bucket_kernel for the measured rationale)."""
-    import numpy as np
-
-    def rescore(batches):
-        ids_s, m, nrm = handle.get()
-        for batch in batches:
-            ia = np.searchsorted(ids_s, batch["vec_a"].to_numpy())
-            ib = np.searchsorted(ids_s, batch["vec_b"].to_numpy())
-            va, vb = m[ia], m[ib]
-            acc = np.zeros(len(va))
-            for j in range(64):  # strict fold order, matches list_sum
-                acc += va[:, j] * vb[:, j]
-            batch["cos_raw"] = acc / (nrm[ia] * nrm[ib])
-            yield batch
-
-    return rescore
-
-
-@query("x4j_lsh_near_dup_k10", oracle=_arith_lsh_oracle(_X4J_L, _X4J_K, _X4J_MOD))
-def x4j_lsh_near_dup_k10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x4i's PRODUCTION-SCALE parameterization, oracle-graded: same
-    arithmetic-LSH candidate generation + exact rescore, but with the
-    bucket width the deployment would actually run at sf1-and-beyond
-    corpus sizes — k=10 (1024 buckets/table, L=12, planes mod 127 so
-    all 120 planes are distinct). The graded x4i instance pins k=3 to
-    keep its oracle SQL fixed for the ~2k-vector grading corpora;
-    k=3 buckets go DENSE at sf1's 20k vectors (the one red row in the
-    r9 sf1 parity sweep). This entry closes that hole: it is the
-    variant tools/sf1_parity.py sweeps at sf1 (VERDICT r9 #4), where
-    it completes with bucket-bounded candidate volume. k scales as
-    ~log2(n / target_bucket_occupancy) with corpus size — at 100 TB
-    you'd raise k further and re-tune recall via L.
-
-    100 TB shape: bucket assignment is a map-only Arrow kernel; pair
-    generation rides the (t, bucket) shuffle key carrying 16-byte ID
-    rows ONLY (never the vector payload — x4i drags 1 KB rows through
-    its shuffle, 45 GB at sf1's 45.9M candidates); the rescore is a
-    second Arrow kernel against the lazily-built per-process vector
-    matrix (the same bytes the JVM form ships via F.broadcast, read
-    once per executor process from shared storage, never collected on
-    the driver — at vector counts past per-process-matrix range you'd
-    swap this stage for the bucketed co-located kernel, which exists
-    as x4j2_lsh_near_dup_colocated with identical candidates and
-    hash-identical output). AQE splits hot buckets. No O(n²) anywhere.
-
-    Python BY DESIGN (x5/x42/x43 precedent): both kernels are dense
-    linear algebra Spark has no native operator for. Spark's
-    higher-order folds are CodegenFallback — one interpreted lambda
-    call per element — and static expression chains either blow up
-    Catalyst analysis (24k-node trees, ~60 s per build) or fall out
-    of codegen at the join boundary; four measured JVM variants ran
-    107-500 s at sf1 where this shape runs 8-20 s, against the
-    oracle's 44 s in DuckDB. Every numpy operation is the identical
-    IEEE float64 sequence the oracle folds run (strict j-order
-    accumulation from 0.0), so the output stays hash-exact."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    rescore = _pair_cosine_kernel(_vector_matrix(sf_dir))
-    bucket_arr = _x4j_bucket_kernel(_X4J_L, _X4J_K, _X4J_MOD)
-    buckets = emb.select(
-        "vec_id", F.posexplode(bucket_arr("embedding")).alias("t", "b")
-    )
-    a, b = buckets.alias("a"), buckets.alias("b")
-    cand = a.join(
-        b,
-        (F.col("a.t") == F.col("b.t"))
-        & (F.col("a.b") == F.col("b.b"))
-        & (F.col("a.vec_id") < F.col("b.vec_id")),
-    ).select(
-        F.col("a.vec_id").alias("vec_a"),
-        F.col("b.vec_id").alias("vec_b"),
-    )
-    # dedup BEFORE the kernel (ADVICE r10): a pair colliding in
-    # several of the L tables would otherwise ride the cosine kernel
-    # once per collision (sf1: 45.9M raw candidates → 3.1M distinct);
-    # the dedup shuffle replaces the one dropDuplicates needed anyway
-    scored = cand.dropDuplicates(["vec_a", "vec_b"]).mapInPandas(
-        rescore, "vec_a bigint, vec_b bigint, cos_raw double"
-    )
-    return scored.filter(F.col("cos_raw") >= 0.25).select(
-        "vec_a",
-        "vec_b",
-        stable_round(F.col("cos_raw"), 4).alias("cos_sim"),
-    )
-
-
-def _coloc_cosine_kernel():
-    """Arrow kernel for the co-located rescore: rows arrive with BOTH
-    vector payloads already attached by co-partitioned joins, so the
-    kernel touches only its own partition — no per-process matrix, no
-    driver state, nothing broadcast. mapInArrow, not mapInPandas: the
-    pandas form materializes one Python ndarray object PER ROW for
-    each list column (2 × 23M allocations at sf1 — measured as ~9 s of
-    the 14 s run); the Arrow form reshapes each list column's flat
-    values buffer in one call. Cosine and both norms accumulate in
-    strict j-order from 0.0 (the oracles' list_sum fold), and the
-    f32→f64 widening is the same one the matrix path applies, so the
-    output is hash-identical to _pair_cosine_kernel's."""
-    import numpy as np
-    import pyarrow as pa
-
-    def rescore(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if not n:
-                continue
-            va = (
-                batch.column("ea")
-                .flatten()
-                .to_numpy(zero_copy_only=False)
-                .reshape(n, -1)
-                .astype(np.float64)
-            )
-            vb = (
-                batch.column("eb")
-                .flatten()
-                .to_numpy(zero_copy_only=False)
-                .reshape(n, -1)
-                .astype(np.float64)
-            )
-            acc = np.zeros(n)
-            na = np.zeros(n)
-            nb = np.zeros(n)
-            for j in range(va.shape[1]):  # strict fold order
-                acc += va[:, j] * vb[:, j]
-                na += va[:, j] * va[:, j]
-                nb += vb[:, j] * vb[:, j]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("vec_a"),
-                    batch.column("vec_b"),
-                    pa.array(acc / (np.sqrt(na) * np.sqrt(nb))),
-                ],
-                names=["vec_a", "vec_b", "cos_raw"],
-            )
-
-    return rescore
-
-
-def colocated_rescore(
-    cand: DataFrame, emb: DataFrame, n_partitions: int | None = None
-) -> DataFrame:
-    """Rescore (vec_a, vec_b) candidate pairs WITHOUT any full-corpus
-    per-process matrix — the scale path past the point where one
-    executor can hold every vector (the swap the x4j docstring
-    promises; VERDICT r10 #2).
-
-    Shape: the pair relation is repartitioned ONCE on vec_a — that
-    single ID-only exchange serves both the (vec_a, vec_b) distinct
-    (hashpartitioning(vec_a) satisfies the aggregate's clustered
-    distribution) and the first vector join. Each vector join is a
-    SHUFFLE_HASH join against the corpus-bounded embeddings relation
-    (hinted: the planner must never broadcast it — broadcasting is
-    exactly the assumption this path removes; with the embeddings
-    stored bucketed-by-vec_id, BucketedVectorStore, the vector side's
-    exchange disappears entirely — pinned by
-    tests/test_plans.py::test_bucketed_vector_store_probe_exchange_free).
-    Pair-bounded data crosses the wire twice: ID-only rows into the
-    vec_a join, then (ids + one vector payload) into the vec_b join —
-    the payload rides POST-dedup pairs (3.1M at sf1), never the raw
-    candidate stream (45.9M) the x4i shape dragged its 45 GB through.
-    The cosine itself runs in an Arrow kernel per co-located
-    partition."""
-    va = emb.select(
-        F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea")
-    )
-    vb = emb.select(
-        F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb")
-    )
-    # dedup FIRST: dropDuplicates' partial aggregate collapses the raw
-    # candidate stream map-side before its exchange (sf1: 45.9M → 3.5M
-    # partials; an explicit repartition up front measured 2.4× slower
-    # by pushing all raw rows through the wire). The deduped ID-only
-    # pairs then take one exchange per join key. A stored-bucketed
-    # vector side only stays Exchange-free if the pair side lands on
-    # the SAME partition count as the buckets — n_partitions must be
-    # the store's bucket count in that case.
-    deduped = cand.dropDuplicates(["vec_a", "vec_b"])
-    if n_partitions:
-        deduped = deduped.repartition(n_partitions, "vec_a")
-    paired = deduped.join(va.hint("shuffle_hash"), "vec_a").join(
-        vb.hint("shuffle_hash"), "vec_b"
-    )
-    return paired.select("vec_a", "vec_b", "ea", "eb").mapInArrow(
-        _coloc_cosine_kernel(), "vec_a bigint, vec_b bigint, cos_raw double"
-    )
-
-
 def _bucket_allpairs_kernel(
     threshold: float,
     coefs=None,
@@ -1380,9 +1040,9 @@ def _bucket_allpairs_kernel(
     ID pairs at or above ``threshold``. Bit-exactness: rows are
     sorted by vec_id (so the upper triangle IS the a<b pair set), and
     both the pair dot products and the norms accumulate in strict
-    j-order from 0.0 — the same IEEE float64 sequence as
-    _pair_cosine_kernel and the oracles' list_sum folds, so a pair
-    scored here is hash-identical to the matrix path's score.
+    j-order from 0.0 — the same IEEE float64 sequence as the
+    oracles' list_sum folds, so every emitted score is hash-identical
+    to the oracle's.
 
     Multi-probe groups (r12): when the group carries an ``h`` column
     (home-vs-probe flag from the Hamming-1 probe emission), only
@@ -1519,7 +1179,7 @@ def _embedding_count(sf_dir: str) -> int:
 def adaptive_lsh_bits(
     n: int, target_occupancy: int = 300, floor: int = 3
 ) -> int:
-    """The k-scales-with-corpus lever (x4j docstring) made executable:
+    """The k-scales-with-corpus lever (x4i docstring) made executable:
     k = max(floor, ceil(log2(n / target_occupancy))) keeps expected
     bucket occupancy ≈ target, so the per-group all-pairs block stays
     bounded no matter the corpus size. Grading corpora (≤2.4k vectors)
@@ -1772,9 +1432,12 @@ def fused_lsh_pairs(
     plane: str = "arith",
     probe_hamming: int = 0,
 ) -> DataFrame:
-    """Fused LSH candidate generation + exact rescore at any (L, k, M)
-    arithmetic-plane parameterization: bucket assignment is the x4j
-    Arrow kernel, then ONE applyInPandas kernel per (table, bucket)
+    """THE LSH near-dup pair engine: fused candidate generation + exact
+    rescore at any (L, k, M, plane family, probe radius)
+    parameterization. Every near-dup query (x4d, x4i, x4j2, x4m, x4n)
+    and x14b's edge source is a binding of it. Bucket assignment is
+    one Arrow kernel (_bucket_kernel_from_coefs), then ONE
+    applyInPandas kernel per (table, bucket)
     group computes that bucket's all-pairs cosine block locally (see
     _bucket_allpairs_kernel) and emits thresholded ID pairs —
     duplicate-free ACROSS tables by first-collision emission (r16:
@@ -1782,13 +1445,12 @@ def fused_lsh_pairs(
     already holds and emits a pair only from its first colliding
     table, so the trailing dropDuplicates Exchange of every surviving
     pair is gone — VERDICT r15 #3, guide §2.4). Only corpus×L-bounded
-    rows carry vector payload
-    through an exchange; the quadratic part never touches the JVM.
-    Replaces lsh_near_dup_pairs as x14b's edge source: that form
-    rescored every candidate through the interpreted _dot fold
-    (CodegenFallback, ~5M lambda-steps/s) and carried (e, nrm) payload
-    through the candidate-pair join — at sf1's dense k=3 buckets it
-    ran >10 min where this shape runs seconds.
+    rows carry vector payload through an exchange; the quadratic part
+    never touches the JVM. The column-expression self-join this
+    replaced rescored every candidate through the interpreted _dot
+    fold (CodegenFallback, ~5M lambda-steps/s) and carried (e, nrm)
+    payload through the candidate-pair join — at sf1's dense k=3
+    buckets it ran >10 min where this shape runs seconds.
 
     r12 levers: ``plane="mixed"`` swaps the correlated arithmetic
     sawtooth planes for the hash-mixed family (random-hyperplane
@@ -1843,38 +1505,54 @@ def fused_lsh_pairs(
     return scored
 
 
-@query(
-    "x4j2_lsh_near_dup_colocated",
-    oracle=_arith_lsh_oracle(_X4J_L, _X4J_K, _X4J_MOD),
-)
-def x4j2_lsh_near_dup_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x4j at the SAME (L=12, k=10, mod 127) parameterization — same
-    oracle, hash-identical output — with candidate generation and
-    rescore FUSED into one co-located kernel per (table, bucket)
-    group: nothing anywhere holds more than one bucket of vectors, so
-    the operator survives corpora where x4j's per-process matrix
-    can't sit in one process. This is the 100 TB configuration.
-
-    Why fused beats rescore-as-a-stage past matrix range: a separate
-    co-located rescore (colocated_rescore) must move the PAIR-bounded
-    relation with payload attached — at sf1 that is 23.3M distinct
-    pairs × two 64-float vectors ≈ 12.5 GB through the exchange and
-    the Arrow boundary (measured 14 s). Fusing moves only the
-    CORPUS×L-bounded bucket rows (240k × one vector ≈ 70 MB) into the
-    groupBy(t, b) exchange; the quadratic part runs as numpy inside
-    each group and only thresholded ID pairs come back out. Exchange
-    count matches x4j exactly (bucket shuffle + pair dedup); group
-    size — hence the per-task block — is bounded by bucket occupancy,
-    which k tunes with corpus size (raise k, re-tune recall via L).
-    Skew: a hot bucket is one task, but its size is capped by the
-    same occupancy bound (no AQE dependency)."""
+def _lsh_near_dup(
+    spark: SparkSession,
+    sf_dir: str,
+    n_tables: int,
+    n_bits: int,
+    mod: int,
+    plane: str = "arith",
+    probe_hamming: int = 0,
+) -> DataFrame:
+    """A registered near-dup query: ``fused_lsh_pairs`` over the
+    embeddings at cos ≥ 0.25, projected to the graded
+    (vec_a, vec_b, cos_sim) rows with the cosine rounded to 4 dp."""
     emb = load_table(spark, sf_dir, "embeddings")
-    scored = fused_lsh_pairs(emb, _X4J_L, _X4J_K, _X4J_MOD, 0.25)
+    scored = fused_lsh_pairs(
+        emb, n_tables, n_bits, mod, 0.25, plane, probe_hamming
+    )
     return scored.select(
         "vec_a",
         "vec_b",
         stable_round(F.col("cos_raw"), 4).alias("cos_sim"),
     )
+
+
+@query(
+    "x4j2_lsh_near_dup_colocated",
+    oracle=_arith_lsh_oracle(_X4J_L, _X4J_K, _X4J_MOD),
+)
+def x4j2_lsh_near_dup_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """x4i's arithmetic family at the production bucket width — k=10
+    (1024 buckets/table, L=12, planes mod 127 so all 120 planes are
+    distinct) — with candidate generation and rescore FUSED into one
+    co-located kernel per (table, bucket) group: nothing anywhere
+    holds more than one bucket of vectors. This is the 100 TB
+    configuration.
+
+    Why fused beats rescore-as-a-stage: a separate co-located rescore
+    must move the PAIR-bounded relation with payload attached — at
+    sf1 that was 23.3M distinct pairs × two 64-float vectors ≈ 12.5 GB
+    through the exchange and the Arrow boundary (measured 14 s).
+    Fusing moves only the CORPUS×L-bounded bucket rows (240k × one
+    vector ≈ 70 MB) into the groupBy(t, b) exchange; the quadratic
+    part runs as numpy inside each group and only thresholded ID
+    pairs come back out. Group size — hence the per-task block — is
+    bounded by bucket occupancy, which k tunes with corpus size
+    (raise k, re-tune recall via L). Skew: a hot bucket is one task,
+    but its size is capped by the same occupancy bound (no AQE
+    dependency)."""
+    return _lsh_near_dup(spark, sf_dir, _X4J_L, _X4J_K, _X4J_MOD)
 
 
 @query(
@@ -1892,14 +1570,8 @@ def x4m_lsh_near_dup_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate join, and rescore are all cross-engine bit-exact.
     Reference anchor: SURVEY §2.11 X3/X4 (main.py:694-715's
     per-document comparisons at corpus scale)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    scored = fused_lsh_pairs(
-        emb, _X4J_L, _X4J_K, _X4J_MOD, 0.25, plane="mixed"
-    )
-    return scored.select(
-        "vec_a",
-        "vec_b",
-        stable_round(F.col("cos_raw"), 4).alias("cos_sim"),
+    return _lsh_near_dup(
+        spark, sf_dir, _X4J_L, _X4J_K, _X4J_MOD, plane="mixed"
     )
 
 
@@ -1930,62 +1602,10 @@ def x4n_lsh_near_dup_multiprobe(
     bounds the per-bucket block) and L from lsh_tables_for_recall
     (the closed-form recall↔cost planner, theory-validated against
     the measured curve)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    scored = fused_lsh_pairs(
-        emb, _X4J_L, _X4J_K, _X4J_MOD, 0.25, plane="mixed", probe_hamming=1
+    return _lsh_near_dup(
+        spark, sf_dir, _X4J_L, _X4J_K, _X4J_MOD,
+        plane="mixed", probe_hamming=1,
     )
-    return scored.select(
-        "vec_a",
-        "vec_b",
-        stable_round(F.col("cos_raw"), 4).alias("cos_sim"),
-    )
-
-
-class BucketedVectorStore:
-    """The embeddings relation persisted bucketed+sorted on vec_id —
-    the x22 BucketedFingerprintStore pattern applied to vectors. A
-    100 TB pipeline rescores candidate pairs against the SAME stored
-    corpus every batch; bucketing it once makes the store side of
-    every rescore join an Exchange-free bucketed scan, so the only
-    per-batch shuffle is the (small) pair relation repartitioning to
-    the store's bucket count. NOT used by the registered queries —
-    constructing a registered query must schedule no Spark job (repo
-    invariant, tests/test_plans.py); x4j2 derives co-location with
-    explicit repartitioning instead, identical semantics."""
-
-    def __init__(self, spark: SparkSession, name: str, n_buckets: int = 64):
-        self.spark = spark
-        self.table = f"{name}_vectors"
-        self.n_buckets = n_buckets
-
-    def exists(self) -> bool:
-        return self.spark.catalog.tableExists(self.table)
-
-    def create(self, emb: DataFrame) -> None:
-        self.spark.sql(f"DROP TABLE IF EXISTS {self.table}")
-        import pathlib
-        import shutil
-        from urllib.parse import urlparse
-
-        wh = urlparse(self.spark.conf.get("spark.sql.warehouse.dir"))
-        shutil.rmtree(
-            pathlib.Path(wh.path) / self.table.lower(), ignore_errors=True
-        )
-        (
-            emb.select("vec_id", "embedding")
-            .write.bucketBy(self.n_buckets, "vec_id")
-            .sortBy("vec_id")
-            .format("parquet")
-            .saveAsTable(self.table)
-        )
-
-    def rescore(self, cand: DataFrame) -> DataFrame:
-        """colocated_rescore against the stored buckets: the vector
-        side of both joins reads straight from its buckets — zero
-        Exchange on the store side (pinned by tests/test_plans.py)."""
-        return colocated_rescore(
-            cand, self.spark.table(self.table), self.n_buckets
-        )
 
 
 _X4K_TOPK = 5
@@ -2117,8 +1737,8 @@ def x4k_knn_join_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes (x4b/x4e/x4f).
 
     Spark shape: map-only — one Arrow kernel per vector batch against
-    the lazily-built per-process vector matrix (x4j's rescore
-    pattern): a BLAS GEMM screens each chunk × corpus block, the
+    the lazily-built per-process vector matrix (_VectorMatrixHandle):
+    a BLAS GEMM screens each chunk × corpus block, the
     captured few candidates per row are re-accumulated with strict
     j-order float64 folds (bit-identical to the oracle's list_sum),
     and ranking runs on the exact values with the oracle's
@@ -2835,7 +2455,7 @@ def connected_components(
     Scale: each round is two shuffles keyed on node id; edge count
     never grows above the input edge count (stars only contract), and
     lineage is truncated every round via lazy localCheckpoint. No
-    cartesian product anywhere — composed with `lsh_near_dup_pairs`
+    cartesian product anywhere — composed with `fused_lsh_pairs`
     edge generation (x14b) the full clustering pipeline is
     shuffle-keyed end to end, unlike the exact x14 whose O(n²) edge
     join is the disclosed oracle baseline."""
@@ -2893,7 +2513,7 @@ def x14b_dedup_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the parquet footer's row count, so grading corpora run the pinned
     k=3 bit-identically while sf1 runs k=7 and 100 TB keeps k growing
     with the occupancy bound; no cross join, the bucket block runs as
-    numpy per co-located group. The prior lsh_near_dup_pairs form
+    numpy per co-located group. The prior column-expression self-join
     rescored every candidate through the interpreted fold at fixed
     k=3 and ran >10 min at sf1 where this runs seconds, r11) and
     component labeling via alternating large-star/small-star
@@ -4139,11 +3759,10 @@ _X55_GRAMS_SQL = """
 """
 
 
-# Shared by x55 / x55b / x55c: the three register the SAME recursive-
-# CTE oracle VERBATIM — the candidate-generation strategy (all-pairs /
-# prefix-filtered / hashed-prefix-filtered) is an exactness-preserving
-# implementation detail, so all three must produce the identical
-# keep-best answer.
+# Shared by x55 / x55b: the two register the SAME recursive-CTE oracle
+# VERBATIM — the candidate-generation strategy (all-pairs /
+# prefix-filtered) is an exactness-preserving implementation detail, so
+# both must produce the identical keep-best answer.
 _X55_KEEP_BEST_ORACLE = f"""
     WITH RECURSIVE g AS (
       {_X55_GRAMS_SQL}
@@ -4342,108 +3961,6 @@ def x55b_keep_best_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(
             2 * inter >= F.size("ga") + F.size("gb") - inter
         )
-        .select("src", "dst")
-    )
-    comp = connected_components(
-        g.select(F.col("doc_id").alias("vec_id")), pairs
-    ).select(F.col("vec_id").alias("doc_id"), "component")
-    ranked = comp.join(g.select("doc_id", "n_tokens"), "doc_id")
-    w_rank = Window.partitionBy("component").orderBy(
-        F.desc("n_tokens"), "doc_id"
-    )
-    w_size = Window.partitionBy("component")
-    return (
-        ranked.withColumn("rn", F.row_number().over(w_rank))
-        .withColumn("n_members", F.count("*").over(w_size))
-        .filter(F.col("rn") == 1)
-        .select(
-            "component",
-            F.col("doc_id").alias("rep_doc_id"),
-            F.col("n_members").cast("long").alias("n_members"),
-            F.col("n_tokens").cast("long").alias("rep_n_tokens"),
-        )
-    )
-
-
-@query("x55c_keep_best_hashed", oracle=_X55_KEEP_BEST_ORACLE)
-def x55c_keep_best_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X55c: x55b with the gram keys HASHED — the 100 TB form
-    (VERDICT r13 #4, the x24 key discipline): the candidate join, the
-    prefix window, the df aggregate, AND the per-pair rescore all
-    carry xxhash64(gram) int64s instead of gram STRINGS, so shuffle
-    rows shrink from arbitrary-length text keys to 8-byte keys and
-    the pair-bounded rescore payload is an int array, not a string
-    array. Same oracle VERBATIM as x55/x55b.
-
-    Collision accounting (why the exactness claim survives hashing):
-    a 64-bit collision can only MERGE two distinct grams — set sizes
-    shrink by 1 and intersections can grow — so the failure mode is a
-    spurious edge, never a missed one, and the expected number of
-    colliding gram pairs is C(G,2)/2⁶⁴ ≈ 2.7·10⁻⁸ at G = 10⁶ distinct
-    grams (sf1) and still ~3·10⁻⁴ at G = 10⁹ (a 100 TB shard's
-    vocabulary). The prefix filter's GLOBAL ORDER becomes
-    (df, gram_hash) instead of (df, gram) — the PPJoin lemma holds
-    under ANY total order, and candidates only affect completeness
-    headroom, never the exact rescore, so the answer is unchanged
-    (hash-equality pinned against x55b by tests/test_dedup_clusters
-    and graded by the shared oracle).
-
-    Scale shape = x55b's: gram-df aggregate + one doc-keyed window +
-    hash-keyed equi-join on rarest-prefix grams (hot grams fall
-    outside every prefix), then the exact integer-Jaccard rescore per
-    candidate pair and the keep-longest selection window."""
-    docs = load_table(spark, sf_dir, "documents")
-    words = F.split(F.col("text"), " ")
-    n_tokens = F.size(F.filter(words, lambda w: w != ""))
-    g = docs.select(
-        "doc_id",
-        F.array_distinct(
-            F.transform(
-                _shingles(F.col("text"), 3), lambda s: F.xxhash64(s)
-            )
-        ).alias("h"),
-        n_tokens.alias("n_tokens"),
-    ).localCheckpoint(eager=False)
-    ex = g.select(
-        "doc_id", F.size("h").alias("sz"), F.explode("h").alias("gh")
-    )
-    gram_df = ex.groupBy("gh").agg(F.count("*").alias("df"))
-    w_rare = Window.partitionBy("doc_id").orderBy("df", "gh")
-    pref = (
-        ex.join(gram_df, "gh")
-        .withColumn("rk", F.row_number().over(w_rare))
-        .filter(F.col("rk") <= F.floor(F.col("sz") / 2) + 1)
-        .select("doc_id", "gh", "sz", "rk")
-    )
-    # r15: PPJoin size + positional filters in the candidate join,
-    # exactly as in x55b — the lemma holds under the (df, gh) order
-    # too (any shared total order), see x55b's docstring
-    a, b = pref.alias("a"), pref.alias("b")
-    sza, szb = F.col("a.sz"), F.col("b.sz")
-    rka, rkb = F.col("a.rk"), F.col("b.rk")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.gh") == F.col("b.gh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (2 * F.least(sza, szb) >= F.greatest(sza, szb))
-            & (
-                1 + F.least(sza - rka, szb - rkb)
-                >= F.floor((sza + szb + 2) / 3)
-            ),
-        )
-        .select(
-            F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst")
-        )
-        .distinct()
-    )
-    ha = g.select(F.col("doc_id").alias("src"), F.col("h").alias("ha"))
-    hb = g.select(F.col("doc_id").alias("dst"), F.col("h").alias("hb"))
-    inter = F.size(F.array_intersect(F.col("ha"), F.col("hb")))
-    pairs = (
-        cand.join(ha, "src")
-        .join(hb, "dst")
-        .filter(2 * inter >= F.size("ha") + F.size("hb") - inter)
         .select("src", "dst")
     )
     comp = connected_components(

@@ -69,8 +69,8 @@ PRIORITY: tuple[str, ...] = (
     # composite-equi shape is subsumed by j5's multiway joins, still
     # locally graded); the slot now drives the designated 100 TB
     # near-dup configuration x4j2 — fused per-bucket candidate+rescore
-    # — through the driver's window for the first time (oracle
-    # identical to x4j's, sf1-parity hash-identical since r11).
+    # — through the driver's window for the first time (x4i's
+    # arithmetic planes at the production bucket width k=10).
     "x4j2_lsh_near_dup_colocated",
     "j5_multiway_equi",
     "j6_point_lookup",

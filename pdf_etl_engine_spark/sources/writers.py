@@ -20,7 +20,8 @@ ALTER TABLE ADD COLUMN schema sync (/root/reference/main.py:256-351,
   main.py:277-291; a retype is refused at publish and raises in the
   fold). Partition columns keep the type the writer gave them. Only
   snapshots the log cannot describe (no log, or commits written
-  before schemas were logged) fall back to ``mergeSchema`` inference;
+  before schemas were logged) fall back to ``mergeSchema`` inference
+  of the data columns, with the partition columns read as strings;
 * commit visibility: plain parquet lacks Delta's atomic log, so this
   module carries a minimal one — each append stages its files, moves
   them into the partition layout, then atomically publishes a commit
@@ -42,7 +43,7 @@ import uuid as _uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
 PARTITION_COLS = ("tenant_id", "folder_id")
 
@@ -2055,11 +2056,7 @@ def _logged_schema(state: dict | None) -> StructType | None:
     has no files."""
     if not state or not state["files"] or not state.get("schema"):
         return None
-    parts = [
-        seg.split("=", 1)[0]
-        for seg in _os.path.dirname(state["files"][0]).split(_os.sep)
-        if "=" in seg
-    ]
+    parts = _partition_cols(state["files"][0])
     fields = state["schema"]["fields"]
     ordered = [f for f in fields if f["name"] not in parts] + [
         f for p in parts for f in fields if f["name"] == p
@@ -2067,19 +2064,52 @@ def _logged_schema(state: dict | None) -> StructType | None:
     return StructType.fromJson({"type": "struct", "fields": ordered})
 
 
+def _partition_cols(rel: str) -> list[str]:
+    """Partition columns of the table file ``rel``: its ``k=v``
+    directories, outermost first."""
+    return [
+        seg.split("=", 1)[0]
+        for seg in _os.path.dirname(rel).split(_os.sep)
+        if "=" in seg
+    ]
+
+
+def _inferred_schema(
+    spark: SparkSession, path: str, rels: list[str]
+) -> StructType:
+    """The schema of the table files ``rels`` when the log cannot
+    describe them (no log, or commits written before schemas were
+    logged): the data columns by ``mergeSchema`` footer inference over
+    the files alone — no ``basePath``, so no partition discovery — and
+    the partition columns as strings, last, as Spark's reader orders
+    them. Partition discovery would type an all-numeric tenant id as
+    int and serve tenant "007" tenant "7"'s rows."""
+    parts = _partition_cols(rels[0])
+    data = (
+        spark.read.option("mergeSchema", "true")
+        .parquet(*[_os.path.join(path, f) for f in rels])
+        .schema
+    )
+    return StructType(
+        [f for f in data.fields if f.name not in parts]
+        + [StructField(p, StringType()) for p in parts]
+    )
+
+
 def _scan(
     spark: SparkSession, path: str, schema: StructType | None, rels: list[str]
 ) -> DataFrame:
-    """Read the table files ``rels``. A logged ``schema`` spares the
-    footer-inference job and keeps partition columns typed as written
-    ("007" stays a string); without one, ``mergeSchema`` infers it."""
-    reader = (
+    """Read the table files ``rels`` with ``schema``. A logged schema
+    spares the footer-inference job and keeps partition columns typed
+    as written; without one, ``_inferred_schema`` reads the footers
+    and types partition columns as strings. Either way "007" stays a
+    string."""
+    if schema is None:
+        schema = _inferred_schema(spark, path, rels)
+    return (
         spark.read.schema(schema)
-        if schema is not None
-        else spark.read.option("mergeSchema", "true")
-    )
-    return reader.option("basePath", path).parquet(
-        *[_os.path.join(path, f) for f in rels]
+        .option("basePath", path)
+        .parquet(*[_os.path.join(path, f) for f in rels])
     )
 
 
@@ -2096,10 +2126,14 @@ def _read_snapshot(
     deletion vectors, so a second delete never re-deletes a masked
     row."""
     state = _fold_state(path, version=version)
-    files = None if state is None else state["files"]
-    if files is None:
-        df = spark.read.option("mergeSchema", "true").parquet(path)
-        return _with_pos(df, path) if with_pos else df
+    if state is None:  # no log: the directory's files, no stats or DVs
+        state = {
+            "files": _list_parquet_files(path),
+            "stats": {},
+            "bloom": {},
+            "dv": {},
+        }
+    files = state["files"]
     schema = _logged_schema(state)
     if prune and files:
         stats, blooms = state["stats"], state["bloom"]
@@ -2127,7 +2161,7 @@ def _read_snapshot(
                     "_src_file", F.lit(None).cast("string")
                 ).withColumn("_row_idx", F.lit(None).cast("long"))
             return df
-        raise FileNotFoundError(f"empty committed table at {path}")
+        raise FileNotFoundError(f"no data files in table at {path}")
     df = _scan(spark, path, schema, files)
     live = set(files)
     dvmap = {f: d for f, d in state["dv"].items() if f in live}
@@ -2148,7 +2182,8 @@ def read_fact_table(
     rows written before a column existed read NULL for it. The schema
     comes from the commit log (``table_schema``), so building the
     DataFrame runs no Spark job; only snapshots the log cannot
-    describe are read with ``mergeSchema`` footer inference.
+    describe are read with ``mergeSchema`` footer inference, partition
+    columns as strings.
 
     File resolution honors the commit log when one exists — data
     files a crashed append moved into place but never published are
@@ -2195,9 +2230,8 @@ def table_schema(spark: SparkSession, path: str) -> StructType | None:
     schema = _logged_schema(state)
     if schema is not None:
         return schema
-    if state is None and not _list_parquet_files(path):
-        return None
-    return _read_snapshot(spark, path).schema
+    files = _list_parquet_files(path) if state is None else state["files"]
+    return _inferred_schema(spark, path, files) if files else None
 
 
 def _read_sidecar_schema(path: str) -> StructType | None:

@@ -1,6 +1,6 @@
 """The Arrow-kernel bit-exactness contract (r10).
 
-x4j/x4k/x45 route dense linear algebra through numpy kernels whose
+fused_lsh_pairs/x4k/x45 route dense linear algebra through numpy kernels whose
 correctness rests on ONE claim: an explicit per-index vectorized
 accumulation loop (``for j: acc += a[:, j] * b[:, j]``) runs the
 IDENTICAL IEEE float64 sequence as the oracles' list_sum/list_reduce
@@ -31,8 +31,8 @@ def _pure_python_fold_dot(a: list[float], b: list[float]) -> float:
 
 
 def _kernel_dot_block(A: np.ndarray, B: np.ndarray) -> np.ndarray:
-    """The kernels' accumulation shape (extensions._pair_cosine_kernel
-    / _x4j_bucket_kernel / x4k): strict j-order vectorized adds."""
+    """The kernels' accumulation shape (extensions._bucket_allpairs_kernel
+    / _bucket_kernel_from_coefs / x4k): strict j-order vectorized adds."""
     acc = np.zeros(len(A))
     for j in range(A.shape[1]):
         acc += A[:, j] * B[:, j]
@@ -176,50 +176,56 @@ def test_vector_matrix_handle_lazy_and_pickle_safe(sf_dir):
     assert (ids2 == ids).all() and (m2 == m).all() and (nrm2 == nrm).all()
 
 
-def test_fused_lsh_pairs_bit_equals_matrix_rescore(spark, sf_dir):
-    """fused_lsh_pairs (the x4j2/x14b engine) must emit the EXACT pair
-    set and scores the matrix-kernel path produces at the same
-    parameterization — the fusion and the GEMM screen are pure
-    execution-strategy changes, never value changes."""
+def _assert_fused_matches_oracle(spark, sf_dir, oracle_sql, **kwargs):
+    """fused_lsh_pairs(6, 4, 61, 0.25, **kwargs) against its DuckDB
+    oracle: the identical pair set with the identical 4-dp scores, and
+    every raw score bit-equal to the strict j-order fold over the
+    embedding matrix (the oracle's list_sum sequence)."""
+    import duckdb
     from pyspark.sql import functions as F
 
-    from pdf_etl_engine_spark.catalog import load_table
+    from pdf_etl_engine_spark.catalog import load_table, table_path
+    from pdf_etl_engine_spark.functions.stable import stable_round
     from pdf_etl_engine_spark.operators.extensions import (
-        _x4j_bucket_kernel,
-        _pair_cosine_kernel,
         _vector_matrix,
         fused_lsh_pairs,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    fused = {
-        (r.vec_a, r.vec_b): r.cos_raw
-        for r in fused_lsh_pairs(emb, 6, 4, 61, 0.25).collect()
-    }
-    bucket_arr = _x4j_bucket_kernel(6, 4, 61)
-    buckets = emb.select(
-        "vec_id", F.posexplode(bucket_arr("embedding")).alias("t", "b")
+    rows = fused_lsh_pairs(emb, 6, 4, 61, 0.25, **kwargs).select(
+        "vec_a",
+        "vec_b",
+        "cos_raw",
+        stable_round(F.col("cos_raw"), 4).alias("cos_sim"),
+    ).collect()
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"'{table_path(sf_dir, 'embeddings')}'"
     )
-    a, b = buckets.alias("a"), buckets.alias("b")
-    cand = a.join(
-        b,
-        (F.col("a.t") == F.col("b.t"))
-        & (F.col("a.b") == F.col("b.b"))
-        & (F.col("a.vec_id") < F.col("b.vec_id")),
-    ).select(
-        F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b")
-    )
-    matrix = {
-        (r.vec_a, r.vec_b): r.cos_raw
-        for r in cand.dropDuplicates(["vec_a", "vec_b"])
-        .mapInPandas(
-            _pair_cosine_kernel(_vector_matrix(sf_dir)),
-            "vec_a bigint, vec_b bigint, cos_raw double",
-        )
-        .filter(F.col("cos_raw") >= 0.25)
-        .collect()
+    want = {
+        (a, b): f"{c:.12g}" for a, b, c in con.execute(oracle_sql).fetchall()
     }
-    assert fused == matrix  # bit-exact scores, identical pair set
+    assert want, "oracle pair set unexpectedly empty"
+    assert {(r.vec_a, r.vec_b): f"{r.cos_sim:.12g}" for r in rows} == want
+
+    ids, m, nrm = _vector_matrix(sf_dir).get()
+    ia = np.searchsorted(ids, [r.vec_a for r in rows])
+    ib = np.searchsorted(ids, [r.vec_b for r in rows])
+    fold = _kernel_dot_block(m[ia], m[ib]) / (nrm[ia] * nrm[ib])
+    raw = np.array([r.cos_raw for r in rows])
+    assert raw.tobytes() == fold.tobytes()  # bit-exact, not approx
+
+
+def test_fused_lsh_pairs_bit_equals_matrix_rescore(spark, sf_dir):
+    """fused_lsh_pairs (the engine of every LSH near-dup binding) must
+    emit exactly the arithmetic-family oracle's pair set and scores,
+    each raw score the strict fold over the embedding matrix — the
+    fusion and the GEMM screen are pure execution-strategy changes,
+    never value changes."""
+    from pdf_etl_engine_spark.operators.extensions import _arith_lsh_oracle
+
+    _assert_fused_matches_oracle(spark, sf_dir, _arith_lsh_oracle(6, 4, 61))
 
 
 def test_multiprobe_canonical_direction_matches_home_hamming1(
@@ -230,57 +236,18 @@ def test_multiprobe_canonical_direction_matches_home_hamming1(
     scores — the r15 canonical-direction probe emission (flip only SET
     bits, so every d=1 pair is found once, from the side whose probe
     descends into the other's home bucket) is a pure shuffle-volume
-    change, never a candidate-set or value change. Reference set is
-    derived from home buckets alone via bit_count(xor) <= 1, the same
-    rule the x4n SQL oracle uses."""
-    from pyspark.sql import functions as F
+    change, never a candidate-set or value change. The reference is
+    the mixed-family oracle, which derives the set from home buckets
+    alone via bit_count(xor) <= 1."""
+    from pdf_etl_engine_spark.operators.extensions import _mixed_lsh_oracle
 
-    from pdf_etl_engine_spark.catalog import load_table
-    from pdf_etl_engine_spark.operators.extensions import (
-        _bucket_kernel_from_coefs,
-        _mix_plane_coefs,
-        _pair_cosine_kernel,
-        _vector_matrix,
-        fused_lsh_pairs,
+    _assert_fused_matches_oracle(
+        spark,
+        sf_dir,
+        _mixed_lsh_oracle(6, 4, 61, 1),
+        plane="mixed",
+        probe_hamming=1,
     )
-
-    L, k, mod = 6, 4, 61
-    emb = load_table(spark, sf_dir, "embeddings")
-    fused = {
-        (r.vec_a, r.vec_b): r.cos_raw
-        for r in fused_lsh_pairs(
-            emb, L, k, mod, 0.25, plane="mixed", probe_hamming=1
-        ).collect()
-    }
-    home_arr = _bucket_kernel_from_coefs(_mix_plane_coefs(L * k, mod), L, k)
-    homes = emb.select(
-        "vec_id", F.posexplode(home_arr("embedding")).alias("t", "b")
-    )
-    a, b = homes.alias("a"), homes.alias("b")
-    cand = a.join(
-        b,
-        (F.col("a.t") == F.col("b.t"))
-        & (
-            F.bit_count(
-                F.col("a.b").bitwiseXOR(F.col("b.b"))
-            )
-            <= 1
-        )
-        & (F.col("a.vec_id") < F.col("b.vec_id")),
-    ).select(
-        F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b")
-    )
-    reference = {
-        (r.vec_a, r.vec_b): r.cos_raw
-        for r in cand.dropDuplicates(["vec_a", "vec_b"])
-        .mapInPandas(
-            _pair_cosine_kernel(_vector_matrix(sf_dir)),
-            "vec_a bigint, vec_b bigint, cos_raw double",
-        )
-        .filter(F.col("cos_raw") >= 0.25)
-        .collect()
-    }
-    assert fused == reference  # identical candidate set, bit-exact scores
 
 
 def test_fused_lsh_pairs_emission_is_duplicate_free(spark, sf_dir):
@@ -296,14 +263,15 @@ def test_fused_lsh_pairs_emission_is_duplicate_free(spark, sf_dir):
 
     from pdf_etl_engine_spark.catalog import load_table
     from pdf_etl_engine_spark.operators.extensions import (
-        _x4j_bucket_kernel,
+        _arith_plane_coefs,
+        _bucket_kernel_from_coefs,
         fused_lsh_pairs,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     # vacuity guard: at (L=6, k=4) some pair shares a bucket in >=2
     # tables, so first-collision emission has real work to do
-    bucket_arr = _x4j_bucket_kernel(6, 4, 61)
+    bucket_arr = _bucket_kernel_from_coefs(_arith_plane_coefs(24, 61), 6, 4)
     buckets = emb.select(
         "vec_id", F.posexplode(bucket_arr("embedding")).alias("t", "b")
     )
@@ -408,55 +376,6 @@ def test_x4l_blocked_knn_matches_x4k_and_stays_block_bounded(
         .first()[0]
     )
     assert q_cells <= math.ceil(n / _X4L_QB)
-
-
-@pytest.mark.slow
-def test_bucketed_vector_store_rescore_end_to_end(spark, sf_dir):
-    """VERDICT r11 #5: the Exchange-free probe was plan-pinned but no
-    artifact ran a rescore through a REAL persisted store. Build the
-    bucketed store from the sf0.01 embeddings, push x4j's candidate
-    pair set through store.rescore, and require the surviving scores
-    to be hash-identical (4-dp stable rounding, the graded contract)
-    to the x4j query output itself."""
-    from pyspark.sql import functions as F
-
-    from pdf_etl_engine_spark import registry
-    from pdf_etl_engine_spark.functions.stable import stable_round
-    from pdf_etl_engine_spark.operators.extensions import (
-        BucketedVectorStore,
-    )
-
-    registry.load_all()
-    want = {
-        (r.vec_a, r.vec_b): r.cos_sim
-        for r in registry.QUERIES["x4j_lsh_near_dup_k10"](
-            spark, sf_dir
-        ).collect()
-    }
-    assert want, "x4j pair set unexpectedly empty"
-
-    store = BucketedVectorStore(spark, "t_e2e_store", n_buckets=8)
-    try:
-        from pdf_etl_engine_spark.catalog import load_table
-
-        store.create(load_table(spark, sf_dir, "embeddings"))
-        cand = spark.createDataFrame(
-            [(a, b) for (a, b) in want], "vec_a bigint, vec_b bigint"
-        )
-        got = {
-            (r.vec_a, r.vec_b): r.cos_sim
-            for r in store.rescore(cand)
-            .filter(F.col("cos_raw") >= 0.25)
-            .select(
-                "vec_a",
-                "vec_b",
-                stable_round(F.col("cos_raw"), 4).alias("cos_sim"),
-            )
-            .collect()
-        }
-        assert got == want
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_e2e_store_vectors")
 
 
 def test_lsh_modulus_keeps_planes_duplicate_free():

@@ -3,9 +3,9 @@
 Three pins (VERDICT r2 next-round #3):
 1. the star-rewrite CC engine is exact on a handcrafted graph whose
    diameter forces multiple alternation rounds;
-2. x14b's edge generation plans with NO cartesian product (the exact
-   x14's O(n²) pair join is the disclosed oracle baseline, not the
-   scale path);
+2. x14b's edge generation is the fused LSH group kernel and plans
+   with NO cartesian product (the exact x14's O(n²) pair join is the
+   disclosed oracle baseline, not the scale path);
 3. on sf0.01, x14b components are a strict refinement of x14
    components (LSH edges are a rescored subset of exact edges) and
    reproduce them near-exactly at the measured ≥0.94 edge recall.
@@ -20,11 +20,8 @@ import os
 from pyspark.sql import functions as F
 
 from pdf_etl_engine_spark import registry
-from pdf_etl_engine_spark.catalog import load_table
-from pdf_etl_engine_spark.operators.extensions import (
-    connected_components,
-    lsh_near_dup_pairs,
-)
+from pdf_etl_engine_spark.operators import extensions
+from pdf_etl_engine_spark.operators.extensions import connected_components
 
 registry.load_all()
 
@@ -56,16 +53,26 @@ def test_star_cc_exact_on_handcrafted_graph(spark):
 
 
 @pytest.mark.slow
-def test_x14b_edge_gen_has_no_cartesian_product(spark):
-    emb = load_table(spark, SF_DIR, "embeddings")
-    plan = (
-        lsh_near_dup_pairs(emb)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+def test_x14b_edge_gen_has_no_cartesian_product(spark, monkeypatch):
+    """The plans x14b itself builds: the edge relation it hands to
+    connected_components, and the clustering it returns."""
+    edges = []
+
+    def spy(vertices, e, *args, **kwargs):
+        edges.append(e)
+        return connected_components(vertices, e, *args, **kwargs)
+
+    monkeypatch.setattr(extensions, "connected_components", spy)
+    out = registry.QUERIES["x14b_dedup_clusters_lsh"](spark, SF_DIR)
+    assert len(edges) == 1
+    edge_plan, out_plan = (
+        df._jdf.queryExecution().executedPlan().toString()
+        for df in (edges[0], out)
     )
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
+    assert "FlatMapGroupsInPandas" in edge_plan, edge_plan  # fused kernel
+    for plan in (edge_plan, out_plan):
+        assert "CartesianProduct" not in plan, plan
+        assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
 @pytest.mark.slow
@@ -150,23 +157,6 @@ def test_prefix_variant_equals_exact_keep_best(spark):
     assert a == b and len(a) > 0
 
 
-def test_hashed_variant_equals_exact_keep_best(spark):
-    """x55c (xxhash64 gram keys — the 100 TB key form) must return
-    exactly x55's rows: hashing relocates the prefix filter's global
-    order (the lemma holds under ANY order —
-    test_prefix_filter_lemma_property) and a 64-bit collision could
-    only add a spurious CANDIDATE, which the exact integer-Jaccard
-    rescore then re-checks on the hashed sets; at test scale the
-    hash is collision-free so the answer is identical."""
-    a = sorted(
-        map(tuple, registry.QUERIES["x55_cluster_keep_best"](spark, SF_DIR).collect())
-    )
-    c = sorted(
-        map(tuple, registry.QUERIES["x55c_keep_best_hashed"](spark, SF_DIR).collect())
-    )
-    assert a == c and len(a) > 0
-
-
 def test_prefix_filter_lemma_property():
     """Property (hypothesis): for ANY two gram sets with
     J ≥ 0.5, their ⌊|x|/2⌋+1 prefixes under ANY shared total order
@@ -230,7 +220,7 @@ def test_positional_filter_property():
     """Property (hypothesis): for ANY two gram sets with J ≥ 0.5 and
     ANY shared total order, the pair's globally-FIRST shared element
     e₁ lies inside both ⌊|x|/2⌋+1 prefixes AND its occurrence passes
-    the PPJoin size + positional filters x55b/x55c apply in the
+    the PPJoin size + positional filters x55b applies in the
     candidate join — so the filters can only drop occurrences of
     pairs that keep another surviving occurrence, never a true pair.
     (Overlap elements are order-aligned in both docs, so at e₁ the

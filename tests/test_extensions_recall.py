@@ -121,8 +121,9 @@ def test_ivf_trained_recall_clustered(spark):
 
 @pytest.mark.slow
 def test_lsh_near_dup_pair_recall(spark):
-    """x4d (LSH-bucketed pair generation) vs x4c (exact O(n²) pairs at
-    cos≥0.25): pair recall. Measured 0.947 at sf0.01, 0.941 at sf0.1."""
+    """x4d (the mixed-plane fused_lsh_pairs binding at k=3, L=12) vs
+    x4c (exact O(n²) pairs at cos≥0.25): pair recall. Measured 0.937
+    at sf0.01, 0.938 at sf0.1."""
     exact = _pairs(spark, "x4c_embedding_near_dup")
     approx = _pairs(spark, "x4d_embedding_near_dup_lsh")
     assert exact, "exact near-dup baseline unexpectedly empty"

@@ -57,11 +57,42 @@ def test_numeric_tenant_ids_keep_their_own_rows(tmp_path, spark):
     audit = {"row_id": "r", "uploaded_at": "2024-01-01 00:00:00"}
     writers.append_rows(_rows(spark, "7", [1, 2], **audit), path)
     writers.append_rows(_rows(spark, "007", [3], **audit), path)
+    _assert_tenants_apart(spark, path)
+
+
+def _assert_tenants_apart(spark, path):
     for tenant, want in (("7", [1, 2]), ("007", [3])):
         got = pipeline.read_results(spark, path, tenant, "f").collect()
         assert {r["tenant_id"] for r in got} == {tenant}
         assert sorted(r["amount"] for r in got) == want
-    assert writers.table_schema(spark, path)["tenant_id"].dataType == StringType()
+    schema = writers.table_schema(spark, path)
+    assert schema["tenant_id"].dataType == StringType()
+    assert writers.read_fact_table(spark, path).schema == schema
+
+
+def test_numeric_tenant_ids_without_a_log(tmp_path, spark):
+    """A table written by another tool has no log: its data columns
+    are inferred from the footers, its partition columns read as
+    strings, so "007" is not served "7"'s rows."""
+    path = str(tmp_path / "facts")
+    audit = {"row_id": "r", "uploaded_at": "2024-01-01 00:00:00"}
+    _rows(spark, "7", [1, 2], **audit).unionByName(
+        _rows(spark, "007", [3], **audit)
+    ).write.partitionBy("tenant_id", "folder_id").parquet(path)
+    assert writers._fold_state(path) is None
+    _assert_tenants_apart(spark, path)
+
+
+def test_numeric_tenant_ids_with_a_schemaless_log(tmp_path, spark):
+    """Commits written before schemas were logged: the same inference
+    path, the same string-typed partition columns."""
+    path = str(tmp_path / "facts")
+    audit = {"row_id": "r", "uploaded_at": "2024-01-01 00:00:00"}
+    writers.append_rows(_rows(spark, "7", [1, 2], **audit), path)
+    writers.append_rows(_rows(spark, "007", [3], **audit), path)
+    _rewrite_commits(path, lambda rec: rec.pop("schema"))
+    assert writers._fold_state(path)["schema"] is None
+    _assert_tenants_apart(spark, path)
 
 
 def test_add_only_evolution_reads_old_rows_null(tmp_path, spark):

@@ -88,15 +88,16 @@ def test_relational_paths_have_no_python(spark):
         set(registry.ORACLES)
         - {"x5b_media_decode", "x5c_resize_pipeline", "x5d_media_formats",
            "x42_image_ahash_dedup", "x43_audio_fingerprint_dedup",
-           "x4j_lsh_near_dup_k10", "x4j2_lsh_near_dup_colocated",
+           "x4i_lsh_near_dup_arith", "x4j2_lsh_near_dup_colocated",
            "x4m_lsh_near_dup_mixed", "x4n_lsh_near_dup_multiprobe",
            "x4k_knn_join_brute", "x4l_knn_join_blocked", "x45_semdedup",
            "x27_ngram_surprisal"}
         # x42/x43: real pixel/PCM decode, Python by design (x5 family);
-        # x4j/x4j2/x4k/x45: Arrow-vectorized dense-linear-algebra
-        # rescore kernels Spark has no native operator for (the JVM
-        # fold/chain forms measured 68-500 s at sf1 vs 8-20 s; see the
-        # x4j docstring). x27: Arrow trigram-count kernel (the JVM
+        # x4i/x4j2/x4m/x4n (fused_lsh_pairs bindings), x4k/x4l, x45:
+        # Arrow-vectorized dense-linear-algebra kernels Spark has no
+        # native operator for (the JVM fold/chain forms measured
+        # 68-500 s at sf1 vs 8-20 s; see _bucket_kernel_from_coefs).
+        # x27: Arrow trigram-count kernel (the JVM
         # explode form measured 5.4x the oracle at sf1; see its
         # docstring). The GRADED-window twin x45b stays fully JVM.
     )
@@ -559,146 +560,38 @@ def test_pagerank_iterations_are_equi_joins(spark):
     assert "partial_sum" in p  # contributions combine map-side
 
 
-def test_graded_near_dup_is_lsh_equi_not_quadratic(spark):
-    """X4i (r7, the GRADED near-dup representative) and x4j (r10, the
-    production k=10 parameterization the sf1 sweep substitutes): pair
-    generation must ride the (table, bucket) equi-join shuffle key —
-    never the O(n²) BroadcastNestedLoop the exact x4c baseline
-    deliberately plans as. x4i keeps everything codegen-side; x4j's
-    bucket/rescore kernels are Arrow-vectorized BY DESIGN (see its
-    docstring) but its candidate join must still be key-driven and
-    its ID-only candidate rows must never carry the vector payload."""
-    for name in ("x4i_lsh_near_dup_arith", "x4j_lsh_near_dup_k10"):
-        p = plan_of(registry.QUERIES[name](spark, SF_DIR))
-        assert "BroadcastNestedLoopJoin" not in p, name
-        assert "CartesianProduct" not in p, name
-        assert "Join" in p, name
-    p = plan_of(
-        registry.QUERIES["x4i_lsh_near_dup_arith"](spark, SF_DIR)
-    )
-    assert "Python" not in p  # x4i: planes + cosine codegen-side
-    p = plan_of(registry.QUERIES["x4j_lsh_near_dup_k10"](spark, SF_DIR))
-    # x4j: Arrow kernels present (vectorized batches, not row UDFs)...
-    assert "ArrowEvalPython" in p or "MapInPandas" in p
-    assert "BatchEvalPython" not in p  # ...never row-at-a-time Python
-
-
 def test_colocated_near_dup_is_fused_group_kernel(spark):
-    """x4j2 (VERDICT r10 #2): the co-located near-dup must plan as
-    ONE group-kernel over the (table, bucket) exchange — no join at
-    all (candidate generation IS the grouping), no broadcast of the
-    vector relation (removing the full-corpus-in-one-process matrix
-    is the point of the variant), nothing nested-loop, and only
-    corpus×L-bounded rows ever carry the vector payload through an
-    exchange. Construction must also stay pure plan-building: no
-    driver materialization of the vectors (the matrix path's old
-    eager toPandas), which the no-job probe asserts directly."""
+    """Every LSH near-dup query is a fused_lsh_pairs binding, and each
+    must plan as ONE group-kernel over the (table, bucket) exchange —
+    no join at all (candidate generation IS the grouping), never the
+    O(n²) nested loop the exact x4c baseline deliberately plans as, no
+    broadcast of the vector relation (no process ever holds the full
+    corpus), and only corpus×L-bounded rows ever carry the vector
+    payload through an exchange. Construction must also stay pure
+    plan-building: no driver materialization of the vectors, which
+    the no-job probe asserts directly."""
     sc = spark.sparkContext
     load_table(spark, SF_DIR, "embeddings")  # cache fill is legitimate
-    group = "build-probe-x4j2"
-    sc.setJobGroup(group, "plan construction probe")
-    try:
-        df = registry.QUERIES["x4j2_lsh_near_dup_colocated"](spark, SF_DIR)
-    finally:
-        sc.setJobGroup(None, None)
-    assert not sc.statusTracker().getJobIdsForGroup(group)
-    p = plan_of(df)
-    assert "FlatMapGroupsInPandas" in p  # the fused bucket kernel
-    assert "Join" not in p  # pair generation never materializes a join
-    assert "BroadcastExchange" not in p
-    assert "CartesianProduct" not in p
-    assert "BatchEvalPython" not in p  # never row-at-a-time Python
-
-
-def test_colocated_rescore_primitive_never_broadcasts_vectors(spark):
-    """colocated_rescore (the generic pair-rescore primitive x4j2's
-    docstring contrasts, used standalone and via BucketedVectorStore):
-    the vector payload must arrive through co-partitioned SHUFFLE_HASH
-    joins — never a broadcast of the embeddings relation, never a
-    nested loop — and the cosine must run in an Arrow-native kernel."""
-    from pdf_etl_engine_spark.operators.extensions import (
-        colocated_rescore,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    cand = spark.range(0, 100).select(
-        F.col("id").alias("vec_a"), (F.col("id") + 7).alias("vec_b")
-    )
-    p = plan_of(colocated_rescore(cand, emb))
-    assert p.count("ShuffledHashJoin") >= 2  # both vector joins
-    assert "MapInArrow" in p
-    assert "BroadcastExchange" not in p
-    assert "BroadcastNestedLoopJoin" not in p
-    assert "CartesianProduct" not in p
-
-
-@pytest.mark.slow
-def test_bucketed_vector_store_probe_exchange_free(spark, sf_dir):
-    """BucketedVectorStore (the x22 pattern on vectors): the store
-    side of both rescore joins must read straight from its buckets —
-    zero Exchange on the vector side, the only shuffles left are the
-    pair relation's — and the rescored output must hash-match the
-    per-process-matrix path (x4j vs x4j2 parity is separately graded
-    by the shared oracle)."""
-    import uuid
-
-    from pdf_etl_engine_spark.operators.extensions import (
-        BucketedVectorStore,
-    )
-
-    name = f"vec_store_{uuid.uuid4().hex[:8]}"
-    prior = {
-        k: spark.conf.get(k)
-        for k in ("spark.sql.adaptive.enabled",
-                  "spark.sql.autoBroadcastJoinThreshold")
-    }
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    store = BucketedVectorStore(spark, name, n_buckets=4)
-    try:
-        emb = load_table(spark, sf_dir, "embeddings")
-        store.create(emb)
-        # exchange-free candidate input so every Exchange in the plan
-        # is attributable to the rescore itself (missing ids drop out
-        # of the inner joins — harmless)
-        cand = spark.range(0, 200).select(
-            F.col("id").alias("vec_a"),
-            (F.col("id") + 7).alias("vec_b"),
-        )
-        out = store.rescore(cand)
-        fmt = out._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-        # both vector probes read straight from their buckets...
-        assert fmt.count("Bucketed: true") == 2, fmt
-        # ...and the ONLY exchanges in the whole rescore are the pair
-        # side's (repartition(vec_a) feeding dedup + join #1, then the
-        # vec_b-side pair exchange) — zero on the vector/store side
-        tree = fmt.split("\n\n")[0]
-        n_exchange = sum(
-            1 for l in tree.splitlines() if "Exchange" in l
-        )
-        assert n_exchange == 2, tree
-
-        # value parity with the matrix-path kernel on the same pairs
-        from pdf_etl_engine_spark.operators.extensions import (
-            _pair_cosine_kernel,
-            _vector_matrix,
-        )
-
-        matrix_out = cand.dropDuplicates(["vec_a", "vec_b"]).mapInPandas(
-            _pair_cosine_kernel(_vector_matrix(sf_dir)),
-            "vec_a bigint, vec_b bigint, cos_raw double",
-        )
-        a = {(r.vec_a, r.vec_b): r.cos_raw for r in out.collect()}
-        b = {(r.vec_a, r.vec_b): r.cos_raw for r in matrix_out.collect()}
-        assert a == b  # bit-exact, not approx: same fold order
-    finally:
-        for k, v in prior.items():
-            spark.conf.set(k, v)
-        spark.sql(f"DROP TABLE IF EXISTS {store.table}")
+    for name in (
+        "x4d_embedding_near_dup_lsh",
+        "x4i_lsh_near_dup_arith",
+        "x4j2_lsh_near_dup_colocated",
+        "x4m_lsh_near_dup_mixed",
+        "x4n_lsh_near_dup_multiprobe",
+    ):
+        group = f"build-probe-{name}"
+        sc.setJobGroup(group, "plan construction probe")
+        try:
+            df = registry.QUERIES[name](spark, SF_DIR)
+        finally:
+            sc.setJobGroup(None, None)
+        assert not sc.statusTracker().getJobIdsForGroup(group), name
+        p = plan_of(df)
+        assert "FlatMapGroupsInPandas" in p, name  # the fused kernel
+        assert "Join" not in p, name  # no materialized pair join
+        assert "BroadcastExchange" not in p, name
+        assert "CartesianProduct" not in p, name
+        assert "BatchEvalPython" not in p, name  # never row-at-a-time
 
 
 def test_interval_join_is_bucketed_equi_not_bnlj(spark):

@@ -55,30 +55,27 @@ AUDITED = {
     "partial-aggregated groupBy(source).",
     "x41_zscore_outliers": "moments groupBy broadcast back; flag pass "
     "map-only; no wide shuffle.",
-    "x4i_lsh_near_dup_arith": "bucket bits are map-side expressions; the "
-    "candidate self-join is a hash join on (table, bucket) — no "
-    "BroadcastNestedLoopJoin / CartesianProduct anywhere (the benched "
-    "near-dup path, VERDICT r6 #1).",
+    "x4i_lsh_near_dup_arith": "the benched near-dup path (VERDICT r6 "
+    "#1), a fused_lsh_pairs binding at k=3: one Arrow bucket kernel "
+    "(ArrowEvalPython) and one FlatMapGroupsInPandas kernel per "
+    "(table, bucket) group — no join node, no BroadcastNestedLoopJoin "
+    "/ CartesianProduct anywhere, only corpus×L bounded rows carry "
+    "payload through the groupBy exchange.",
     "x4k_knn_join_brute": "map-only: one Arrow block kernel per vector "
     "batch against the broadcast matrix (ArrowEvalPython/MapInPandas, "
     "Python BY DESIGN) — zero shuffles; the exact all-kNN baseline the "
     "x4b/x4e/x4f index probes are graded against.",
-    "x4j_lsh_near_dup_k10": "x4i at the production bucket width k=10 "
-    "(the sf1-parity substitute, VERDICT r9 #4): Arrow-vectorized "
-    "sign-projection + rescore kernels (ArrowEvalPython/MapInPandas, "
-    "Python BY DESIGN — dense linear algebra Spark lacks natively), "
-    "candidate equi-join on (table, bucket) carrying ID-only rows, "
-    "no nested loop, no row-at-a-time Python.",
     "x4j2_lsh_near_dup_colocated": "the 100 TB near-dup configuration "
     "(r11): candidate generation and rescore FUSED into one "
     "FlatMapGroupsInPandas kernel per (table, bucket) group — NO join "
     "node at all, no broadcast of the vector relation, only corpus×L "
-    "bounded rows carry payload through the groupBy exchange; the "
-    "pair dedup is the only other exchange.",
+    "bounded rows carry payload through the groupBy exchange; pairs "
+    "leave duplicate-free by first-collision emission (r16), so no "
+    "pair-dedup exchange follows.",
     "x4m_lsh_near_dup_mixed": "x4j2's fused shape with the hash-mixed "
     "plane family (r12 recall fix): one FlatMapGroupsInPandas kernel "
-    "per (table, bucket) group, no join node, pair dedup the only "
-    "other exchange — plan identical to x4j2; only the plane "
+    "per (table, bucket) group, no join node, no pair-dedup "
+    "exchange — plan identical to x4j2; only the plane "
     "coefficients differ (and the DuckDB oracle recomputes the mixer "
     "itself).",
     "x4n_lsh_near_dup_multiprobe": "the r12 production near-dup "
@@ -120,8 +117,7 @@ AUDITED = {
     "trick: per-pair work = 8 lookups + adds, measured 30.7→4.3 s "
     "at sf1); the only keyed exchange is the per-query top-5, "
     "WindowGroupLimit-partial per partition (r12). r14: the encode "
-    "half is the Arrow kernel (one mapInArrow feeding the LUT join) "
-    "— the HOF-fold encode is the x47g exhibit.",
+    "half is the Arrow kernel (one mapInArrow feeding the LUT join).",
     "x47d_ivfpq_topk": "IVF-PQ composed: coarse centroids broadcast "
     "(8 rows) for assignment, residual-PQ encode map-side over the "
     "array-Literal codebook, probe = equi-join codes⋈broadcast "
@@ -164,16 +160,6 @@ AUDITED = {
     "predicates reach the corpus scan feeding both the dedup window "
     "and the gram explode; benchmark grams + quartile cutoffs "
     "broadcast; one text-keyed exchange in the whole five-stage plan.",
-    "x47f_pq_adc_fused": "x47b's scan with the encode as ONE Arrow "
-    "kernel (r13): ArrowEvalPython/mapInArrow feeds the same "
-    "broadcast-LUT ADC join — 1024 interpreted lambda steps per row "
-    "become 64 vectorized array ops per batch, bit-identically "
-    "(pinned in tests/test_pq_spans.py). r14: delegates to x47b, "
-    "which now owns this plan.",
-    "x47g_pq_adc_hof_exhibit": "the labeled HOF-fold exhibit (r14): "
-    "x47b's broadcast-LUT ADC join with the encode as interpreted "
-    "HOF folds (CodegenFallback) — kept registered so the "
-    "Arrow-vs-HOF trade stays measurable; same oracle, same answer.",
     "x47i_ivfpq_trained_persisted": "persisted trained-residual "
     "IVF-PQ (r14): probes read ONLY the probed cell partitions of the "
     "packed-int64 codes tree (PartitionFilters IN-list, pinned) plus "
@@ -190,11 +176,6 @@ AUDITED = {
     "equi-join candidate generation (no CartesianProduct), integer "
     "Jaccard test, star-contraction components, then one "
     "(component)-keyed window picks the keep-longest representative.",
-    "x55c_keep_best_hashed": "x55b with xxhash64 gram keys (r14): "
-    "identical plan shape — df aggregate, rarest-prefix window, "
-    "hash-keyed equi-join, exact integer-Jaccard rescore on int64 "
-    "arrays, star-contraction, keep-longest window — with every "
-    "shuffle key a fixed 8-byte int instead of a gram string.",
     "x55b_keep_best_prefix": "prefix-filtered keep-best dedup (r13): "
     "candidate join keyed on the rarest-prefix grams only (hot grams "
     "outside every prefix generate zero candidates), exact "

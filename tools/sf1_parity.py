@@ -9,16 +9,8 @@ net: every window query runs on the deterministic sf1 tables
 (tools/synth_sf1.py) on BOTH engines with the normalization the local
 parity suite uses (12-significant-digit floats, column-order
 insensitive). Per-side 300 s timeouts (the heavy rows run 100-150 s per side at
-sf1: x4j spark 107 s, x45b oracle 146 s measured) — a query that
-blows up combinatorially at sf1 is reported as such, not hidden.
-
-Scale substitution (VERDICT r9 #4): the graded window pins
-x4i_lsh_near_dup_arith at k=3 — a bucket width chosen for the ~2k
-grading corpora whose buckets go dense at sf1's 20k vectors (the one
-red row in r9's 49/50). At sf1 this sweep runs the SAME pipeline at
-its production parameterization, x4j_lsh_near_dup_k10 (registered
-with its own DuckDB oracle and locally graded at sf0.01 like every
-tail entry), and records the substitution in the per-query output.
+sf1: x45b oracle 146 s measured) — a query that blows up
+combinatorially at sf1 is reported as such, not hidden.
 
 Run: python tools/sf1_parity.py  → one JSON line, also persisted to
 SF1_PARITY_LAST.json at the repo root (round artifact, VERDICT r9 #5).
@@ -36,12 +28,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TIMEOUT_S = 300.0
-
-# graded-window name -> the parameterization that holds at sf1 (same
-# machinery, corpus-sized bucket width; see module docstring)
-SF1_SUBSTITUTE = {
-    "x4i_lsh_near_dup_arith": "x4j_lsh_near_dup_k10",
-}
 
 # r14: streaming ops graded at sf0.01 in the driver window whose
 # micro-batch-boundary independence should also be demonstrated at
@@ -222,12 +208,9 @@ def main() -> None:
     per_query: dict[str, dict] = {}
     n_ok = n_mismatch = 0
     skipped: list[str] = []
-    for win_name in list(window) + list(EXTENDED_TAIL):
-        name = SF1_SUBSTITUTE.get(win_name, win_name)
+    for name in list(window) + list(EXTENDED_TAIL):
         entry: dict = {}
-        if name != win_name:
-            entry["substituted_for"] = win_name
-        if win_name in EXTENDED_TAIL:
+        if name in EXTENDED_TAIL:
             entry["lane"] = "extended_tail"
         if name in SF1_ORACLE_OVERRIDE:
             entry["oracle_override"] = (
