@@ -524,13 +524,20 @@ def _decode_lossless_scan(
     return _scan_end(bits)
 
 
-def decode_planes(content: bytes) -> tuple[_Frame, list[np.ndarray]]:
+def decode_planes(
+    content: bytes, exact: bool = False
+) -> tuple[_Frame, list[np.ndarray]]:
     """Full decode (sequential baseline AND progressive) to
     per-component sample planes, each at its own sampling resolution,
     cropped to component dimensions. Walks every marker segment,
     decoding each entropy-coded scan as it appears; progressive files
     accumulate coefficients across their DC/AC spectral and
-    successive-approximation scans."""
+    successive-approximation scans.
+
+    `exact=True` returns DCT-mode planes as float32 IDCT output,
+    clipped to the sample range but not rounded, so a colour
+    conversion downstream rounds once instead of twice (lossless
+    planes are integer either way)."""
     if content[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (missing SOI)")
     fr = _Frame()
@@ -701,7 +708,10 @@ def decode_planes(content: bytes) -> tuple[_Frame, list[np.ndarray]]:
         flat = store.reshape(-1, 64).astype(np.float32) * qt[None, :]
         blocks = flat[:, _UNZIGZAG].reshape(-1, 8, 8)
         spatial = _C.T[None] @ blocks @ _C[None]  # batched IDCT
-        spatial = np.clip(np.round(spatial + level), 0, (1 << fr.precision) - 1)
+        spatial = spatial + level
+        if not exact:
+            spatial = np.round(spatial)
+        spatial = np.clip(spatial, 0, (1 << fr.precision) - 1)
         plane = (
             spatial.reshape(by, bx, 8, 8)
             .transpose(0, 2, 1, 3)
@@ -709,7 +719,8 @@ def decode_planes(content: bytes) -> tuple[_Frame, list[np.ndarray]]:
         )
         cw = -(-fr.width * h // geom["hmax"])
         ch = -(-fr.height * v // geom["vmax"])
-        planes.append(plane[:ch, :cw].astype(np.uint8))
+        plane = plane[:ch, :cw]
+        planes.append(plane if exact else plane.astype(np.uint8))
     return fr, planes
 
 
@@ -735,7 +746,7 @@ def decode_pixels(content: bytes) -> np.ndarray:
     stored_c * stored_k / 255 per channel — YCCK (transform=2) first
     undoes the YCbCr transform on the three chroma-subsampled
     channels."""
-    fr, planes = decode_planes(content)
+    fr, planes = decode_planes(content, exact=True)
     hmax = max(c[1] for c in fr.comps)
     vmax = max(c[2] for c in fr.comps)
     up = []
@@ -747,7 +758,7 @@ def decode_pixels(content: bytes) -> np.ndarray:
             plane = np.floor(plane / (1 << (fr.precision - 8)))
         up.append(plane)
     if len(up) == 1:
-        return up[0][..., None].astype(np.uint8)
+        return up[0][..., None].round().astype(np.uint8)
     if len(up) == 3:
         # Adobe "no transform" — and lossless, which by convention
         # (DICOM et al.) stores component values untransformed.

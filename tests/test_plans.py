@@ -560,6 +560,20 @@ def test_pagerank_iterations_are_equi_joins(spark):
     assert "partial_sum" in p  # contributions combine map-side
 
 
+def test_graded_near_dup_is_lsh_equi_not_quadratic(spark):
+    """X4i (r7, the GRADED near-dup representative): pair generation
+    must ride the (table, bucket) hash exchange — never the O(n²)
+    BroadcastNestedLoop the exact x4c baseline deliberately plans as —
+    and its bucket kernel is Arrow-vectorized, never row-at-a-time
+    Python."""
+    p = plan_of(registry.QUERIES["x4i_lsh_near_dup_arith"](spark, SF_DIR))
+    assert "BroadcastNestedLoopJoin" not in p
+    assert "CartesianProduct" not in p
+    assert "hashpartitioning" in p  # candidates meet on the bucket key
+    assert "FlatMapGroupsInPandas" in p  # vectorized batches...
+    assert "BatchEvalPython" not in p  # ...never row-at-a-time Python
+
+
 def test_colocated_near_dup_is_fused_group_kernel(spark):
     """Every LSH near-dup query is a fused_lsh_pairs binding, and each
     must plan as ONE group-kernel over the (table, bucket) exchange —
