@@ -524,9 +524,7 @@ def _decode_lossless_scan(
     return _scan_end(bits)
 
 
-def decode_planes(
-    content: bytes, exact: bool = False
-) -> tuple[_Frame, list[np.ndarray]]:
+def decode_planes(content: bytes) -> tuple[_Frame, list[np.ndarray]]:
     """Full decode (sequential baseline AND progressive) to
     per-component sample planes, each at its own sampling resolution,
     cropped to component dimensions. Walks every marker segment,
@@ -534,10 +532,9 @@ def decode_planes(
     accumulate coefficients across their DC/AC spectral and
     successive-approximation scans.
 
-    `exact=True` returns DCT-mode planes as float32 IDCT output,
-    clipped to the sample range but not rounded, so a colour
-    conversion downstream rounds once instead of twice (lossless
-    planes are integer either way)."""
+    Lossless planes are the integer samples. DCT planes are the float32
+    IDCT output, clipped to the sample range but not rounded, so the
+    colour conversion in ``decode_pixels`` rounds once, not twice."""
     if content[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (missing SOI)")
     fr = _Frame()
@@ -708,10 +705,7 @@ def decode_planes(
         flat = store.reshape(-1, 64).astype(np.float32) * qt[None, :]
         blocks = flat[:, _UNZIGZAG].reshape(-1, 8, 8)
         spatial = _C.T[None] @ blocks @ _C[None]  # batched IDCT
-        spatial = spatial + level
-        if not exact:
-            spatial = np.round(spatial)
-        spatial = np.clip(spatial, 0, (1 << fr.precision) - 1)
+        spatial = np.clip(spatial + level, 0, (1 << fr.precision) - 1)
         plane = (
             spatial.reshape(by, bx, 8, 8)
             .transpose(0, 2, 1, 3)
@@ -719,8 +713,7 @@ def decode_planes(
         )
         cw = -(-fr.width * h // geom["hmax"])
         ch = -(-fr.height * v // geom["vmax"])
-        plane = plane[:ch, :cw]
-        planes.append(plane if exact else plane.astype(np.uint8))
+        planes.append(plane[:ch, :cw])
     return fr, planes
 
 
@@ -746,7 +739,7 @@ def decode_pixels(content: bytes) -> np.ndarray:
     stored_c * stored_k / 255 per channel — YCCK (transform=2) first
     undoes the YCbCr transform on the three chroma-subsampled
     channels."""
-    fr, planes = decode_planes(content, exact=True)
+    fr, planes = decode_planes(content)
     hmax = max(c[1] for c in fr.comps)
     vmax = max(c[2] for c in fr.comps)
     up = []

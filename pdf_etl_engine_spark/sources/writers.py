@@ -2079,20 +2079,31 @@ def _inferred_schema(
 ) -> StructType:
     """The schema of the table files ``rels`` when the log cannot
     describe them (no log, or commits written before schemas were
-    logged): the data columns by ``mergeSchema`` footer inference over
-    the files alone — no ``basePath``, so no partition discovery — and
-    the partition columns as strings, last, as Spark's reader orders
-    them. Partition discovery would type an all-numeric tenant id as
-    int and serve tenant "007" tenant "7"'s rows."""
+    logged): the data columns by ``mergeSchema`` footer inference,
+    the partition columns last, as Spark's reader orders them. A
+    partition column takes the type the ``create_fact_table`` sidecar
+    declares for it; ``tenant_id``/``folder_id`` are otherwise strings,
+    since partition discovery would type an all-numeric tenant id as
+    int and serve tenant "007" tenant "7"'s rows; any other partition
+    column keeps the type discovery infers from its directory values."""
     parts = _partition_cols(rels[0])
-    data = (
+    found = (
         spark.read.option("mergeSchema", "true")
+        .option("basePath", path)
         .parquet(*[_os.path.join(path, f) for f in rels])
         .schema
     )
+    sidecar = _read_sidecar_schema(path)
+    declared = {f.name: f.dataType for f in sidecar.fields} if sidecar else {}
+
+    def part_type(p: str):
+        if p in declared:
+            return declared[p]
+        return StringType() if p in PARTITION_COLS else found[p].dataType
+
     return StructType(
-        [f for f in data.fields if f.name not in parts]
-        + [StructField(p, StringType()) for p in parts]
+        [f for f in found.fields if f.name not in parts]
+        + [StructField(p, part_type(p)) for p in parts]
     )
 
 
@@ -2102,7 +2113,7 @@ def _scan(
     """Read the table files ``rels`` with ``schema``. A logged schema
     spares the footer-inference job and keeps partition columns typed
     as written; without one, ``_inferred_schema`` reads the footers
-    and types partition columns as strings. Either way "007" stays a
+    and types the partition columns. Either way "007" stays a
     string."""
     if schema is None:
         schema = _inferred_schema(spark, path, rels)
@@ -2182,8 +2193,8 @@ def read_fact_table(
     rows written before a column existed read NULL for it. The schema
     comes from the commit log (``table_schema``), so building the
     DataFrame runs no Spark job; only snapshots the log cannot
-    describe are read with ``mergeSchema`` footer inference, partition
-    columns as strings.
+    describe are read with ``mergeSchema`` footer inference
+    (``_inferred_schema``: tenant and folder ids stay strings).
 
     File resolution honors the commit log when one exists — data
     files a crashed append moved into place but never published are

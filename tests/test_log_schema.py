@@ -5,13 +5,22 @@ parquet reader instead of inferring it from file footers."""
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 import uuid
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.types import (
+    DateType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from pdf_etl_engine_spark import pipeline
 from pdf_etl_engine_spark.sources import writers
@@ -93,6 +102,66 @@ def test_numeric_tenant_ids_with_a_schemaless_log(tmp_path, spark):
     _rewrite_commits(path, lambda rec: rec.pop("schema"))
     assert writers._fold_state(path)["schema"] is None
     _assert_tenants_apart(spark, path)
+
+
+_TYPED = StructType(
+    [
+        StructField("event_date", DateType()),
+        StructField("bucket", IntegerType()),
+        StructField("row_id", StringType()),
+        StructField("amount", DoubleType()),
+    ]
+)
+
+
+def _typed_rows(spark, row_id, day, bucket):
+    return spark.createDataFrame(
+        [(datetime.date(2026, 1, day), bucket, row_id, float(day))], _TYPED
+    )
+
+
+def _assert_typed_partitions(spark, path):
+    schema = writers.table_schema(spark, path)
+    assert schema["event_date"].dataType == DateType()
+    assert schema["bucket"].dataType == IntegerType()
+    assert writers.read_fact_table(spark, path).schema == schema
+
+
+def test_typed_partitions_with_a_schemaless_log(tmp_path, spark):
+    """Partition columns the sidecar declares DATE/INT keep those types
+    on the inference path, so a compaction logs them as declared and
+    the next typed append is not refused as a retype."""
+    path = str(tmp_path / "facts")
+    writers.create_fact_table(spark, path, _TYPED)
+    writers.set_partition_spec(path, ["event_date", "bucket"])
+    writers.append_rows(_typed_rows(spark, "a", 5, 7), path)
+    _rewrite_commits(path, lambda rec: rec.pop("schema", None))
+    assert writers._fold_state(path)["schema"] is None
+    _assert_typed_partitions(spark, path)
+
+    writers.compact_fact_table(spark, path)
+    assert writers.append_rows(_typed_rows(spark, "b", 6, 9), path)
+    got = {
+        r["row_id"]: (r["event_date"], r["bucket"])
+        for r in writers.read_fact_table(spark, path).collect()
+    }
+    assert got == {
+        "a": (datetime.date(2026, 1, 5), 7),
+        "b": (datetime.date(2026, 1, 6), 9),
+    }
+
+
+def test_typed_partitions_without_a_log(tmp_path, spark):
+    """No log and no sidecar: a partition column other than the tenant
+    and folder ids keeps the type partition discovery gives it."""
+    path = str(tmp_path / "facts")
+    _typed_rows(spark, "a", 5, 7).write.partitionBy(
+        "event_date", "bucket"
+    ).parquet(path)
+    assert writers._fold_state(path) is None
+    _assert_typed_partitions(spark, path)
+    row = writers.read_fact_table(spark, path).first()
+    assert (row["event_date"], row["bucket"]) == (datetime.date(2026, 1, 5), 7)
 
 
 def test_add_only_evolution_reads_old_rows_null(tmp_path, spark):
