@@ -1,863 +1,411 @@
 #!/usr/bin/env python
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""Benchmark harness: six timing lanes (``LANES``) run by one executor,
+then the streaming drain, on local[$SPARK_GRAFT_CPUS]. Run: python bench.py
 
-Prints ONE JSON line:
-  {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+The lanes: the 7 headline queries (named as in BASELINE.md's DuckDB
+baseline) and the X surface at $SPARK_GRAFT_SF_DIR (default sf0.1), the
+headline queries on the parquet scan path (table cache off), and three
+lanes on the sf1 that ``tools/synth_sf1.py`` derives from sf0.1. Every
+Spark run builds a fresh DataFrame and pulls it with ``toPandas()``, so
+no run reuses a plan or skips a map stage. A row is one settle run, then
+N timed runs (median reported), each profiled with ``perfbench/layers.py``
+(jobs, stages, tasks, shuffle, spill, planning, Python-worker bytes);
+DuckDB twins run the query's oracle SQL on the same files. The payload
+goes to BENCH_LAST.json and stdout; the last stdout line is a gate
+record under 1 KB.
 
-Query names mirror BASELINE.md's measured DuckDB baseline so the
-numbers are directly comparable. Timing is per-query wall clock of
-full execution + result materialization (collect), median of N runs
-after a warm-up run (the baseline was measured warm, median of 5).
+Environment: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_BENCH_RUNS (timed runs in
+the sf0.1 and sf1 lanes, default 5), SPARK_GRAFT_BENCH_BUDGET_S (default
+1140), and SPARK_GRAFT_BENCH_{SF1,SF1_HEAVY,SF1_ANCHORS,STREAMING}=0.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import statistics
 import sys
+import threading
 import time
+from dataclasses import asdict, dataclass
+
+import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pdf_etl_engine_spark import registry
-from pdf_etl_engine_spark.session import get_spark
+from pdf_etl_engine_spark import catalog, registry  # noqa: E402
+from pdf_etl_engine_spark.session import get_spark  # noqa: E402
+from perfbench.layers import SparkCounters, plan_phases  # noqa: E402
+from tools import synth_sf1  # noqa: E402
 
 registry.load_all()
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
-LOAD_START = 0.0
-
-# r16 (VERDICT r15 #1b): GLOBAL wall-clock budget. BENCH_r15 was killed
-# by the driver at BOTH CPU counts (rc=124) because the section budgets
-# only bounded themselves, not the sum — ~51 min of sf1 anchors (5
-# permanently-interrupted DuckDB twins x 240 s cap + median-of-3 on the
-# completing twins) plus ~13 min of sf1_heavy exceeded any driver
-# timeout on a 2x-slow host. Every section now spends against ONE
-# budget measured from process start; when a section's share runs out
-# it degrades HONESTLY (fewer twin runs, recorded per entry as
-# twin_runs/timed_runs; skipped work recorded as skipped_over_budget)
-# instead of silently running long. The Spark-side timing methodology
-# of each section (settle + timed, same queries, same scale) is
-# unchanged; only repetition counts degrade, and only under deadline
-# pressure, and always on the record.
 BENCH_T0 = time.monotonic()
 BUDGET_S = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_S", "1140"))
 STREAMING_RESERVE_S = 150.0  # kept back for the streaming drain
-ANCHORS_RESERVE_S = 420.0  # kept back for the sf1 anchor lane
-_QUIET_SPEND = 0.0
 QUIET_SPEND_CAP_S = 90.0  # cumulative cap on load-gate waiting
+CAP_S = 240.0  # longest single execution, either engine
+# A cap that cancels mid-execution kills the Python workers every later
+# row then re-boots, so no execution gets less than this.
+MIN_CAP_S = 60.0
+HOST_CPUS = len(os.sched_getaffinity(0))
+_quiet_spent = 0.0
+
+# BASELINE.md headline name -> registry query of the same shape as the
+# DuckDB baseline: q_json_extract is extract+groupBy-avg, not a typed
+# parse; q_window_rank is one row_number, not the 3-function suite.
+HEADLINE = (
+    ("q_results_topk", "t1_results_topk"),
+    ("q_pricing_summary", "a2_groupby_pricing_summary"),
+    ("q_join_revenue", "j5_multiway_equi"),
+    ("q_window_rank", "w0_row_number"),
+    ("q_json_extract", "s7b_json_extract_agg"),
+    ("q_distinct_users", "a3_count_distinct"),
+    ("q_coerce_number", "f2_coerce_number"),
+)
+# LLM-data-pipeline operators, against the DuckDB twins in BASELINE.md's
+# X-surface table (the same oracle SQL at sf0.1).
+X_SURFACE = (
+    ("x_dedup_exact", "x2_dedup_exact"),
+    ("x_contamination", "x16_contamination"),
+    ("x_incremental_dedup", "x22_incremental_dedup_exact"),
+    ("x_repetition", "x21_repetition"),
+    # the oracle-graded LSH binding, not the O(n²) exact x4c
+    ("x_embedding_near_dup", "x4i_lsh_near_dup_arith"),
+    ("x_sequence_pack", "x25_sequence_pack"),
+    ("x_url_blocklist", "x26_url_blocklist"),
+    ("x_ngram_surprisal", "x27_ngram_surprisal"),
+    ("x_containment_dedup", "x28_containment_dedup"),
+    ("x_bpe_pair_counts", "x32_bpe_pair_counts"),
+    ("x_gopher_rules", "x36_gopher_rules"),
+    ("x_embedding_outliers", "x37_embedding_outliers"),
+    ("x_link_pagerank", "x39_link_pagerank"),
+    ("x_mixture_sample", "x40_mixture_sample"),
+    ("x_zscore_outliers", "x41_zscore_outliers"),
+    ("x_pii_redact", "x44_pii_redact"),
+    ("x_semdedup", "x45_semdedup"),
+    ("x_knn_join", "x4k_knn_join_brute"),
+    ("x_curriculum_shards", "x51_curriculum_shards"),
+    ("x_line_boilerplate", "x52_line_boilerplate"),
+)
+SF1_X = tuple((k, dict(X_SURFACE)[k]) for k in (
+    "x_dedup_exact", "x_incremental_dedup", "x_mixture_sample", "x_url_blocklist",
+    "x_zscore_outliers", "x_curriculum_shards", "x_line_boilerplate"))
+# The operators with the largest DuckDB twins. The near-dup runs at its
+# production bucket width k=10 (x4j2): the graded k=3 binding (x4i) is
+# sized for ~2k vectors and goes dense at sf1's 20k.
+SF1_HEAVY = (
+    ("x_semdedup", "x45_semdedup"),
+    ("x_containment_dedup", "x28_containment_dedup"),
+    ("x_gopher_rules", "x36_gopher_rules"),
+    ("x_ngram_surprisal", "x27_ngram_surprisal"),
+    ("x_embedding_near_dup", "x4j2_lsh_near_dup_colocated"),
+    ("x_pii_redact", "x44_pii_redact"),
+)
+# x14b and x4n run first: both are bindings of the one LSH engine and
+# were last changed with it. x47e/x47i: the settle run builds the
+# persisted index, the timed runs probe it (the twin recomputes the
+# full IVF-PQ oracle).
+SF1_ANCHORS = (
+    ("x_dedup_clusters_lsh", "x14b_dedup_clusters_lsh"),
+    ("x_near_dup_multiprobe", "x4n_lsh_near_dup_multiprobe"),
+    ("x_quality_classifier", "x49b_perceptron_filter"),
+    ("x_pq_adc_topk", "x47b_pq_adc_topk"),
+    ("x_ivfpq_topk", "x47d_ivfpq_topk"),
+    ("x_ivfpq_persisted", "x47e_ivfpq_persisted"),
+    ("x_ivfpq_trained", "x47h_ivfpq_trained_residual"),
+    ("x_ivfpq_trained_persisted", "x47i_ivfpq_trained_persisted"),
+    ("x_curation_pipeline", "x53_curation_pipeline"),
+    ("x_substring_span_dedup", "x46_substring_span_dedup"),
+    ("x_keep_best_dedup", "x55b_keep_best_prefix"),
+    ("x_knn_join_exact", "x4k_knn_join_brute"),
+)
+# Twins not re-run: their SQL forms (quadratic joins or recursive CTEs;
+# x14b's comparator is x14c's exact-edge CTE, since LSH edges have no
+# exact oracle) overran the cap on every recorded run, so re-running
+# them burns the cap and loads the host for the rows after them.
+STATIC_TWINS = frozenset({"x14b_dedup_clusters_lsh", "x4n_lsh_near_dup_multiprobe",
+                          "x55b_keep_best_prefix", "x4k_knn_join_brute"})
+
+
+@dataclass(frozen=True)
+class Lane:
+    name: str
+    sf_dir: str
+    rows: tuple[tuple[str, str], ...]  # (bench key, registry query)
+    shuffle_partitions: int  # 4 fits sf0.1's exchanges, 16 sf1's
+    # AQE's per-stage round trip dominates sub-second queries over
+    # single-row-group files; the heavy sf1 operators rely on its skew
+    # splits, as the engine ships it.
+    aqe: bool
+    table_cache: bool  # False: every run reads parquet (scan path)
+    runs: int
+    twin: str  # "none" | "run" | "static"
+    share: float  # weight in the budget rule (see lane_budget)
+
+    def twin_of(self, query: str) -> str:
+        return "static" if self.twin == "run" and query in STATIC_TWINS else self.twin
+
+
+SF1_DIR = synth_sf1.OUT
+LANES = (
+    Lane("queries", SF_DIR, HEADLINE, 4, False, True, RUNS, "none", 1),
+    Lane("x_queries", SF_DIR, X_SURFACE, 4, False, True, RUNS, "none", 3),
+    Lane("scan_path_queries", SF_DIR, HEADLINE, 4, False, False, RUNS, "none", 1),
+    Lane("sf1", SF1_DIR, HEADLINE + SF1_X, 16, False, True, RUNS, "run", 3),
+    Lane("sf1_heavy", SF1_DIR, SF1_HEAVY, 16, True, True, 3, "run", 5),
+    Lane("sf1_anchors", SF1_DIR, SF1_ANCHORS, 16, True, True, 1, "run", 6),
+)
+# sections that SPARK_GRAFT_BENCH_<NAME>=0 skips
+SKIPPABLE = ("sf1", "sf1_heavy", "sf1_anchors", "streaming")
+
+
+def enabled(name: str) -> bool:
+    return name not in SKIPPABLE or os.environ.get(f"SPARK_GRAFT_BENCH_{name.upper()}") != "0"
 
 
 def _remaining() -> float:
     return BUDGET_S - (time.monotonic() - BENCH_T0)
 
-# BASELINE.md headline name -> registry query with the SAME shape as
-# the measured DuckDB baseline: q_json_extract is extract+groupBy-avg
-# (not a full-table typed parse) and q_window_rank is a single
-# row_number (not the 3-function suite) — see BASELINE.md's table.
-HEADLINE = {
-    "q_results_topk": "t1_results_topk",
-    "q_pricing_summary": "a2_groupby_pricing_summary",
-    "q_join_revenue": "j5_multiway_equi",
-    "q_window_rank": "w0_row_number",
-    "q_json_extract": "s7b_json_extract_agg",
-    "q_distinct_users": "a3_count_distinct",
-    "q_coerce_number": "f2_coerce_number",
-}
 
-# North-star LLM-data-pipeline operators (VERDICT r5 #6): tracked with
-# the same warm-median methodology against DuckDB twins measured from
-# the SAME oracle SQL at sf0.1 (BASELINE.md "X-surface" table). Kept
-# out of the gate metric (headline total) so the gate definition stays
-# comparable across rounds; regressions surface via the ratios.
-X_SURFACE = {
-    "x_dedup_exact": "x2_dedup_exact",
-    "x_contamination": "x16_contamination",
-    "x_incremental_dedup": "x22_incremental_dedup_exact",
-    "x_repetition": "x21_repetition",
-    # r7 (VERDICT r6 #1): the benched near-dup is the oracle-graded
-    # LSH scale path; the exact all-pairs x4c baseline stays in the
-    # registry tail (recall anchor) but out of the bench — its O(n²)
-    # plan is the shape this engine exists to avoid at 100 TB
-    "x_embedding_near_dup": "x4i_lsh_near_dup_arith",
-    "x_sequence_pack": "x25_sequence_pack",
-    "x_url_blocklist": "x26_url_blocklist",
-    "x_ngram_surprisal": "x27_ngram_surprisal",
-    "x_containment_dedup": "x28_containment_dedup",
-    "x_bpe_pair_counts": "x32_bpe_pair_counts",
-    "x_gopher_rules": "x36_gopher_rules",
-    "x_embedding_outliers": "x37_embedding_outliers",
-    "x_link_pagerank": "x39_link_pagerank",
-    "x_mixture_sample": "x40_mixture_sample",
-    "x_zscore_outliers": "x41_zscore_outliers",
-    # r7 additions, DuckDB twins measured into BASELINE.md same-day
-    "x_pii_redact": "x44_pii_redact",
-    "x_semdedup": "x45_semdedup",
-    # r10: exact all-vectors k-NN join (Arrow block kernel); twin
-    # measured into BASELINE.md 2026-08-15
-    "x_knn_join": "x4k_knn_join_brute",
-    # r12 second pass: curriculum binning and line-level boilerplate
-    # removal (both fully lazy — warm plan-reuse is honest for them).
-    # x48/x49b/x50 are NOT in this warm lane: x49b trains at
-    # plan-construction time, and x48/x50 localCheckpoint a bounded
-    # intermediate at first execution, so a plan-reuse warm number
-    # would exclude training / the checkpointed pass — all three are
-    # measured fresh-execution in SF1_ANCHORS instead (the x45-vs-
-    # x45b precedent: warm lanes carry no construction-time work).
-    "x_curriculum_shards": "x51_curriculum_shards",
-    "x_line_boilerplate": "x52_line_boilerplate",
-}
+def lane_budget(lane: Lane, later: list[Lane]) -> float:
+    """The one budget rule: a lane gets its share of what is left of
+    BUDGET_S (less the streaming reserve), against the lanes still to
+    run, so time a lane leaves unspent passes on to the later lanes."""
+    total = lane.share + sum(x.share for x in later)
+    return max(0.0, _remaining() - STREAMING_RESERVE_S) * lane.share / total
 
 
-def time_job_floor(spark) -> tuple[float, float]:
-    """Spark's minimum job time, measured two ways to match the two
-    timing methodologies — the honest denominator when comparing
-    against an in-process engine's ~10 ms numbers:
-
-    - reused: ``spark.range(1).groupBy().count()`` built once and
-      re-executed — a minimal two-stage job with plan reuse, the same
-      harness shape as the warm numbers. Measured ~19 ms locally: any
-      warm per-query number is (floor + data-path work).
-    - fresh: ``spark.range(1).count()`` re-planned every run — the
-      same harness shape as the scan-path numbers (analysis +
-      optimization + job submission dominate, ~80 ms locally).
-    """
-    reused_df = spark.range(1).groupBy().count()
-    fresh, reused = [], []
-    for _ in range(3):  # settle JIT for both paths
-        spark.range(1).count()
-        reused_df.collect()
-    for _ in range(max(RUNS, 5)):
-        t0 = time.perf_counter()
-        reused_df.collect()
-        reused.append(time.perf_counter() - t0)
-        t0 = time.perf_counter()
-        spark.range(1).count()
-        fresh.append(time.perf_counter() - t0)
-    return statistics.median(reused), statistics.median(fresh)
-
-
-def time_query_scan_path(spark, qname: str) -> float:
-    """Median wall time with NO table cache and NO plan reuse: the
-    DataFrame cache is cleared before every run, ``CACHE_MAX_BYTES`` is
-    zeroed, and Spark's in-memory columnar store is dropped up front —
-    each timed run re-plans the query and executes it against the
-    parquet scan path (pushdown + pruning live), which is the path the
-    100 TB design depends on. Reported alongside the warm numbers so
-    both data paths are on the record (VERDICT r2 "what's wrong" #2).
-    """
-    from pdf_etl_engine_spark import catalog
-
-    fn = registry.QUERIES[qname]
-
-    def run_once() -> float:
-        catalog._DF_CACHE.clear()
-        t0 = time.perf_counter()
-        fn(spark, SF_DIR).toPandas()
-        return time.perf_counter() - t0
-
-    run_once()  # settle codegen/JIT for this query's kernels
-    return statistics.median(run_once() for _ in range(RUNS))
-
-
-def time_query(spark, qname: str, sf_dir: str | None = None) -> tuple[float, float]:
-    """Returns (warm execution median, cold first-run time).
-
-    The plan is built ONCE and re-executed; each timed run is a full
-    physical execution + Arrow materialization to the client (the
-    DuckDB baseline's fetchall equivalent) — only Catalyst
-    optimization + Janino codegen compilation are amortized out.
-    Rationale: re-planning a fresh DataFrame costs 100-200 ms of
-    driver-side JVM work per query locally — at the 100 TB scale this
-    engine targets, plan time is noise against minutes of execution,
-    while the DATA-PATH throughput this measures is exactly what
-    scales. The cold number (plan + codegen + first execution +
-    table-cache fill) is reported alongside so nothing is hidden.
-    """
-    fn = registry.QUERIES[qname]
-    t0 = time.perf_counter()
-    df = fn(spark, sf_dir or SF_DIR)
-    df.toPandas()  # cold: analysis + optimize + codegen + cache fill
-    cold = time.perf_counter() - t0
-    df.toPandas()  # settle JIT/code cache before timing
-    samples = []
-    for _ in range(RUNS):
-        t0 = time.perf_counter()
-        df.toPandas()
-        samples.append(time.perf_counter() - t0)
-    return statistics.median(samples), cold
-
-
-# Second scale point (VERDICT r6 #3): the floor-bound argument —
-# "Spark's fixed ~20 ms job floor dominates at sf0.1, crosses over at
-# scale" — measured instead of asserted. sf1 (10× sf0.1, 6M lineitem /
-# 1M events / 50k docs) is synthesized deterministically from sf0.1 by
-# tools/synth_sf1.py; BOTH engines run on the same files, DuckDB
-# executing each query's own oracle SQL (identical semantics by
-# construction). Headline 7 + the 5 X queries whose sf0.1 ratios were
-# floor-dominated or lineitem-scaled.
-SF1_X = (
-    "x_dedup_exact",
-    "x_incremental_dedup",
-    "x_mixture_sample",
-    "x_url_blocklist",
-    "x_zscore_outliers",
-    # r12 second pass (lazy queries only — see the X_SURFACE note)
-    "x_curriculum_shards",
-    "x_line_boilerplate",
-)
-
-# r9 (VERDICT r8 #1): the six HEAVY X-surface operators — the ones
-# with the largest DuckDB twins, i.e. the 100 TB-posture queries whose
-# scale crossover was previously inferred from sf0.1. Measured
-# separately from SF1_X because the warm (plan-reuse) methodology is
-# meaningless here: re-executing the same lineage skips already-
-# materialized shuffle stages entirely (Spark's DAG scheduler reuses
-# map outputs), so a 90 s semantic-dedup "re-runs" in 80 ms. These six
-# are timed FRESH — the DataFrame is rebuilt each run, so every
-# shuffle recomputes — single timed run per engine (they run seconds
-# to minutes at sf1; run-to-run variance is amortized by the runtime
-# itself, and a second 90 s run buys noise reduction the round can't
-# afford). AQE is ON for the Spark side: it's the engine's shipped
-# profile and the skew-split behavior these operators rely on at
-# scale; its per-stage round-trip cost is noise at multi-second
-# stage granularity.
-SF1_X_HEAVY = (
-    "x_semdedup",
-    "x_containment_dedup",
-    "x_gopher_rules",
-    "x_ngram_surprisal",
-    "x_embedding_near_dup",
-    "x_pii_redact",
-)
-# At sf1 the near-dup runs at its PRODUCTION bucket width (k=10,
-# x4j2 — the same arithmetic-plane binding of fused_lsh_pairs) — the
-# graded k=3 instance (x4i) is corpus-sized for the ~2k grading
-# vectors and goes dense at 20k, which is a parameterization
-# artifact, not the operator's scale behavior (VERDICT r9 #4).
-# Recorded in the payload so the ratio is never silently measured on
-# a different query.
-SF1_HEAVY_SUBSTITUTE = {
-    "x_embedding_near_dup": "x4j2_lsh_near_dup_colocated",
-}
-# wall-clock guard: if the heavy section exceeds this budget, the
-# remaining queries are skipped WITH A NOTE in the payload (no silent
-# truncation) so one pathological round can't sink the whole bench.
-# r11: raised from 900 with the move to median-of-3 timed runs per
-# engine (VERDICT r10 #1) — 8 executions per query instead of 4.
-SF1_HEAVY_BUDGET_S = 1400.0
-
-# scale anchors (VERDICT r10 #3): the claimed-at-scale operators that
-# aren't in the heavy crossover set — recorded once per round, single
-# settle + single timed run per engine under a hard per-execution cap.
-#
-# r16 pruning (VERDICT r15 #1b — measurement-harness change; the old
-# numbers are retained in BENCH_r15.json and the BENCH_LAST history):
-# the lane is cut from 17 to 12 live rows so the whole bench fits a
-# driver timeout.
-# MOVED TO BASELINE.md one-time records (Spark row removed):
-#   x_pq_adc_hof_exhibit (x47g) — the deliberately-interpreted HOF
-#     exhibit, 3.1x by design, adjudicated r14; the query itself has
-#     since been deleted (x47b reproduces its oracle answer).
-#   x_near_dup_colocated (x4j2)  — superseded as the production config
-#     by x_near_dup_multiprobe (x4n, kept); its completing twin cost
-#     ~278 s/round; correctness stays driver-graded (CORRECTNESS x4j2).
-#   x_knn_join_blocked (x4l)     — shares x4k's permanently-interrupted
-#     twin; x_knn_join_exact (kept) carries the family's anchor.
-#   x_heavy_hitters (x48)        — documented by-design trade
-#     (HH_CROSSOVER.json), adjudicated r14, "not re-litigated" twice.
-#   x_dsir_importance (x50)      — ratio stable 0.3-0.4 since r12,
-#     path untouched since r12.
-# TWIN_STATIC rows: twins that were ">240s interrupted" in EVERY round
-# r13-r15 are no longer re-executed — each interrupted twin burned its
-# full 240 s cap of CPU per round and left load1 at 7-10 for the next
-# anchor. The marker is recorded statically with twin_runs=0 and the
-# permanent-record provenance.
-_TWIN_RUN, _TWIN_STATIC = "run", "static_interrupted"
-SF1_ANCHORS = (
-    # (bench key, query, twin_mode). ORDER MATTERS: light anchors with
-    # finishing twins run FIRST so a cap-burning execution can only
-    # skew rows after it (r12 measured 1.2-1.6x inflation downstream
-    # of a cap burn).
-    ("x_quality_classifier", "x49b_perceptron_filter", _TWIN_RUN),
-    ("x_pq_adc_topk", "x47b_pq_adc_topk", _TWIN_RUN),
-    ("x_ivfpq_topk", "x47d_ivfpq_topk", _TWIN_RUN),
-    # r13: the persisted-index serving path — the settle run builds
-    # the artifact (build-once), the timed run probes it with static
-    # cell pruning; twin = the same full IVF-PQ oracle (DuckDB has no
-    # persisted-index path to compare, so the twin is the honest
-    # recompute-everything baseline, stated in the note)
-    ("x_ivfpq_persisted", "x47e_ivfpq_persisted", _TWIN_RUN),
-    # r14: trained-residual IVF-PQ (x47h — the recall fix; integer-
-    # exact Lloyd on residuals trains at first execution → anchored
-    # fresh, never warm) and its persisted serving twin (x47i — the
-    # settle run builds the artifact, the timed run probes it)
-    ("x_ivfpq_trained", "x47h_ivfpq_trained_residual", _TWIN_RUN),
-    ("x_ivfpq_trained_persisted", "x47i_ivfpq_trained_persisted", _TWIN_RUN),
-    # r12: the composed curation DAG (twin ~20-110 s, completes)
-    ("x_curation_pipeline", "x53_curation_pipeline", _TWIN_RUN),
-    # r12: substring-span dedup (gram fold is 40 multiply-mods per
-    # char in BOTH engines — the anchor shows whose fold engine holds
-    # at 13M grams)
-    ("x_substring_span_dedup", "x46_substring_span_dedup", _TWIN_RUN),
-    # permanently-interrupted twins last (Spark side still measured):
-    ("x_near_dup_multiprobe", "x4n_lsh_near_dup_multiprobe", _TWIN_STATIC),
-    # r13: exact-Jaccard keep-best dedup with prefix-filtered
-    # candidates — the SQL twin is the quadratic 1.25B-pair
-    # list_intersect join + recursive CTE, interrupted every round
-    ("x_keep_best_dedup", "x55b_keep_best_prefix", _TWIN_STATIC),
-    ("x_knn_join_exact", "x4k_knn_join_brute", _TWIN_STATIC),
-    ("x_dedup_clusters_lsh", "x14b_dedup_clusters_lsh", _TWIN_STATIC),
-)
-SF1_ANCHORS_CAP_S = 240.0
-_TWIN_STATIC_MARKER = (
-    f">{int(SF1_ANCHORS_CAP_S)}s interrupted "
-    "(permanent record, interrupted every round r13-r15; not re-run — "
-    "VERDICT r15 #1b)"
-)
-
-
-def _wait_for_quiet(max_wait_s: float = 60.0, load1_max: float = 24.0) -> float:
-    """Load-average gate (VERDICT r10 #1): before a timed section,
-    wait (bounded) for load1 to fall below ``load1_max`` so one host
-    spike can't set a gate number. Returns the load1 actually seen at
-    release — recorded in the payload either way.
-
-    r16 (VERDICT r15 #1b): the wait additionally spends against the
-    global bench budget and a cumulative cap — 17 anchor rows each
-    waiting their own 30 s could burn 8+ minutes of a driver timeout
-    purely on sleeps."""
-    global _QUIET_SPEND
-    budget = min(
-        max_wait_s,
-        QUIET_SPEND_CAP_S - _QUIET_SPEND,
-        max(_remaining(), 0.0),
-    )
+def _wait_for_quiet(max_wait_s: float, load1_max: float = HOST_CPUS) -> float:
+    """Wait (bounded, against a cumulative cap and the budget) for load1
+    to fall below ``load1_max``; returns the load1 seen at release."""
+    global _quiet_spent
+    budget = min(max_wait_s, QUIET_SPEND_CAP_S - _quiet_spent, _remaining())
     waited = 0.0
     while os.getloadavg()[0] > load1_max and waited < budget:
         time.sleep(5.0)
         waited += 5.0
-    _QUIET_SPEND += waited
+    _quiet_spent += waited
     return round(os.getloadavg()[0], 2)
 
 
-def bench_sf1(spark) -> dict:
-    import duckdb
-
-    from tools.synth_sf1 import synth
-
-    sf1_dir = synth()
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    # 16 shuffle partitions right-size sf1's ~6M-row exchanges
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    names = dict(HEADLINE)
-    names.update({k: X_SURFACE[k] for k in SF1_X})
-    spark_t: dict[str, float] = {}
-    errors: dict[str, str] = {}
+@contextlib.contextmanager
+def _spark_cap(spark, cap_s: float):
+    """Cancel every Spark job this thread starts once ``cap_s`` passes."""
+    sc = spark.sparkContext
+    sc.setJobGroup("bench", "bench", interruptOnCancel=True)
+    timer = threading.Timer(cap_s, sc.cancelJobGroup, ("bench",))
+    timer.start()
     try:
-        for bench_name, qname in names.items():
-            try:
-                warm, _cold = time_query(spark, qname, sf_dir=sf1_dir)
-                spark_t[bench_name] = round(warm, 4)
-            except Exception as exc:  # one bad query ≠ no sf1 section
-                errors[bench_name] = f"{type(exc).__name__}: {exc}"[:200]
+        yield
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
-    con = duckdb.connect()
-    from pdf_etl_engine_spark.catalog import TABLES
-
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf1_dir}/{t}.parquet'"
-        )
-    duck_t: dict[str, float] = {}
-    for bench_name, qname in names.items():
-        if bench_name not in spark_t:
-            continue
-        sql = registry.ORACLES[qname]
-        con.execute(sql).fetchall()  # warm the buffer pool
-        samples = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            con.execute(sql).fetchall()
-            samples.append(time.perf_counter() - t0)
-        duck_t[bench_name] = round(statistics.median(samples), 4)
-    ratio = {
-        k: round(spark_t[k] / duck_t[k], 3)
-        for k in spark_t
-        if duck_t.get(k)
-    }
-    s_tot, d_tot = round(sum(spark_t.values()), 4), round(
-        sum(duck_t.values()), 4
-    )
-    out = {
-        "sf": 1.0,
-        "spark_sec": spark_t,
-        "duckdb_sec": duck_t,
-        "ratio": ratio,
-        "spark_total_sec": s_tot,
-        "duckdb_total_sec": d_tot,
-        "ratio_total": round(s_tot / d_tot, 3) if d_tot else None,
-    }
-    if errors:
-        out["errors"] = errors
-    return out
+        timer.cancel()
+        sc.setJobGroup("", "")
 
 
-def bench_sf1_heavy(spark) -> dict:
-    """Fresh-execution sf1 measurement of the six heavy X-surface
-    operators (see SF1_X_HEAVY). MEDIAN OF THREE timed runs per engine
-    per query (VERDICT r10 #1: a single timed run let one host spike
-    set the r10 gate number) after one untimed settle run per engine
-    (symmetric warm-up: Spark's fills the table cache + Janino code
-    cache, DuckDB's fills the buffer pool — ADVICE r9 #3); the Spark
-    DataFrame is rebuilt every time so nothing is reused across runs
-    except the parquet files themselves. A bounded load-average gate
-    runs before each query and the observed load1 is recorded. Both
-    engines run under a per-execution cancel timer (Spark:
-    setJobGroup + cancelJobGroup; DuckDB: con.interrupt — ADVICE
-    r9 #4, one FRESH timer per execution including the settle —
-    ADVICE r10 #4) so one pathological query cannot exceed the
-    section budget unboundedly."""
-    import duckdb
-    import threading
-
-    from pdf_etl_engine_spark import catalog
-    from pdf_etl_engine_spark.catalog import TABLES
-    from tools.synth_sf1 import synth
-
-    sf1_dir = synth()
-    prior_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    prior_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf1_dir}/{t}.parquet'"
-        )
-    spark_t: dict[str, float] = {}
-    duck_t: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    skipped: list[str] = []
-    timed_runs: dict[str, int] = {}
-    t_section = time.perf_counter()
-    # r16 (VERDICT r15 #1b): the heavy lane's own 1400 s ceiling now
-    # also bows to the global bench budget — at full fidelity this
-    # section alone ran ~13 min in r15 (6 queries x (settle + 3
-    # timed) x 2 engines), a driver-timeout-sized block. Per query:
-    # the settle run is measured, and the median-of-3 is kept only
-    # when ~7 more settle-sized executions fit the query's fair share
-    # of the remaining section budget; otherwise the query runs
-    # settle + ONE timed execution per engine and says so
-    # (timed_runs). The per-execution cancel cap keeps a ≥90 s floor
-    # — the first cut of this budget (same-day) floored at 30 s and
-    # CANCELLED 5 of 6 queries mid-settle, which poisons the worker
-    # pool for everything after; skipping trailing queries outright
-    # (recorded) is strictly better than erroring all of them.
-    sec_budget = min(
-        SF1_HEAVY_BUDGET_S,
-        max(
-            240.0,
-            0.42 * (_remaining() - ANCHORS_RESERVE_S - STREAMING_RESERVE_S),
-        ),
-    )
-
-    def spark_exec(qname: str, deadline_s: float) -> None:
-        """One full (rebuild + execute + materialize) Spark run,
-        cancelled via its job group if it outlives the deadline."""
-        sc = spark.sparkContext
-        group = f"sf1-heavy-{qname}"
-        sc.setJobGroup(group, group, interruptOnCancel=True)
-        timer = threading.Timer(
-            deadline_s, lambda: sc.cancelJobGroup(group)
-        )
-        timer.start()
-        try:
-            registry.QUERIES[qname](spark, sf1_dir).toPandas()
-        finally:
-            timer.cancel()
-            sc.setJobGroup("", "")
-
-    def duck_exec(sql: str, deadline_s: float) -> None:
-        """One DuckDB execution under its own fresh interrupt timer
-        (settle and timed runs no longer share one window)."""
-        timer = threading.Timer(deadline_s, con.interrupt)
-        timer.start()
-        try:
-            con.execute(sql).fetchall()
-        finally:
-            timer.cancel()
-
-    load_at: dict[str, float] = {}
+def _duck_run(con, sql: str, cap_s: float) -> float | None:
+    """Seconds for one DuckDB execution, or None if interrupted at the cap."""
+    timer = threading.Timer(cap_s, con.interrupt)
+    timer.start()
+    t0 = time.perf_counter()
     try:
-        n_total = len(SF1_X_HEAVY)
-        for qi, bench_name in enumerate(SF1_X_HEAVY):
-            remaining = sec_budget - (time.perf_counter() - t_section)
-            # a query that can't get a meaningful slice is SKIPPED
-            # (recorded), never started with a cap that will cancel it
-            if remaining <= 60.0:
-                skipped.append(bench_name)
-                continue
-            load_at[bench_name] = _wait_for_quiet(
-                max_wait_s=min(60.0, remaining / 10)
-            )
-            fair = remaining / (n_total - qi)
-            per_exec = min(240.0, max(90.0, fair / 2))
-            qname = SF1_HEAVY_SUBSTITUTE.get(
-                bench_name, X_SURFACE[bench_name]
-            )
-            try:
-                catalog._DF_CACHE.clear()
-                t0 = time.perf_counter()
-                spark_exec(qname, per_exec)  # settle (untimed)
-                t_settle = time.perf_counter() - t0
-                # keep median-of-3 only when ~7 more settle-sized
-                # executions (3 spark + settle + 3 duck) fit this
-                # query's fair share; else settle + 1 per engine
-                n_timed = 3 if 7.0 * t_settle <= fair else 1
-                timed_runs[bench_name] = n_timed
-                samples = []
-                for _ in range(n_timed):
-                    t0 = time.perf_counter()
-                    spark_exec(qname, per_exec)
-                    samples.append(time.perf_counter() - t0)
-                spark_t[bench_name] = round(statistics.median(samples), 3)
-            except Exception as exc:
-                errors[bench_name] = f"{type(exc).__name__}: {exc}"[:200]
-                continue
-            if sec_budget - (time.perf_counter() - t_section) <= 0:
-                errors[bench_name] = "oracle: skipped, section budget"
-                continue
-            sql = registry.ORACLES[qname]
-            try:
-                duck_exec(sql, per_exec)  # settle (untimed)
-                samples = []
-                for _ in range(n_timed):
-                    t0 = time.perf_counter()
-                    duck_exec(sql, per_exec)
-                    samples.append(time.perf_counter() - t0)
-                duck_t[bench_name] = round(statistics.median(samples), 3)
-            except Exception as exc:
-                errors[bench_name] = (
-                    f"oracle: {type(exc).__name__}: {exc}"[:200]
-                )
+        con.execute(sql).fetchall()
+        return time.perf_counter() - t0
+    except duckdb.InterruptException:
+        return None
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_sp)
-        spark.conf.set("spark.sql.adaptive.enabled", prior_aqe)
+        timer.cancel()
+
+
+def _spark_run(spark, counters, lane: Lane, query: str, cap_s: float) -> dict:
+    """One fresh-plan execution: build the DataFrame, pull it to pandas,
+    then read its profile (outside the timed window)."""
+    if not lane.table_cache:
         catalog._DF_CACHE.clear()
-    ratio = {
-        k: round(spark_t[k] / duck_t[k], 3)
-        for k in spark_t
-        if duck_t.get(k)
-    }
-    out = {
-        "sf": 1.0,
-        "methodology": (
-            "fresh_plan_settle_plus_median_of_3_timed_aqe_on"
-            "_degrading_to_1_timed_past_half_budget"
-        ),
-        "substituted": dict(SF1_HEAVY_SUBSTITUTE),
-        "budget_s": round(sec_budget, 1),
-        "timed_runs": timed_runs,
-        "spark_sec": spark_t,
-        "duckdb_sec": duck_t,
-        "ratio": ratio,
-        "load1_at_query": load_at,
-    }
-    if errors:
-        out["errors"] = errors
-    if skipped:
-        out["skipped_over_budget"] = skipped
-    return out
+    first_job = counters.next_job_id()
+    counters.mark_sql()
+    with _spark_cap(spark, cap_s):
+        t0 = time.perf_counter()
+        df = registry.QUERIES[query](spark, lane.sf_dir)
+        df.toPandas()
+        sec = time.perf_counter() - t0
+    prof = {**plan_phases(df), **counters.jobs_since(first_job)}
+    prof.update(counters.python_since_mark())
+    return {"sec": round(sec, 4), **{k: round(v, 1) for k, v in prof.items()}}
 
 
-def bench_sf1_anchors(spark) -> dict:
-    """SF1_ANCHORS: single settle + single timed run per engine under
-    a hard per-execution cap — these are once-per-round evidence
-    lines, not gate numbers (the gate set is SF1_X_HEAVY). A DuckDB
-    twin that outruns the cap is recorded as ">{cap}s interrupted",
-    not dropped: for x4k that marker IS the result (Spark's Arrow
-    block kernel finishes the exact 400M-pair k-NN in ~1 min where
-    the SQL form exceeds the cap). x14b has no oracle by nature (LSH
-    edge recall is approximate) — its comparator is x14c's exact-edge
-    recursive-CTE oracle under the same cap. x4j2's DuckDB twin is
-    the sf1_heavy x_embedding_near_dup number (x4j2 is that lane's
-    sf1 substitute) — not re-measured; likewise x4l
-    shares x4k's. METHODOLOGY ASYMMETRY, stated (ADVICE r11): only
-    Spark gets a settle run here — the DuckDB anchor numbers are COLD
-    (an untimed duck settle would double a section whose twins are
-    expected to hit the cap; every anchor twin so far IS interrupted,
-    where cold-vs-warm is moot). Recorded in the payload as
-    duckdb_methodology."""
-    import duckdb
-    import threading
-
-    from pdf_etl_engine_spark import catalog
-    from pdf_etl_engine_spark.catalog import TABLES
-    from tools.synth_sf1 import synth
-
-    sf1_dir = synth()
-    prior_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    prior_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    # r16 (VERDICT r15 #1b): the anchor lane spends against the global
-    # bench budget — everything left, minus the streaming reserve —
-    # in TWO PHASES: every anchor's Spark side first (the
-    # round-over-round evidence), then the DuckDB twins with whatever
-    # is left (median-of-3 while the twin phase is young, then ONE
-    # run, twin_runs recorded). Phase order also removes the r12-r15
-    # pollution mode where a cap-burning twin left load1 at 7-10 for
-    # the NEXT anchor's Spark measurement — no twin ever runs before
-    # a Spark timing anymore. Rows that can't start inside the budget
-    # are recorded in skipped_over_budget, never silently dropped.
-    sec_t0 = time.monotonic()
-    sec_budget = max(120.0, _remaining() - STREAMING_RESERVE_S)
-
-    def sec_remaining() -> float:
-        return sec_budget - (time.monotonic() - sec_t0)
-
-    out: dict[str, dict] = {
-        "_methodology": (
-            "phase A: spark settle + timed for every anchor; "
-            "phase B: duckdb twins = median of 3 fresh-connection "
-            f"executions under the {int(SF1_ANCHORS_CAP_S)}s cancel "
-            "cap while the twin phase is inside 60% of its budget, "
-            "then 1 (twin_runs recorded; VERDICT r15 #1b). Twins "
-            "interrupted every round r13-r15 carry a static "
-            "permanent-record marker with twin_runs=0 instead of "
-            "re-burning the cap."
-        ),
-        "_budget_s": round(sec_budget, 1),
-    }
-
-    def duck_budgeted(
-        sql: str, twin_budget0: float
-    ) -> tuple[float | None, list[float], int]:
-        """Fresh-connection twin executions: 3 while the twin phase is
-        inside 60% of its starting budget, else 1; None on a first-run
-        interrupt (no repeat cap spend on twins that exceed the cap)."""
-        n_runs = 3 if sec_remaining() > 0.6 * twin_budget0 else 1
+def _twin(lane: Lane, query: str, n: int, cap_s: float, cpus: int) -> dict:
+    """``n`` timed DuckDB runs of the query's oracle on a fresh connection
+    (so no row inherits another's memory), after one settle run when
+    n > 1: a row down to one run is long enough that warm buffers
+    change little, and the settle would cost a whole run."""
+    settle = int(n > 1)
+    con = duckdb.connect()
+    try:
+        # Spark's cores, and a quarter of memory so that the two engines
+        # together stay inside the host
+        mem_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+        con.execute(f"SET threads = {cpus}")
+        con.execute(f"SET memory_limit = '{mem_gb / 4:.1f}GB'")
+        for tbl in catalog.TABLES:
+            con.execute(f"CREATE VIEW {tbl} AS SELECT * FROM '{lane.sf_dir}/{tbl}.parquet'")
         times: list[float] = []
-        for _ in range(n_runs):
-            c = duckdb.connect()
-            for t in TABLES:
-                c.execute(
-                    f"CREATE VIEW {t} AS SELECT * FROM "
-                    f"'{sf1_dir}/{t}.parquet'"
-                )
-            cap = min(SF1_ANCHORS_CAP_S, max(30.0, sec_remaining()))
-            timer = threading.Timer(cap, c.interrupt)
-            timer.start()
-            t0 = time.perf_counter()
-            try:
-                c.execute(sql).fetchall()
-                times.append(time.perf_counter() - t0)
-            except Exception:
-                return None, times, n_runs
-            finally:
-                timer.cancel()
-                c.close()
-        return sorted(times)[len(times) // 2], times, n_runs
-
-    def spark_exec(qname: str) -> None:
-        sc = spark.sparkContext
-        group = f"sf1-anchor-{qname}"
-        sc.setJobGroup(group, group, interruptOnCancel=True)
-        # floor 60 s: a cap that cancels mid-execution poisons the
-        # worker pool for every row after it — rows that can't get a
-        # real slice are skipped before this is ever called
-        cap = min(SF1_ANCHORS_CAP_S, max(60.0, sec_remaining() / 2))
-        timer = threading.Timer(cap, lambda: sc.cancelJobGroup(group))
-        timer.start()
-        try:
-            registry.QUERIES[qname](spark, sf1_dir).toPandas()
-        finally:
-            timer.cancel()
-            sc.setJobGroup("", "")
-
-    skipped: list[str] = []
-    twin_pending: list[tuple[str, str, dict]] = []
-    try:
-        # ---- phase A: every anchor's Spark side ----
-        for bench_name, qname, twin_mode in SF1_ANCHORS:
-            if sec_remaining() <= 60.0:
-                skipped.append(bench_name)
-                continue
-            entry: dict = {"query": qname}
-            entry["load1"] = _wait_for_quiet(max_wait_s=30.0)
-            try:
-                catalog._DF_CACHE.clear()
-                spark_exec(qname)  # settle
-                t0 = time.perf_counter()
-                spark_exec(qname)  # timed
-                entry["spark_sec"] = round(time.perf_counter() - t0, 3)
-            except Exception as exc:
-                entry["error"] = f"{type(exc).__name__}: {exc}"[:200]
-                out[bench_name] = entry
-                continue
-            if qname == "x47e_ivfpq_persisted":
-                entry["note"] = (
-                    "spark timed run probes the artifact built in "
-                    "the settle run (build-once serving path; the "
-                    "in-flight build+probe cost is x_ivfpq_topk); "
-                    "twin = the full IVF-PQ oracle recomputed"
-                )
-            if twin_mode == _TWIN_STATIC:
-                # x14b's comparator is x14c's exact-edge recursive-CTE
-                # oracle (x14b's LSH edge set has no SQL oracle by
-                # nature, VERDICT r11 #4); x4n/x55b/x4k carry their own
-                # oracles. All four exceeded the cap in every round
-                # r13-r15 — the permanent-record marker IS the result.
-                entry["duckdb_sec"] = _TWIN_STATIC_MARKER
-                entry["twin_runs"] = 0
-                entry["ratio"] = (
-                    f"<{round(entry['spark_sec'] / SF1_ANCHORS_CAP_S, 3)}"
-                )
-            else:
-                twin_pending.append((bench_name, qname, entry))
-            out[bench_name] = entry
-        # ---- phase B: DuckDB twins, with what's left ----
-        twin_budget0 = max(sec_remaining(), 1.0)
-        for bench_name, qname, entry in twin_pending:
-            if sec_remaining() <= 30.0:
-                entry["duckdb_sec"] = None
-                entry["note"] = (
-                    entry.get("note", "")
-                    + " twin skipped: section budget exhausted"
-                ).strip()
-                entry["twin_runs"] = 0
-                continue
-            med, runs, n_runs = duck_budgeted(
-                registry.ORACLES[qname], twin_budget0
-            )
-            entry["duckdb_runs"] = [round(x, 3) for x in runs]
-            entry["twin_runs"] = n_runs
-            if med is not None:
-                entry["duckdb_sec"] = round(med, 3)
-                entry["ratio"] = round(
-                    entry["spark_sec"] / entry["duckdb_sec"], 3
-                )
-            else:
-                entry["duckdb_sec"] = (
-                    f">{int(SF1_ANCHORS_CAP_S)}s interrupted"
-                )
-                entry["ratio"] = (
-                    f"<{round(entry['spark_sec'] / SF1_ANCHORS_CAP_S, 3)}"
-                )
+        for _ in range(settle + n):
+            t = _duck_run(con, registry.ORACLES[query], cap_s)
+            if t is None:
+                return {"duckdb_sec": f">{int(cap_s)}s interrupted",
+                        "twin_runs": len(times[settle:])}
+            times.append(t)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_sp)
-        spark.conf.set("spark.sql.adaptive.enabled", prior_aqe)
+        con.close()
+    return {"duckdb_sec": round(statistics.median(times[settle:]), 4), "twin_runs": n}
+
+
+def _run_row(spark, counters, lane: Lane, query: str, deadline: float,
+            rows_left: int) -> dict:
+    """Settle, then ``lane.runs`` timed runs, then the twin. When the
+    first timed run shows the rest would not fit the row's share of
+    what is left of the lane budget, the row keeps that one run."""
+
+    def cap() -> float:
+        return min(CAP_S, max(MIN_CAP_S, deadline - time.monotonic()))
+
+    entry: dict = {"query": query}
+    entry["load1"] = _wait_for_quiet(min(30.0, (deadline - time.monotonic()) / 10))
+    twin = lane.twin_of(query)
+    try:
+        settle = _spark_run(spark, counters, lane, query, cap())["sec"]
+        profiles = [_spark_run(spark, counters, lane, query, cap())]
+        rest = lane.runs - 1 + (lane.runs + 1 if twin == "run" else 0)
+        if rest * profiles[0]["sec"] <= (deadline - time.monotonic()) / rows_left:
+            for _ in range(lane.runs - 1):
+                profiles.append(_spark_run(spark, counters, lane, query, cap()))
+    except Exception as exc:  # one bad row ≠ no lane
+        entry["error"] = f"{type(exc).__name__}: {exc}"[:200]
+        return entry
+    spark_sec = statistics.median(p["sec"] for p in profiles)
+    n = len(profiles)
+    entry.update(settle_sec=settle, spark_sec=spark_sec, timed_runs=n, profiles=profiles)
+    twin_cap = CAP_S if twin == "static" else cap()
+    if twin == "static":
+        entry.update(duckdb_sec=f">{int(CAP_S)}s interrupted (static)", twin_runs=0)
+    elif twin == "run" and deadline - time.monotonic() <= 0:
+        entry.update(duckdb_sec=None, twin_runs=0, note="twin skipped: lane budget")
+    elif twin == "run":
+        try:
+            cpus = spark.sparkContext.defaultParallelism
+            entry.update(_twin(lane, query, n, twin_cap, cpus))
+        except Exception as exc:
+            entry["twin_error"] = f"{type(exc).__name__}: {exc}"[:200]
+    duck = entry.get("duckdb_sec")
+    if isinstance(duck, float) and duck > 0:
+        entry["ratio"] = round(spark_sec / duck, 3)
+    elif isinstance(duck, str):
+        entry["ratio"] = f"<{round(spark_sec / twin_cap, 3)}"
+    return entry
+
+
+def run_lane(spark, counters, lane: Lane, budget_s: float) -> dict:
+    """Every row of ``lane`` under the lane's conf, inside ``budget_s``;
+    a row that cannot start before the deadline is listed in
+    ``skipped_over_budget``."""
+    deadline = time.monotonic() + budget_s
+    confs = {
+        "spark.sql.shuffle.partitions": str(lane.shuffle_partitions),
+        "spark.sql.adaptive.enabled": str(lane.aqe).lower(),
+    }
+    prior = {k: spark.conf.get(k) for k in confs}
+    prior_cache = catalog.CACHE_MAX_BYTES
+    out = {k: v for k, v in asdict(lane).items() if k != "rows"}
+    out.update(budget_s=round(budget_s, 1), rows={}, skipped_over_budget=[])
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    if not lane.table_cache:
+        catalog.CACHE_MAX_BYTES = 0
+        spark.catalog.clearCache()
+    try:
+        for i, (key, query) in enumerate(lane.rows):
+            if deadline - time.monotonic() <= 0:
+                out["skipped_over_budget"].append(key)
+                continue
+            rows_left = len(lane.rows) - i
+            out["rows"][key] = _run_row(spark, counters, lane, query, deadline, rows_left)
+    finally:
+        for k, v in prior.items():
+            spark.conf.set(k, v)
+        catalog.CACHE_MAX_BYTES = prior_cache
         catalog._DF_CACHE.clear()
-    if skipped:
-        out["_skipped_over_budget"] = skipped
+        spark.catalog.clearCache()
     return out
+
+
+def lane_total(section: dict | None) -> float | None:
+    if not section or "rows" not in section:
+        return None
+    return round(sum(e.get("spark_sec", 0.0) for e in section["rows"].values()), 4)
+
+
+def fresh_job_floor(spark) -> float:
+    """Median time of ``spark.range(1).count()`` re-planned every run:
+    the least a fresh-plan query can cost (analysis, optimization and
+    job submission), the floor under every lane's numbers."""
+    samples = []
+    for _ in range(3 + max(RUNS, 5)):  # the first 3 settle
+        t0 = time.perf_counter()
+        spark.range(1).count()
+        samples.append(time.perf_counter() - t0)
+    return statistics.median(samples[3:])
+
+
+GATE_KEYS = ("metric", "value", "unit", "x_surface_total_sec", "scan_path_total_sec",
+             "sf", "load_avg_start", "load_compromised", "wall_sec")
+
+
+def gate_line(payload: dict) -> str:
+    """The last stdout line: small enough for any tail window to keep
+    whole; the detail stays in BENCH_LAST.json."""
+    gate = {k: payload[k] for k in GATE_KEYS}
+    rows = (payload["queries"] or {}).get("rows", {})
+    gate["queries"] = {k: e.get("spark_sec") for k, e in rows.items()}
+    streaming = payload["streaming"] or {}
+    gate["streaming_docs_per_sec"] = streaming.get("docs_per_sec")
+    gate["stream_over_batch"] = streaming.get("stream_over_batch")
+    gate["full"] = "BENCH_LAST.json"
+    line = json.dumps(gate)
+    assert len(line) < 1024, f"gate line {len(line)} bytes >= 1 KB"
+    return line
 
 
 def main() -> None:
-    # AQE stays ON in the engine's default profile (runtime coalescing
-    # / skew splitting are what save you at 100 TB), but it costs a
-    # per-stage materialization round-trip that dominates sub-second
-    # queries over single-row-group local files — measured +0.45s
-    # across the 7 headline queries. The bench profile disables it;
-    # set SPARK_GRAFT_BENCH_AQE=1 to re-enable.
-    extra = (
-        {}
-        if os.environ.get("SPARK_GRAFT_BENCH_AQE")
-        else {"spark.sql.adaptive.enabled": "false"}
-    )
-    # 4 shuffle partitions right-size the sf0.1 exchanges (~600 k rows;
-    # 32 is the cluster-profile pre-AQE bound, wasteful at this volume —
-    # per-task dispatch dominates). The engine default is unchanged.
-    spark = get_spark(
-        app_name="pdf-etl-engine-spark-bench",
-        shuffle_partitions=4,
-        extra_conf=extra,
-    )
+    spark = get_spark(app_name="pdf-etl-engine-spark-bench", shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
-    global LOAD_START
-    # r15 measurement fix (VERDICT r14 #2): BENCH_r14's gate line was
-    # captured at load_avg_start 9.52 and printed a fake 1.9x headline
-    # regression vs the same-code idle run (488.8 vs 255.7 ms). Before
-    # the first timed query, wait (bounded) for load1 < 2; if the box
-    # never quiets down the payload carries "load_compromised": true so
-    # round-over-round comparisons stop requiring forensics. The timing
-    # methodology itself (settle + timed, same queries, same scale) is
-    # unchanged.
+    # a spike before the first timed query would set the headline, so
+    # wait (bounded) for an idle host and flag the run if it never was
     _wait_for_quiet(max_wait_s=300.0, load1_max=2.0)
-    LOAD_START = round(os.getloadavg()[0], 2)
-    timings: dict[str, float] = {}
-    cold: dict[str, float] = {}
-    for bench_name, qname in HEADLINE.items():
-        warm_t, cold_t = time_query(spark, qname)
-        timings[bench_name] = round(warm_t, 4)
-        cold[bench_name] = round(cold_t, 4)
-    total = round(sum(timings.values()), 4)
-    x_timings: dict[str, float] = {}
-    for bench_name, qname in X_SURFACE.items():
-        warm_t, cold_t = time_query(spark, qname)
-        x_timings[bench_name] = round(warm_t, 4)
-        cold[bench_name] = round(cold_t, 4)
-    x_total = round(sum(x_timings.values()), 4)
-    # Scan-path pass: same queries, table cache off, fresh plan per
-    # run. Runs after the warm pass so warm numbers are unperturbed.
-    from pdf_etl_engine_spark import catalog
-
-    floor_reused, floor_fresh = time_job_floor(spark)
-    scan_timings: dict[str, float] = {}
-    prior_gate = catalog.CACHE_MAX_BYTES
-    catalog.CACHE_MAX_BYTES = 0
-    catalog._DF_CACHE.clear()
-    spark.catalog.clearCache()
-    try:
-        for bench_name, qname in HEADLINE.items():
-            scan_timings[bench_name] = round(
-                time_query_scan_path(spark, qname), 4
-            )
-    finally:
-        catalog.CACHE_MAX_BYTES = prior_gate
-        catalog._DF_CACHE.clear()
-    scan_total = round(sum(scan_timings.values()), 4)
-    # sf1 scale point: on by default; SPARK_GRAFT_BENCH_SF1=0 skips
-    # (e.g. when only iterating on the sf0.1 numbers)
-    sf1_section = None
-    if os.environ.get("SPARK_GRAFT_BENCH_SF1", "1") != "0":
+    load_start = round(os.getloadavg()[0], 2)
+    counters = SparkCounters(spark)
+    floor = fresh_job_floor(spark)
+    sections: dict = {lane.name: None for lane in LANES}
+    lanes = [lane for lane in LANES if enabled(lane.name)]
+    for i, lane in enumerate(lanes):
         try:
-            sf1_section = bench_sf1(spark)
-        except Exception as exc:  # sf1 is additive — never sink the gate
-            sf1_section = {"error": f"{type(exc).__name__}: {exc}"}
-    # heavy X-operator sf1 crossover (VERDICT r8 #1 / r9 #1): on by
-    # default so the ratios actually land in BENCH_r{N};
-    # SPARK_GRAFT_BENCH_SF1_HEAVY=0 skips when iterating locally
-    sf1_heavy_section = None
-    if os.environ.get("SPARK_GRAFT_BENCH_SF1_HEAVY", "1") != "0":
-        try:
-            sf1_heavy_section = bench_sf1_heavy(spark)
-        except Exception as exc:
-            sf1_heavy_section = {"error": f"{type(exc).__name__}: {exc}"}
-    # once-per-round scale anchors (VERDICT r10 #3):
-    # SPARK_GRAFT_BENCH_SF1_ANCHORS=0 skips when iterating locally
-    sf1_anchors_section = None
-    if os.environ.get("SPARK_GRAFT_BENCH_SF1_ANCHORS", "1") != "0":
-        try:
-            sf1_anchors_section = bench_sf1_anchors(spark)
-        except Exception as exc:
-            sf1_anchors_section = {"error": f"{type(exc).__name__}: {exc}"}
-    # streaming ingest throughput (VERDICT r8 #6 / r9 #2): the 500-file
-    # exactly-once backlog drain, wall-clocked, with the lossy-drain
-    # assertion intact; SPARK_GRAFT_BENCH_STREAMING=0 skips
-    streaming_section = None
-    if os.environ.get("SPARK_GRAFT_BENCH_STREAMING", "1") != "0":
+            if lane.sf_dir == SF1_DIR:
+                synth_sf1.synth()
+            budget = lane_budget(lane, lanes[i + 1:])
+            sections[lane.name] = run_lane(spark, counters, lane, budget)
+        except Exception as exc:  # an sf1 failure must not sink the gate
+            sections[lane.name] = {"error": f"{type(exc).__name__}: {exc}"[:200]}
+    streaming = None
+    if enabled("streaming"):
         try:
             from tools.streaming_bench import streaming_docs_per_sec
 
-            streaming_section = streaming_docs_per_sec(spark, 500)
+            streaming = streaming_docs_per_sec(spark, 500)
         except Exception as exc:
-            streaming_section = {"error": f"{type(exc).__name__}: {exc}"}
+            streaming = {"error": f"{type(exc).__name__}: {exc}"}
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     try:
         sf_val: float | str = float(sf)
@@ -865,84 +413,36 @@ def main() -> None:
         sf_val = sf
     payload = {
         "metric": "headline_queries_total_sec",
-        "value": total,
+        "value": lane_total(sections["queries"]),
         "unit": "sec",
-        "queries": timings,
-        "x_queries": x_timings,
-        "x_surface_total_sec": x_total,
-        "cold_sec": cold,
-        "scan_path_queries": scan_timings,
-        "scan_path_total_sec": scan_total,
-        "empty_job_floor_sec": round(floor_reused, 4),
-        "fresh_plan_job_floor_sec": round(floor_fresh, 4),
+        "x_surface_total_sec": lane_total(sections["x_queries"]),
+        "scan_path_total_sec": lane_total(sections["scan_path_queries"]),
+        # first run of each query in the process: plan, codegen, cache fill
+        "cold_sec": {
+            k: e["settle_sec"]
+            for name in ("queries", "x_queries")
+            for k, e in (sections[name] or {}).get("rows", {}).items()
+            if "settle_sec" in e
+        },
+        "fresh_plan_job_floor_sec": round(floor, 4),
         "sf": sf_val,
-        "sf1": sf1_section,
-        "sf1_heavy": sf1_heavy_section,
-        "sf1_anchors": sf1_anchors_section,
-        "streaming": streaming_section,
-        # measurement-noise context (VERDICT r6 #7: the r5→r6
-        # +18% headline drift was uniform across unchanged
-        # queries — host noise, not a query regression; r7
-        # re-measured identical code twice on an idle box and
-        # saw the empty-job floor itself swing 30→85 ms).
-        # load1 is sampled before the first timed query.
-        "load_avg_start": LOAD_START,
+        **sections,
+        "streaming": streaming,
+        "cpus": spark.sparkContext.defaultParallelism,
+        "load_avg_start": load_start,
         "load_avg_end": round(os.getloadavg()[0], 2),
-        # r15 (VERDICT r14 #2): explicit flag instead of forensics
-        "load_compromised": LOAD_START > 2.0,
-        # r16 (VERDICT r15 #1b): global wall accounting on the record
+        "load_compromised": load_start > 2.0,
         "budget_s": BUDGET_S,
         "wall_sec": round(time.monotonic() - BENCH_T0, 1),
     }
-    # The r7 gate metric was LOST because the one big JSON line sat
-    # behind megabytes of Spark progress output and the driver's tail
-    # capture truncated it (VERDICT r7 defect #2). Three-way defense:
-    # the full payload persists to BENCH_LAST.json in-repo, is printed
-    # in full, and the VERY LAST stdout line is a compact gate record
-    # small enough that any tail window keeps it intact.
-    #
-    # r16 (VERDICT r15 #1a): the r15 gate line inlined the 17-row
-    # sf1_anchors table + the sf1_heavy ratio dict and measured
-    # 2.5-5 KB — LARGER than the driver's ~2 KB tail window, so the
-    # driver parsed no bench since r14 even when the run finished.
-    # The gate line is now hard-bounded: metric/value/unit, the seven
-    # per-headline-query seconds, sf, load + budget flags, streaming
-    # scalars, and the pointer to the full payload — measured ~550
-    # bytes, asserted < 1024 so a future addition can't silently
-    # regress the contract again. Anchor/heavy detail lives ONLY in
-    # BENCH_LAST.json (committed).
+    # the full payload goes to a file as well as stdout: a caller that keeps
+    # only the tail of stdout can cut one long line behind Spark's progress
     here = os.path.dirname(os.path.abspath(__file__))
     with open(os.path.join(here, "BENCH_LAST.json"), "w") as fh:
         json.dump(payload, fh, indent=1)
         fh.write("\n")
     print(json.dumps(payload))
-    sys.stdout.flush()
-    gate_line = json.dumps(
-        {
-            "metric": "headline_queries_total_sec",
-            "value": total,
-            "unit": "sec",
-            "queries": timings,
-            "x_surface_total_sec": x_total,
-            "scan_path_total_sec": scan_total,
-            "streaming_docs_per_sec": (
-                (streaming_section or {}).get("docs_per_sec")
-            ),
-            "stream_over_batch": (
-                (streaming_section or {}).get("stream_over_batch")
-            ),
-            "sf": sf_val,
-            "load_avg_start": LOAD_START,
-            "load_compromised": LOAD_START > 2.0,
-            "wall_sec": payload["wall_sec"],
-            "full": "BENCH_LAST.json",
-        }
-    )
-    assert len(gate_line) < 1024, (
-        f"gate line {len(gate_line)} bytes >= 1 KB — would overflow "
-        "the driver's tail window (VERDICT r15 #1a)"
-    )
-    print(gate_line)
+    print(gate_line(payload))
     sys.stdout.flush()
 
 

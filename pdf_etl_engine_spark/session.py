@@ -26,6 +26,14 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 CODEGEN_CACHE_MAX_ENTRIES = "2000"
 
 
+def default_driver_memory() -> str:
+    """Half of physical memory, capped at 16g: the heap must leave room
+    for the Python workers beside the JVM, or unified memory plans for
+    more than the host has."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16 * 1024, phys // 2**21)}m"
+
+
 def get_spark(
     app_name: str = "pdf-etl-engine-spark",
     shuffle_partitions: int | None = None,
@@ -55,15 +63,14 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.driver.host", "127.0.0.1")
-        # Heap sizing (r10): in local mode the driver JVM IS the
-        # executor, and PySpark's 1g default starves 32 task threads —
-        # the sf1 parity sweep OOMed building a ~250 MB broadcast
-        # hash relation. 16g mirrors a sane per-executor size for the
-        # cluster profile (only effective for the process's FIRST
-        # session; a live JVM keeps its -Xmx).
+        # Heap sizing: in local mode the driver JVM IS the executor,
+        # and PySpark's 1g default starves the task threads (the sf1
+        # parity sweep OOMed building a ~250 MB broadcast hash
+        # relation). Only effective for the process's FIRST session; a
+        # live JVM keeps its -Xmx.
         .config(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEMORY", "16g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEMORY", default_driver_memory()),
         )
         .config("spark.driver.maxResultSize", "4g")
         # Compiled whole-stage code cache: Spark's default 100 entries

@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import os
+
+import pytest
+
 from pdf_etl_engine_spark import session
 
 
@@ -30,3 +34,17 @@ def test_codegen_cache_size_reaches_the_jvm(spark):
     gen = getattr(codegen.expressions.codegen, "CodeGenerator$")
     cache = _field(_field(getattr(gen, "MODULE$").cache(), "cache"), "localCache")
     assert _field(cache, "maxWeight") == want
+
+
+@pytest.mark.skipif(
+    "SPARK_GRAFT_DRIVER_MEMORY" in os.environ, reason="deployment heap override set"
+)
+def test_driver_heap_fits_physical_memory(spark):
+    """In local mode the driver JVM runs every task, with the Python
+    workers beside it; a heap larger than the host lets Spark's unified
+    memory plan for memory that is not there."""
+    assert spark.conf.get("spark.driver.memory") == session.default_driver_memory()
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    heap_max = mf.getMemoryMXBean().getHeapMemoryUsage().getMax()
+    assert 0 < heap_max <= phys

@@ -10,13 +10,17 @@ on (pushdown, broadcast, TakeOrderedAndProject, partial aggregation,
 no Python in relational paths) are reviewable without running Spark.
 tests/test_plans.py pins the same properties mechanically; this file
 is the human-readable audit trail.
+The session runs at local[16] on any host (cached tables repartition
+by core count) and scratch paths print with fixed placeholders.
 """
 
 from __future__ import annotations
 
 import io
 import os
+import re
 import sys
+import tempfile
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -190,11 +194,16 @@ AUDITED = {
 }
 
 
+# scratch.scratch_dir paths: <tempdir>/<kind>/<source key>_<mtime>_<size>/
+_SCRATCH = re.escape(tempfile.gettempdir()) + r"/(spark_graft_[\w.-]+/[^/\]\s]+?)_\d+_\d+/"
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
     )
     registry.load_all()
+    os.environ["SPARK_GRAFT_CPUS"] = "16"
     spark = get_spark(app_name="explain-audit", shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
     out = [
@@ -216,7 +225,7 @@ def main() -> None:
             f"**Audit:** {note}",
             "",
             "```",
-            buf.getvalue().rstrip(),
+            re.sub(_SCRATCH, r"$TMPDIR/\1_<mtime>_<size>/", buf.getvalue().rstrip()),
             "```",
             "",
         ]

@@ -1,11 +1,8 @@
-"""Streaming ingest throughput as a bench line (VERDICT r8 #6).
-
-The 1,000-file backlog test (tests/test_streaming_backlog.py) proves
-the exactly-once pipeline DRAINS; this harness measures how fast, so
-streaming regressions become visible round-over-round in BENCH_r{N}
-instead of only when someone reruns the slow test. Same path as the
-test — stream_ingest (capped micro-batches) → fact table + archive —
-on a fresh temp workspace, N synthetic docs, wall-clocked end to end.
+"""Streaming ingest throughput as a bench line: the exactly-once drain
+of tests/test_streaming_backlog.py (stream_ingest in capped
+micro-batches → fact table + archive) on a fresh temp workspace, N
+synthetic docs, wall-clocked end to end against its one-shot batch twin.
+Per-phase time of the drain is in perfbench's traced ingest_serve run.
 
 Standalone:  python tools/streaming_bench.py [n_files]
 From bench:  streaming_docs_per_sec(spark) -> {"docs": N, ...}
@@ -34,12 +31,9 @@ def streaming_docs_per_sec(spark, n_files: int = 500) -> dict:
     The workspace is a throwaway temp dir; the count assertion keeps a
     silently-lossy drain from ever reporting a (great-looking) rate.
 
-    An untimed 50-file SETTLE drain runs first in its own workspace
-    (r11): every other bench section warms its path before timing
-    (Janino/codegen caches, the Python worker pool, the streaming
-    sink's first-commit setup) — without it the timed drain's first
-    micro-batch pays one-off JVM warmup and the rate is a cold-start
-    number, not a throughput (measured 2.5x noise).
+    An untimed 50-file settle drain runs first in its own workspace
+    (codegen caches, the Python worker pool, the sink's first-commit
+    setup); without it the rate is a cold-start number (2.5x noise).
     """
     from pdf_etl_engine_spark import pipeline
     from pdf_etl_engine_spark.sources import writers
@@ -87,12 +81,9 @@ def streaming_docs_per_sec(spark, n_files: int = 500) -> dict:
         out = {"wall_sec": wall}
         if not twin:
             return out
-        # batch-equivalent twin (VERDICT r10 #6): the SAME files
-        # through the one-shot ingest_batch path into a fresh fact
-        # table — the engine's own batch floor, so the streaming rate
-        # is judged against a measured comparator instead of standing
-        # bare (DuckDB has no streaming ingest to twin against). Own
-        # tree: the drain ARCHIVES its incoming files.
+        # batch twin: the same files through one-shot ingest_batch into
+        # a fresh fact table (DuckDB has no streaming ingest to twin
+        # against); own tree, since the drain archives its inputs
         facts_b = os.path.join(workspace, "facts_batch")
         t0 = time.perf_counter()
         res = pipeline.ingest_batch(
