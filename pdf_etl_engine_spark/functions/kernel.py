@@ -124,19 +124,34 @@ def clean_numeric(c: Column) -> Column:
 
 def parens_negative(c: Column) -> Column:
     """Accounting negatives: ``(100)`` → ``-100`` (main.py:233-235).
-    Applied *after* the numeric strip, like the reference."""
+    Applied *after* the numeric strip, like the reference. String
+    tests, not a regex: ``c`` is the strip's output, so a regex here
+    would be a second pass over every row. A string that starts with
+    ``(`` and ends with ``)`` has at least two characters, so the
+    substring needs no length guard."""
+    wrapped = c.startswith("(") & c.endswith(")")
     return F.when(
-        c.rlike(r"^\(.*\)$"),
-        F.concat(F.lit("-"), F.regexp_extract(c, r"^\((.*)\)$", 1)),
+        wrapped, F.concat(F.lit("-"), c.substr(F.lit(2), F.length(c) - 2))
     ).otherwise(c)
 
 
 def to_number(c: Column) -> Column:
-    """Full numeric coercion: sentinel → NULL; strip → parens →
-    float-parse; unparseable → NULL, never error (main.py:229-239)."""
-    cleaned = parens_negative(clean_numeric(c))
-    return F.when(is_sentinel(c), F.lit(None).cast("double")).otherwise(
-        cleaned.try_cast("double")
+    """Full numeric coercion: strip → parens → float-parse;
+    unparseable → NULL, never error (main.py:229-239). Sentinels need
+    no branch of their own: none strips to a number, so they parse to
+    NULL. The stripped string opens the first condition twice, so
+    codegen computes it once per row; the expression is kept small
+    because the ingest repeats it in a per-(tenant, folder) CASE."""
+    return parens_negative(clean_numeric(c)).try_cast("double")
+
+
+def cleaned_to_number(cleaned: Column) -> Column:
+    """:func:`to_number` of an already-stripped column, for a plan that
+    strips in a projection of its own. Sentinels (which strip to
+    themselves) take a NULL branch before the parse: a failed
+    ``try_cast`` costs a caught NumberFormatException per row."""
+    return F.when(cleaned.isin(*SENTINELS), F.lit(None)).otherwise(
+        parens_negative(cleaned).try_cast("double")
     )
 
 

@@ -1,14 +1,20 @@
-"""Order-stable floating aggregates.
+"""Order-stable floating aggregates: exact fixed-point money sums.
 
 Double addition is not associative, so `sum(double)` depends on
 partition/merge order — across two engines (or two cluster runs) the
-low bits differ and a `round(x, 4)` boundary can flip. For every
-graded aggregate we cast to DECIMAL(27,9) first: per-value rounding to
-9 decimals is deterministic, decimal summation is exact (order-free),
-and the final cast back to double is deterministic. Both engines then
-produce bit-identical aggregates regardless of plan shape — which also
-makes results reproducible run-to-run at 100 TB, where partial-agg
-merge order is never stable.
+low bits differ and a `round(x, 4)` boundary can flip. Money columns
+sit on a decimal grid (2 decimals, products at 4), so the graded
+aggregates scale each value to an integer per row and sum it as a
+LONG: exact, order-free, and whole-stage-codegen fast (no decimal
+accumulator). Both engines then produce bit-identical aggregates
+regardless of plan shape — which also makes results reproducible
+run-to-run at 100 TB, where partial-agg merge order is never stable.
+
+The helpers build Spark SQL text and return one ``F.expr`` Column, so
+an aggregate costs one py4j call to build instead of one per Column
+node. The per-row scale (:func:`sql_to_fixed`) is two truncating
+casts: no per-row ``round()``, which on a double goes through
+``java.math.BigDecimal``.
 """
 
 from __future__ import annotations
@@ -16,50 +22,59 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-_DEC = "decimal(27,9)"
+
+def sql_to_fixed(e: str, scale: int) -> str:
+    """``e * scale`` rounded to BIGINT, half away from zero on the
+    binary value: exactly what Spark's ``round(e * scale)`` returns (it
+    rounds the shortest decimal repr HALF_UP, and at 0 decimals a repr
+    ending in .5 is an exact binary tie), at the cost of two truncating
+    casts.
+
+    With ``x = e * scale``, ``trunc(2x) - trunc(x)`` is ``trunc(x)``
+    plus ±1 exactly when the fraction of ``x`` is at least one half:
+    ``2x = 2·trunc(x) + 2·frac`` with both terms of one sign. Doubling
+    is exact in binary floating point, and ``e * 2·scale`` rounds to
+    exactly ``2·(e * scale)``, so the tie test sees the true fraction.
+    ``floor(x + 0.5)`` would not do: the sum rounds, which gets
+    0.49999999999999994 and odd values ≥ 2⁵² wrong. Under ANSI (the
+    default) NaN and ``|x| ≥ 2⁶²`` raise CAST_OVERFLOW, as ``round``
+    then ``cast`` does for NaN and ``|x| ≥ 2⁶³``."""
+    return f"(CAST(({e}) * {2 * scale} AS BIGINT) - CAST(({e}) * {scale} AS BIGINT))"
 
 
-def stable_sum(c: Column) -> Column:
-    """Arbitrary-precision path: decimal accumulate. Use when value
-    decimals are unknown. ~2.4× slower than fixed_sum."""
-    return F.sum(c.cast(_DEC)).cast("double")
+def to_fixed(e: str, scale: int) -> Column:
+    """Per-row Column of :func:`sql_to_fixed` (integer cents at 100)."""
+    return F.expr(sql_to_fixed(e, scale))
 
 
-def stable_avg(c: Column) -> Column:
-    """NULL-aware mean: exact decimal sum / non-null count, in double."""
-    return stable_sum(c) / F.count(c)
+def fixed_sum(e: str, scale: int, digits: int) -> Column:
+    """``sum(e)`` over grid values, rounded to ``digits`` decimals.
+
+    Each value scales to a long (:func:`sql_to_fixed`) and the longs
+    sum exactly. Rounding the exact sum to ``digits`` is integer
+    arithmetic, half away from zero, when the scale is finer than
+    ``digits`` (a scale-10⁴ sum to cents); otherwise the sum already
+    sits on the ``digits`` grid and one division returns it. No double
+    tie is left for two engines to break differently. Overflow
+    headroom: 2^63 / (1e9-cent rows) ≈ 9e9 rows per group at scale
+    10⁴."""
+    s = f"sum({sql_to_fixed(e, scale)})"
+    unit = 10**digits
+    if scale <= unit:
+        return F.expr(f"CAST({s} AS DOUBLE) / {scale}")
+    step = scale // unit
+    # DIV truncates toward zero, so adding half a step away from zero
+    # first rounds half away from zero
+    half = f"CASE WHEN {s} < 0 THEN {-(step // 2)} ELSE {step // 2} END"
+    return F.expr(f"CAST(({s} + {half}) DIV {step} AS DOUBLE) / {unit}")
 
 
-def fixed_sum(c: Column, scale: int) -> Column:
-    """Fixed-point path: for grid-aligned values (money at 2 decimals,
-    products at 4), scale to integers per row and sum as LONG — exact,
-    order-free, and whole-stage-codegen fast (no decimal accumulator).
-    Per-row round() is engine-agreed because grid values sit ~1e-7
-    from an integer, never near the .5 boundary. Overflow headroom:
-    2^63 / (1e9-cent rows) ≈ 9e9 rows per group at scale 10⁴."""
-    return F.sum(F.round(c * scale).cast("long")).cast("double") / scale
-
-
-def fixed_avg(c: Column, scale: int) -> Column:
-    return F.sum(F.round(c * scale).cast("long")).cast("double") / scale / F.count(c)
-
-
-def sql_fixed_sum(e: str, scale: int) -> str:
-    return (
-        f"(CAST(sum(CAST(round(({e}) * {scale}) AS BIGINT)) AS DOUBLE) / {scale})"
-    )
-
-
-def sql_fixed_avg(e: str, scale: int) -> str:
-    return f"({sql_fixed_sum(e, scale)} / count({e}))"
-
-
-def sql_stable_sum(e: str) -> str:
-    return f"CAST(sum(CAST({e} AS DECIMAL(27,9))) AS DOUBLE)"
-
-
-def sql_stable_avg(e: str) -> str:
-    return f"({sql_stable_sum(e)} / count({e}))"
+def fixed_avg(e: str, scale: int, digits: int) -> Column:
+    """Mean of the non-null grid values: exact long sum / count, then
+    :func:`stable_round`'s nudged round to ``digits`` (a quotient is
+    not on a grid, so it has no exact integer rounding)."""
+    s = f"sum({sql_to_fixed(e, scale)})"
+    return F.expr(f"round(CAST({s} AS DOUBLE) / {scale} / count({e}) + {EPS}, {digits})")
 
 
 # Rounding a double is engine-divergent ON EXACT TIES: Spark's round()
@@ -68,13 +83,11 @@ def sql_stable_avg(e: str) -> str:
 # binary value (70.476249999999993… rounds down). A +5e-10 nudge
 # applied in BOTH engines moves the decision point off .5; double
 # noise (~1e-13 at these magnitudes) can't cross the margin, so both
-# engines always agree. Valid for round scales ≤ 8.
+# engines always agree. Valid for round scales ≤ 8 and magnitudes
+# where 5e-10 exceeds half an ulp (below 2²² ≈ 4·10⁶); exact sums
+# round in integer arithmetic instead (fixed_sum).
 EPS = 5e-10
 
 
 def stable_round(c: Column, scale: int) -> Column:
     return F.round(c + F.lit(EPS), scale)
-
-
-def sql_stable_round(e: str, scale: int) -> str:
-    return f"round(({e}) + 5e-10, {scale})"

@@ -15,9 +15,10 @@ from pyspark.sql import functions as F
 
 from pdf_etl_engine_spark.catalog import load_table, table_path
 from pdf_etl_engine_spark.functions.stable import (
+    EPS,
     fixed_avg,
     fixed_sum,
-    stable_round,
+    sql_to_fixed,
 )
 from pdf_etl_engine_spark.registry import query
 
@@ -47,7 +48,9 @@ def a1_count_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT l_returnflag, l_linestatus,
            round((CAST(sum(CAST(round((l_quantity) * 100) AS BIGINT)) AS DOUBLE) / 100) + 5e-10, 2) AS sum_qty,
            round((CAST(sum(CAST(round((l_extendedprice) * 100) AS BIGINT)) AS DOUBLE) / 100) + 5e-10, 2) AS sum_base_price,
-           round((CAST(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 10000) AS BIGINT)) AS DOUBLE) / 10000) + 5e-10, 2) AS sum_disc_price,
+           CAST((sum(CAST(round((l_extendedprice * (1 - l_discount)) * 10000) AS BIGINT))
+                 + CASE WHEN sum(CAST(round((l_extendedprice * (1 - l_discount)) * 10000) AS BIGINT)) < 0 THEN -50 ELSE 50 END) // 100
+                AS DOUBLE) / 100 AS sum_disc_price,
            round((CAST(sum(CAST(round((l_quantity) * 100) AS BIGINT)) AS DOUBLE) / 100) / count(l_quantity) + 5e-10, 4) AS avg_qty,
            round((CAST(sum(CAST(round((l_discount) * 100) AS BIGINT)) AS DOUBLE) / 100) / count(l_discount) + 5e-10, 4) AS avg_disc,
            count(*) AS count_order
@@ -65,13 +68,11 @@ def a2_groupby_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         lineitem.filter(F.col("l_shipdate") <= F.lit("2000-12-31").cast("timestamp_ntz"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            stable_round(fixed_sum(F.col("l_quantity"), 100), 2).alias("sum_qty"),
-            stable_round(fixed_sum(F.col("l_extendedprice"), 100), 2).alias("sum_base_price"),
-            stable_round(
-                fixed_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 10000), 2
-            ).alias("sum_disc_price"),
-            stable_round(fixed_avg(F.col("l_quantity"), 100), 4).alias("avg_qty"),
-            stable_round(fixed_avg(F.col("l_discount"), 100), 4).alias("avg_disc"),
+            fixed_sum("l_quantity", 100, 2).alias("sum_qty"),
+            fixed_sum("l_extendedprice", 100, 2).alias("sum_base_price"),
+            fixed_sum("l_extendedprice * (1 - l_discount)", 10000, 2).alias("sum_disc_price"),
+            fixed_avg("l_quantity", 100, 4).alias("avg_qty"),
+            fixed_avg("l_discount", 100, 4).alias("avg_disc"),
             F.count("*").alias("count_order"),
         )
     )
@@ -97,14 +98,15 @@ def a3_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_user = events.groupBy("event_type", "user_id").agg(
         F.count("*").alias("c"),
         F.count("value").alias("cv"),
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("s"),
+        F.expr(f"sum({sql_to_fixed('value', 100)})").alias("s"),
     )
     return per_user.groupBy("event_type").agg(
         F.count("*").alias("n_users"),
         F.sum("c").alias("n_events"),
-        stable_round(
-            (F.sum("s").cast("double") / 100) / F.sum("cv"), 4
-        ).alias("avg_value"),
+        # the mean of the exact per-user sums, nudged as fixed_avg does
+        F.expr(f"round(CAST(sum(s) AS DOUBLE) / 100 / sum(cv) + {EPS}, 4)").alias(
+            "avg_value"
+        ),
     )
 
 
@@ -140,7 +142,7 @@ def a5_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
     return joined.rollup("r_name", "n_name").agg(
         F.count("*").alias("n_customers"),
-        stable_round(fixed_sum(F.col("c_acctbal"), 100), 2).alias("sum_acctbal"),
+        fixed_sum("c_acctbal", 100, 2).alias("sum_acctbal"),
     )
 
 
@@ -176,7 +178,7 @@ def a58_cube_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_name",
     ).agg(
         F.count("*").alias("n_customers"),
-        stable_round(fixed_sum(F.col("c_acctbal"), 100), 2).alias("sum_acctbal"),
+        fixed_sum("c_acctbal", 100, 2).alias("sum_acctbal"),
     )
 
 
@@ -201,5 +203,5 @@ def a6_kv_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         events.groupBy("user_id")
         .pivot("event_type", list(EVENT_TYPES))
-        .agg(stable_round(fixed_sum(F.col("value"), 100), 4))
+        .agg(fixed_sum("value", 100, 4))
     )

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pdf_etl_engine_spark.catalog import load_table, table_path
 from pdf_etl_engine_spark.functions import kernel
 from pdf_etl_engine_spark.operators import synth
-from pdf_etl_engine_spark.functions.stable import fixed_sum, stable_round
+from pdf_etl_engine_spark.functions.stable import fixed_sum
 from pdf_etl_engine_spark.registry import query
 
 
@@ -40,16 +40,20 @@ def f2_coerce_number(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F2/F3: numeric coercion — currency strip, percent, accounting
     negatives, sentinel→NULL, unparseable→NULL (main.py:229-239)."""
     lineitem = load_table(spark, sf_dir, "lineitem")
+    # the strip gets a projection of its own: the parse reads its
+    # result six times, so the optimizer does not inline it and every
+    # row runs the regex once
     vals = lineitem.select(
-        "l_returnflag", F.expr(synth.CURRENCY_EXPR).alias("raw_value")
+        "l_returnflag",
+        kernel.clean_numeric(F.expr(synth.CURRENCY_EXPR)).alias("cleaned"),
     )
     parsed = vals.select(
-        "l_returnflag", kernel.to_number(F.col("raw_value")).alias("num")
+        "l_returnflag", kernel.cleaned_to_number(F.col("cleaned")).alias("num")
     )
     return parsed.groupBy("l_returnflag").agg(
         F.count("num").alias("n_parsed"),
         (F.count("*") - F.count("num")).alias("n_null"),
-        stable_round(fixed_sum(F.col("num"), 100), 2).alias("total"),
+        fixed_sum("num", 100, 2).alias("total"),
     )
 
 
@@ -185,7 +189,7 @@ def f213_infer_coerce(spark: SparkSession, sf_dir: str) -> DataFrame:
     return vals.groupBy("inferred_type").agg(
         F.count("*").alias("n"),
         F.count("num").alias("n_numeric"),
-        stable_round(fixed_sum(F.col("num"), 100), 2).alias("num_total"),
+        fixed_sum("num", 100, 2).alias("num_total"),
     )
 
 

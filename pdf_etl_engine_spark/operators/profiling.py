@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from pdf_etl_engine_spark.catalog import load_table
-from pdf_etl_engine_spark.functions.stable import stable_round
+from pdf_etl_engine_spark.functions.stable import stable_round, to_fixed
 from pdf_etl_engine_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -308,9 +308,7 @@ def x41_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     q = li.select(
         "l_returnflag",
-        F.round(F.col("l_extendedprice") * 100)
-        .cast("bigint")
-        .alias("cents"),
+        to_fixed("l_extendedprice", 100).alias("cents"),
     )
     # s2 accumulates in DECIMAL: cents² ~1e14 per row sums past 2⁶³ at
     # ~10⁵ rows/group — bigint overflows right where the 100 TB story
@@ -403,7 +401,7 @@ def x54_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     q = li.select(
         "l_returnflag",
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
+        to_fixed("l_extendedprice", 100).alias("cents"),
     )
     med = q.groupBy("l_returnflag").agg(
         F.round(F.expr("percentile(cents, 0.5)") * 2)

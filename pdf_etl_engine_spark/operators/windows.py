@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from pdf_etl_engine_spark.catalog import load_table, table_path
-from pdf_etl_engine_spark.functions.stable import stable_round
+from pdf_etl_engine_spark.functions.stable import stable_round, to_fixed
 from pdf_etl_engine_spark.registry import query
 
 
@@ -207,7 +207,7 @@ def w5_salted_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     the plain window SQL is the oracle. Parity + plan shape pinned by
     tests/test_plans.py::test_salted_running_sum_*."""
     events = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
+    cents = to_fixed("value", 100)
     base = events.select(
         "event_id",
         "user_id",

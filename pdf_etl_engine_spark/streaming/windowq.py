@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_etl_engine_spark.catalog import load_table, table_path
-from pdf_etl_engine_spark.functions.stable import fixed_avg, fixed_sum, stable_round
+from pdf_etl_engine_spark.functions.stable import fixed_avg, fixed_sum
 from pdf_etl_engine_spark.registry import query
 from pdf_etl_engine_spark.scratch import scratch_dir
 
@@ -43,7 +43,7 @@ def stw_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         events.groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
-            stable_round(fixed_sum(F.col("value"), 100), 4).alias("sum_value"),
+            fixed_sum("value", 100, 4).alias("sum_value"),
         )
         .select(
             F.col("window.start").alias("window_start"),
@@ -73,7 +73,7 @@ def stw_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         events.groupBy(F.window("ts", "1 hour", "30 minutes"))
         .agg(
             F.count("*").alias("n_events"),
-            stable_round(fixed_avg(F.col("value"), 100), 4).alias("avg_value"),
+            fixed_avg("value", 100, 4).alias("avg_value"),
         )
         .select(
             F.col("window.start").alias("window_start"),
@@ -189,9 +189,7 @@ def stw_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_mktsegment")
         .agg(
             F.count("*").alias("n_orders"),
-            stable_round(fixed_sum(F.col("o_totalprice"), 100), 2).alias(
-                "revenue"
-            ),
+            fixed_sum("o_totalprice", 100, 2).alias("revenue"),
         )
     )
     return _run_to_memory_sink(stream, "stream_enrich")
@@ -301,9 +299,7 @@ def stw_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderpriority")
         .agg(
             F.count("*").alias("n_items"),
-            stable_round(fixed_sum(F.col("l_extendedprice"), 100), 2).alias(
-                "revenue"
-            ),
+            fixed_sum("l_extendedprice", 100, 2).alias("revenue"),
         )
     )
 

@@ -18,6 +18,18 @@ registry.load_all()
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+# bench.py's and perfbench's 7 headline queries
+HEADLINE = (
+    "t1_results_topk",
+    "a2_groupby_pricing_summary",
+    "j5_multiway_equi",
+    "w0_row_number",
+    "s7b_json_extract_agg",
+    "a3_count_distinct",
+    "f2_coerce_number",
+)
+
+
 def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
@@ -128,6 +140,38 @@ def test_whole_stage_codegen_on_kernels(spark):
     assert "*(1) Project" in p or "*(1) HashAggregate" in p, p[:500]
 
 
+@pytest.mark.parametrize(
+    "name",
+    ["a2_groupby_pricing_summary", "j5_multiway_equi", "f2_coerce_number",
+     "a3_count_distinct"],
+)
+def test_money_partial_aggregate_has_no_round(spark, name):
+    """Money sums scale each row to a long with a truncating cast
+    (functions/stable.py), not round(): Spark's round on a double goes
+    through BigDecimal for every row. Rounding happens only after the
+    final aggregate, on one row per group."""
+    df = registry.QUERIES[name](spark, SF_DIR)
+    df.collect()
+    partial = [
+        line for line in plan_of(df).splitlines()
+        if "HashAggregate" in line and "partial_" in line
+    ]
+    assert partial, plan_of(df)
+    assert not [line for line in partial if "round(" in line], partial
+
+
+def test_coerce_strips_once_per_row(spark):
+    """f2 runs the currency-strip regex once per row, in a projection
+    of its own, and finds accounting parentheses with string tests: the
+    parse reads the stripped string six times, each a regex pass if
+    inlined (it was three: rlike, regexp_extract, otherwise)."""
+    df = registry.QUERIES["f2_coerce_number"](spark, SF_DIR)
+    df.collect()
+    final = plan_of(df).split("== Initial Plan ==")[0]
+    assert final.count("regexp_replace(") == 1, final
+    assert "StartsWith(" in final and "RLIKE(" not in final, final
+
+
 def test_partition_pruning_on_fact_table(spark, tmp_path):
     """The reference located data by string-building table names
     (main.py:262-264); our single partitioned fact table must prune
@@ -209,13 +253,14 @@ def test_query_construction_schedules_no_job(spark):
     (x4e formerly ran an eager count() while building centroids)."""
     sc = spark.sparkContext
     # warm the table cache first: cache fill is a legitimate job
-    for t in ("embeddings", "documents", "lineitem", "events"):
+    for t in ("embeddings", "documents", "lineitem", "events", "orders",
+              "customer", "nation"):
         load_table(spark, SF_DIR, t)
     # Known exemption (documented, not drift): x4f_ann_index_topk
     # materializes its LSH index on first use and collects the probe's
     # L bucket ids — a serving-path side effect its docstring declares.
-    for name in ("x4e_ann_ivf_topk", "x4_cosine_topk", "t1_results_topk",
-                 "a2_groupby_pricing_summary",
+    for name in ("x4e_ann_ivf_topk", "x4_cosine_topk",
+                 *HEADLINE,
                  "x22_incremental_dedup_exact",
                  "x22b_incremental_dedup_near"):
         group = f"build-probe-{name}"

@@ -34,8 +34,9 @@ AUDITED = {
     "heaps, no global sort (flagship top-k).",
     "a2_groupby_pricing_summary": "partial_+final HashAggregate — map-side "
     "combine carries one row per (partition, group) over the wire.",
-    "j5_multiway_equi": "BroadcastHashJoin on every dimension — the fact "
-    "side never shuffles for the join.",
+    "j5_multiway_equi": "BroadcastHashJoin on every dimension — at sf0.1, "
+    "AQE on or off, the fact side does not shuffle for the join (at sf1 "
+    "orders and customer exceed the broadcast threshold and it does).",
     "w0_row_number": "single Exchange feeding one Window — no extra sort "
     "stages.",
     "s7b_json_extract_agg": "from_json inside the scan projection (single "
