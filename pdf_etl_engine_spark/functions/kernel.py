@@ -136,20 +136,16 @@ def parens_negative(c: Column) -> Column:
 
 
 def to_number(c: Column) -> Column:
-    """Full numeric coercion: strip → parens → float-parse;
-    unparseable → NULL, never error (main.py:229-239). Sentinels need
-    no branch of their own: none strips to a number, so they parse to
-    NULL. The stripped string opens the first condition twice, so
-    codegen computes it once per row; the expression is kept small
-    because the ingest repeats it in a per-(tenant, folder) CASE."""
-    return parens_negative(clean_numeric(c)).try_cast("double")
+    """Full numeric coercion: sentinel → NULL; strip → parens →
+    float-parse; unparseable → NULL, never error (main.py:229-239)."""
+    return cleaned_to_number(clean_numeric(c))
 
 
 def cleaned_to_number(cleaned: Column) -> Column:
-    """:func:`to_number` of an already-stripped column, for a plan that
-    strips in a projection of its own. Sentinels (which strip to
-    themselves) take a NULL branch before the parse: a failed
-    ``try_cast`` costs a caught NumberFormatException per row."""
+    """:func:`to_number` after the strip, for a plan that strips in a
+    projection of its own. Sentinels strip to themselves and take a
+    NULL branch before the parse: ``try_cast`` would null them too,
+    but each failed cast costs a caught NumberFormatException."""
     return F.when(cleaned.isin(*SENTINELS), F.lit(None)).otherwise(
         parens_negative(cleaned).try_cast("double")
     )

@@ -70,11 +70,17 @@ def fixed_sum(e: str, scale: int, digits: int) -> Column:
 
 
 def fixed_avg(e: str, scale: int, digits: int) -> Column:
-    """Mean of the non-null grid values: exact long sum / count, then
-    :func:`stable_round`'s nudged round to ``digits`` (a quotient is
-    not on a grid, so it has no exact integer rounding)."""
-    s = f"sum({sql_to_fixed(e, scale)})"
-    return F.expr(f"round(CAST({s} AS DOUBLE) / {scale} / count({e}) + {EPS}, {digits})")
+    """Mean of the non-null grid values: :func:`fixed_mean` of the exact
+    long sum over the non-null count."""
+    return fixed_mean(f"sum({sql_to_fixed(e, scale)})", scale, f"count({e})", digits)
+
+
+def fixed_mean(s: str, scale: int, n: str, digits: int) -> Column:
+    """``s / scale / n`` for an exact long sum ``s`` (SQL text) of
+    values scaled by ``scale``, then :func:`stable_round`'s nudged round
+    to ``digits``: a quotient is not on a grid, so it has no exact
+    integer rounding."""
+    return F.expr(f"round(CAST({s} AS DOUBLE) / {scale} / {n} + {EPS}, {digits})")
 
 
 # Rounding a double is engine-divergent ON EXACT TIES: Spark's round()

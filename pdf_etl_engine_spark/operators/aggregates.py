@@ -15,8 +15,8 @@ from pyspark.sql import functions as F
 
 from pdf_etl_engine_spark.catalog import load_table, table_path
 from pdf_etl_engine_spark.functions.stable import (
-    EPS,
     fixed_avg,
+    fixed_mean,
     fixed_sum,
     sql_to_fixed,
 )
@@ -103,10 +103,8 @@ def a3_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return per_user.groupBy("event_type").agg(
         F.count("*").alias("n_users"),
         F.sum("c").alias("n_events"),
-        # the mean of the exact per-user sums, nudged as fixed_avg does
-        F.expr(f"round(CAST(sum(s) AS DOUBLE) / 100 / sum(cv) + {EPS}, 4)").alias(
-            "avg_value"
-        ),
+        # the mean of the exact per-user sums
+        fixed_mean("sum(s)", 100, "sum(cv)", 4).alias("avg_value"),
     )
 
 
