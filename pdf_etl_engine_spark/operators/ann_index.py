@@ -1,31 +1,45 @@
-"""Bucket-partitioned ANN index: the storage-side half of X4's
-similarity search (SURVEY.md §2.11).
+"""Vector indexes for X4/X47 similarity search (SURVEY.md §2.11): the
+bucket-partitioned LSH index, product quantization (PQ), and the one
+IVF-PQ engine. The reference service has no vector path at all; this
+module extends its /get-results top-k idea (main.py:808-811) to
+embedding space.
 
-``x4b_ann_lsh_topk`` computes LSH buckets at query time, so every probe
-still scans all embedding rows before the bucket semi-join filters
-them. That is fine as a *query* but wrong as a *serving topology*: at
-100 TB the bucket assignment must be paid once, at write time, and a
-probe must touch only the partitions holding the query's buckets.
+**LSH index (x4f).** ``x4b_ann_lsh_topk`` computes LSH buckets at
+query time, so every probe scans all embedding rows before the bucket
+semi-join filters them. :func:`build_ann_index` pays the bucket
+assignment once, at write time: it explodes each vector into its L
+(table, bucket) slots and writes parquet partitioned by (t, b).
+:func:`probe_ann_index` evaluates the query vector's L buckets
+driver-side, turns them into literal ``(t = …, b = …)`` disjuncts,
+and the scan touches ≤ L of the n_tables × 2^k partition directories
+(``PartitionFilters``); only the candidate set pays the exact cosine
+rescore. :func:`append_ann_index` appends a batch into the same tree.
+tests/test_ann_index.py pins the pruning and the equivalence to x4b.
 
-This module makes that real:
+**IVF-PQ engine (x47d/x47e/x47h/x47i, stw_ivfpq_ingest).** One
+build/append/probe over one persisted layout, for two codebooks:
 
-* :func:`build_ann_index` explodes each vector into its L (table,
-  bucket) slots and writes parquet **partitioned by (t, b)** — the
-  Hive-style layout Spark prunes statically. Build cost is one
-  shuffle-free write with ×L row amplification (L=12 here); at scale
-  the index is maintained incrementally by appending each new batch's
-  exploded rows into the same partition tree.
-* :func:`probe_ann_index` evaluates the query vector's L buckets
-  driver-side (one row — this is the serving path's O(L) work), turns
-  them into literal ``(t = …, b = …)`` disjuncts, and reads the index
-  with that predicate. ``.explain`` shows the buckets under
-  ``PartitionFilters`` and the scan touches ≤ L of the n_tables × 2^k
-  partition directories; only the candidate set pays the exact cosine
-  rescore. tests/test_ann_index.py pins both the pruning and the
-  equivalence to x4b's answer.
+* the coarse quantizer is x45b's fixed-point sampled Lloyd
+  (extensions._fp_lloyd, 8 cells) over floor(x·10⁴) vectors, so the
+  cell — the partition key of the layout — is integer-exact in both
+  engines;
+* one Arrow kernel assigns every vector to its cell and PQ-encodes
+  its residual (8 subspaces × 16 codes) into the packed
+  ``(vec_id, cell, code)`` relation; the persisted index writes it
+  partitioned by cell next to ``centroids`` and a ``manifest``;
+* a probe ranks cells per query, reads only the nprobe nearest
+  cells' partitions, builds one ADC lookup table per (query, cell),
+  sums 8 lookups per candidate and keeps the top 5.
 
-The reference service has no vector path at all; this extends its
-/get-results top-k idea (main.py:808-811) to embedding space.
+``codebook="mixer"`` encodes the float residual x − c/10⁴ against the
+fixed hash-mixer codebook of x47; its oracle fixes the float addition
+order of the ADC sum, reported as ``adc_dist``. ``codebook="trained"``
+encodes the integer residual qa − c against a per-subspace
+fixed-point Lloyd codebook trained on the residuals (x47c's recipe,
+persisted as ``codebook``); every ADC term is an exact BIGINT,
+reported as ``adc_fp``. The ADC scorer is the only code that branches
+on the codebook. Training is the recall lever: RECALL_IVFPQ_SF1.json
+measures both codebooks against exact k-NN at sf1.
 """
 
 from __future__ import annotations
@@ -41,6 +55,10 @@ from pdf_etl_engine_spark.functions.stable import stable_round
 from pdf_etl_engine_spark.operators.extensions import (
     _as_double,
     _dot,
+    _fp_assign,
+    _fp_lloyd,
+    _fp_quantize,
+    _fp_sqdist,
     _lsh_buckets,
 )
 from pdf_etl_engine_spark.registry import query
@@ -52,17 +70,45 @@ N_TABLES = 12
 N_BITS = 3
 
 
-def build_ann_index(
-    spark: SparkSession,
-    sf_dir: str,
-    out_dir: str,
-    n_tables: int = N_TABLES,
-    n_bits: int = N_BITS,
+def _write_index(rows: DataFrame, path: str, mode: str, *keys: str) -> None:
+    """The partitioned write of both index trees. Shuffle on the
+    partition key first: each writer task then owns whole cells, so
+    the layout is one file per cell instead of (tasks × cells) small
+    files — the standard small-files guard for partitioned tables.
+    Appends never rewrite existing files."""
+    rows.repartition(*keys).write.mode(mode).partitionBy(*keys).parquet(path)
+
+
+def _guard_fresh_vec_ids(
+    spark: SparkSession, tree: str, new_emb: DataFrame, what: str
 ) -> None:
-    """Write the LSH index table: one row per (vector, table), parquet
-    partitioned by (t, b) so probes prune directories, not rows."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    idx = emb.select(
+    """Fail-loud duplicate-id guard of every index append: vec_id is
+    the index's primary key. A re-appended id would leave two rows per
+    vector — the LSH probe's per-id dedup would pick an arbitrary
+    (possibly stale) payload, and the IVF-PQ probe would score the
+    vector twice. One broadcast semi-join of the index tree's pruned
+    vec_id column against the batch's distinct ids; updates are
+    delete-and-rebuild, never silent overwrite."""
+    new_ids = new_emb.select("vec_id").distinct()
+    clash = (
+        spark.read.parquet(tree)
+        .select("vec_id")
+        .join(F.broadcast(new_ids), "vec_id", "left_semi")
+        .limit(5)
+        .collect()
+    )
+    if clash:
+        raise ValueError(
+            f"{what}: vec_id(s) already present in the index "
+            f"(e.g. {sorted(r['vec_id'] for r in clash)}); appends must "
+            "carry fresh ids — rebuild to replace existing vectors"
+        )
+
+
+def _lsh_index_rows(emb: DataFrame, n_tables: int, n_bits: int) -> DataFrame:
+    """The LSH index rows: one per (vector, table), carrying the
+    payload the probe scores from — (t, b, vec_id, label, embedding)."""
+    return emb.select(
         "vec_id",
         "label",
         "embedding",
@@ -74,13 +120,21 @@ def build_ann_index(
         "label",
         "embedding",
     )
-    # Shuffle on the partition key before the partitioned write: each
-    # writer task then owns whole (t, b) cells, so the layout is one
-    # file per cell instead of (tasks × cells) small files — the
-    # standard small-files guard for partitioned tables.
-    idx.repartition("t", "b").write.mode("overwrite").partitionBy(
-        "t", "b"
-    ).parquet(out_dir)
+
+
+def build_ann_index(
+    spark: SparkSession,
+    sf_dir: str,
+    out_dir: str,
+    n_tables: int = N_TABLES,
+    n_bits: int = N_BITS,
+) -> None:
+    """Write the LSH index table: one row per (vector, table), parquet
+    partitioned by (t, b) so probes prune directories, not rows."""
+    rows = _lsh_index_rows(
+        load_table(spark, sf_dir, "embeddings"), n_tables, n_bits
+    )
+    _write_index(rows, out_dir, "overwrite", "t", "b")
 
 
 def probe_ann_index(
@@ -150,53 +204,17 @@ def append_ann_index(
     n_tables: int = N_TABLES,
     n_bits: int = N_BITS,
 ) -> None:
-    """Incremental maintenance for the LSH index (the module header's
-    promise, made real like the IVF-PQ one): explode a new vector
+    """Incremental maintenance for the LSH index: explode a new vector
     batch into its L (t, b) slots and APPEND into the same partition
-    tree — writer tasks own whole cells (repartition first), existing
-    files are never rewritten, and probes see appended vectors
-    immediately because they score from index-carried payload. The
-    hyperplanes are derived from (n_tables, n_bits) alone — stateless,
-    nothing to retrain, so unlike IVF-PQ there is no drift trigger;
-    the only rebuild reason is re-parameterizing (k, L).
-
-    vec_id is the index's primary key: probe_ann_index serves payload
-    from index rows and dedups with dropDuplicates([vec_id]), which
-    is deterministic only while every vec_id carries ONE payload. An
-    append that reuses an existing vec_id would make the probe pick
-    an arbitrary (possibly stale) embedding, so it FAILS LOUDLY here
-    instead (ADVICE r13): one semi-join of the index's pruned vec_id
-    column against the broadcast new-id set — updates are
-    delete-and-rebuild (or a tombstone layer), not silent overwrite."""
-    new_ids = new_emb.select("vec_id").distinct()
-    clash = (
-        spark.read.parquet(index_dir)
-        .select("vec_id")
-        .join(F.broadcast(new_ids), "vec_id", "left_semi")
-        .limit(5)
-        .collect()
-    )
-    if clash:
-        raise ValueError(
-            "append_ann_index: vec_id(s) already present in the index "
-            f"(e.g. {sorted(r['vec_id'] for r in clash)}); appends must "
-            "carry fresh ids — rebuild to replace existing vectors"
-        )
-    idx = new_emb.select(
-        "vec_id",
-        "label",
-        "embedding",
-        F.explode(_lsh_buckets(n_tables, n_bits)).alias("tb"),
-    ).select(
-        F.col("tb.t").alias("t"),
-        F.col("tb.b").alias("b"),
-        "vec_id",
-        "label",
-        "embedding",
-    )
-    idx.repartition("t", "b").write.mode("append").partitionBy(
-        "t", "b"
-    ).parquet(index_dir)
+    tree; probes see appended vectors immediately because they score
+    from index-carried payload. The hyperplanes are derived from
+    (n_tables, n_bits) alone — stateless, nothing to retrain, so
+    unlike IVF-PQ there is no drift trigger; the only rebuild reason
+    is re-parameterizing (k, L). An append that reuses an existing
+    vec_id fails loudly (_guard_fresh_vec_ids)."""
+    _guard_fresh_vec_ids(spark, index_dir, new_emb, "append_ann_index")
+    rows = _lsh_index_rows(new_emb, n_tables, n_bits)
+    _write_index(rows, index_dir, "append", "t", "b")
 
 
 def default_index_dir(sf_dir: str) -> str:
@@ -269,6 +287,14 @@ def _pq_mix_sql(fexpr: str) -> str:
     return f"({h4} % 128 - 64)"
 
 
+def _int_array_lit(values) -> Column:
+    """An array<int> constant from ONE SQL-text py4j call. F.lit(list)
+    makes one py4j call per element (~0.4 ms each: ~0.4 s of plan
+    construction for a 1024-entry codebook); both forms constant-fold
+    to the same Literal."""
+    return F.expr(f"array({', '.join(str(int(v)) for v in values)})")
+
+
 def _pq_cb_flat(k_cent: int = _PQ_K) -> Column:
     """The codebook as ONE array<int> Literal (flat index
     (s·k_cent + c)·8 + d). A Literal, not CreateArray — 1024 unrolled
@@ -276,8 +302,8 @@ def _pq_cb_flat(k_cent: int = _PQ_K) -> Column:
     the JVM's 64KB-per-method codegen limit and drop the whole stage
     into interpreted evaluation; a Literal is a constant object
     reference and higher-order functions over it codegen as loops."""
-    return F.lit(
-        [n for cs in _pq_codebook(k_cent) for ds in cs for n in ds]
+    return _int_array_lit(
+        n for cs in _pq_codebook(k_cent) for ds in cs for n in ds
     )
 
 
@@ -439,25 +465,95 @@ def x47_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _batch_vectors(batch):
+    """An Arrow batch's ``embedding`` column as an (n, 64) float64
+    matrix (float32 → float64 is exact)."""
+    import numpy as np
+
+    return np.asarray(
+        batch.column("embedding").flatten(), dtype=np.float64
+    ).reshape(batch.num_rows, _PQ_S * _PQ_D)
+
+
+def _pq_books(cb_rows: list | None = None, k_cent: int = _PQ_K) -> list:
+    """Per subspace, (code ids ascending, centroid matrix) for
+    _subspace_encode_np: the mixer codebook as exact n/256 doubles
+    with ids 0..k_cent−1 when ``cb_rows`` is None, else the integer
+    centroids of a trained codebook's (s, cell, c) rows — only the
+    cells that survived training, so an emptied cell is never a
+    code."""
+    import numpy as np
+
+    if cb_rows is None:
+        cb = np.asarray(_pq_codebook(k_cent), dtype=np.float64) / 256.0
+        ids = np.arange(k_cent, dtype=np.int64)
+        return [(ids, cb[s]) for s in range(_PQ_S)]
+    by_s: dict[int, list] = {}
+    for r in cb_rows:
+        by_s.setdefault(int(r["s"]), []).append((int(r["cell"]), list(r["c"])))
+    books = []
+    for s in range(_PQ_S):
+        entries = sorted(by_s.get(s, []))
+        books.append(
+            (
+                np.array([c for c, _ in entries], dtype=np.int64),
+                np.array([v for _, v in entries], dtype=np.int64),
+            )
+        )
+    return books
+
+
+def _subspace_encode_np(r, books: list):
+    """The one PQ encode step: per subspace s, the squared L2 from
+    r's 8-dim slice to every centroid of books[s], accumulated
+    d-ascending as an explicit loop — the SAME strict left fold
+    ((0 + t0²) + t1²) + … as the Column form's F.aggregate (numpy's
+    .sum() would use pairwise summation, a different rounding) — and
+    the FIRST minimum (np.argmin), matching
+    array_position(da, array_min(da)) − 1 and the min-cell tie-break.
+    Float r gives the mixer's IEEE sequence bit for bit; integer r
+    gives exact sums. Returns (codes, minimum distances), each
+    (S, n)."""
+    import numpy as np
+
+    n = r.shape[0]
+    rows = np.arange(n)
+    cds = np.zeros((_PQ_S, n), dtype=np.int64)
+    mds = np.zeros((_PQ_S, n), dtype=r.dtype)
+    for s, (ids, mat) in enumerate(books):
+        rs = r[:, s * _PQ_D : (s + 1) * _PQ_D]
+        acc = np.zeros((n, len(ids)), dtype=r.dtype)
+        for d in range(_PQ_D):
+            t = rs[:, d : d + 1] - mat[None, :, d]
+            acc += t * t
+        j = np.argmin(acc, axis=1)
+        cds[s] = ids[j]
+        mds[s] = acc[rows, j]
+    return cds, mds
+
+
+def _pack_np(cds, bits: int):
+    """The 8 codes of each vector packed little-endian into one int64
+    (``bits`` per code; built unsigned, so 8-bit codes may fill the
+    sign bit — Spark's arithmetic shift + mask unpacks them either
+    way)."""
+    import numpy as np
+
+    code = np.zeros(cds.shape[1], dtype=np.uint64)
+    for s in range(_PQ_S):
+        code |= cds[s].astype(np.uint64) << np.uint64(bits * s)
+    return code.view(np.int64)
+
+
 def pq_encode_arrow(emb: DataFrame) -> DataFrame:
     """BIT-IDENTICAL Arrow twin of :func:`pq_encode`: same
     (vec_id, pq_code, q_err_raw), computed in one vectorized numpy
-    kernel instead of interpreted HOF folds.
-
-    Why it can claim bit-identity (the x27-style discipline, applied
-    to kernels instead of engines): every float step reproduces the
-    Column form's IEEE-double sequence exactly —
-
-    * centroid value n/256.0 is a dyadic rational, exact in double
-      either way;
-    * the per-(row, centroid) distance accumulates d = 0..7 as an
-      explicit Python loop over vectorized adds, i.e. the SAME strict
-      left fold ((0 + t0²) + t1²) + … as F.aggregate (numpy's own
-      .sum() would use pairwise summation — different rounding — so
-      it is deliberately not used);
-    * np.argmin returns the FIRST minimum, matching
-      array_position(da, array_min(da)) − 1;
-    * q_err adds the per-subspace minima in s-ascending order from 0.
+    kernel instead of interpreted HOF folds. Every float step
+    reproduces the Column form's IEEE-double sequence exactly: the
+    centroid value n/256.0 is a dyadic rational, exact in double
+    either way; the distances and the first-min argmin are
+    _subspace_encode_np's strict fold; q_err adds the per-subspace
+    minima in s-ascending order from 0.
 
     tests/test_pq_spans.py pins code-and-error equality against
     pq_encode row for row. Scale shape: map-only like pq_encode, but
@@ -467,35 +563,21 @@ def pq_encode_arrow(emb: DataFrame) -> DataFrame:
     import numpy as np
     import pyarrow as pa
 
-    cb = (
-        np.asarray(_pq_codebook(), dtype=np.float64) / 256.0
-    )  # (S, K, D), exact dyadic values
-    s_dims, k_cent, d_dims = _PQ_S, _PQ_K, _PQ_D
+    books = _pq_books()
 
     def enc(batches):
         for batch in batches:
             n = batch.num_rows
             if n == 0:
                 continue
-            x = np.asarray(
-                batch.column("embedding").flatten(), dtype=np.float64
-            ).reshape(n, s_dims * d_dims)
-            codes = np.zeros(n, dtype=np.int64)
+            cds, mds = _subspace_encode_np(_batch_vectors(batch), books)
             qerr = np.zeros(n, dtype=np.float64)
-            rows = np.arange(n)
-            for s in range(s_dims):
-                xs = x[:, s * d_dims : (s + 1) * d_dims]
-                acc = np.zeros((n, k_cent), dtype=np.float64)
-                for d in range(d_dims):
-                    t = xs[:, d : d + 1] - cb[s, :, d][None, :]
-                    acc += t * t
-                cd = np.argmin(acc, axis=1)
-                codes |= cd.astype(np.int64) << (4 * s)
-                qerr += acc[rows, cd]
+            for s in range(_PQ_S):
+                qerr += mds[s]
             yield pa.RecordBatch.from_pydict(
                 {
                     "vec_id": batch.column("vec_id").cast(pa.int64()),
-                    "pq_code": pa.array(codes, pa.int64()),
+                    "pq_code": pa.array(_pack_np(cds, 4), pa.int64()),
                     "q_err_raw": pa.array(qerr, pa.float64()),
                 }
             )
@@ -616,76 +698,20 @@ def x47b_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _pqfp_sub(s_expr, e: Column) -> Column:
-    """Fixed-point 8-dim subvector for subspace ``s_expr``:
-    floor(x·10⁴) per component (the x45b discipline — all downstream
-    distance/mean arithmetic is then exact integer math, gradable in
-    any engine regardless of accumulation order)."""
+def _subspace_explode(vec: Column) -> Column:
+    """array<struct<s, qa>>: ``vec`` (64 ints) split into its 8
+    8-int subspace vectors, for exploding into the (vec_id, s, qa)
+    long form _fp_lloyd/_fp_assign key on with ``key="s"``."""
     return F.transform(
-        F.sequence(F.lit(0), F.lit(_PQ_D - 1)),
-        lambda d: F.floor(
-            F.element_at(e, s_expr * _PQ_D + d + 1).cast("double")
-            * 10000
-        ).cast("long"),
-    )
-
-
-def _pqfp_dist(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
-def _pqfp_assign(vecs: DataFrame, cent: DataFrame) -> DataFrame:
-    """Nearest centroid per (vec_id, s): broadcast the 8×16-row
-    codebook, join on subspace, integer L2, argmin with ties → lowest
-    cell. Returns (vec_id, s, cell, md)."""
-    a = vecs.join(F.broadcast(cent), "s").select(
-        "vec_id",
-        "s",
-        "cell",
-        _pqfp_dist(F.col("qa"), F.col("c")).alias("dist"),
-    )
-    m = a.groupBy("vec_id", "s").agg(F.min("dist").alias("md"))
-    return (
-        a.join(m, ["vec_id", "s"])
-        .filter(F.col("dist") == F.col("md"))
-        .groupBy("vec_id", "s")
-        .agg(F.min("cell").alias("cell"), F.min("md").alias("md"))
-    )
-
-
-def _pqfp_lloyd(vecs: DataFrame, train: DataFrame, iters: int) -> DataFrame:
-    """Per-subspace Lloyd over the training sample (x45b's _fp_lloyd
-    with the subspace key threaded through): seeds are the first 16
-    vec_ids' subvectors FROM THE FULL RELATION (seeding from the
-    sample would keep only vec_ids ≡ 0 mod 4 < 16 — four centroids,
-    squandering 2 of the 4 code bits), means floor(Σ/n) per
-    component. Returns the trained codebook (s, cell,
-    c: array<bigint>); cells keep their seed ids so codes stay < 16
-    even when a cell empties."""
-    cent = vecs.filter(F.col("vec_id") < _PQ_K).select(
-        "s", F.col("vec_id").alias("cell"), F.col("qa").alias("c")
-    )
-    for _ in range(iters):
-        assigned = _pqfp_assign(train, cent).select("vec_id", "s", "cell")
-        long = assigned.join(train, ["vec_id", "s"]).select(
-            "s", "cell", F.posexplode("qa").alias("j", "qj")
-        )
-        comps = long.groupBy("s", "cell", "j").agg(
-            F.floor(F.sum("qj").cast("double") / F.count(F.lit(1)))
-            .cast("long")
-            .alias("cj")
-        )
-        cent = comps.groupBy("s", "cell").agg(
+        F.sequence(F.lit(0), F.lit(_PQ_S - 1)),
+        lambda s: F.struct(
+            s.cast("long").alias("s"),
             F.transform(
-                F.array_sort(F.collect_list(F.struct("j", "cj"))),
-                lambda st: st["cj"],
-            ).alias("c")
-        )
-    return cent
+                F.sequence(F.lit(0), F.lit(_PQ_D - 1)),
+                lambda d: F.element_at(vec, (s * _PQ_D + d + 1).cast("int")),
+            ).alias("qa"),
+        ),
+    )
 
 
 def _pqfp_sql_dist(a: str, b: str) -> str:
@@ -784,21 +810,14 @@ def x47c_pq_encode_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     more than once, and at 100 TB the sample rate drops (Lloyd needs
     thousands of points per centroid, not a fixed fraction)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    e = F.col("embedding")
-    vecs = emb.select(
-        "vec_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(_PQ_S - 1)),
-                lambda s: F.struct(
-                    s.cast("long").alias("s"),
-                    _pqfp_sub(s, e).alias("qa"),
-                ),
-            )
-        ).alias("g"),
-    ).select("vec_id", "g.s", "g.qa")
-    train = vecs.filter(F.col("vec_id") % 4 == 0)
-    # materialize the (<=128 x 8-int) codebook once: _pqfp_assign's
+    # quantize in its own projection: inside _subspace_explode's
+    # lambdas an inlined _fp_quantize would re-run per component read
+    vecs = (
+        emb.select("vec_id", _fp_quantize(F.col("embedding")).alias("qa"))
+        .select("vec_id", F.explode(_subspace_explode(F.col("qa"))).alias("g"))
+        .select("vec_id", "g.s", "g.qa")
+    )
+    # materialize the (<=128 x 8-int) codebook once: _fp_assign's
     # argmin references its input twice (distances + the min join),
     # which would otherwise re-run the whole Lloyd chain per branch.
     # localCheckpoint (lazy), NOT persist: a persist entry is keyed
@@ -806,8 +825,8 @@ def x47c_pq_encode_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     # across the bench's rebuilt DataFrames and let a "fresh" timed
     # run silently skip training; a lazy local checkpoint is scoped
     # to THIS DataFrame object and recomputes per rebuild.
-    cent = _pqfp_lloyd(vecs, train, iters=2).localCheckpoint(eager=False)
-    coded = _pqfp_assign(vecs, cent)
+    cent = _fp_lloyd(vecs, _PQ_K, key="s").localCheckpoint(eager=False)
+    coded = _fp_assign(vecs, cent, key="s")
     return coded.groupBy("vec_id").agg(
         F.sum(
             F.col("cell") * F.expr("shiftleft(1L, cast(4 * s as int))")
@@ -817,51 +836,13 @@ def x47c_pq_encode_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# X47d — IVF-PQ: coarse cells + PQ-coded residuals + cell-pruned ADC probe
+# The IVF-PQ engine: coarse cells + PQ-coded residuals + cell-pruned
+# ADC probe, in flight (x47d/x47h) or persisted (x47e/x47i)
 # ---------------------------------------------------------------------------
 
 _IVFPQ_CELLS = 8   # coarse cells (seeds: vec_id < 8)
 _IVFPQ_NPROBE = 2  # cells probed per query
-
-
-def _ivfpq_coarse(vecs_fp: DataFrame) -> DataFrame:
-    """Coarse quantizer = x45b's fixed-point sampled Lloyd on FULL
-    vectors (2 iterations, seeds vec_id < 8, deterministic 1/4
-    sample). Returns (cell, c: array<bigint>). Integer-exact, so the
-    cell assignment — the partition key of the whole layout —
-    grades bit-identically cross-engine."""
-    cent = vecs_fp.filter(F.col("vec_id") < _IVFPQ_CELLS).select(
-        F.col("vec_id").alias("cell"), F.col("qa").alias("c")
-    )
-    train = vecs_fp.filter(F.col("vec_id") % 4 == 0)
-    for _ in range(2):
-        a = train.crossJoin(F.broadcast(cent)).select(
-            "vec_id",
-            _pqfp_dist(F.col("qa"), F.col("c")).alias("dist"),
-            "cell",
-        )
-        m = a.groupBy("vec_id").agg(F.min("dist").alias("md"))
-        assigned = (
-            a.join(m, "vec_id")
-            .filter(F.col("dist") == F.col("md"))
-            .groupBy("vec_id")
-            .agg(F.min("cell").alias("cell"))
-        )
-        long = assigned.join(train, "vec_id").select(
-            "cell", F.posexplode("qa").alias("j", "qj")
-        )
-        comps = long.groupBy("cell", "j").agg(
-            F.floor(F.sum("qj").cast("double") / F.count(F.lit(1)))
-            .cast("long")
-            .alias("cj")
-        )
-        cent = comps.groupBy("cell").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("j", "cj"))),
-                lambda st: st["cj"],
-            ).alias("c")
-        )
-    return cent
+_CODEBOOKS = ("mixer", "trained")
 
 
 def _ivfpq_fp(emb: DataFrame) -> DataFrame:
@@ -869,35 +850,19 @@ def _ivfpq_fp(emb: DataFrame) -> DataFrame:
     stage keys on (floor(x·10⁴) as BIGINT — integer-exact in both
     engines)."""
     return emb.select(
-        "vec_id",
-        "embedding",
-        F.transform(
-            F.col("embedding"),
-            lambda x: F.floor(x.cast("double") * 10000).cast("long"),
-        ).alias("qa"),
+        "vec_id", "embedding", _fp_quantize(F.col("embedding")).alias("qa")
     )
 
 
 def _ivfpq_assign_encode(vecs_fp: DataFrame, cent: DataFrame) -> DataFrame:
-    """Assign every vector to its nearest (integer-distance, min-cell
-    tie-break) centroid and residual-PQ-encode it: returns
-    (vec_id, cell, cd0..cd7). r15: the DECLARATIVE REFERENCE form —
-    the canonical encode everywhere (x47d, build, append) is now
-    _ivfpq_assign_encode_arrow; this expression form stays as the
-    SQL-oracle mirror and is pinned bit-identical to the kernel by
+    """The DECLARATIVE reference of the mixer encode: assign every
+    vector to its nearest (integer-distance, min-cell tie-break)
+    centroid and residual-PQ-encode it, returning
+    (vec_id, cell, cd0..cd7). It mirrors the x47d oracle's SQL step
+    for step; the engine runs _ivfpq_encode_arrow, pinned
+    bit-identical to this form by
     test_ivfpq_inflight_arrow_matches_declarative."""
-    a = vecs_fp.crossJoin(F.broadcast(cent)).select(
-        "vec_id",
-        "cell",
-        _pqfp_dist(F.col("qa"), F.col("c")).alias("dist"),
-    )
-    m = a.groupBy("vec_id").agg(F.min("dist").alias("md"))
-    assigned = (
-        a.join(m, "vec_id")
-        .filter(F.col("dist") == F.col("md"))
-        .groupBy("vec_id")
-        .agg(F.min("cell").alias("cell"))
-    )
+    assigned = _fp_assign(vecs_fp, cent).select("vec_id", "cell")
     withcent = assigned.join(
         vecs_fp.select("vec_id", "embedding"), "vec_id"
     ).join(F.broadcast(cent), "cell")
@@ -1063,49 +1028,193 @@ def _x47d_oracle() -> str:
     """
 
 
-@query("x47d_ivfpq_topk", oracle=_x47d_oracle())
-def x47d_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X47d: IVF-PQ end to end — the standard billion-vector serving
-    layout, every stage oracle-graded: (1) coarse cells from the
-    fixed-point sampled Lloyd (integer-exact ⇒ the partition key
-    grades bit-identically), (2) PQ codes of the RESIDUAL x − cent
-    against the mixer codebook (residual terms are exact-double
-    subtractions; distances strict folds), (3) a query ranks cells
-    by integer centroid distance, probes the nprobe=2 nearest, and
-    ADC-scans ONLY those cells' 8-byte codes with its per-cell
-    residual LUT.
+def _check_k_cent(k_cent: int) -> None:
+    """k_cent must be a power of two — the LUT index and the packed
+    code split by shift/mask, so any other size would compute wrong
+    subspace/centroid indices silently — and at most 256, so that 8
+    codes fit one int64."""
+    if k_cent < 2 or k_cent & (k_cent - 1) or k_cent > 256:
+        raise ValueError(
+            f"k_cent must be a power of two in [2, 256], got {k_cent}"
+        )
 
-    Scale shape: cells are the partition key — a probe touches
-    nprobe partitions, reading 8-byte codes + one 64-int centroid
-    per cell; the encode side adds one broadcast join (centroids)
-    to x47's map-only scan; nothing corpus-sized shuffles more than
-    the one cell assignment. This composes x4e's IVF pruning with
-    x47's 32× scan compression — the two levers that make 10^12
-    vectors probeable.
 
-    r15: the canonical encode is the Arrow kernel, the r14 x47b
-    precedent — the coarse model still trains declaratively (the
-    distributed fixed-point Lloyd), but its ≤8 rows are collected at
-    plan-construction time (the x47e/x49b train-at-construction
-    precedent) and assignment+encode run as one vectorized map-only
-    pass instead of a crossJoin + min-aggregate + ~1k interpreted
-    HOF-fold steps per row. Bit-identity with the declarative
-    _ivfpq_assign_encode is pinned by
-    test_ivfpq_inflight_arrow_matches_declarative plus the unchanged
-    DuckDB oracle (which recomputes the declarative form in SQL).
-    Measured sf0.1 fresh: 33 s → ~6 s (construction 17 s → 3 s,
-    execution 16 s → 2.7 s)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    vecs_fp = _ivfpq_fp(emb)
-    # materialize the (<=8 x 64-int) centroid relation once: it is
-    # referenced by the assignment, the residual join, AND the
-    # query-side cell ranking — without it each reference re-runs
-    # the whole 2-iteration Lloyd chain. Lazy localCheckpoint, not
-    # persist — see the x47c note on bench-honesty; the collect()
-    # below is its materializing action.
-    cent = _ivfpq_coarse(vecs_fp).localCheckpoint(eager=False)
-    codes = _unpack_codes(_ivfpq_assign_encode_arrow(emb, cent.collect()))
-    return _ivfpq_probe_plan(vecs_fp, cent, codes)
+def _check_codebook(codebook: str) -> None:
+    if codebook not in _CODEBOOKS:
+        raise ValueError(
+            f"codebook must be one of {_CODEBOOKS}, got {codebook!r}"
+        )
+
+
+def _ivfpq_model_np(cent_rows: list):
+    """(cell_ids ascending, fixed-point centroid matrix) from the
+    collected ≤8-row coarse model; ascending order makes numpy's
+    first-min argmin reproduce the declarative min-cell tie-break."""
+    import numpy as np
+
+    cent_sorted = sorted((int(r["cell"]), list(r["c"])) for r in cent_rows)
+    cell_ids = np.array([c for c, _ in cent_sorted], dtype=np.int64)
+    cent_fp = np.array([v for _, v in cent_sorted], dtype=np.int64)
+    return cell_ids, cent_fp
+
+
+def _fp_assign_np(x, cent_fp):
+    """numpy twin of extensions._fp_assign over a float batch x:
+    qa = floor(x·10⁴) (the same double multiply + floor), integer L2
+    to every centroid, first-min argmin over cell-ascending rows. Pure
+    int64 arithmetic, so vectorization cannot change a value. Returns
+    (qa, index of the nearest centroid)."""
+    import numpy as np
+
+    qa = np.floor(x * 1e4).astype(np.int64)
+    diff = qa[:, None, :] - cent_fp[None, :, :]
+    return qa, np.argmin((diff * diff).sum(axis=2), axis=1)
+
+
+def _ivfpq_encode_arrow(
+    vecs: DataFrame,
+    cent_rows: list,
+    cb_rows: list | None = None,
+    k_cent: int = _PQ_K,
+) -> DataFrame:
+    """The engine's one encode: with the collected models, assignment
+    + residual + per-subspace argmin run as one map-only Arrow kernel
+    over (vec_id, embedding), emitting the packed (vec_id, cell, code)
+    relation that x47d/x47h probe in flight, the persisted index
+    stores, and the streaming ingest appends.
+
+    The codebook decides only the residual: the mixer
+    (``cb_rows`` None) encodes the float residual x − c/10⁴ (two
+    exactly-specified IEEE-double ops, as in the oracle) against the
+    mixer codebook of ``k_cent`` entries; a trained codebook encodes
+    the integer residual qa − c, which equals floor((x − c/10⁴)·10⁴)
+    because c is an integer, so it never touches floats. Both then run
+    _subspace_encode_np. Bit-identity with the declarative forms is
+    pinned by test_ivfpq_inflight_arrow_matches_declarative and
+    test_ivfpq_trained_arrow_matches_declarative, plus the unchanged
+    DuckDB oracles. ``k_cent`` exists for the recall sweep
+    (tools/recall_ivfpq_sf1.py; 256 = 8-bit codes)."""
+    import numpy as np
+    import pyarrow as pa
+
+    _check_k_cent(k_cent)
+    cell_ids, cent_fp = _ivfpq_model_np(cent_rows)
+    cent_f = cent_fp.astype(np.float64) / 1e4
+    books = _pq_books(cb_rows, k_cent)
+    bits = (k_cent - 1).bit_length()
+
+    def kern(batches):
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            x = _batch_vectors(batch)
+            qa, idx = _fp_assign_np(x, cent_fp)
+            resid = x - cent_f[idx] if cb_rows is None else qa - cent_fp[idx]
+            cds, _ = _subspace_encode_np(resid, books)
+            yield pa.RecordBatch.from_pydict(
+                {
+                    "vec_id": batch.column("vec_id").cast(pa.int64()),
+                    "cell": pa.array(cell_ids[idx], pa.int64()),
+                    "code": pa.array(_pack_np(cds, bits), pa.int64()),
+                }
+            )
+
+    return vecs.select("vec_id", "embedding").mapInArrow(
+        kern, "vec_id long, cell long, code long"
+    )
+
+
+def _ivfpq_resid_sub_arrow(vecs: DataFrame, cent_rows: list) -> DataFrame:
+    """The trained codebook's training relation in one map-only pass:
+    the INTEGER residual subspaces (vec_id, cell, s, qa: 8 ints) of
+    every vector against its cell. Exact int64 arithmetic throughout
+    (_fp_assign_np, then qa − cent), pinned against the declarative
+    chain by test_ivfpq_trained_arrow_matches_declarative."""
+    import numpy as np
+    import pyarrow as pa
+
+    cell_ids, cent_fp = _ivfpq_model_np(cent_rows)
+
+    def kern(batches):
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
+                continue
+            qa, idx = _fp_assign_np(_batch_vectors(batch), cent_fp)
+            cells = pa.array(cell_ids[idx], pa.int64())
+            resid = qa - cent_fp[idx]
+            vid = batch.column("vec_id").cast(pa.int64())
+            offs = pa.array(np.arange(n + 1, dtype=np.int32) * _PQ_D)
+            for s in range(_PQ_S):
+                sub = pa.ListArray.from_arrays(
+                    offs,
+                    pa.array(
+                        resid[:, s * _PQ_D : (s + 1) * _PQ_D].ravel(),
+                        pa.int64(),
+                    ),
+                )
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        vid,
+                        cells,
+                        pa.array(np.full(n, s, dtype=np.int64), pa.int64()),
+                        sub,
+                    ],
+                    ["vec_id", "cell", "s", "qa"],
+                )
+
+    return vecs.select("vec_id", "embedding").mapInArrow(
+        kern, "vec_id long, cell long, s long, qa array<long>"
+    )
+
+
+def _ivfpq_train(vecs_fp: DataFrame, codebook: str) -> tuple:
+    """The index's trained state: (cent, cent_rows, cb, cb_rows), each
+    model as a DataFrame (for the writes and the probe's cell ranking)
+    and as its collected rows (for the Arrow kernels). ``cent`` is the
+    coarse model, x45b's fixed-point sampled Lloyd over full vectors
+    (8 cells, 2 iterations, deterministic 1/4 sample), (cell, c).
+    ``cb`` is None for the mixer codebook; for the trained one it is
+    the same Lloyd per subspace over the integer residuals (x47c's
+    recipe: seeds = the first 16 vec_ids' residuals), (s, cell, c).
+
+    Both are lazy localCheckpoints, NOT persists: each is referenced
+    by several branches (the assignment's argmin reads its input
+    twice, the probe ranks cells against it), and a persist entry is
+    keyed by canonical plan in the CacheManager, so it would survive
+    across the bench's rebuilt DataFrames and let a "fresh" timed run
+    silently skip training; a lazy local checkpoint is scoped to THIS
+    DataFrame object and recomputes per rebuild."""
+    _check_codebook(codebook)
+    cent = _fp_lloyd(vecs_fp, _IVFPQ_CELLS).localCheckpoint(eager=False)
+    cent_rows = cent.collect()
+    if codebook == "mixer":
+        return cent, cent_rows, None, None
+    rvecs = (
+        _ivfpq_resid_sub_arrow(vecs_fp, cent_rows)
+        .select("vec_id", "s", "qa")
+        .localCheckpoint(eager=False)
+    )
+    cb = _fp_lloyd(rvecs, _PQ_K, key="s").localCheckpoint(eager=False)
+    return cent, cent_rows, cb, cb.collect()
+
+
+def _unpack_codes(packed: DataFrame, k_cent: int = _PQ_K) -> DataFrame:
+    """(vec_id, cell, code) → (vec_id, cell, cd0..cd7): codegen'd
+    shift/mask unpack at scan time (the x4n bit-ops precedent); the
+    pack is _pack_np inside the encode kernel."""
+    bits = (k_cent - 1).bit_length()
+    return packed.select(
+        "vec_id",
+        "cell",
+        *[
+            F.shiftright(F.col("code"), bits * s)
+            .bitwiseAND(F.lit(k_cent - 1))
+            .cast("long")
+            .alias(f"cd{s}")
+            for s in range(_PQ_S)
+        ],
+    )
 
 
 def _ivfpq_queries(
@@ -1129,13 +1238,14 @@ def _ivfpq_probed(
 ) -> DataFrame:
     """Per query: the nprobe nearest cells by integer centroid
     distance (min-cell tie-break), with the winning centroid vector
-    attached — (query_id, qe, cell, centvec, dist, rn)."""
+    attached — (query_id, qe, qqa, cell, centvec, dist, rn)."""
     qc = q.crossJoin(F.broadcast(cent)).select(
         "query_id",
         "qe",
+        "qqa",
         "cell",
         F.col("c").alias("centvec"),
-        _pqfp_dist(F.col("qqa"), F.col("c")).alias("dist"),
+        _fp_sqdist(F.col("qqa"), F.col("c")).alias("dist"),
     )
     wq = Window.partitionBy("query_id").orderBy("dist", "cell")
     return qc.withColumn("rn", F.row_number().over(wq)).filter(
@@ -1147,297 +1257,195 @@ def _ivfpq_probe_plan(
     vecs_fp: DataFrame,
     cent: DataFrame,
     codes: DataFrame,
+    cb_rows: list | None = None,
     nprobe: int = _IVFPQ_NPROBE,
     k_cent: int = _PQ_K,
     topk: int = 5,
     query_filter: Column | None = None,
 ) -> DataFrame:
-    """The probe side shared by x47d (in-flight codes) and x47e
-    (persisted codes): rank cells per query, build the per-(query,
-    cell) S·k_cent-double residual LUT, ADC-scan the codes relation,
-    top-k per query. ``codes`` must expose (vec_id, cell, cd0..cd7);
-    the adc fold's float ADDITION ORDER (s ascending from 0.0) is
-    part of the graded contract — both callers produce bit-identical
-    adc_raw. The (nprobe, k_cent, topk, query_filter) knobs exist for
-    the recall sweep (tools/recall_ivfpq_sf1.py); graded defaults
-    (2, 16, 5, %250) reproduce the r13 plan exactly. k_cent must be a
-    power of two (the LUT flat index decomposes by shift/mask) —
-    enforced, since a non-power-of-two would compute wrong subspace/
-    centroid indices silently (ADVICE r14)."""
-    if k_cent < 2 or k_cent & (k_cent - 1):
-        raise ValueError(
-            f"k_cent must be a power of two >= 2, got {k_cent}"
-        )
+    """The probe of the engine, shared by the in-flight and the
+    persisted plans: rank cells per query, build one ADC lookup table
+    of S·k_cent entries per (query, probed cell), equi-join the packed
+    ``codes`` (vec_id, cell, code) on cell against the broadcast
+    tables, sum 8 lookups per candidate, top-k per query by
+    (adc, vec_id).
+
+    The ADC scorer is the only code that branches on the codebook,
+    because the two oracles differ:
+
+    * mixer (``cb_rows`` None): each entry is the strict-fold float
+      distance from the query's float residual to a mixer centroid,
+      and the sum adds s = 0..7 from 0.0 in order — that addition
+      order is part of the x47d oracle. Output ``adc_dist``, rounded
+      to 4 places;
+    * trained: each entry is the integer distance from the query's
+      integer residual to a trained centroid (cells that emptied in
+      training hold zeros and are never looked up), and the sum is an
+      exact BIGINT, order-free. Output ``adc_fp``.
+
+    (nprobe, k_cent, topk, query_filter) exist for the recall sweep
+    (tools/recall_ivfpq_sf1.py); the graded defaults are
+    (2, 16, 5, every 250th vector)."""
+    _check_k_cent(k_cent)
     bits = (k_cent - 1).bit_length()
-    cbflat = _pq_cb_flat(k_cent)
     probed = _ivfpq_probed(
         _ivfpq_queries(vecs_fp, query_filter), cent, nprobe
     )
-    # per (query, cell): residual LUT (S·k_cent doubles)
-    qresid = _residual_col(F.col("qe"), F.col("centvec"))
-    lut = F.transform(
-        F.sequence(F.lit(0), F.lit(_PQ_S * k_cent - 1)),
-        lambda i: _pq_dist_expr(
-            F.col("qr"),
-            F.shiftright(i, bits),
-            i.bitwiseAND(F.lit(k_cent - 1)),
-            cbflat,
-            k_cent,
-        ),
+    if cb_rows is None:
+        cbflat = _pq_cb_flat(k_cent)
+        qr = _residual_col(F.col("qe"), F.col("centvec"))
+
+        def entry(i):
+            return _pq_dist_expr(
+                F.col("qr"),
+                F.shiftright(i, bits),
+                i.bitwiseAND(F.lit(k_cent - 1)),
+                cbflat,
+                k_cent,
+            )
+
+        adc: Column = F.lit(0.0)
+    else:
+        # flat index (s·k_cent + c)·8 + d, as the mixer's _pq_cb_flat
+        flat = [0] * (_PQ_S * k_cent * _PQ_D)
+        for r in cb_rows:
+            base = (int(r["s"]) * k_cent + int(r["cell"])) * _PQ_D
+            flat[base : base + _PQ_D] = [int(v) for v in r["c"]]
+        cbflat = _int_array_lit(flat).cast("array<bigint>")
+        qr = F.zip_with(F.col("qqa"), F.col("centvec"), lambda x, c: x - c)
+
+        def entry(i):
+            return _fp_sqdist(
+                F.slice(F.col("qr"), F.shiftright(i, bits) * _PQ_D + 1, _PQ_D),
+                F.slice(cbflat, i * _PQ_D + 1, _PQ_D),
+            )
+
+        adc = F.lit(0).cast("long")
+    lut = F.transform(F.sequence(F.lit(0), F.lit(_PQ_S * k_cent - 1)), entry)
+    qlut = probed.select("query_id", "cell", qr.alias("qr")).select(
+        "query_id", "cell", lut.alias("lut")
     )
-    qlut = probed.select(
-        "query_id", "cell", qresid.alias("qr")
-    ).select("query_id", "cell", lut.alias("lut"))
-    pairs = codes.join(F.broadcast(qlut), "cell")
-    adc: Column = F.lit(0.0)
+    pairs = _unpack_codes(codes, k_cent).join(F.broadcast(qlut), "cell")
     for s in range(_PQ_S):
         adc = adc + F.element_at(
             F.col("lut"), F.lit(s * k_cent) + F.col(f"cd{s}").cast("int") + 1
         )
-    scored = pairs.select(
-        "query_id", "vec_id", "cell", adc.alias("adc_raw")
+    scored = pairs.select("query_id", "vec_id", "cell", adc.alias("adc_raw"))
+    score = (
+        stable_round(F.col("adc_raw"), 4).alias("adc_dist")
+        if cb_rows is None
+        else F.col("adc_raw").alias("adc_fp")
     )
     w = Window.partitionBy("query_id").orderBy("adc_raw", "vec_id")
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= topk)
-        .select(
-            "query_id",
-            "vec_id",
-            "cell",
-            stable_round(F.col("adc_raw"), 4).alias("adc_dist"),
-            "rank",
-        )
+        .select("query_id", "vec_id", "cell", score, "rank")
     )
 
 
+def _ivfpq_inflight(emb: DataFrame, codebook: str) -> DataFrame:
+    """Train, encode and probe in one plan (x47d, x47h). The ≤8-row
+    coarse model and ≤128-row codebook train declaratively (the
+    distributed fixed-point Lloyd); their rows are collected at
+    plan-construction time (the x47e/x49b train-at-construction
+    precedent) to drive the map-only Arrow encode."""
+    vecs_fp = _ivfpq_fp(emb)
+    cent, cent_rows, _, cb_rows = _ivfpq_train(vecs_fp, codebook)
+    codes = _ivfpq_encode_arrow(vecs_fp, cent_rows, cb_rows)
+    return _ivfpq_probe_plan(vecs_fp, cent, codes, cb_rows)
+
+
 # ---------------------------------------------------------------------------
-# X47e — persisted IVF-PQ index: build once, probe from the artifact,
-# maintain incrementally (assign + encode + append; no retrain)
+# The persisted index: build once, probe from the artifact, maintain
+# incrementally (assign + encode + append; no retrain)
 # ---------------------------------------------------------------------------
 
 
-def default_ivfpq_dir(sf_dir: str) -> str:
+def default_ivfpq_dir(sf_dir: str, codebook: str = "mixer") -> str:
     """Scratch location for the persisted IVF-PQ index over
     ``sf_dir``'s embeddings, keyed by source identity (path + mtime +
     size) so regenerated testdata re-indexes instead of reusing a
-    stale build."""
+    stale build, and by codebook."""
+    suffix = "" if codebook == "mixer" else f"_{codebook}"
     return scratch_dir(
-        "spark_graft_ivfpq",
+        f"spark_graft_ivfpq{suffix}",
         table_path(sf_dir, "embeddings"),
-        f"{_IVFPQ_CELLS}c_{_PQ_S}s{_PQ_K}k",
+        f"{_IVFPQ_CELLS}c_{_PQ_S}s{_PQ_K}k{suffix}",
     )
 
 
-def _unpack_codes(packed: DataFrame) -> DataFrame:
-    """(vec_id, cell, code) → (vec_id, cell, cd0..cd7): codegen'd
-    shift/mask unpack at scan time (the x4n bit-ops precedent). The
-    PACK direction lives inside _ivfpq_assign_encode_arrow (both the
-    build and append paths pack there), so this is the only half
-    needed as a Column expression; the round-trip is pinned by
-    test_ivfpq_persisted_matches_inflight, whose unpacked codes must
-    reproduce x47d's declarative cd0..cd7 exactly."""
-    return packed.select(
-        "vec_id",
-        "cell",
-        *[
-            F.shiftright(F.col("code"), 4 * s)
-            .bitwiseAND(F.lit(_PQ_K - 1))
-            .cast("long")
-            .alias(f"cd{s}")
-            for s in range(_PQ_S)
-        ],
-    )
+def _index_models(
+    spark: SparkSession, index_dir: str, codebook: str
+) -> tuple[DataFrame, list | None]:
+    """The persisted trained state: the coarse centroids (a DataFrame,
+    for the probe's cell ranking) and the trained codebook's rows
+    (None for the mixer)."""
+    _check_codebook(codebook)
+    cent = spark.read.parquet(f"{index_dir}/centroids")
+    if codebook == "mixer":
+        return cent, None
+    return cent, spark.read.parquet(f"{index_dir}/codebook").collect()
 
 
-def _ivfpq_assign_encode_arrow(
-    vecs: DataFrame,
-    cent_rows: list,
-    k_cent: int = _PQ_K,
-    packed: bool = True,
-) -> DataFrame:
-    """Arrow-kernel twin of _ivfpq_assign_encode for the BUILD path
-    (build_ivfpq_index / append_ivfpq_index, where the ≤8-row trained
-    centroid table is already collected): assign + residual-PQ encode
-    fused into one map-only kernel, emitting the PACKED
-    (vec_id, cell, code) relation directly.
+def build_ivfpq_index(
+    spark: SparkSession, sf_dir: str, out_dir: str, codebook: str = "mixer"
+) -> None:
+    """Build the persisted IVF-PQ index ONCE: train (_ivfpq_train),
+    encode every vector, and persist under ``out_dir``:
 
-    Bit-identity with the declarative path (end-to-end pinned by
-    test_ivfpq_persisted_matches_inflight):
-
-    * the cell assignment is pure int64 arithmetic (fixed-point
-      floor(x·10⁴) distances) — order-free, so vectorization cannot
-      change it; first-min argmin over cell-ascending order = the
-      min-cell tie-break;
-    * the residual re_d = x_d − c_d/10⁴ is the same two IEEE-double
-      ops; the encode distance accumulates d-ascending as an explicit
-      loop (the pq_encode_arrow discipline), argmin first-min.
-
-    Takes ``vecs`` as (vec_id, embedding) — no qa column needed; the
-    fixed-point view is computed in-kernel. At sf1 this replaces a
-    crossJoin + min-aggregate + two joins + ~4k interpreted lambda
-    steps per row with 8 vectorized passes (build: 24 s → ~3 s).
-
-    (k_cent, packed) exist for the recall sweep
-    (tools/recall_ivfpq_sf1.py): ``k_cent`` sizes the mixer codebook
-    (graded default 16 = 4-bit codes); ``packed=False`` emits the
-    codes as cd0..cd7 columns instead of one int64 — required at
-    k_cent=256, where 8·8 packed bits would overflow into the int64
-    sign bit. Graded defaults (16, True) are the r13 kernel
-    verbatim."""
-    import numpy as np
-    import pyarrow as pa
-
-    if k_cent < 2 or k_cent & (k_cent - 1):
-        raise ValueError(
-            f"k_cent must be a power of two >= 2, got {k_cent}"
-        )
-    cent_sorted = sorted((int(r["cell"]), list(r["c"])) for r in cent_rows)
-    cell_ids = np.array([c for c, _ in cent_sorted], dtype=np.int64)
-    cent_fp = np.array([v for _, v in cent_sorted], dtype=np.int64)
-    cent_f = cent_fp.astype(np.float64) / 1e4
-    cb = np.asarray(_pq_codebook(k_cent), dtype=np.float64) / 256.0
-    s_dims, d_dims = _PQ_S, _PQ_D
-    bits = (k_cent - 1).bit_length()
-
-    def kern(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            x = np.asarray(
-                batch.column("embedding").flatten(), dtype=np.float64
-            ).reshape(n, s_dims * d_dims)
-            qa = np.floor(x * 1e4).astype(np.int64)
-            # integer assign: Σ_d (qa_d − c_d)², first-min over
-            # cell-ascending order == min-cell tie-break
-            diff = qa[:, None, :] - cent_fp[None, :, :]
-            idx = np.argmin((diff * diff).sum(axis=2), axis=1)
-            cells = cell_ids[idx]
-            resid = x - cent_f[idx]
-            cds = np.zeros((s_dims, n), dtype=np.int64)
-            for s in range(s_dims):
-                rs = resid[:, s * d_dims : (s + 1) * d_dims]
-                acc = np.zeros((n, k_cent), dtype=np.float64)
-                for d in range(d_dims):
-                    t = rs[:, d : d + 1] - cb[s, :, d][None, :]
-                    acc += t * t
-                cds[s] = np.argmin(acc, axis=1).astype(np.int64)
-            out = {
-                "vec_id": batch.column("vec_id").cast(pa.int64()),
-                "cell": pa.array(cells, pa.int64()),
-            }
-            if packed:
-                codes = np.zeros(n, dtype=np.int64)
-                for s in range(s_dims):
-                    codes |= cds[s] << (bits * s)
-                out["code"] = pa.array(codes, pa.int64())
-            else:
-                for s in range(s_dims):
-                    out[f"cd{s}"] = pa.array(cds[s], pa.int64())
-            yield pa.RecordBatch.from_pydict(out)
-
-    schema = (
-        "vec_id long, cell long, code long"
-        if packed
-        else "vec_id long, cell long, "
-        + ", ".join(f"cd{s} long" for s in range(_PQ_S))
-    )
-    return vecs.select("vec_id", "embedding").mapInArrow(kern, schema)
-
-
-def build_ivfpq_index(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
-    """Build the persisted IVF-PQ index ONCE: train the coarse
-    quantizer (x45b's fixed-point sampled Lloyd — deterministic,
-    integer-exact), assign + residual-PQ-encode every vector, and
-    persist three artifacts under ``out_dir``:
-
-    * ``centroids`` — the ≤8-row (cell, c: array<bigint>) coarse
-      model (the only trained state);
-    * ``codes`` — (vec_id, code: int64) parquet PARTITIONED BY cell,
-      one file per cell (repartition-by-key before the partitioned
-      write, the small-files guard build_ann_index documents);
+    * ``centroids`` — the ≤8-row (cell, c: array<bigint>) coarse model;
+    * ``codebook`` — for ``codebook="trained"`` only, the ≤128-row
+      (s, cell, c) residual codebook;
     * ``manifest`` — one row: n_base, the trained-corpus size the
-      retrain trigger compares against (ivfpq_needs_retrain).
+      retrain trigger compares against (ivfpq_needs_retrain);
+    * ``codes`` — (vec_id, code: int64) parquet PARTITIONED BY cell,
+      one file per cell.
 
     Codes are written LAST: ``codes/_SUCCESS`` is the build-complete
-    marker probes check, so a killed build can never serve centroids
+    marker probes check, so a killed build can never serve models
     without codes or vice versa."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    vecs_fp = _ivfpq_fp(emb)
-    cent = _ivfpq_coarse(vecs_fp).localCheckpoint(eager=False)
+    vecs_fp = _ivfpq_fp(load_table(spark, sf_dir, "embeddings"))
+    cent, cent_rows, cb, cb_rows = _ivfpq_train(vecs_fp, codebook)
     cent.write.mode("overwrite").parquet(f"{out_dir}/centroids")
+    if cb is not None:
+        cb.write.mode("overwrite").parquet(f"{out_dir}/codebook")
     n_base = vecs_fp.count()
     spark.createDataFrame([(n_base,)], "n_base long").write.mode(
         "overwrite"
     ).parquet(f"{out_dir}/manifest")
-    # build path = imperative (jobs fine): collect the ≤8-row model
-    # once and run the fused Arrow kernel — bit-identical to the
-    # declarative _ivfpq_assign_encode (pinned end-to-end by
-    # test_ivfpq_persisted_matches_inflight against x47d)
-    codes = _ivfpq_assign_encode_arrow(
-        emb, spark.read.parquet(f"{out_dir}/centroids").collect()
-    )
-    codes.repartition("cell").write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(f"{out_dir}/codes")
-
-
-def _guard_fresh_vec_ids(
-    spark: SparkSession, index_dir: str, new_emb: DataFrame, what: str
-) -> None:
-    """Fail-loud duplicate-id guard shared by the IVF-PQ append paths
-    (ADVICE r14 — the append_ann_index discipline): vec_id is the
-    index's primary key, and a re-appended id leaves two code rows
-    per vector, silently corrupting ADC sums (the trained probe's
-    groupBy(query_id, vec_id).sum doubles that vector's distance).
-    One broadcast semi-join of the persisted codes tree's vec_id
-    column against the batch's distinct ids; updates are
-    delete-and-rebuild, never silent overwrite."""
-    new_ids = new_emb.select("vec_id").distinct()
-    clash = (
-        spark.read.parquet(f"{index_dir}/codes")
-        .select("vec_id")
-        .join(F.broadcast(new_ids), "vec_id", "left_semi")
-        .limit(5)
-        .collect()
-    )
-    if clash:
-        raise ValueError(
-            f"{what}: vec_id(s) already present in the index "
-            f"(e.g. {sorted(r['vec_id'] for r in clash)}); appends must "
-            "carry fresh ids — rebuild to replace existing vectors"
-        )
+    codes = _ivfpq_encode_arrow(vecs_fp, cent_rows, cb_rows)
+    _write_index(codes, f"{out_dir}/codes", "overwrite", "cell")
 
 
 def append_ivfpq_index(
-    spark: SparkSession, index_dir: str, new_emb: DataFrame
+    spark: SparkSession,
+    index_dir: str,
+    new_emb: DataFrame,
+    codebook: str = "mixer",
 ) -> None:
     """Incremental maintenance: fold a new vector batch into the
-    persisted index WITHOUT retraining — read the frozen centroids,
-    assign + residual-encode the batch through the SAME
-    _ivfpq_assign_encode path the build used, and append the packed
-    codes into the cell-partitioned tree (each task appends whole
-    cells; existing files are never rewritten).
+    persisted index WITHOUT retraining — encode it against the frozen
+    models through the same path the build used, and append the
+    packed codes into the cell-partitioned tree. A batch that reuses
+    an indexed vec_id fails loudly (_guard_fresh_vec_ids).
 
-    Retrain trigger (documented, checked by ivfpq_needs_retrain): the
-    coarse quantizer is trained state — appends re-use it, so a
-    drifting ingest distribution degrades cell balance and residual
-    scale rather than failing loudly. Retrain (full rebuild) when the
-    appended mass exceeds ~30% of n_base, or sooner if the probe
-    recall audit (tools/recall_ivfpq_sf1.py — recall@5 vs exact kNN,
-    corpus + planted-pair lanes, floors in RECALL_IVFPQ_SF1.json)
-    shows drift; the trigger-fires → rebuild → probe-parity loop is
-    exercised end-to-end by test_ivfpq_retrain_after_drift_end_to_end.
-    At 100 TB this is the standard IVF serving discipline:
-    appends are cheap map-side work + a partitioned append; the
-    rebuild is the rare scheduled job."""
-    _guard_fresh_vec_ids(spark, index_dir, new_emb, "append_ivfpq_index")
-    cent_rows = spark.read.parquet(f"{index_dir}/centroids").collect()
-    codes = _ivfpq_assign_encode_arrow(new_emb, cent_rows)
-    codes.repartition("cell").write.mode("append").partitionBy(
-        "cell"
-    ).parquet(f"{index_dir}/codes")
+    Retrain trigger (checked by ivfpq_needs_retrain): the models are
+    trained state, so a drifting ingest distribution degrades cell
+    balance and residual scale rather than failing loudly. Retrain
+    (full rebuild) when the appended mass exceeds ~30% of n_base, or
+    sooner if the recall audit (tools/recall_ivfpq_sf1.py, floors in
+    RECALL_IVFPQ_SF1.json) shows drift; the trigger-fires → rebuild →
+    probe-parity loop is exercised end-to-end by
+    test_ivfpq_retrain_after_drift_end_to_end. At 100 TB this is the
+    standard IVF serving discipline: appends are cheap map-side work
+    + a partitioned append; the rebuild is the rare scheduled job."""
+    _guard_fresh_vec_ids(
+        spark, f"{index_dir}/codes", new_emb, "append_ivfpq_index"
+    )
+    cent, cb_rows = _index_models(spark, index_dir, codebook)
+    codes = _ivfpq_encode_arrow(new_emb, cent.collect(), cb_rows)
+    _write_index(codes, f"{index_dir}/codes", "append", "cell")
 
 
 def ivfpq_needs_retrain(
@@ -1455,7 +1463,7 @@ def ivfpq_needs_retrain(
 
 
 def probe_ivfpq_index(
-    spark: SparkSession, sf_dir: str, index_dir: str
+    spark: SparkSession, sf_dir: str, index_dir: str, codebook: str = "mixer"
 ) -> DataFrame:
     """Serve the graded query set from the PERSISTED index with
     static partition pruning: rank cells per query against the
@@ -1465,9 +1473,9 @@ def probe_ivfpq_index(
     partition predicates), and read ONLY those cell directories of
     the codes tree. The scan's ``PartitionFilters`` carries the cell
     IN-list; unprobed cells are never opened. Everything downstream
-    (LUT, ADC fold, top-5) is _ivfpq_probe_plan, shared with x47d."""
+    is _ivfpq_probe_plan, shared with the in-flight plans."""
     vecs_fp = _ivfpq_fp(load_table(spark, sf_dir, "embeddings"))
-    cent = spark.read.parquet(f"{index_dir}/centroids")
+    cent, cb_rows = _index_models(spark, index_dir, codebook)
     probed_cells = sorted(
         int(r["cell"])
         for r in _ivfpq_probed(_ivfpq_queries(vecs_fp), cent)
@@ -1475,343 +1483,62 @@ def probe_ivfpq_index(
         .distinct()
         .collect()
     )
-    codes = _unpack_codes(
-        spark.read.parquet(f"{index_dir}/codes").filter(
-            F.col("cell").isin(probed_cells)
-        )
+    codes = spark.read.parquet(f"{index_dir}/codes").filter(
+        F.col("cell").isin(probed_cells)
     )
-    return _ivfpq_probe_plan(vecs_fp, cent, codes)
+    return _ivfpq_probe_plan(vecs_fp, cent, codes, cb_rows)
+
+
+def _ivfpq_persisted(
+    spark: SparkSession, sf_dir: str, codebook: str
+) -> DataFrame:
+    """Probe the default index over ``sf_dir``, building it on first
+    use (write-once)."""
+    index_dir = default_ivfpq_dir(sf_dir, codebook)
+    if not pathlib.Path(index_dir, "codes", "_SUCCESS").exists():
+        build_ivfpq_index(spark, sf_dir, index_dir, codebook)
+    return probe_ivfpq_index(spark, sf_dir, index_dir, codebook)
+
+
+@query("x47d_ivfpq_topk", oracle=_x47d_oracle())
+def x47d_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X47d: IVF-PQ end to end with the mixer codebook — the standard
+    billion-vector serving layout, every stage oracle-graded: (1)
+    coarse cells from the fixed-point sampled Lloyd (integer-exact ⇒
+    the partition key grades bit-identically), (2) PQ codes of the
+    RESIDUAL x − cent against the mixer codebook (residual terms are
+    exact-double subtractions; distances strict folds), (3) a query
+    ranks cells by integer centroid distance, probes the nprobe=2
+    nearest, and ADC-scans ONLY those cells' 8-byte codes with its
+    per-cell residual LUT.
+
+    Scale shape: cells are the partition key — a probe touches
+    nprobe partitions, reading 8-byte codes + one 64-int centroid
+    per cell; the encode is one map-only Arrow pass; nothing
+    corpus-sized shuffles. This composes x4e's IVF pruning with x47's
+    32× scan compression — the two levers that make 10^12 vectors
+    probeable. Bit-identity of the Arrow encode with the declarative
+    _ivfpq_assign_encode (which the DuckDB oracle recomputes in SQL)
+    is pinned by test_ivfpq_inflight_arrow_matches_declarative."""
+    return _ivfpq_inflight(load_table(spark, sf_dir, "embeddings"), "mixer")
 
 
 @query("x47e_ivfpq_persisted", oracle=_x47d_oracle())
 def x47e_ivfpq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X47e: the PRODUCTION similarity-search deliverable — x47d's
-    IVF-PQ probe served from a persisted index instead of an
-    in-flight build. First call builds the artifact (trained
-    centroids + cell-partitioned packed codes + manifest,
-    build_ivfpq_index); every probe after that reads ≤ nprobe-probed
-    cell partitions of 8-byte codes plus the ≤8-row centroid table —
-    the corpus parquet is touched only for the query vectors
-    themselves. Graded with x47d's ORACLE VERBATIM: same cells, same
-    codes (shared _ivfpq_assign_encode), same ADC float order, so
-    the persisted round-trip must be hash-identical to the in-flight
-    plan. Incremental maintenance (append without retrain) is
-    exercised by tests/test_ann_index.py's append-loop.
+    """X47e: the PRODUCTION similarity-search deliverable — x47d
+    served from the persisted mixer index. The first call builds the
+    artifact (build_ivfpq_index); every probe after that reads ≤
+    nprobe-probed cell partitions of 8-byte codes plus the ≤8-row
+    centroid table — the corpus parquet is touched only for the query
+    vectors themselves. Graded with x47d's ORACLE VERBATIM: same
+    cells, same codes, same ADC float order, so the persisted
+    round-trip must be hash-identical to the in-flight plan.
 
     Scale shape: at 10^12 vectors the index is the only thing a
     probe reads — nprobe/ncells of an 8 TB code table (vs 256 TB of
     raw vectors), partition-pruned statically; appends are map-side
     encode + partitioned append; the coarse model is 8 rows."""
-    index_dir = default_ivfpq_dir(sf_dir)
-    if not pathlib.Path(index_dir, "codes", "_SUCCESS").exists():
-        build_ivfpq_index(spark, sf_dir, index_dir)
-    return probe_ivfpq_index(spark, sf_dir, index_dir)
-
-
-# ---------------------------------------------------------------------------
-# X47h — IVF-PQ with a TRAINED residual codebook (integer-exact end to end)
-# ---------------------------------------------------------------------------
-
-
-def _ivfpq_assign_cells(vecs_fp: DataFrame, cent: DataFrame) -> DataFrame:
-    """(vec_id, cell): nearest coarse centroid by integer distance,
-    min-cell tie-break — the assignment half of _ivfpq_assign_encode,
-    shared with the trained-residual pipeline."""
-    a = vecs_fp.crossJoin(F.broadcast(cent)).select(
-        "vec_id",
-        "cell",
-        _pqfp_dist(F.col("qa"), F.col("c")).alias("dist"),
-    )
-    m = a.groupBy("vec_id").agg(F.min("dist").alias("md"))
-    return (
-        a.join(m, "vec_id")
-        .filter(F.col("dist") == F.col("md"))
-        .groupBy("vec_id")
-        .agg(F.min("cell").alias("cell"))
-    )
-
-
-def _subspace_explode(vec: Column) -> Column:
-    """array<struct<s, qa>>: ``vec`` (64 ints) split into its 8
-    8-int subspace vectors, for posexploding into the (id, s, qa)
-    long form _pqfp_lloyd/_pqfp_assign key on."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(_PQ_S - 1)),
-        lambda s: F.struct(
-            s.cast("long").alias("s"),
-            F.transform(
-                F.sequence(F.lit(0), F.lit(_PQ_D - 1)),
-                lambda d: F.element_at(vec, (s * _PQ_D + d + 1).cast("int")),
-            ).alias("qa"),
-        ),
-    )
-
-
-def _ivfpq_model_np(cent_rows: list):
-    """(cell_ids ascending, fixed-point centroid matrix) from the
-    collected ≤8-row coarse model — shared by the trained-residual
-    Arrow kernels; ascending order makes numpy's first-min argmin
-    reproduce the declarative min-cell tie-break."""
-    import numpy as np
-
-    cent_sorted = sorted((int(r["cell"]), list(r["c"])) for r in cent_rows)
-    cell_ids = np.array([c for c, _ in cent_sorted], dtype=np.int64)
-    cent_fp = np.array([v for _, v in cent_sorted], dtype=np.int64)
-    return cell_ids, cent_fp
-
-
-def _ivfpq_resid_sub_arrow(vecs: DataFrame, cent_rows: list) -> DataFrame:
-    """Arrow twin of the declarative assign + _subspace_explode chain
-    (r15): one map-only pass emitting the INTEGER residual subspace
-    long form (vec_id, cell, s, qa: 8 ints) — the relation the
-    residual-codebook Lloyd trains on. Bit-identity with the
-    declarative chain holds because every step is exact int64
-    arithmetic: qa = floor(x·10⁴) (same double multiply+floor), cell
-    = first-min integer L2 over cell-ascending order (= min-cell
-    tie-break), residual = qa − cent exactly. Pinned end-to-end by
-    test_ivfpq_trained_arrow_matches_declarative plus the unchanged
-    x47h DuckDB oracle (which recomputes the declarative form)."""
-    import numpy as np
-    import pyarrow as pa
-
-    cell_ids, cent_fp = _ivfpq_model_np(cent_rows)
-    s_dims, d_dims = _PQ_S, _PQ_D
-
-    def kern(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            x = np.asarray(
-                batch.column("embedding").flatten(), dtype=np.float64
-            ).reshape(n, s_dims * d_dims)
-            qa = np.floor(x * 1e4).astype(np.int64)
-            diff = qa[:, None, :] - cent_fp[None, :, :]
-            idx = np.argmin((diff * diff).sum(axis=2), axis=1)
-            cells = pa.array(cell_ids[idx], pa.int64())
-            resid = qa - cent_fp[idx]
-            vid = batch.column("vec_id").cast(pa.int64())
-            offs = pa.array(np.arange(n + 1, dtype=np.int32) * d_dims)
-            for s in range(s_dims):
-                sub = pa.ListArray.from_arrays(
-                    offs,
-                    pa.array(
-                        resid[:, s * d_dims : (s + 1) * d_dims].ravel(),
-                        pa.int64(),
-                    ),
-                )
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        vid,
-                        cells,
-                        pa.array(np.full(n, s, dtype=np.int64), pa.int64()),
-                        sub,
-                    ],
-                    ["vec_id", "cell", "s", "qa"],
-                )
-
-    return vecs.select("vec_id", "embedding").mapInArrow(
-        kern, "vec_id long, cell long, s long, qa array<long>"
-    )
-
-
-def _ivfpq_trained_encode_arrow(
-    vecs: DataFrame, cent_rows: list, cb_rows: list
-) -> DataFrame:
-    """Arrow twin of the declarative trained-residual ENCODE (r15,
-    the x47b/x47d canonical-kernel precedent): with both collected
-    models (≤8-row coarse, ≤128-row residual codebook), assignment +
-    residual + per-subspace code argmin run as one vectorized
-    map-only pass, emitting the (vec_id, s, cd, cell) long form the
-    probe joins on. All-int64 arithmetic — no float anywhere, so
-    vectorization cannot change a single value; first-min argmin over
-    cd-ascending order = the declarative min-cd tie-break. Replaces a
-    crossJoin assign + broadcast-join encode with ~a thousand
-    interpreted HOF-fold steps per row."""
-    import numpy as np
-    import pyarrow as pa
-
-    cell_ids, cent_fp = _ivfpq_model_np(cent_rows)
-    s_dims, d_dims = _PQ_S, _PQ_D
-    by_s: dict[int, list] = {}
-    for r in cb_rows:
-        by_s.setdefault(int(r["s"]), []).append((int(r["cell"]), list(r["c"])))
-    cb_ids, cb_mats = [], []
-    for s in range(s_dims):
-        entries = sorted(by_s.get(s, []))
-        cb_ids.append(np.array([c for c, _ in entries], dtype=np.int64))
-        cb_mats.append(np.array([v for _, v in entries], dtype=np.int64))
-
-    def kern(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            x = np.asarray(
-                batch.column("embedding").flatten(), dtype=np.float64
-            ).reshape(n, s_dims * d_dims)
-            qa = np.floor(x * 1e4).astype(np.int64)
-            diff = qa[:, None, :] - cent_fp[None, :, :]
-            idx = np.argmin((diff * diff).sum(axis=2), axis=1)
-            cells = pa.array(cell_ids[idx], pa.int64())
-            resid = qa - cent_fp[idx]
-            vid = batch.column("vec_id").cast(pa.int64())
-            for s in range(s_dims):
-                rs = resid[:, s * d_dims : (s + 1) * d_dims]
-                d2 = rs[:, None, :] - cb_mats[s][None, :, :]
-                cd = cb_ids[s][np.argmin((d2 * d2).sum(axis=2), axis=1)]
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        vid,
-                        pa.array(np.full(n, s, dtype=np.int64), pa.int64()),
-                        pa.array(cd, pa.int64()),
-                        cells,
-                    ],
-                    ["vec_id", "s", "cd", "cell"],
-                )
-
-    return vecs.select("vec_id", "embedding").mapInArrow(
-        kern, "vec_id long, s long, cd long, cell long"
-    )
-
-
-def _ivfpq_trained_plan(
-    emb: DataFrame,
-    nprobe: int = _IVFPQ_NPROBE,
-    topk: int = 5,
-    query_filter: Column | None = None,
-) -> DataFrame:
-    """IVF + TRAINED residual PQ — the recall fix the r14 audit
-    (RECALL_IVFPQ_SF1.json) demanded: the mixer codebook leaves the
-    residual mostly unexplained (full-probe recall@5 0.03 at sf1),
-    because its centroids are arbitrary hash points; training the
-    residual codebook per subspace (the standard IVF-PQ recipe) is
-    the lever that actually moves recall (0.075 trained-16 /
-    0.23 trained-256 full-probe in the numpy pre-study; the shipped
-    16-centroid config is measured in the artifact).
-
-    The whole pipeline is INTEGER-exact — stronger than x47d's
-    float-order discipline, no ordering contract at all:
-
-    * fixed-point residual = qa − cent EXACTLY (floor(x·10⁴) − c is
-      floor((x − c/10⁴)·10⁴) because c is an integer), so residuals
-      never touch floats;
-    * the residual codebook is _pqfp_lloyd on residual subvectors
-      (x47c's trained-PQ machinery verbatim: seeds = first 16
-      vec_ids' residuals, 2 iterations, deterministic 1/4 sample);
-    * ADC = Σ_s integer L2(query residual subvector, trained centroid
-      of the corpus code) — an exact BIGINT, order-free by
-      commutativity of integer addition.
-
-    Scale shape: assignment + encode are one broadcast join each
-    (8-row coarse model, ≤128-row codebook); the ADC join keys the
-    code relation (8 rows/vector of (cell, s, cd)) against the
-    BROADCAST per-(query, cell, s, cd) distance table — candidate
-    volume is bounded by the probed cells, and in the persisted
-    layout (same codes tree + one codebook artifact next to the
-    centroids) the probe prunes cell partitions statically exactly
-    as x47e does. Reference anchor: extends main.py:694-715's
-    embedding comparisons like x47d, with the trained codebook
-    closing the recall gap the audit measured."""
-    vecs_fp = _ivfpq_fp(emb)
-    cent, cb, codes = _ivfpq_trained_parts(vecs_fp)
-    return _ivfpq_trained_probe(
-        vecs_fp, cent, cb, codes, nprobe, topk, query_filter
-    )
-
-
-def _ivfpq_trained_parts(
-    vecs_fp: DataFrame,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The model+encode half of the trained-residual pipeline, shared
-    by the in-flight x47h plan and the persisted x47i build so the
-    persisted codes can never drift from the graded in-flight ones:
-    returns (cent: coarse centroids, cb: trained residual codebook
-    (s, cell→code id, c), codes: (vec_id, s, cd, cell) long form).
-
-    r15: both corpus-sized passes are the Arrow kernels (the
-    x47b/x47d canonical-kernel precedent) — the ≤8-row coarse model
-    and ≤128-row codebook still TRAIN declaratively (distributed
-    fixed-point Lloyd, unchanged), but their collected rows drive
-    vectorized map-only assignment/encode instead of crossJoin +
-    interpreted HOF folds over every vector. All-int64, value drift
-    impossible; pinned by test_ivfpq_trained_arrow_matches_declarative
-    + the unchanged x47h oracle."""
-    cent = _ivfpq_coarse(vecs_fp).localCheckpoint(eager=False)
-    cent_rows = cent.collect()
-    vecs = vecs_fp.select("vec_id", "embedding")
-    # integer residual subspaces (vec_id, cell, s, qa: 8 ints) — the
-    # training relation; checkpointed so the Lloyd iterations don't
-    # re-run the kernel per reference
-    rvecs = (
-        _ivfpq_resid_sub_arrow(vecs, cent_rows)
-        .select("vec_id", "s", "qa")
-        .localCheckpoint(eager=False)
-    )
-    cb = _pqfp_lloyd(
-        rvecs, rvecs.filter(F.col("vec_id") % 4 == 0), iters=2
-    ).localCheckpoint(eager=False)
-    codes = _ivfpq_trained_encode_arrow(vecs, cent_rows, cb.collect())
-    return cent, cb, codes
-
-
-def _ivfpq_trained_probe(
-    vecs_fp: DataFrame,
-    cent: DataFrame,
-    cb: DataFrame,
-    codes: DataFrame,
-    nprobe: int = _IVFPQ_NPROBE,
-    topk: int = 5,
-    query_filter: Column | None = None,
-) -> DataFrame:
-    """The probe half shared by x47h (in-flight codes) and x47i
-    (persisted codes): probe cells, residualize the query, broadcast
-    the integer ADC distance table (n_queries × nprobe × 8 × 16
-    rows), candidate-bounded integer sum, top-k. ``codes`` must
-    expose (vec_id, cell, s, cd); the adc sum is an exact BIGINT —
-    order-free, so both callers produce identical values."""
-    if query_filter is None:
-        query_filter = F.col("vec_id") % 250 == 0
-    q = vecs_fp.filter(query_filter).select(
-        F.col("vec_id").alias("query_id"), F.col("qa").alias("qqa")
-    )
-    qc = q.crossJoin(F.broadcast(cent)).select(
-        "query_id",
-        "cell",
-        "c",
-        "qqa",
-        _pqfp_dist(F.col("qqa"), F.col("c")).alias("dist"),
-    )
-    wq = Window.partitionBy("query_id").orderBy("dist", "cell")
-    probed = qc.withColumn("rn", F.row_number().over(wq)).filter(
-        F.col("rn") <= nprobe
-    )
-    qra = F.zip_with(F.col("qqa"), F.col("c"), lambda x, y: x - y)
-    qsub = probed.select(
-        "query_id", "cell", F.explode(_subspace_explode(qra)).alias("g")
-    ).select("query_id", "cell", "g.s", F.col("g.qa").alias("qra"))
-    cbr = cb.select("s", F.col("cell").alias("cd"), "c")
-    qdist = qsub.join(cbr, "s").select(
-        "query_id",
-        "cell",
-        "s",
-        "cd",
-        _pqfp_dist(F.col("qra"), F.col("c")).alias("d"),
-    )
-    adc = (
-        codes.join(F.broadcast(qdist), ["cell", "s", "cd"])
-        .groupBy("query_id", "vec_id")
-        .agg(
-            F.min("cell").alias("cell"),
-            F.sum("d").cast("long").alias("adc_fp"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy("adc_fp", "vec_id")
-    return (
-        adc.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= topk)
-        .select("query_id", "vec_id", "cell", "adc_fp", "rank")
-    )
+    return _ivfpq_persisted(spark, sf_dir, "mixer")
 
 
 def _x47h_oracle() -> str:
@@ -1905,159 +1632,29 @@ def _x47h_oracle() -> str:
 
 @query("x47h_ivfpq_trained_residual", oracle=_x47h_oracle())
 def x47h_ivfpq_trained_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X47h: IVF-PQ with the residual codebook TRAINED (see
-    _ivfpq_trained_plan — the r14 recall fix, integer-exact end to
-    end including both trainings, so the full pipeline grades
-    value-identical cross-engine with no float contract at all)."""
-    return _ivfpq_trained_plan(load_table(spark, sf_dir, "embeddings"))
-
-
-# ---------------------------------------------------------------------------
-# X47i — persisted trained-residual IVF-PQ index: the x47e serving
-# discipline applied to the x47h recall-fixed configuration
-# ---------------------------------------------------------------------------
-
-
-def default_ivfpq_trained_dir(sf_dir: str) -> str:
-    """Scratch location for the persisted trained-residual index over
-    ``sf_dir``'s embeddings, keyed by source identity (path + mtime +
-    size) so regenerated testdata re-indexes instead of reusing a
-    stale build."""
-    return scratch_dir(
-        "spark_graft_ivfpq_trained",
-        table_path(sf_dir, "embeddings"),
-        f"{_IVFPQ_CELLS}c_{_PQ_S}s{_PQ_K}k_trained",
+    """X47h: IVF-PQ with the residual codebook TRAINED — the recall
+    fix RECALL_IVFPQ_SF1.json measures: the mixer codebook's centroids
+    are arbitrary hash points that leave the residual mostly
+    unexplained, and training them per subspace (the standard IVF-PQ
+    recipe) is the lever that moves recall. Integer-exact end to end,
+    both trainings included: the residual is qa − cent, the codebook
+    is x47c's fixed-point Lloyd over the residual subvectors, and the
+    ADC is a BIGINT sum — the pipeline grades value-identical
+    cross-engine with no float contract at all."""
+    return _ivfpq_inflight(
+        load_table(spark, sf_dir, "embeddings"), "trained"
     )
-
-
-def _pack_trained_codes(codes: DataFrame) -> DataFrame:
-    """(vec_id, s, cd, cell) long form → (vec_id, cell, code): the 8
-    4-bit trained codes packed little-endian into ONE int64 — the
-    same 8-byte-per-vector persisted layout as x47e, integer-exact
-    (sum of cd·2^(4s) over the 8 distinct s rows)."""
-    return codes.groupBy("vec_id").agg(
-        F.min("cell").alias("cell"),
-        F.sum(
-            F.col("cd") * F.expr("shiftleft(1L, cast(4 * s as int))")
-        ).cast("long").alias("code"),
-    )
-
-
-def _unpack_trained_codes(packed: DataFrame) -> DataFrame:
-    """(vec_id, cell, code) → the (vec_id, cell, s, cd) long form
-    _ivfpq_trained_probe joins on: codegen'd shift/mask unpack at
-    scan time, 8 rows per vector."""
-    return packed.select(
-        "vec_id",
-        "cell",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(s).cast("long").alias("s"),
-                        F.shiftright(F.col("code"), 4 * s)
-                        .bitwiseAND(F.lit(_PQ_K - 1))
-                        .cast("long")
-                        .alias("cd"),
-                    )
-                    for s in range(_PQ_S)
-                ]
-            )
-        ).alias("g"),
-    ).select("vec_id", "cell", "g.s", "g.cd")
-
-
-def build_ivfpq_trained_index(
-    spark: SparkSession, sf_dir: str, out_dir: str
-) -> None:
-    """Build the persisted TRAINED-RESIDUAL IVF-PQ index once
-    (build_ivfpq_index's layout plus one artifact): ``centroids``
-    (≤8-row coarse model), ``codebook`` (≤128-row trained residual
-    codebook — the extra trained state x47e does not have),
-    ``manifest`` (n_base for the retrain trigger), and ``codes`` —
-    packed int64 residual codes parquet PARTITIONED BY cell, written
-    LAST so codes/_SUCCESS is the build-complete marker. The encode
-    is _ivfpq_trained_parts, shared verbatim with the in-flight x47h
-    plan, so persisted codes cannot drift from the graded ones."""
-    vecs_fp = _ivfpq_fp(load_table(spark, sf_dir, "embeddings"))
-    cent, cb, codes = _ivfpq_trained_parts(vecs_fp)
-    cent.write.mode("overwrite").parquet(f"{out_dir}/centroids")
-    cb.write.mode("overwrite").parquet(f"{out_dir}/codebook")
-    n_base = vecs_fp.count()
-    spark.createDataFrame([(n_base,)], "n_base long").write.mode(
-        "overwrite"
-    ).parquet(f"{out_dir}/manifest")
-    _pack_trained_codes(codes).repartition("cell").write.mode(
-        "overwrite"
-    ).partitionBy("cell").parquet(f"{out_dir}/codes")
-
-
-def append_ivfpq_trained_index(
-    spark: SparkSession, index_dir: str, new_emb: DataFrame
-) -> None:
-    """Incremental maintenance with BOTH models frozen: assign the
-    batch to cells against the persisted coarse centroids and encode
-    its residuals against the persisted codebook (no retrain of
-    either), appending packed codes into the cell-partitioned tree.
-    The retrain trigger is ivfpq_needs_retrain on this index's
-    manifest — same discipline, and the recall audit
-    (tools/recall_ivfpq_sf1.py) is the drift signal."""
-    _guard_fresh_vec_ids(
-        spark, index_dir, new_emb, "append_ivfpq_trained_index"
-    )
-    cent_rows = spark.read.parquet(f"{index_dir}/centroids").collect()
-    cb_rows = spark.read.parquet(f"{index_dir}/codebook").collect()
-    # one encode path for build, in-flight AND append (r15): the
-    # Arrow kernel against both frozen models
-    codes = _ivfpq_trained_encode_arrow(
-        new_emb.select("vec_id", "embedding"), cent_rows, cb_rows
-    )
-    _pack_trained_codes(codes).repartition("cell").write.mode(
-        "append"
-    ).partitionBy("cell").parquet(f"{index_dir}/codes")
-
-
-def probe_ivfpq_trained_index(
-    spark: SparkSession, sf_dir: str, index_dir: str
-) -> DataFrame:
-    """Serve the graded query set from the persisted trained index
-    with static cell-partition pruning (the probe_ivfpq_index
-    recipe): rank cells against the persisted centroids, collect the
-    ≤8 probed cell ids into literal partition predicates, read ONLY
-    those cell directories, unpack, and run the shared
-    _ivfpq_trained_probe."""
-    vecs_fp = _ivfpq_fp(load_table(spark, sf_dir, "embeddings"))
-    cent = spark.read.parquet(f"{index_dir}/centroids")
-    cb = spark.read.parquet(f"{index_dir}/codebook")
-    probed_cells = sorted(
-        int(r["cell"])
-        for r in _ivfpq_probed(_ivfpq_queries(vecs_fp), cent)
-        .select("cell")
-        .distinct()
-        .collect()
-    )
-    codes = _unpack_trained_codes(
-        spark.read.parquet(f"{index_dir}/codes").filter(
-            F.col("cell").isin(probed_cells)
-        )
-    )
-    return _ivfpq_trained_probe(vecs_fp, cent, cb, codes)
 
 
 @query("x47i_ivfpq_trained_persisted", oracle=_x47h_oracle())
 def x47i_ivfpq_trained_persisted(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """X47i: the recall-fixed configuration as a PRODUCTION serving
-    artifact — x47h's trained-residual probe served from a persisted
-    index (x47e's build-once/probe-many discipline: first call builds
-    trained centroids + trained codebook + cell-partitioned packed
-    codes + manifest; every probe after that reads ≤ nprobe cell
-    partitions of 8-byte codes plus two ≤128-row model tables).
-    Graded with x47h's ORACLE VERBATIM, so the persisted round-trip —
-    including the int64 pack/unpack — must reproduce the in-flight
-    integer ADC values exactly."""
-    index_dir = default_ivfpq_trained_dir(sf_dir)
-    if not pathlib.Path(index_dir, "codes", "_SUCCESS").exists():
-        build_ivfpq_trained_index(spark, sf_dir, index_dir)
-    return probe_ivfpq_trained_index(spark, sf_dir, index_dir)
+    """X47i: x47h served from the persisted trained index — x47e's
+    build-once/probe-many discipline with the ``codebook`` artifact
+    beside the centroids; every probe reads ≤ nprobe cell partitions
+    of 8-byte codes plus two ≤128-row model tables. Graded with x47h's
+    ORACLE VERBATIM, so the persisted round-trip — including the int64
+    pack/unpack — must reproduce the in-flight integer ADC values
+    exactly."""
+    return _ivfpq_persisted(spark, sf_dir, "trained")

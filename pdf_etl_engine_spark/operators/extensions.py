@@ -3518,44 +3518,61 @@ def _fp_sqdist(a, b):
     )
 
 
-def _fp_assign(vecs: DataFrame, cent: DataFrame) -> DataFrame:
+def _fp_assign(
+    vecs: DataFrame, cent: DataFrame, key: str | None = None
+) -> DataFrame:
     """Nearest-centroid assignment on fixed-point vectors: broadcast
     the codebook, integer L2 fold per (vector, cell), argmin with
     ties → lowest cell id. Map-side except the per-vector argmin
-    groupBy — the x4h shape."""
-    a = vecs.crossJoin(F.broadcast(cent)).select(
-        "vec_id", "cell", _fp_sqdist(F.col("qa"), F.col("c")).alias("dist")
+    groupBy — the x4h shape. With ``key`` (the PQ subspace ``s``)
+    vectors and centroids pair within equal keys and the argmin is
+    per (vec_id, key). Returns (vec_id, [key,] cell, md)."""
+    keys = ["vec_id"] + ([key] if key else [])
+    pairs = (
+        vecs.join(F.broadcast(cent), key)
+        if key
+        else vecs.crossJoin(F.broadcast(cent))
     )
-    m = a.groupBy("vec_id").agg(F.min("dist").alias("md"))
+    a = pairs.select(
+        *keys, "cell", _fp_sqdist(F.col("qa"), F.col("c")).alias("dist")
+    )
+    m = a.groupBy(*keys).agg(F.min("dist").alias("md"))
     return (
-        a.join(m, "vec_id")
+        a.join(m, keys)
         .filter(F.col("dist") == F.col("md"))
-        .groupBy("vec_id")
-        .agg(F.min("cell").alias("cell"))
+        .groupBy(*keys)
+        .agg(F.min("cell").alias("cell"), F.min("md").alias("md"))
     )
 
 
-def _fp_lloyd(qdf: DataFrame, train: DataFrame, k: int, iters: int) -> DataFrame:
-    """`iters` Lloyd iterations over the training sample, entirely in
-    fixed-point integers: seeds are the first ``k`` vec_ids, the mean
-    is floor(Σqⱼ / n) via one exactly-specified double division per
-    component. Returns (cell, c: array<bigint>); a cell that loses
-    every member drops out (k' ≤ k), identically in both engines."""
+def _fp_lloyd(
+    qdf: DataFrame, k: int, key: str | None = None, iters: int = 2
+) -> DataFrame:
+    """`iters` Lloyd iterations over the deterministic 1/4 training
+    sample (vec_id % 4 = 0), entirely in fixed-point integers: seeds
+    are the first ``k`` vec_ids of the FULL relation, the mean is
+    floor(Σqⱼ / n) via one exactly-specified double division per
+    component. ``key`` trains one codebook per key value (the PQ
+    subspace ``s``). Returns ([key,] cell, c: array<bigint>); a cell
+    that loses every member drops out (k' ≤ k), identically in both
+    engines, and the surviving cells keep their seed ids."""
+    keys = [key] if key else []
+    train = qdf.filter(F.col("vec_id") % 4 == 0)
     cent = qdf.filter(F.col("vec_id") < k).select(
-        F.col("vec_id").alias("cell"), F.col("qa").alias("c")
+        *keys, F.col("vec_id").alias("cell"), F.col("qa").alias("c")
     )
     for _ in range(iters):
-        assigned = _fp_assign(train, cent)
+        assigned = _fp_assign(train, cent, key)
         long = (
-            assigned.join(train, "vec_id")
-            .select("cell", F.posexplode("qa").alias("j", "qj"))
+            assigned.join(train, ["vec_id"] + keys)
+            .select(*keys, "cell", F.posexplode("qa").alias("j", "qj"))
         )
-        comps = long.groupBy("cell", "j").agg(
+        comps = long.groupBy(*keys, "cell", "j").agg(
             F.floor(
                 F.sum("qj").cast("double") / F.count(F.lit(1))
             ).cast("long").alias("cj")
         )
-        cent = comps.groupBy("cell").agg(
+        cent = comps.groupBy(*keys, "cell").agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("j", "cj"))),
                 lambda s: s["cj"],
@@ -3684,8 +3701,7 @@ def x45b_semdedup_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     (main.py:694-715's extract path feeding dedup downstream)."""
     emb = load_table(spark, sf_dir, "embeddings")
     qdf = emb.select("vec_id", _fp_quantize(F.col("embedding")).alias("qa"))
-    train = qdf.filter(F.col("vec_id") % 4 == 0)
-    cent = _fp_lloyd(qdf, train, k=8, iters=2)
+    cent = _fp_lloyd(qdf, k=8)
     v = (
         _fp_assign(qdf, cent)
         .withColumnRenamed("cell", "centroid_id")

@@ -512,35 +512,6 @@ def _relative_path(path_col: F.Column) -> F.Column:
     return F.regexp_extract(path_col, r"(incoming/.*)$", 1)
 
 
-def extract_kpis(
-    binary_df: DataFrame,
-    kpi_names: list[str],
-    context_hint: str,
-    extractor: Extractor,
-) -> DataFrame:
-    """U1: run the extractor over Arrow batches of documents.
-    One Python call per batch, not per file (the reference pays one
-    LLM RPC per file, main.py:700-707). Output: path + extraction map
-    as JSON text (F8/F9 post-processing applies downstream)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "path": pdf["path"],
-                    "raw_extract": pdf["content"].map(
-                        lambda b: json.dumps(
-                            extractor(bytes(b), kpi_names, context_hint)
-                        )
-                    ),
-                }
-            )
-
-    return binary_df.select("path", "content").mapInPandas(
-        run, schema="path string, raw_extract string"
-    )
-
-
 # ---------------------------------------------------------------------------
 # Mixed-folder batch processing: ONE extraction job per batch
 # ---------------------------------------------------------------------------
@@ -992,37 +963,6 @@ def ingest_batch(
         "rows_written": core["rows_written"],
         "files_failed": core["files_failed"],
     }
-
-
-def build_typed_rows(
-    extracted: DataFrame,
-    kpi_metadata: list[dict[str, str]],
-    tenant_id: str,
-    folder_id: str,
-) -> DataFrame:
-    """Row build (main.py:726-741): audit cols + per-KPI
-    sanitize-name (F1) + coerce-value (F14), as pure projections.
-
-    row_id: the reference uses second-granularity epoch ids that
-    collide within a batch (`row_{int(time.time())}`, main.py:727) —
-    documented deviation: uuid() per row (SURVEY.md §2.8 F12).
-    """
-    kmap = kernel.json_to_map(kernel.strip_md_fences(F.col("raw_extract")))
-    cols = [
-        F.lit(tenant_id).alias("tenant_id"),
-        F.lit(folder_id).alias("folder_id"),
-        F.expr("uuid()").alias("row_id"),
-        F.element_at(F.split(F.col("path"), "/"), -1).alias("file_name"),
-        F.current_timestamp().alias("uploaded_at"),
-    ]
-    for kpi in kpi_metadata:
-        name = kpi.get("name", "")
-        cols.append(
-            kernel.coerce_typed(
-                kmap.getItem(name), kpi.get("type", "string")
-            ).alias(kernel.kpi_col_name(name))
-        )
-    return extracted.select(*cols)
 
 
 def read_results(

@@ -742,15 +742,6 @@ def _committed_index(
     return {f: s for f, s in state[key].items() if f in live}
 
 
-def committed_file_stats(
-    path: str, version: int | None = None
-) -> dict[str, dict]:
-    """Per-file column min/max stats for the snapshot at ``version``
-    — the data-skipping index. Files whose commit predates stats
-    recording simply have no entry (readers keep them)."""
-    return _committed_index(path, "stats", version=version)
-
-
 def committed_file_blooms(
     path: str, version: int | None = None
 ) -> dict[str, dict]:
@@ -2266,20 +2257,6 @@ def evolve_columns(
         for kpi in kpi_metadata
         if kernel.kpi_col_name(kpi.get("name", "")) not in existing
     ]
-
-
-def align_to_schema(df: DataFrame, schema: StructType) -> DataFrame:
-    """Project/cast a batch to the target table schema, adding NULLs
-    for table columns the batch lacks (legacy rows) and keeping any
-    new batch columns (evolution) at the end."""
-    out = []
-    for field in schema.fields:
-        if field.name in df.columns:
-            out.append(F.col(field.name).cast(field.dataType).alias(field.name))
-        else:
-            out.append(F.lit(None).cast(field.dataType).alias(field.name))
-    extra = [c for c in df.columns if c not in {f.name for f in schema.fields}]
-    return df.select(*out, *extra)
 
 
 # ---------------------------------------------------------------------------

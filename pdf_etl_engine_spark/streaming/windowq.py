@@ -553,9 +553,8 @@ def stw_ivfpq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix="spark_graft_stream_ivfpq_")
     index_dir = f"{work}/index"
     # train-once: the coarse model is the batch artifact the stream
-    # encodes against (identical to build_ivfpq_index's training)
-    vecs_fp = ann_index._ivfpq_fp(emb)
-    cent = ann_index._ivfpq_coarse(vecs_fp).localCheckpoint(eager=False)
+    # encodes against (build_ivfpq_index's training call)
+    cent, *_ = ann_index._ivfpq_train(ann_index._ivfpq_fp(emb), "mixer")
     cent.write.mode("overwrite").parquet(f"{index_dir}/centroids")
     dedupstream.run_streaming_vector_ingest(
         spark,

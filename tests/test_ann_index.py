@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from pdf_etl_engine_spark import registry
 from pdf_etl_engine_spark.operators import ann_index
+from pdf_etl_engine_spark.operators.extensions import _fp_assign, _fp_lloyd
 
 registry.load_all()
 
@@ -79,53 +80,72 @@ def test_probe_matches_query_time_lsh(spark, tmp_path_factory):
 
 
 # ---------------------------------------------------------------------------
-# X47e — persisted IVF-PQ: parity with the in-flight plan, static
-# partition pruning, and the incremental append-loop (no retrain)
+# The persisted IVF-PQ index, for both codebooks: parity with the
+# in-flight plan, static partition pruning, and the append loop with
+# frozen models (no retrain)
 # ---------------------------------------------------------------------------
 
+CODEBOOKS = ("mixer", "trained")
+INFLIGHT = {
+    "mixer": "x47d_ivfpq_topk",
+    "trained": "x47h_ivfpq_trained_residual",
+}
 
-def _build_ivfpq(spark, tmp_path_factory):
-    out = str(tmp_path_factory.getbasetemp() / "ivfpq_index")
+
+def _build_ivfpq(spark, tmp_path_factory, codebook):
+    out = str(tmp_path_factory.getbasetemp() / f"ivfpq_index_{codebook}")
     if not pathlib.Path(out, "codes", "_SUCCESS").exists():
-        ann_index.build_ivfpq_index(spark, SF_DIR, out)
+        ann_index.build_ivfpq_index(spark, SF_DIR, out, codebook)
     return out
 
 
 @pytest.mark.slow
-def test_ivfpq_persisted_matches_inflight(spark, tmp_path_factory):
-    """The persisted round-trip (parquet centroids + packed codes)
-    must reproduce x47d's in-flight answer row-for-row — same cells,
-    same codes, same ADC doubles."""
-    out = _build_ivfpq(spark, tmp_path_factory)
+@pytest.mark.parametrize("codebook", CODEBOOKS)
+def test_ivfpq_persisted_matches_inflight(spark, tmp_path_factory, codebook):
+    """The persisted round-trip (parquet models + packed int64 codes)
+    must reproduce the in-flight answer (x47d / x47h) row-for-row —
+    same cells, same codes, same ADC values (doubles for the mixer,
+    exact BIGINTs for the trained codebook) through the pack/unpack."""
+    out = _build_ivfpq(spark, tmp_path_factory, codebook)
     persisted = sorted(
-        map(tuple, ann_index.probe_ivfpq_index(spark, SF_DIR, out).collect())
+        map(
+            tuple,
+            ann_index.probe_ivfpq_index(
+                spark, SF_DIR, out, codebook
+            ).collect(),
+        )
     )
     inflight = sorted(
         map(
             tuple,
-            registry.QUERIES["x47d_ivfpq_topk"](spark, SF_DIR).collect(),
+            registry.QUERIES[INFLIGHT[codebook]](spark, SF_DIR).collect(),
         )
     )
     assert persisted == inflight and len(persisted) > 0
 
 
 @pytest.mark.slow
-def test_ivfpq_probe_prunes_cell_partitions(spark, tmp_path_factory):
+@pytest.mark.parametrize("codebook", CODEBOOKS)
+def test_ivfpq_probe_prunes_cell_partitions(
+    spark, tmp_path_factory, codebook
+):
     """The codes scan must carry the probed cells as PARTITION
     filters (static directory pruning — the probe collects the cell
     ids first, so no dynamic pruning machinery is needed)."""
-    out = _build_ivfpq(spark, tmp_path_factory)
-    df = ann_index.probe_ivfpq_index(spark, SF_DIR, out)
+    out = _build_ivfpq(spark, tmp_path_factory, codebook)
+    df = ann_index.probe_ivfpq_index(spark, SF_DIR, out, codebook)
     plan = df._jdf.queryExecution().executedPlan().toString()
     # bind the assertion to the CODES relation's scan line: the scan
-    # node's single toString line carries both its Location (…/codes)
-    # and its PartitionFilters, so matching "codes" within the LINE
-    # (not the whole plan — ADVICE r13's tautology) isolates it from
-    # the centroids/corpus scans
+    # node's single toString line carries both its ReadSchema (the
+    # only one with a ``code`` column) and its PartitionFilters, so
+    # matching within the LINE (not the whole plan — ADVICE r13's
+    # tautology) isolates it from the centroids/corpus scans. The
+    # Location path is no marker: Spark abbreviates it at 100
+    # characters, so under a long temp dir "codes" is cut off.
     code_scan_lines = [
         line
         for line in plan.splitlines()
-        if "PartitionFilters" in line and "codes" in line
+        if "PartitionFilters" in line and "code:bigint" in line
     ]
     assert any(
         "cell#" in line and " IN " in line for line in code_scan_lines
@@ -133,21 +153,28 @@ def test_ivfpq_probe_prunes_cell_partitions(spark, tmp_path_factory):
 
 
 @pytest.mark.slow
-def test_ivfpq_append_loop_no_retrain(spark, tmp_path):
+@pytest.mark.parametrize("codebook", CODEBOOKS)
+def test_ivfpq_append_frozen_models(spark, tmp_path, codebook):
     """The incremental path: build on the base corpus, append two
-    synthetic batches, and check (a) the trained centroids are
-    byte-identical afterwards (no retrain), (b) every appended
-    vector's cell matches an INDEPENDENT numpy recomputation of the
-    integer nearest-centroid rule, (c) counts add up, and (d) the
-    retrain trigger fires only past the documented fraction."""
+    synthetic batches, and check (a) every persisted model (the
+    centroids, and the trained codebook) is byte-identical afterwards
+    (no retrain), (b) every appended vector's cell matches an
+    INDEPENDENT numpy recomputation of the integer nearest-centroid
+    rule, (c) counts add up and every appended code unpacks to 8
+    in-range 4-bit fields, (d) the retrain trigger fires only past
+    the documented fraction, and (e) a re-appended vec_id is refused
+    with the index untouched."""
     import numpy as np
 
-    out = str(tmp_path / "ivfpq_append")
-    ann_index.build_ivfpq_index(spark, SF_DIR, out)
-    cent_before = sorted(
-        (r["cell"], tuple(r["c"]))
-        for r in spark.read.parquet(f"{out}/centroids").collect()
-    )
+    models = ("centroids",) + (("codebook",) if codebook == "trained" else ())
+    out = str(tmp_path / f"ivfpq_append_{codebook}")
+    ann_index.build_ivfpq_index(spark, SF_DIR, out, codebook)
+    before = {
+        art: sorted(
+            map(tuple, spark.read.parquet(f"{out}/{art}").collect())
+        )
+        for art in models
+    }
     n_base = spark.read.parquet(f"{out}/codes").count()
     assert not ann_index.ivfpq_needs_retrain(spark, out)
 
@@ -166,29 +193,37 @@ def test_ivfpq_append_loop_no_retrain(spark, tmp_path):
         batch = spark.createDataFrame(
             rows, "vec_id long, embedding array<float>, label int"
         )
-        ann_index.append_ivfpq_index(spark, out, batch)
+        ann_index.append_ivfpq_index(spark, out, batch, codebook)
         next_id += len(vecs)
 
-    cent_after = sorted(
-        (r["cell"], tuple(r["c"]))
-        for r in spark.read.parquet(f"{out}/centroids").collect()
-    )
-    assert cent_after == cent_before  # frozen model: no retrain
+    after = {
+        art: sorted(
+            map(tuple, spark.read.parquet(f"{out}/{art}").collect())
+        )
+        for art in models
+    }
+    assert after == before  # frozen models: no retrain
     codes = spark.read.parquet(f"{out}/codes")
     assert codes.count() == n_base + len(appended)
 
     # independent assignment check: integer distances on floor(x*1e4)
-    cent = {c: np.array(v, dtype=np.int64) for c, v in cent_before}
-    got = {
-        r["vec_id"]: r["cell"]
-        for r in codes.filter(F.col("vec_id") >= 10_000_000).collect()
-    }
+    cent = {c: np.array(v, dtype=np.int64) for c, v in before["centroids"]}
+    new_codes = codes.filter(F.col("vec_id") >= 10_000_000)
+    got = {r["vec_id"]: r["cell"] for r in new_codes.collect()}
     assert set(got) == set(appended)
     for vid, emb in appended.items():
         qa = np.floor(emb * 10000).astype(np.int64)
         dists = {c: int(((qa - cv) ** 2).sum()) for c, cv in cent.items()}
         best = min(dists.items(), key=lambda kv: (kv[1], kv[0]))[0]
         assert got[vid] == best, (vid, got[vid], best)
+    # every appended code unpacks to 8 in-range 4-bit fields
+    unpacked = ann_index._unpack_codes(new_codes)
+    out_of_range = F.lit(False)
+    for s in range(8):
+        out_of_range = out_of_range | (F.col(f"cd{s}") < 0) | (
+            F.col(f"cd{s}") >= 16
+        )
+    assert unpacked.filter(out_of_range).count() == 0
 
     # retrain trigger: 40 appended on a small base — flips only when
     # the threshold drops below the actual appended fraction
@@ -201,15 +236,15 @@ def test_ivfpq_append_loop_no_retrain(spark, tmp_path):
     )
 
     # vec_id is the index's primary key (ADVICE r14): re-appending an
-    # existing id must fail loudly — a silent duplicate would leave 16
-    # code rows per vector and double its ADC sum — and the refused
-    # append must not have touched the codes tree
+    # existing id must fail loudly — a silent duplicate would give the
+    # vector two code rows, scored twice by every probe of its cell —
+    # and the refused append must not have touched the codes tree
     dup = spark.createDataFrame(
         [(10_000_000, [0.1] * 64, 0)],
         "vec_id long, embedding array<float>, label int",
     )
     with pytest.raises(ValueError, match="already present"):
-        ann_index.append_ivfpq_index(spark, out, dup)
+        ann_index.append_ivfpq_index(spark, out, dup, codebook)
     assert (
         spark.read.parquet(f"{out}/codes").count()
         == n_base + len(appended)
@@ -355,133 +390,6 @@ def test_ivfpq_recall_artifact_floors():
     )
 
 
-# ---------------------------------------------------------------------------
-# X47i — persisted TRAINED-residual IVF-PQ (the x47e discipline on the
-# recall-fixed configuration)
-# ---------------------------------------------------------------------------
-
-
-def _build_ivfpq_trained(spark, tmp_path_factory):
-    out = str(tmp_path_factory.getbasetemp() / "ivfpq_trained_index")
-    if not pathlib.Path(out, "codes", "_SUCCESS").exists():
-        ann_index.build_ivfpq_trained_index(spark, SF_DIR, out)
-    return out
-
-
-@pytest.mark.slow
-def test_ivfpq_trained_persisted_matches_inflight(spark, tmp_path_factory):
-    """The persisted trained-residual round-trip (centroids + codebook
-    + packed int64 codes) must reproduce x47h's in-flight answer
-    row-for-row — including the exact BIGINT adc values through the
-    pack/unpack."""
-    out = _build_ivfpq_trained(spark, tmp_path_factory)
-    persisted = sorted(
-        map(
-            tuple,
-            ann_index.probe_ivfpq_trained_index(
-                spark, SF_DIR, out
-            ).collect(),
-        )
-    )
-    inflight = sorted(
-        map(
-            tuple,
-            registry.QUERIES["x47h_ivfpq_trained_residual"](
-                spark, SF_DIR
-            ).collect(),
-        )
-    )
-    assert persisted == inflight and len(persisted) > 0
-
-
-@pytest.mark.slow
-def test_ivfpq_trained_probe_prunes_cell_partitions(
-    spark, tmp_path_factory
-):
-    """The trained index's codes scan must carry the probed cells as
-    PARTITION filters — same static pruning pin as x47e's, bound to
-    the codes scan line."""
-    out = _build_ivfpq_trained(spark, tmp_path_factory)
-    df = ann_index.probe_ivfpq_trained_index(spark, SF_DIR, out)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    code_scan_lines = [
-        line
-        for line in plan.splitlines()
-        if "PartitionFilters" in line and "codes" in line
-    ]
-    assert any(
-        "cell#" in line and " IN " in line for line in code_scan_lines
-    ), plan
-
-
-@pytest.mark.slow
-def test_ivfpq_trained_append_frozen_models(spark, tmp_path):
-    """Appends reuse BOTH frozen models (coarse centroids and the
-    trained residual codebook — byte-identical afterwards), appended
-    vectors are probeable, counts add up, and the retrain trigger
-    arithmetic holds on this index's manifest."""
-    import numpy as np
-
-    out = str(tmp_path / "ivfpq_trained_append")
-    ann_index.build_ivfpq_trained_index(spark, SF_DIR, out)
-    before = {
-        art: sorted(
-            map(tuple, spark.read.parquet(f"{out}/{art}").collect())
-        )
-        for art in ("centroids", "codebook")
-    }
-    n_base = spark.read.parquet(f"{out}/codes").count()
-    assert not ann_index.ivfpq_needs_retrain(spark, out)
-
-    rng = np.random.RandomState(11)
-    vecs = rng.randn(30, 64).astype(np.float32)
-    vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
-    batch = spark.createDataFrame(
-        [
-            (20_000_000 + i, 0, [float(x) for x in vecs[i]])
-            for i in range(len(vecs))
-        ],
-        "vec_id long, label int, embedding array<float>",
-    )
-    ann_index.append_ivfpq_trained_index(spark, out, batch)
-    after = {
-        art: sorted(
-            map(tuple, spark.read.parquet(f"{out}/{art}").collect())
-        )
-        for art in ("centroids", "codebook")
-    }
-    assert after == before  # both models frozen
-    codes = spark.read.parquet(f"{out}/codes")
-    assert codes.count() == n_base + 30
-    appended = codes.filter(F.col("vec_id") >= 20_000_000)
-    assert appended.count() == 30
-    # every appended code unpacks to 8 in-range 4-bit fields
-    unpacked = ann_index._unpack_trained_codes(appended)
-    assert unpacked.filter(
-        (F.col("cd") < 0) | (F.col("cd") >= 16)
-    ).count() == 0
-    frac = 30 / n_base
-    assert ann_index.ivfpq_needs_retrain(
-        spark, out, max_appended_fraction=frac * 0.5
-    )
-    assert not ann_index.ivfpq_needs_retrain(
-        spark, out, max_appended_fraction=frac * 2.0
-    )
-
-    # re-append rejection (ADVICE r14): a duplicate vec_id would give
-    # the vector two code rows, and _ivfpq_trained_probe's
-    # groupBy(query_id, vec_id).sum(d) would double its adc_fp —
-    # worse than the LSH case's arbitrary-payload pick. Fail loudly,
-    # index untouched.
-    dup = spark.createDataFrame(
-        [(20_000_000, 0, [0.1] * 64)],
-        "vec_id long, label int, embedding array<float>",
-    )
-    with pytest.raises(ValueError, match="already present"):
-        ann_index.append_ivfpq_trained_index(spark, out, dup)
-    assert spark.read.parquet(f"{out}/codes").count() == n_base + 30
-
-
 def test_probe_rejects_non_power_of_two_k_cent(spark):
     """ADVICE r14: a non-power-of-two k_cent would silently compute
     wrong subspace/centroid indices in the shift/mask LUT decompose —
@@ -492,18 +400,18 @@ def test_probe_rejects_non_power_of_two_k_cent(spark):
     with pytest.raises(ValueError, match="power of two"):
         ann_index._ivfpq_probe_plan(emb, emb, emb, k_cent=12)
     with pytest.raises(ValueError, match="power of two"):
-        ann_index._ivfpq_assign_encode_arrow(emb, [], k_cent=12)
+        ann_index._ivfpq_encode_arrow(emb, [], k_cent=12)
 
 
 @pytest.mark.slow
 def test_ivfpq_inflight_arrow_matches_declarative(spark):
-    """r15: x47d's canonical encode is the Arrow kernel; the
-    declarative _ivfpq_assign_encode stays as the SQL-oracle mirror.
-    The two must be bit-identical on the grading corpus — every
+    """x47d's canonical encode is the Arrow kernel; the declarative
+    _ivfpq_assign_encode stays as the SQL-oracle mirror. The two must
+    be bit-identical on the grading corpus — every
     (vec_id, cell, cd0..cd7) row."""
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     vecs_fp = ann_index._ivfpq_fp(emb)
-    cent = ann_index._ivfpq_coarse(vecs_fp).localCheckpoint(eager=False)
+    cent, *_ = ann_index._ivfpq_train(vecs_fp, "mixer")
     declarative = sorted(
         map(tuple, ann_index._ivfpq_assign_encode(vecs_fp, cent).collect())
     )
@@ -511,7 +419,7 @@ def test_ivfpq_inflight_arrow_matches_declarative(spark):
         map(
             tuple,
             ann_index._unpack_codes(
-                ann_index._ivfpq_assign_encode_arrow(emb, cent.collect())
+                ann_index._ivfpq_encode_arrow(emb, cent.collect())
             ).collect(),
         )
     )
@@ -521,18 +429,17 @@ def test_ivfpq_inflight_arrow_matches_declarative(spark):
 
 @pytest.mark.slow
 def test_ivfpq_trained_arrow_matches_declarative(spark):
-    """r15: the trained-residual pipeline's corpus passes are Arrow
-    kernels (_ivfpq_resid_sub_arrow for the training relation,
-    _ivfpq_trained_encode_arrow for the codes); the declarative
-    chain they replaced must produce bit-identical rows — residual
-    subspaces AND final codes."""
+    """The trained codebook's corpus passes are Arrow kernels
+    (_ivfpq_resid_sub_arrow for the training relation,
+    _ivfpq_encode_arrow for the codes); the declarative chain they
+    replace must produce bit-identical rows — residual subspaces AND
+    final codes."""
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     vecs_fp = ann_index._ivfpq_fp(emb)
-    cent = ann_index._ivfpq_coarse(vecs_fp).localCheckpoint(eager=False)
-    cent_rows = cent.collect()
+    cent, cent_rows, *_ = ann_index._ivfpq_train(vecs_fp, "mixer")
 
-    # declarative residual-subspace chain (the pre-r15 form)
-    assigned = ann_index._ivfpq_assign_cells(vecs_fp, cent)
+    # declarative residual-subspace chain
+    assigned = _fp_assign(vecs_fp, cent).select("vec_id", "cell")
     withc = assigned.join(vecs_fp.select("vec_id", "qa"), "vec_id").join(
         F.broadcast(cent), "cell"
     )
@@ -555,24 +462,29 @@ def test_ivfpq_trained_arrow_matches_declarative(spark):
     rvecs = rsub_arrow.select("vec_id", "s", "qa").localCheckpoint(
         eager=False
     )
-    cb = ann_index._pqfp_lloyd(
-        rvecs, rvecs.filter(F.col("vec_id") % 4 == 0), iters=2
-    ).localCheckpoint(eager=False)
+    cb = _fp_lloyd(rvecs, 16, key="s").localCheckpoint(eager=False)
+    by_vec: dict = {}
+    for r in (
+        _fp_assign(rvecs, cb, key="s")
+        .select("vec_id", "s", F.col("cell").alias("cd"))
+        .join(assigned, "vec_id")
+        .select("vec_id", "s", "cd", "cell")
+        .collect()
+    ):
+        by_vec.setdefault((r[0], r[3]), {})[r[1]] = r[2]
     codes_decl = sorted(
-        map(
-            tuple,
-            ann_index._pqfp_assign(rvecs, cb)
-            .select("vec_id", "s", F.col("cell").alias("cd"))
-            .join(assigned, "vec_id")
-            .select("vec_id", "s", "cd", "cell")
-            .collect(),
-        )
+        (vid, cell, *[cds[s] for s in range(8)])
+        for (vid, cell), cds in by_vec.items()
     )
     codes_arrow = sorted(
         map(
             tuple,
-            ann_index._ivfpq_trained_encode_arrow(
-                emb.select("vec_id", "embedding"), cent_rows, cb.collect()
+            ann_index._unpack_codes(
+                ann_index._ivfpq_encode_arrow(
+                    emb.select("vec_id", "embedding"),
+                    cent_rows,
+                    cb.collect(),
+                )
             ).collect(),
         )
     )

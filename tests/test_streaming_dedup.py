@@ -159,6 +159,7 @@ def test_vector_ingest_replay_is_idempotent(spark, tmp_path):
     import numpy as np
 
     from pdf_etl_engine_spark.operators import ann_index
+    from pdf_etl_engine_spark.operators.extensions import _fp_lloyd
 
     rng = np.random.RandomState(3)
     vecs = rng.randn(40, 64).astype(np.float32)
@@ -168,7 +169,7 @@ def test_vector_ingest_replay_is_idempotent(spark, tmp_path):
         "vec_id long, embedding array<float>, label int",
     )
     index_dir = str(tmp_path / "index")
-    cent = ann_index._ivfpq_coarse(ann_index._ivfpq_fp(emb))
+    cent = _fp_lloyd(ann_index._ivfpq_fp(emb), k=8)
     cent.write.parquet(f"{index_dir}/centroids")
     cent_before = sorted(
         (r["cell"], tuple(r["c"]))

@@ -123,11 +123,12 @@ AUDITED = {
     "at sf1); the only keyed exchange is the per-query top-5, "
     "WindowGroupLimit-partial per partition (r12). r14: the encode "
     "half is the Arrow kernel (one mapInArrow feeding the LUT join).",
-    "x47d_ivfpq_topk": "IVF-PQ composed: coarse centroids broadcast "
-    "(8 rows) for assignment, residual-PQ encode map-side over the "
-    "array-Literal codebook, probe = equi-join codes⋈broadcast "
+    "x47d_ivfpq_topk": "IVF-PQ engine, mixer codebook, in flight: the "
+    "coarse model trains declaratively (fixed-point Lloyd), then ONE "
+    "map-only Arrow kernel assigns + residual-encodes every vector into "
+    "packed (vec_id, cell, code); probe = equi-join codes⋈broadcast "
     "per-(query,cell) LUT on the cell key — no cartesian between "
-    "corpus-sized relations; per-query top-5 WindowGroupLimit (r12).",
+    "corpus-sized relations; per-query top-5 WindowGroupLimit.",
     "x45_semdedup": "codebook broadcast into the assignment pass; the "
     "in-cluster prune is FUSED into one FlatMapGroupsInPandas kernel "
     "per centroid group (r11, the x4j2 discipline) — no candidate "
@@ -165,18 +166,18 @@ AUDITED = {
     "predicates reach the corpus scan feeding both the dedup window "
     "and the gram explode; benchmark grams + quartile cutoffs "
     "broadcast; one text-keyed exchange in the whole five-stage plan.",
-    "x47i_ivfpq_trained_persisted": "persisted trained-residual "
-    "IVF-PQ (r14): probes read ONLY the probed cell partitions of the "
+    "x47i_ivfpq_trained_persisted": "persisted IVF-PQ, trained "
+    "codebook: probes read ONLY the probed cell partitions of the "
     "packed-int64 codes tree (PartitionFilters IN-list, pinned) plus "
-    "two ≤128-row model tables; unpack is codegen'd shift/mask; the "
-    "ADC join and top-k are x47h's shared probe verbatim.",
-    "x47h_ivfpq_trained_residual": "trained-residual IVF-PQ (r14): "
-    "coarse model broadcast (8 rows) into assignment; residual = "
-    "qa − cent in-plan integer math; residual codebook = per-subspace "
-    "fixed-point Lloyd on the ≤40k-row sample, broadcast (≤128 rows) "
-    "into encode; ADC = codes equi-joined against the BROADCAST "
-    "per-(query,cell,s,cd) integer distance table, candidate-bounded "
-    "groupBy — no corpus-sized cartesian, every sum an exact BIGINT.",
+    "the two ≤128-row model tables; unpack is codegen'd shift/mask; "
+    "downstream is the engine's one probe, as in x47h.",
+    "x47h_ivfpq_trained_residual": "IVF-PQ engine, trained codebook, in "
+    "flight: coarse model and per-subspace residual codebook train "
+    "declaratively (fixed-point Lloyd on the 1/4 sample); the same "
+    "Arrow kernel as x47d emits packed codes; ADC = codes equi-joined "
+    "on cell against a BROADCAST per-(query,cell) integer LUT, 8 "
+    "lookups per candidate map-side — no corpus-sized cartesian, no "
+    "per-(vector, subspace) rows, every sum an exact BIGINT.",
     "x55_cluster_keep_best": "keep-best dedup (r13): gram-keyed "
     "equi-join candidate generation (no CartesianProduct), integer "
     "Jaccard test, star-contraction components, then one "
@@ -186,12 +187,12 @@ AUDITED = {
     "outside every prefix generate zero candidates), exact "
     "array_intersect rescore per candidate pair — no CartesianProduct, "
     "no corpus-sized nested loop.",
-    "x47e_ivfpq_persisted": "persisted IVF-PQ serving path (r13): the "
+    "x47e_ivfpq_persisted": "persisted IVF-PQ, mixer codebook: the "
     "codes scan carries the probed cells as STATIC PartitionFilters "
     "(cell IN-list collected from the ≤8-row persisted centroid "
     "table) — unprobed cell directories are never opened; codes "
-    "unpack as codegen'd shift/mask; downstream is x47d's shared "
-    "probe plan (broadcast LUT join, WindowGroupLimit top-5).",
+    "unpack as codegen'd shift/mask; downstream is the engine's one "
+    "probe, as in x47d (broadcast LUT join, WindowGroupLimit top-5).",
 }
 
 

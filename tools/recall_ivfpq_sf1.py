@@ -1,13 +1,13 @@
 """IVF-PQ recall at sf1, measured against exact k-NN (VERDICT r13 #1).
 
-The IVF-PQ family (x47d in-flight, x47e persisted, stw_ivfpq_ingest
-streaming — all three produce the SAME cells and codes through the
-shared assign+encode path, pinned hash-identical in
+The IVF-PQ engine (mixer codebook: x47d in-flight, x47e persisted,
+stw_ivfpq_ingest streaming; trained codebook: x47h in-flight, x47i
+persisted — each codebook produces the SAME cells and codes on every
+path through the one encode kernel, pinned hash-identical in
 tests/test_ann_index.py and tests/test_streaming_dedup.py, so ONE
-measurement covers all three; x47h is the trained-residual variant
-this audit motivated) is graded hash-exact against oracles that
-recompute the same approximation — nothing in the repo measured how
-good the approximation IS. This harness does, in two lanes (the
+measurement per codebook covers its bindings) is graded hash-exact
+against oracles that recompute the same approximation — nothing in
+the repo measured how good the approximation IS. This harness does, in two lanes (the
 RECALL_SF1.json structure):
 
 **Corpus lane** — the sf1 corpus is near-isotropic random unit
@@ -35,12 +35,12 @@ in the approx top-5/top-10. At cos ≥ 0.6 the partner's squared-L2
 distance (2 − 2c ≤ 0.8) sits far below the ~2.0 background, so this
 lane measures whether the index finds the neighbors that matter.
 
-**Plans measured are the SHIPPED ones**: codes from
-_ivfpq_assign_encode_arrow (the build/append/streaming kernel),
-probes from _ivfpq_probe_plan (x47d/x47e verbatim) and
-_ivfpq_trained_plan (x47h verbatim), all at the sweep point via
-knobs whose graded defaults reproduce the r13/r14 plans
-byte-identically.
+**Plans measured are the SHIPPED ones**: models from _ivfpq_train,
+codes from _ivfpq_encode_arrow (the build/append/streaming kernel),
+probes from _ivfpq_probe_plan (every IVF-PQ binding's probe), all at
+the sweep point via knobs whose graded defaults are the graded
+plans. Each codebook trains and encodes once per lane; the nprobe
+sweep reuses its codes.
 
 Floors pinned here (and sanity-pinned in tests/test_ann_index.py),
 set ~0.05 under the r14 measured values (the RECALL_SF1.json
@@ -88,13 +88,12 @@ def main() -> None:  # noqa: C901 — one linear measurement script
 
     from pdf_etl_engine_spark.catalog import load_table
     from pdf_etl_engine_spark.operators.ann_index import (
-        _ivfpq_assign_encode_arrow,
-        _ivfpq_coarse,
+        _ivfpq_encode_arrow,
         _ivfpq_fp,
         _ivfpq_probe_plan,
         _ivfpq_probed,
         _ivfpq_queries,
-        _ivfpq_trained_plan,
+        _ivfpq_train,
     )
     from pdf_etl_engine_spark.session import get_spark
     from tools.recall_lsh_sf1 import (
@@ -130,8 +129,9 @@ def main() -> None:  # noqa: C901 — one linear measurement script
         truth[int(qid)] = [int(ids[i]) for i in top]
     exact_sec = round(time.monotonic() - t0, 1)
 
-    cent = _ivfpq_coarse(vecs_fp).localCheckpoint(eager=True)
-    cent_rows = cent.collect()
+    # one training serves both codebooks: the coarse model does not
+    # depend on the codebook
+    cent, cent_rows, _, cb_rows = _ivfpq_train(vecs_fp, "trained")
 
     def score(got_rows, vec_cell, probed_by_q) -> dict:
         by_q: dict[int, list[int]] = {}
@@ -169,8 +169,8 @@ def main() -> None:  # noqa: C901 — one linear measurement script
 
     corpus: dict[str, dict] = {}
     for label, k_cent in (("mixer_4bit", 16), ("mixer_8bit", 256)):
-        codes = _ivfpq_assign_encode_arrow(
-            emb, cent_rows, k_cent=k_cent, packed=False
+        codes = _ivfpq_encode_arrow(
+            emb, cent_rows, k_cent=k_cent
         ).localCheckpoint(eager=True)
         vec_cell = {
             int(r["vec_id"]): int(r["cell"])
@@ -190,19 +190,20 @@ def main() -> None:  # noqa: C901 — one linear measurement script
                 **score(got, vec_cell, probed_cells_map(vecs_fp, cent, nprobe)),
                 "spark_sec": round(time.monotonic() - t0, 1),
             }
-    # trained-residual (x47h's plan verbatim); cells are identical to
-    # the mixer runs (same coarse model), reuse the 4-bit vec_cell map
-    codes4 = _ivfpq_assign_encode_arrow(
-        emb, cent_rows, k_cent=16, packed=False
+    # trained codebook (x47h/x47i's probe)
+    codes = _ivfpq_encode_arrow(emb, cent_rows, cb_rows).localCheckpoint(
+        eager=True
     )
     vec_cell = {
         int(r["vec_id"]): int(r["cell"])
-        for r in codes4.select("vec_id", "cell").collect()
+        for r in codes.select("vec_id", "cell").collect()
     }
     for nprobe in NPROBE_SWEEP:
         t0 = time.monotonic()
         got = (
-            _ivfpq_trained_plan(emb, nprobe=nprobe, topk=11)
+            _ivfpq_probe_plan(
+                vecs_fp, cent, codes, cb_rows, nprobe=nprobe, topk=11
+            )
             .select("query_id", "vec_id", "rank")
             .collect()
         )
@@ -217,8 +218,7 @@ def main() -> None:  # noqa: C901 — one linear measurement script
         os.path.join(planted_dir, "embeddings.parquet")
     ).select("vec_id", "embedding")
     p_fp = _ivfpq_fp(p_emb).localCheckpoint(eager=True)
-    p_cent = _ivfpq_coarse(p_fp).localCheckpoint(eager=True)
-    p_cent_rows = p_cent.collect()
+    p_cent, p_cent_rows, _, p_cb_rows = _ivfpq_train(p_fp, "trained")
     # query = first partner of the first PLANTED_PER_BAND pairs per
     # band (u at id B + band_offset + 2i, partner at +1)
     bands: dict[str, list[int]] = {}
@@ -250,8 +250,8 @@ def main() -> None:  # noqa: C901 — one linear measurement script
 
     planted: dict[str, dict] = {}
     for label, k_cent in (("mixer_4bit", 16), ("mixer_8bit", 256)):
-        p_codes = _ivfpq_assign_encode_arrow(
-            p_emb, p_cent_rows, k_cent=k_cent, packed=False
+        p_codes = _ivfpq_encode_arrow(
+            p_emb, p_cent_rows, k_cent=k_cent
         ).localCheckpoint(eager=True)
         t0 = time.monotonic()
         got = (
@@ -267,11 +267,15 @@ def main() -> None:  # noqa: C901 — one linear measurement script
             "found_by_band": planted_score(got),
             "spark_sec": round(time.monotonic() - t0, 1),
         }
+    p_codes = _ivfpq_encode_arrow(
+        p_emb, p_cent_rows, p_cb_rows
+    ).localCheckpoint(eager=True)
     for nprobe in (PROD_NPROBE, 8):
         t0 = time.monotonic()
         got = (
-            _ivfpq_trained_plan(
-                p_emb, nprobe=nprobe, topk=11, query_filter=qfilter
+            _ivfpq_probe_plan(
+                p_fp, p_cent, p_codes, p_cb_rows,
+                nprobe=nprobe, topk=11, query_filter=qfilter,
             )
             .select("query_id", "vec_id", "rank")
             .collect()
