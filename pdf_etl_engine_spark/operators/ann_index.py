@@ -37,9 +37,16 @@ order of the ADC sum, reported as ``adc_dist``. ``codebook="trained"``
 encodes the integer residual qa − c against a per-subspace
 fixed-point Lloyd codebook trained on the residuals (x47c's recipe,
 persisted as ``codebook``); every ADC term is an exact BIGINT,
-reported as ``adc_fp``. The ADC scorer is the only code that branches
-on the codebook. Training is the recall lever: RECALL_IVFPQ_SF1.json
-measures both codebooks against exact k-NN at sf1.
+reported as ``adc_fp``. The ``codebook`` string is read only where
+the models are trained, loaded or located (``_ivfpq_train``,
+``_index_models``, ``default_ivfpq_dir``; the build writes the
+``codebook`` artifact when training returned one). Past that point
+the choice travels as ``cb_rows`` (None for the mixer), and two
+places branch on it: the encode residual (``_ivfpq_encode_arrow``
+with ``_pq_books``) and the ADC scorer (``_ivfpq_probe_plan``),
+whose two oracles differ. Training is the recall lever:
+RECALL_IVFPQ_SF1.json measures both codebooks against exact k-NN at
+sf1.
 """
 
 from __future__ import annotations
@@ -71,8 +78,9 @@ N_BITS = 3
 
 
 def _write_index(rows: DataFrame, path: str, mode: str, *keys: str) -> None:
-    """The partitioned write of both index trees. Shuffle on the
-    partition key first: each writer task then owns whole cells, so
+    """The partitioned write of every index tree (LSH, IVF-PQ, and
+    the streaming IVF-PQ ingest's per-batch directories). Shuffle on
+    the partition key first: each writer task then owns whole cells, so
     the layout is one file per cell instead of (tasks × cells) small
     files — the standard small-files guard for partitioned tables.
     Appends never rewrite existing files."""
@@ -1270,8 +1278,8 @@ def _ivfpq_probe_plan(
     tables, sum 8 lookups per candidate, top-k per query by
     (adc, vec_id).
 
-    The ADC scorer is the only code that branches on the codebook,
-    because the two oracles differ:
+    The scorer branches on the codebook (``cb_rows`` None for the
+    mixer), because the two oracles differ:
 
     * mixer (``cb_rows`` None): each entry is the strict-fold float
       distance from the query's float residual to a mixer centroid,

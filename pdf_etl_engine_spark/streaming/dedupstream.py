@@ -280,15 +280,18 @@ def vector_ingest_batch_fn(spark: SparkSession, index_dir: str):
     code set is independent of micro-batch slicing by construction —
     which is why the post-drain probe can be graded against the BATCH
     IVF-PQ oracle verbatim."""
-    from pdf_etl_engine_spark.operators.ann_index import _ivfpq_encode_arrow
+    from pdf_etl_engine_spark.operators.ann_index import (
+        _ivfpq_encode_arrow,
+        _write_index,
+    )
 
     cent_rows = spark.read.parquet(f"{index_dir}/centroids").collect()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         codes = _ivfpq_encode_arrow(batch_df, cent_rows)
-        codes.repartition("cell").write.mode("overwrite").partitionBy(
-            "cell"
-        ).parquet(f"{index_dir}/codes/batch={batch_id}")
+        _write_index(
+            codes, f"{index_dir}/codes/batch={batch_id}", "overwrite", "cell"
+        )
 
     return process
 

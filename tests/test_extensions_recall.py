@@ -212,8 +212,7 @@ def test_semdedup_trained_prune_recall(spark):
 
     exact = removed_set(n2)
     assert exact, "exact all-pairs prune unexpectedly empty"
-    train = qdf.filter(F.col("vec_id") % 4 == 0)
-    cent = _fp_lloyd(qdf, train, k=8, iters=2)
+    cent = _fp_lloyd(qdf, k=8)
     clustered = removed_set(
         _fp_assign(qdf, cent).withColumnRenamed("cell", "centroid_id").join(n2, "vec_id")
     )
