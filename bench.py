@@ -124,7 +124,7 @@ SF1_ANCHORS = (
     ("x_knn_join_exact", "x4k_knn_join_brute"),
 )
 # Twins not re-run: their SQL forms (quadratic joins or recursive CTEs;
-# x14b's comparator is x14c's exact-edge CTE, since LSH edges have no
+# x14b's comparator is x14's exact-edge CTE, since LSH edges have no
 # exact oracle) overran the cap on every recorded run, so re-running
 # them burns the cap and loads the host for the rows after them.
 STATIC_TWINS = frozenset({"x14b_dedup_clusters_lsh", "x4n_lsh_near_dup_multiprobe",

@@ -4,19 +4,22 @@ IVF-PQ engine. The reference service has no vector path at all; this
 module extends its /get-results top-k idea (main.py:808-811) to
 embedding space.
 
-**LSH index (x4f).** ``x4b_ann_lsh_topk`` computes LSH buckets at
-query time, so every probe scans all embedding rows before the bucket
-semi-join filters them. :func:`build_ann_index` pays the bucket
-assignment once, at write time: it explodes each vector into its L
-(table, bucket) slots and writes parquet partitioned by (t, b).
-:func:`probe_ann_index` evaluates the query vector's L buckets
-driver-side, turns them into literal ``(t = …, b = …)`` disjuncts,
-and the scan touches ≤ L of the n_tables × 2^k partition directories
-(``PartitionFilters``); only the candidate set pays the exact cosine
-rescore. :func:`append_ann_index` appends a batch into the same tree.
-tests/test_ann_index.py pins the pruning and the equivalence to x4b.
+**LSH index (x4b in flight, x4f persisted).** :func:`_lsh_index_rows`
+explodes each vector into its L (table, bucket) slots, carrying the
+payload the probe scores from. ``x4b_ann_lsh_topk`` builds those rows
+in flight and left-semi-joins them to the query's own broadcast
+(t, b) rows, so every probe still scans all embedding rows.
+:func:`build_ann_index` pays the bucket assignment once, at write
+time, as parquet partitioned by (t, b); :func:`probe_ann_index`
+evaluates the query vector's L buckets driver-side, turns them into
+literal ``(t = …, b = …)`` disjuncts, and the scan touches ≤ L of the
+n_tables × 2^k partition directories (``PartitionFilters``).
+Both probes rescore their candidates with one exact cosine top-k
+(:func:`_lsh_topk`, x4's scorer). :func:`append_ann_index` appends a
+batch into the same tree. tests/test_ann_index.py pins the pruning
+and the equivalence of the two probes.
 
-**IVF-PQ engine (x47d/x47e/x47h/x47i, stw_ivfpq_ingest).** One
+**IVF-PQ engine (x47b, x47d/x47e/x47h/x47i, stw_ivfpq_ingest).** One
 build/append/probe over one persisted layout, for two codebooks:
 
 * the coarse quantizer is x45b's fixed-point sampled Lloyd
@@ -29,7 +32,13 @@ build/append/probe over one persisted layout, for two codebooks:
   partitioned by cell next to ``centroids`` and a ``manifest``;
 * a probe ranks cells per query, reads only the nprobe nearest
   cells' partitions, builds one ADC lookup table per (query, cell),
-  sums 8 lookups per candidate and keeps the top 5.
+  and the ADC scorer (``_adc_topk``) sums 8 lookups per candidate and
+  keeps the top 5.
+
+x47b (plain PQ top-k) is the one-cell binding: the encode kernel
+against one centroid at the origin (its residual is the vector
+itself), the mixer lookup table over each query's embedding, and the
+ADC scorer — no cell ranking.
 
 ``codebook="mixer"`` encodes the float residual x − c/10⁴ against the
 fixed hash-mixer codebook of x47; its oracle fixes the float addition
@@ -41,12 +50,12 @@ reported as ``adc_fp``. The ``codebook`` string is read only where
 the models are trained, loaded or located (``_ivfpq_train``,
 ``_index_models``, ``default_ivfpq_dir``; the build writes the
 ``codebook`` artifact when training returned one). Past that point
-the choice travels as ``cb_rows`` (None for the mixer), and two
+the choice travels as ``cb_rows`` (None for the mixer), and three
 places branch on it: the encode residual (``_ivfpq_encode_arrow``
-with ``_pq_books``) and the ADC scorer (``_ivfpq_probe_plan``),
-whose two oracles differ. Training is the recall lever:
-RECALL_IVFPQ_SF1.json measures both codebooks against exact k-NN at
-sf1.
+with ``_pq_books``), the query's lookup table (``_ivfpq_probe_plan``)
+and the ADC sum (``_adc_topk``), whose two oracles differ. Training
+is the recall lever: RECALL_IVFPQ_SF1.json measures both codebooks
+against exact k-NN at sf1.
 """
 
 from __future__ import annotations
@@ -60,8 +69,7 @@ from pyspark.sql.window import Window
 from pdf_etl_engine_spark.catalog import load_table, table_path
 from pdf_etl_engine_spark.functions.stable import stable_round
 from pdf_etl_engine_spark.operators.extensions import (
-    _as_double,
-    _dot,
+    _cosine_topk,
     _fp_assign,
     _fp_lloyd,
     _fp_quantize,
@@ -71,8 +79,8 @@ from pdf_etl_engine_spark.operators.extensions import (
 from pdf_etl_engine_spark.registry import query
 from pdf_etl_engine_spark.scratch import scratch_dir
 
-# Same (k, L) operating point as x4b — see its docstring for the
-# recall math on this near-uniform testdata.
+# The (k, L) operating point of x4b and x4f — see x4b's docstring for
+# the recall math on this near-uniform testdata.
 N_TABLES = 12
 N_BITS = 3
 
@@ -113,7 +121,9 @@ def _guard_fresh_vec_ids(
         )
 
 
-def _lsh_index_rows(emb: DataFrame, n_tables: int, n_bits: int) -> DataFrame:
+def _lsh_index_rows(
+    emb: DataFrame, n_tables: int = N_TABLES, n_bits: int = N_BITS
+) -> DataFrame:
     """The LSH index rows: one per (vector, table), carrying the
     payload the probe scores from — (t, b, vec_id, label, embedding)."""
     return emb.select(
@@ -145,6 +155,56 @@ def build_ann_index(
     _write_index(rows, out_dir, "overwrite", "t", "b")
 
 
+def _lsh_topk(
+    rows: DataFrame, qrow: DataFrame, query_vec_id: int, k: int
+) -> DataFrame:
+    """The LSH probe's rescore, in flight (x4b) and persisted (x4f):
+    the index ``rows`` that share a bucket with the query, minus the
+    query itself, one per vec_id, scored from the INDEX-CARRIED
+    payload by the exact cosine top-k (x4's _cosine_topk). A vector's
+    L bucket rows carry identical payload, so the per-id dedup is
+    value-deterministic; scoring from the carried payload instead of
+    an embeddings join is what makes vectors appended by
+    append_ann_index — which never existed in the base corpus
+    parquet — servable."""
+    cand = (
+        rows.filter(F.col("vec_id") != query_vec_id)
+        .select("vec_id", "label", "embedding")
+        .dropDuplicates(["vec_id"])
+    )
+    return _cosine_topk(cand, qrow, k)
+
+
+@query("x4b_ann_lsh_topk")  # rows-only: approximate by design
+def x4b_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X4b: ANN scale path — MULTI-TABLE random-hyperplane LSH, the
+    LSH index built and probed in flight. L tables of k bits; a vector
+    is a candidate if it lands in the query's bucket in ANY table
+    (a left-semi join of the index rows against the query's own L
+    broadcast (t, b) rows), then exact cosine rescoring picks top-10
+    (_lsh_topk, shared with the persisted probe x4f). Recall follows
+    1-(1-p^k)^L with p = 1 - theta/pi per bit.
+
+    Parameter honesty: the testdata embeddings are near-uniform — the
+    query's true top-10 sit at cos 0.28-0.41 (p ≈ 0.59-0.63), so
+    recall ≥ 0.8 needs the permissive (k=3, L=12): predicted
+    1-(1-0.6³)^12 ≈ 0.94, measured by tests/test_extensions_recall.py.
+    At that p the candidate set is a large fraction of the data —
+    weak-similarity neighbors are information-theoretically expensive.
+    On real near-dup workloads (cos ≥ 0.8, p ≥ 0.86) the SAME code
+    with k=12-16 keeps recall ≥ 0.95 while pruning 100-1000×. At
+    100 TB (t, b) is the partition key of the persisted index (x4f):
+    a probe touches L partitions, and only the candidate set pays the
+    exact rescore."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    # one bucket expression for both sides: the filter pushes below the
+    # explode, and the 36-plane tree is built and analysed once
+    rows = _lsh_index_rows(emb)
+    buckets = rows.filter(F.col("vec_id") == 0).select("t", "b")
+    cand = rows.join(F.broadcast(buckets), ["t", "b"], "left_semi")
+    return _lsh_topk(cand, emb.filter(F.col("vec_id") == 0), 0, 10)
+
+
 def probe_ann_index(
     spark: SparkSession,
     sf_dir: str,
@@ -160,49 +220,15 @@ def probe_ann_index(
     # Serving-path driver work: L bucket ids for ONE vector. This
     # collect is O(L), not O(n) — it is what turns the probe into
     # literal partition predicates Spark can prune statically.
-    buckets = (
-        qrow.select(F.explode(_lsh_buckets(N_TABLES, N_BITS)).alias("tb"))
-        .select("tb.t", "tb.b")
-        .collect()
-    )
+    buckets = _lsh_index_rows(qrow).select("t", "b").collect()
     # unknown query id ⇒ no buckets ⇒ empty candidate set (not a crash)
     pred = F.lit(False)
     for r in buckets:
         pred = pred | (
             (F.col("t") == int(r["t"])) & (F.col("b") == int(r["b"]))
         )
-    # score from the INDEX-CARRIED vectors, not an emb join: the index
-    # rows store (embedding, label), so candidates appended by
-    # append_ann_index — vectors that never existed in the base
-    # corpus parquet — are servable; duplicates across a vector's L
-    # bucket rows carry identical payload, so the per-id dedup is
-    # value-deterministic. One join fewer than the r12 shape, same
-    # answer (pinned against x4b in tests/test_ann_index.py).
-    cand = (
-        spark.read.parquet(index_dir)
-        .filter(pred)
-        .filter(F.col("vec_id") != query_vec_id)
-        .select("vec_id", "label", "embedding")
-        .dropDuplicates(["vec_id"])
-    )
-    qv = qrow.select(_as_double(F.col("embedding")).alias("qv"))
-    e = _as_double(F.col("embedding"))
-    scored = (
-        cand.crossJoin(F.broadcast(qv))
-        .select(
-            "vec_id",
-            "label",
-            stable_round(
-                _dot(e, F.col("qv"))
-                / (
-                    F.sqrt(_dot(e, e))
-                    * F.sqrt(_dot(F.col("qv"), F.col("qv")))
-                ),
-                4,
-            ).alias("cos_sim"),
-        )
-    )
-    return scored.orderBy(F.desc("cos_sim"), "vec_id").limit(k)
+    rows = spark.read.parquet(index_dir).filter(pred)
+    return _lsh_topk(rows, qrow, query_vec_id, k)
 
 
 def append_ann_index(
@@ -393,7 +419,7 @@ def pq_encode(emb: DataFrame) -> DataFrame:
     higher-order-function folds over one array-Literal codebook
     (HOFs are CodegenFallback, but a constant-size interpreted
     expression — the unrolled codegen'd form overflowed the JVM's
-    64KB method limit and was strictly slower; see the x47b note)
+    64KB method limit and was strictly slower; see _pq_cb_flat)
     at ~2.4 s for the full sf1 corpus. The
     point at 100 TB: the persisted search column shrinks 256 bytes
     (64 f32) -> 8 bytes, so an exhaustive ADC scan reads 1/32 the
@@ -553,48 +579,6 @@ def _pack_np(cds, bits: int):
     return code.view(np.int64)
 
 
-def pq_encode_arrow(emb: DataFrame) -> DataFrame:
-    """BIT-IDENTICAL Arrow twin of :func:`pq_encode`: same
-    (vec_id, pq_code, q_err_raw), computed in one vectorized numpy
-    kernel instead of interpreted HOF folds. Every float step
-    reproduces the Column form's IEEE-double sequence exactly: the
-    centroid value n/256.0 is a dyadic rational, exact in double
-    either way; the distances and the first-min argmin are
-    _subspace_encode_np's strict fold; q_err adds the per-subspace
-    minima in s-ascending order from 0.
-
-    tests/test_pq_spans.py pins code-and-error equality against
-    pq_encode row for row. Scale shape: map-only like pq_encode, but
-    the 1024 multiply-adds per row run as 8·8 vectorized (n × 16)
-    array ops per Arrow batch instead of ~1024 interpreted lambda
-    steps per ROW — the same plan, ~40× less per-row overhead."""
-    import numpy as np
-    import pyarrow as pa
-
-    books = _pq_books()
-
-    def enc(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            cds, mds = _subspace_encode_np(_batch_vectors(batch), books)
-            qerr = np.zeros(n, dtype=np.float64)
-            for s in range(_PQ_S):
-                qerr += mds[s]
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "vec_id": batch.column("vec_id").cast(pa.int64()),
-                    "pq_code": pa.array(_pack_np(cds, 4), pa.int64()),
-                    "q_err_raw": pa.array(qerr, pa.float64()),
-                }
-            )
-
-    return emb.select("vec_id", "embedding").mapInArrow(
-        enc, "vec_id long, pq_code long, q_err_raw double"
-    )
-
-
 _X47B_ORACLE = (
     _pq_cb_cte()
     + f"""
@@ -633,72 +617,36 @@ _X47B_ORACLE = (
 @query("x47b_pq_adc_topk", oracle=_X47B_ORACLE)
 def x47b_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X47b: asymmetric-distance (ADC) top-k over the 8-byte PQ codes
-    — the query half of IVF-PQ. Queries (vec_id % 250 = 0, the x4
-    probe-set convention) stay full-precision; corpus vectors are
-    reconstructed per subspace from the packed code's 4-bit fields
-    (pq_code >> 4s & 15) and scored by summed subspace squared-L2 in
-    subspace order (strict fold, bit-exact vs the SQL twin). Self
-    matches stay in the result — PQ distance of a vector to its own
-    code is its quantization error, a useful sanity signal.
+    — the query half of IVF-PQ, as the IVF-PQ engine bound to ONE
+    coarse cell at the origin. Queries (vec_id % 250 = 0, the x4
+    probe-set convention) stay full-precision; every corpus vector is
+    scored by the summed subspace distances from the query to its
+    code's centroids, in subspace order (strict fold, bit-exact vs the
+    SQL twin). Self matches stay in the result — PQ distance of a
+    vector to its own code is its quantization error, a useful sanity
+    signal.
 
-    Scale shape: the ADC LUT — dist(q_s, centroid c) for all 8×16
-    (s, c) pairs — is computed ONCE per query on the broadcast-tiny
-    query side (the standard PQ trick: it turns the per-pair work
-    from 1024 multiply-adds into 8 array lookups + adds, and keeps
-    the per-pair expression small enough for whole-stage codegen —
-    the unrolled form's ~2000-node tree blew the JVM method limit
-    into interpreted fallback, 6.8× slower than DuckDB at sf1; the
-    LUT form inverts that). The code scan is map-only over the
-    8-byte column; the only keyed exchange is the per-query top-5,
-    WindowGroupLimit-partial per partition. Summation order (s
-    ascending, d ascending within s) is unchanged, so adc values are
-    bit-identical to the unrolled form and the oracle.
-
-    r14 (VERDICT r13 #2): the encode half is the Arrow kernel
-    (pq_encode_arrow) — the canonical name was the one registered
-    query still reading >2× at sf1 (2.02×, BENCH_r13) while its
-    bit-identical fused twin read 0.30×; the kernel reproduces the
-    HOF fold's float sequence exactly (pinned row-for-row by
-    tests/test_pq_spans.py), so the oracle and the answer are
-    unchanged."""
+    Three engine steps: the encode kernel (_ivfpq_encode_arrow)
+    against the one centroid 0 — its residual x − 0/10⁴ is x exactly,
+    so the codes equal pq_encode's (pinned per vec_id by
+    tests/test_pq_spans.py); the mixer lookup table over each query's
+    own embedding (_mixer_lut, computed ONCE per query on the
+    broadcast-tiny side: 8 lookups + adds per pair instead of 1024
+    multiply-adds); and the engine's ADC scorer (_adc_topk), whose
+    equi-join on the constant cell plans as a filter plus a broadcast
+    pairing of every code with every query. No cell ranking: with one
+    cell it would only add jobs. The code scan is map-only; the
+    only keyed exchange is the per-query top-5, WindowGroupLimit-
+    partial per partition."""
     emb = load_table(spark, sf_dir, "embeddings")
-    enc = pq_encode_arrow(emb)
-    cbflat = _pq_cb_flat()
-    lut = F.transform(
-        F.sequence(F.lit(0), F.lit(_PQ_S * _PQ_K - 1)),
-        lambda i: _pq_dist_expr(
-            F.col("qe"),
-            F.shiftright(i, 4),
-            i.bitwiseAND(F.lit(_PQ_K - 1)),
-            cbflat,
-        ),
+    origin = [{"cell": 0, "c": [0] * (_PQ_S * _PQ_D)}]
+    codes = _ivfpq_encode_arrow(emb, origin)
+    qlut = emb.filter(F.col("vec_id") % 250 == 0).select(
+        F.col("vec_id").alias("query_id"),
+        F.lit(0).cast("long").alias("cell"),
+        _mixer_lut(F.col("embedding")).alias("lut"),
     )
-    q = emb.filter(F.col("vec_id") % 250 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    ).select("query_id", lut.alias("lut"))
-    pairs = enc.crossJoin(F.broadcast(q))
-    adc: Column = F.lit(0.0)
-    for s in range(_PQ_S):
-        code_s = (
-            F.shiftright(F.col("pq_code"), 4 * s)
-            .bitwiseAND(F.lit(15))
-            .cast("int")
-        )
-        adc = adc + F.element_at(F.col("lut"), F.lit(s * _PQ_K) + code_s + 1)
-    scored = pairs.select(
-        "query_id", "vec_id", adc.alias("adc_raw")
-    )
-    w = Window.partitionBy("query_id").orderBy("adc_raw", "vec_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 5)
-        .select(
-            "query_id",
-            "vec_id",
-            stable_round(F.col("adc_raw"), 4).alias("adc_dist"),
-            "rank",
-        )
-    )
+    return _adc_topk(codes, qlut).drop("cell")
 
 
 # ---------------------------------------------------------------------------
@@ -1088,8 +1036,9 @@ def _ivfpq_encode_arrow(
     """The engine's one encode: with the collected models, assignment
     + residual + per-subspace argmin run as one map-only Arrow kernel
     over (vec_id, embedding), emitting the packed (vec_id, cell, code)
-    relation that x47d/x47h probe in flight, the persisted index
-    stores, and the streaming ingest appends.
+    relation that x47b (one cell at the origin) and x47d/x47h probe in
+    flight, the persisted index stores, and the streaming ingest
+    appends.
 
     The codebook decides only the residual: the mixer
     (``cb_rows`` None) encodes the float residual x − c/10⁴ (two
@@ -1261,79 +1210,50 @@ def _ivfpq_probed(
     )
 
 
-def _ivfpq_probe_plan(
-    vecs_fp: DataFrame,
-    cent: DataFrame,
+def _mixer_lut(vec: Column, k_cent: int = _PQ_K) -> Column:
+    """The mixer codebook's ADC lookup table for one float vector
+    (x47b's query embedding, or a query's residual against a probed
+    cell): entry s·k_cent + c is the strict-fold squared L2 from
+    subspace s of ``vec`` to mixer centroid c (_pq_dist_expr, the
+    oracle's float sequence)."""
+    bits = (k_cent - 1).bit_length()
+    cbflat = _pq_cb_flat(k_cent)
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(_PQ_S * k_cent - 1)),
+        lambda i: _pq_dist_expr(
+            vec,
+            F.shiftright(i, bits),
+            i.bitwiseAND(F.lit(k_cent - 1)),
+            cbflat,
+            k_cent,
+        ),
+    )
+
+
+def _adc_topk(
     codes: DataFrame,
+    qlut: DataFrame,
     cb_rows: list | None = None,
-    nprobe: int = _IVFPQ_NPROBE,
     k_cent: int = _PQ_K,
     topk: int = 5,
-    query_filter: Column | None = None,
 ) -> DataFrame:
-    """The probe of the engine, shared by the in-flight and the
-    persisted plans: rank cells per query, build one ADC lookup table
-    of S·k_cent entries per (query, probed cell), equi-join the packed
-    ``codes`` (vec_id, cell, code) on cell against the broadcast
-    tables, sum 8 lookups per candidate, top-k per query by
-    (adc, vec_id).
+    """The ADC scorer of every IVF-PQ binding: unpack the packed
+    ``codes`` (vec_id, cell, code), equi-join them on cell against the
+    broadcast lookup tables ``qlut`` (query_id, cell, lut: one per
+    (query, probed cell)), sum 8 lookups per candidate, and keep the
+    top-k per query by (adc, vec_id) — a partial WindowGroupLimit
+    below the one keyed exchange.
 
-    The scorer branches on the codebook (``cb_rows`` None for the
-    mixer), because the two oracles differ:
+    It branches on the codebook (``cb_rows`` None for the mixer),
+    because the two oracles differ:
 
-    * mixer (``cb_rows`` None): each entry is the strict-fold float
-      distance from the query's float residual to a mixer centroid,
-      and the sum adds s = 0..7 from 0.0 in order — that addition
-      order is part of the x47d oracle. Output ``adc_dist``, rounded
-      to 4 places;
-    * trained: each entry is the integer distance from the query's
-      integer residual to a trained centroid (cells that emptied in
-      training hold zeros and are never looked up), and the sum is an
-      exact BIGINT, order-free. Output ``adc_fp``.
-
-    (nprobe, k_cent, topk, query_filter) exist for the recall sweep
-    (tools/recall_ivfpq_sf1.py); the graded defaults are
-    (2, 16, 5, every 250th vector)."""
-    _check_k_cent(k_cent)
-    bits = (k_cent - 1).bit_length()
-    probed = _ivfpq_probed(
-        _ivfpq_queries(vecs_fp, query_filter), cent, nprobe
-    )
-    if cb_rows is None:
-        cbflat = _pq_cb_flat(k_cent)
-        qr = _residual_col(F.col("qe"), F.col("centvec"))
-
-        def entry(i):
-            return _pq_dist_expr(
-                F.col("qr"),
-                F.shiftright(i, bits),
-                i.bitwiseAND(F.lit(k_cent - 1)),
-                cbflat,
-                k_cent,
-            )
-
-        adc: Column = F.lit(0.0)
-    else:
-        # flat index (s·k_cent + c)·8 + d, as the mixer's _pq_cb_flat
-        flat = [0] * (_PQ_S * k_cent * _PQ_D)
-        for r in cb_rows:
-            base = (int(r["s"]) * k_cent + int(r["cell"])) * _PQ_D
-            flat[base : base + _PQ_D] = [int(v) for v in r["c"]]
-        cbflat = _int_array_lit(flat).cast("array<bigint>")
-        qr = F.zip_with(F.col("qqa"), F.col("centvec"), lambda x, c: x - c)
-
-        def entry(i):
-            return _fp_sqdist(
-                F.slice(F.col("qr"), F.shiftright(i, bits) * _PQ_D + 1, _PQ_D),
-                F.slice(cbflat, i * _PQ_D + 1, _PQ_D),
-            )
-
-        adc = F.lit(0).cast("long")
-    lut = F.transform(F.sequence(F.lit(0), F.lit(_PQ_S * k_cent - 1)), entry)
-    qlut = probed.select("query_id", "cell", qr.alias("qr")).select(
-        "query_id", "cell", lut.alias("lut")
-    )
+    * mixer: the sum adds s = 0..7 from 0.0 in order — that addition
+      order is part of the x47b/x47d oracles. Output ``adc_dist``,
+      rounded to 4 places;
+    * trained: every entry is an exact BIGINT, so the sum is
+      order-free. Output ``adc_fp``."""
     pairs = _unpack_codes(codes, k_cent).join(F.broadcast(qlut), "cell")
+    adc = F.lit(0.0) if cb_rows is None else F.lit(0).cast("long")
     for s in range(_PQ_S):
         adc = adc + F.element_at(
             F.col("lut"), F.lit(s * k_cent) + F.col(f"cd{s}").cast("int") + 1
@@ -1350,6 +1270,61 @@ def _ivfpq_probe_plan(
         .filter(F.col("rank") <= topk)
         .select("query_id", "vec_id", "cell", score, "rank")
     )
+
+
+def _ivfpq_probe_plan(
+    vecs_fp: DataFrame,
+    cent: DataFrame,
+    codes: DataFrame,
+    cb_rows: list | None = None,
+    nprobe: int = _IVFPQ_NPROBE,
+    k_cent: int = _PQ_K,
+    topk: int = 5,
+    query_filter: Column | None = None,
+) -> DataFrame:
+    """The probe of the engine, shared by the in-flight and the
+    persisted plans: rank cells per query, build one ADC lookup table
+    of S·k_cent entries per (query, probed cell), and score the packed
+    ``codes`` against them (_adc_topk).
+
+    The table follows the codebook (``cb_rows`` None for the mixer):
+
+    * mixer: the strict-fold float distances from the query's float
+      residual x − c/10⁴ to the mixer centroids (_mixer_lut);
+    * trained: the integer distances from the query's integer
+      residual to the trained centroids (cells that emptied in
+      training hold zeros and are never looked up).
+
+    (nprobe, k_cent, topk, query_filter) exist for the recall sweep
+    (tools/recall_ivfpq_sf1.py); the graded defaults are
+    (2, 16, 5, every 250th vector)."""
+    _check_k_cent(k_cent)
+    probed = _ivfpq_probed(
+        _ivfpq_queries(vecs_fp, query_filter), cent, nprobe
+    )
+    if cb_rows is None:
+        qr = _residual_col(F.col("qe"), F.col("centvec"))
+        lut = _mixer_lut(F.col("qr"), k_cent)
+    else:
+        bits = (k_cent - 1).bit_length()
+        # flat index (s·k_cent + c)·8 + d, as the mixer's _pq_cb_flat
+        flat = [0] * (_PQ_S * k_cent * _PQ_D)
+        for r in cb_rows:
+            base = (int(r["s"]) * k_cent + int(r["cell"])) * _PQ_D
+            flat[base : base + _PQ_D] = [int(v) for v in r["c"]]
+        cbflat = _int_array_lit(flat).cast("array<bigint>")
+        qr = F.zip_with(F.col("qqa"), F.col("centvec"), lambda x, c: x - c)
+        lut = F.transform(
+            F.sequence(F.lit(0), F.lit(_PQ_S * k_cent - 1)),
+            lambda i: _fp_sqdist(
+                F.slice(F.col("qr"), F.shiftright(i, bits) * _PQ_D + 1, _PQ_D),
+                F.slice(cbflat, i * _PQ_D + 1, _PQ_D),
+            ),
+        )
+    qlut = probed.select("query_id", "cell", qr.alias("qr")).select(
+        "query_id", "cell", lut.alias("lut")
+    )
+    return _adc_topk(codes, qlut, cb_rows, k_cent, topk)
 
 
 def _ivfpq_inflight(emb: DataFrame, codebook: str) -> DataFrame:

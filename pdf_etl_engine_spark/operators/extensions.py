@@ -336,33 +336,38 @@ def _as_double(a: Column) -> Column:
     """,
 )
 def x4_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4: brute-force cosine top-k against a query vector (vec_id 0).
-    Dot/norm via zip_with+aggregate array lambdas — JVM-side, no UDF.
-    Top-k is TakeOrderedAndProject: per-partition heaps, no global
-    sort. This is the exact baseline; the LSH-bucketed scale path is
-    x4b."""
+    """X4: brute-force cosine top-k against a query vector (vec_id 0),
+    scoring every other vector. This is the exact baseline; the LSH
+    probes x4b/x4f score only their candidates through the same
+    _cosine_topk."""
     emb = load_table(spark, sf_dir, "embeddings")
-    qv = emb.filter(F.col("vec_id") == 0).select(
-        _as_double(F.col("embedding")).alias("qv")
+    return _cosine_topk(
+        emb.filter(F.col("vec_id") != 0), emb.filter(F.col("vec_id") == 0)
     )
-    scored = (
-        emb.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(qv))
-        .select(
-            "vec_id",
-            "label",
-            stable_round(
-                _dot(_as_double(F.col("embedding")), F.col("qv"))
-                / (
-                    F.sqrt(_dot(_as_double(F.col("embedding")),
-                                _as_double(F.col("embedding"))))
-                    * F.sqrt(_dot(F.col("qv"), F.col("qv")))
-                ),
-                4,
-            ).alias("cos_sim"),
-        )
+
+
+def _cosine_topk(cand: DataFrame, qrow: DataFrame, k: int = 10) -> DataFrame:
+    """The one exact cosine top-k of the X4 family: every candidate row
+    (vec_id, label, embedding) scored against the one-row query
+    ``qrow``'s embedding, rounded to 4 places, top-k by (cos_sim desc,
+    vec_id). Dot/norm via zip_with+aggregate array lambdas —
+    JVM-side, no UDF; the query rides a broadcast, and the top-k is
+    TakeOrderedAndProject: per-partition heaps, no global sort."""
+    qv = qrow.select(_as_double(F.col("embedding")).alias("qv"))
+    scored = cand.crossJoin(F.broadcast(qv)).select(
+        "vec_id",
+        "label",
+        stable_round(
+            _dot(_as_double(F.col("embedding")), F.col("qv"))
+            / (
+                F.sqrt(_dot(_as_double(F.col("embedding")),
+                            _as_double(F.col("embedding"))))
+                * F.sqrt(_dot(F.col("qv"), F.col("qv")))
+            ),
+            4,
+        ).alias("cos_sim"),
     )
-    return scored.orderBy(F.desc("cos_sim"), "vec_id").limit(10)
+    return scored.orderBy(F.desc("cos_sim"), "vec_id").limit(k)
 
 
 def _hyperplane(idx: int) -> Column:
@@ -399,54 +404,6 @@ def _lsh_buckets(n_tables: int, n_bits: int) -> Column:
             sig = sig + b
         tables.append(F.struct(F.lit(t).alias("t"), sig.alias("b")))
     return F.array(*tables)
-
-
-@query("x4b_ann_lsh_topk")  # rows-only: approximate by design
-def x4b_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4b: ANN scale path — MULTI-TABLE random-hyperplane LSH.
-    L tables of k bits; a vector is a candidate if it lands in the
-    query's bucket in ANY table (union over tables, dedup by vec_id),
-    then exact cosine rescoring picks top-10. Recall follows
-    1-(1-p^k)^L with p = 1 - theta/pi per bit.
-
-    Parameter honesty: the testdata embeddings are near-uniform — the
-    query's true top-10 sit at cos 0.28-0.41 (p ≈ 0.59-0.63), so
-    recall ≥ 0.8 needs the permissive (k=3, L=12): predicted
-    1-(1-0.6³)^12 ≈ 0.94, measured by tests/test_extensions_recall.py.
-    At that p the candidate set is a large fraction of the data —
-    weak-similarity neighbors are information-theoretically expensive.
-    On real near-dup workloads (cos ≥ 0.8, p ≥ 0.86) the SAME code
-    with k=12-16 keeps recall ≥ 0.95 while pruning 100-1000×. At
-    100 TB (t, bucket) is the partition key of the index table: a
-    probe touches L partitions, and only the candidate set pays the
-    exact rescore."""
-    n_tables, n_bits = 12, 3
-    emb = load_table(spark, sf_dir, "embeddings")
-    indexed = emb.select(
-        "vec_id", F.explode(_lsh_buckets(n_tables, n_bits)).alias("tb")
-    ).select("vec_id", "tb.t", "tb.b")
-    probe = indexed.filter(F.col("vec_id") == 0).select("t", "b")
-    cand_ids = (
-        indexed.filter(F.col("vec_id") != 0)
-        .join(F.broadcast(probe), ["t", "b"], "left_semi")
-        .select("vec_id")
-        .distinct()
-    )
-    qrow = emb.filter(F.col("vec_id") == 0).select(
-        _as_double(F.col("embedding")).alias("qv")
-    )
-    cand = emb.join(cand_ids, "vec_id").crossJoin(F.broadcast(qrow))
-    e = _as_double(F.col("embedding"))
-    scored = cand.select(
-        "vec_id",
-        "label",
-        stable_round(
-            _dot(e, F.col("qv"))
-            / (F.sqrt(_dot(e, e)) * F.sqrt(_dot(F.col("qv"), F.col("qv")))),
-            4,
-        ).alias("cos_sim"),
-    )
-    return scored.orderBy(F.desc("cos_sim"), "vec_id").limit(10)
 
 
 # ---------------------------------------------------------------------------
@@ -2322,16 +2279,13 @@ def x14_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X14 (dedup family): near-duplicate CLUSTERS — connected
     components of the x4c pair graph (cos ≥ 0.25), so "keep one
     canonical document per duplicate group" becomes a filter on
-    component == vec_id. Iterative min-label propagation: each round
-    every vertex takes the min label among itself and its neighbors;
-    converges in graph-diameter rounds (early-stops when no label
-    changes). Genuinely iterative — a driver loop of whole-DataFrame
-    joins, the Pregel pattern — yet still oracle-checkable: DuckDB
-    computes the same components with a recursive CTE. At 100 TB you
-    swap plain propagation for the alternating large-star/small-star
-    rewrite (O(log n) rounds) and localCheckpoint each round to cut
-    lineage; the per-round shuffle key is the edge endpoint, exactly
-    like here."""
+    component == vec_id. The exact edge set (the O(n²) pair join, the
+    disclosed oracle baseline) feeds the one connected-components
+    engine, alternating large-star/small-star (connected_components,
+    O(log n) rounds, the labeling x14b runs over LSH edges). Genuinely
+    iterative — a driver loop of whole-DataFrame joins — yet still
+    oracle-checkable: DuckDB computes the same components with a
+    recursive CTE."""
     emb = load_table(spark, sf_dir, "embeddings")
     v = emb.select(
         "vec_id",
@@ -2341,46 +2295,12 @@ def x14_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a, b = v.alias("a"), v.alias("b")
     cos = _dot(F.col("a.e"), F.col("b.e")) / (F.col("a.nrm") * F.col("b.nrm"))
-    half = (
+    edges = (
         a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
         .filter(cos >= 0.25)
         .select(F.col("a.vec_id").alias("src"), F.col("b.vec_id").alias("dst"))
     )
-    edges = half.unionByName(
-        half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist()
-    labels = emb.select(
-        "vec_id", F.col("vec_id").alias("component")
-    ).persist()
-    try:
-        rounds = 0
-        while True:  # to fixpoint: labels only decrease, so ≤ diameter rounds
-            prop = edges.join(
-                labels, edges["src"] == labels["vec_id"]
-            ).select(F.col("dst").alias("vec_id"), "component")
-            new_labels = labels.unionByName(prop).groupBy("vec_id").agg(
-                F.min("component").alias("component")
-            )
-            rounds += 1
-            if rounds % 8 == 0:
-                # truncate the join/union lineage so plan analysis
-                # doesn't grow with round count (iterative-algorithm
-                # hygiene; at scale this is checkpoint-per-round)
-                new_labels = new_labels.localCheckpoint(eager=False)
-            new_labels = new_labels.persist()
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "vec_id")
-                .filter(F.col("n.component") != F.col("o.component"))
-                .count()
-            )
-            labels.unpersist()
-            labels = new_labels
-            if changed == 0:
-                break
-        return labels.select("vec_id", "component")
-    finally:
-        edges.unpersist()
+    return connected_components(emb.select("vec_id"), edges)
 
 
 # ---------------------------------------------------------------------------
@@ -2447,8 +2367,9 @@ def connected_components(
     vertices: DataFrame, edges: DataFrame, max_rounds: int = 50
 ) -> DataFrame:
     """Connected components via alternating large-star/small-star —
-    the O(log n)-round rewrite of x14's plain min-label propagation
-    (which needs graph-diameter rounds). `vertices` carries `vec_id`;
+    the O(log n)-round rewrite of plain min-label propagation (which
+    needs graph-diameter rounds); the one engine x14, x14b and the
+    keep-best family label with. `vertices` carries `vec_id`;
     `edges` is an undirected half edge list (src, dst). Returns
     (vec_id, component) with component = min vec_id of the component.
 
@@ -2544,54 +2465,6 @@ def x14b_dedup_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         plane="mixed",
         probe_hamming=1,
     ).select(F.col("vec_a").alias("src"), F.col("vec_b").alias("dst"))
-    return connected_components(emb.select("vec_id"), edges)
-
-
-@query(
-    "x14c_dedup_clusters_star",
-    oracle="""
-    WITH RECURSIVE v AS (
-      SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e,
-             sqrt(list_sum(list_transform(embedding,
-                  x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-      FROM embeddings
-    ), edges AS (
-      SELECT a.vec_id AS src, b.vec_id AS dst
-      FROM v a JOIN v b ON a.vec_id <> b.vec_id
-      WHERE list_sum(list_transform(list_zip(a.e, b.e), s -> s[1] * s[2]))
-            / (a.nrm * b.nrm) >= 0.25
-    ), reach(id, lab) AS (
-      SELECT vec_id, vec_id FROM v
-      UNION
-      SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.id
-    )
-    SELECT id AS vec_id, min(lab) AS component
-    FROM reach GROUP BY id
-    """,
-)
-def x14c_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X14c: the large-star/small-star CC engine (x14b's labeling) run
-    over the EXACT edge set, oracle-graded against the same DuckDB
-    recursive CTE as x14 — cross-engine validation that the O(log n)
-    star rewrite computes identical components to both the plain
-    min-label propagation (x14) and a recursive-CTE closure. x14b is
-    this engine composed with LSH edge generation instead of the
-    O(n²) oracle-baseline join."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    v = emb.select(
-        "vec_id",
-        _as_double(F.col("embedding")).alias("e"),
-        F.sqrt(_dot(_as_double(F.col("embedding")),
-                    _as_double(F.col("embedding")))).alias("nrm"),
-    )
-    a, b = v.alias("a"), v.alias("b")
-    cos = _dot(F.col("a.e"), F.col("b.e")) / (F.col("a.nrm") * F.col("b.nrm"))
-    edges = (
-        a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
-        .filter(cos >= 0.25)
-        .select(F.col("a.vec_id").alias("src"), F.col("b.vec_id").alias("dst"))
-    )
     return connected_components(emb.select("vec_id"), edges)
 
 
@@ -3044,6 +2917,41 @@ def x4g_ann_hyperplane_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _assign_first8(emb: DataFrame, *carry: str) -> DataFrame:
+    """The float-L2 assignment to a fixed codebook, the first 8
+    vectors, shared by x4h and x45: every squared distance is the
+    left fold over the 64 per-dimension squared differences (the
+    oracle's list_reduce, term for term), and each vector takes its
+    per-vector minimum, ties → lowest centroid id. Returns (vec_id,
+    centroid_id, *carry), each ``carry`` column min-aggregated (it is
+    per-vector, so min is just its value). The 8-row codebook
+    broadcasts; the only row shuffle is the per-vector argmin."""
+    cent = emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("c")
+    )
+    diff = lambda j: (  # noqa: E731
+        F.element_at(F.col("embedding"), j + 1).cast("double")
+        - F.element_at(F.col("c"), j + 1).cast("double")
+    )
+    prods = F.transform(
+        F.sequence(F.lit(0), F.lit(63)), lambda j: diff(j) * diff(j)
+    )
+    dist = F.aggregate(prods, F.lit(0.0), lambda a, x: a + x)
+    a = emb.crossJoin(F.broadcast(cent)).select(
+        "vec_id", *carry, "centroid_id", dist.alias("dist")
+    )
+    m = a.groupBy("vec_id").agg(F.min("dist").alias("md"))
+    return (
+        a.join(m, "vec_id")
+        .filter(F.col("dist") == F.col("md"))
+        .groupBy("vec_id")
+        .agg(
+            F.min("centroid_id").alias("centroid_id"),
+            *[F.min(c).alias(c) for c in carry],
+        )
+    )
+
+
 @query(
     "x4h_ivf_assign_arith",
     oracle="""
@@ -3089,34 +2997,8 @@ def x4h_ivf_assign_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors; the only row shuffle is the per-vector argmin groupBy.
     x4e keeps the trained-k-means path (iterative float — honestly
     ungradable bit-exact); this twin proves the probe math."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    cent = (
-        emb.filter(F.col("vec_id") < 8)
-        .select(
-            F.col("vec_id").alias("centroid_id"),
-            F.col("embedding").alias("c"),
-        )
-    )
-    diff = lambda j: (  # noqa: E731
-        F.element_at(F.col("embedding"), j + 1).cast("double")
-        - F.element_at(F.col("c"), j + 1).cast("double")
-    )
-    prods = F.transform(
-        F.sequence(F.lit(0), F.lit(63)), lambda j: diff(j) * diff(j)
-    )
-    dist = F.aggregate(prods, F.lit(0.0), lambda a, x: a + x)
-    a = emb.crossJoin(F.broadcast(cent)).select(
-        "vec_id", "label", "centroid_id", dist.alias("dist")
-    )
-    m = a.groupBy("vec_id").agg(F.min("dist").alias("md"))
-    assigned = (
-        a.join(m, "vec_id")
-        .filter(F.col("dist") == F.col("md"))
-        .groupBy("vec_id")
-        .agg(
-            F.min("centroid_id").alias("centroid_id"),
-            F.min("label").alias("label"),
-        )
+    assigned = _assign_first8(
+        load_table(spark, sf_dir, "embeddings"), "label"
     )
     return assigned.groupBy("centroid_id").agg(
         F.count("*").alias("n_assigned"),
@@ -3454,28 +3336,7 @@ def x45_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (8 × 20k rows only); the graded accounting is unchanged and
     bit-exact."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cent = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("c")
-    )
-    diff = lambda j: (  # noqa: E731
-        F.element_at(F.col("embedding"), j + 1).cast("double")
-        - F.element_at(F.col("c"), j + 1).cast("double")
-    )
-    dist = F.aggregate(
-        F.transform(F.sequence(F.lit(0), F.lit(63)), lambda j: diff(j) * diff(j)),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    a = emb.crossJoin(F.broadcast(cent)).select(
-        "vec_id", "centroid_id", dist.alias("dist")
-    )
-    m = a.groupBy("vec_id").agg(F.min("dist").alias("md"))
-    assigned = (
-        a.join(m, "vec_id")
-        .filter(F.col("dist") == F.col("md"))
-        .groupBy("vec_id")
-        .agg(F.min("centroid_id").alias("centroid_id"))
-    )
+    assigned = _assign_first8(emb)
     clustered = assigned.join(emb.select("vec_id", "embedding"), "vec_id")
     scored = clustered.groupBy("centroid_id").applyInPandas(
         _bucket_allpairs_kernel(0.25),
@@ -3818,7 +3679,7 @@ def x55_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     times, you keep the LONGEST/highest-quality capture, not the one
     with the smallest id. Pipeline: exact word-3-gram Jaccard edges
     (J ≥ 0.5, compared in pure integers: 2·|∩| ≥ |∪|), connected
-    components via the large-star/small-star engine (the x14b/x14c
+    components via the large-star/small-star engine (the x14/x14b
     labeling — O(log n) rounds, min-label = cluster id), then one
     row_number window picks each cluster's representative by
     (n_tokens DESC, doc_id) — "keep longest", the RefinedWeb/CCNet
@@ -3832,7 +3693,7 @@ def x55_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     not all-pairs; the oracle's a×b Jaccard join is the disclosed
     O(n²) baseline. At 100 TB you swap the exact gram join for the
     x4n/x22 band-LSH candidate source — the policy composes with any
-    edge generator, the same split x14c (exact edges) vs x14b (LSH
+    edge generator, the same split x14 (exact edges) vs x14b (LSH
     edges) documents. Hot-gram skew in the candidate join is the
     known hazard; the mitigation is the x46 content-defined gram
     SAMPLING or a document-frequency prefix filter, both ahead of

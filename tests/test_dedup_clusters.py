@@ -1,6 +1,8 @@
 """X14b: LSH-edge connected components vs the exact x14 baseline.
 
-Three pins (VERDICT r2 next-round #3):
+x14 and x14b run the one star-rewrite engine (connected_components);
+they differ only in their edge source — x14's exact O(n²) cosine
+join, x14b's fused LSH kernel. Three pins (VERDICT r2 next-round #3):
 1. the star-rewrite CC engine is exact on a handcrafted graph whose
    diameter forces multiple alternation rounds;
 2. x14b's edge generation is the fused LSH group kernel and plans

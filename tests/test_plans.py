@@ -259,7 +259,9 @@ def test_query_construction_schedules_no_job(spark):
     # Known exemption (documented, not drift): x4f_ann_index_topk
     # materializes its LSH index on first use and collects the probe's
     # L bucket ids — a serving-path side effect its docstring declares.
-    for name in ("x4e_ann_ivf_topk", "x4_cosine_topk",
+    # x4b is the same LSH index probed in flight: it broadcasts the
+    # query's buckets instead of collecting them, so it runs no job.
+    for name in ("x4e_ann_ivf_topk", "x4_cosine_topk", "x4b_ann_lsh_topk",
                  *HEADLINE,
                  "x22_incremental_dedup_exact",
                  "x22b_incremental_dedup_near"):

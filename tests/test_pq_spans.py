@@ -232,22 +232,21 @@ class TestTrainedPQ:
             assert all(0 <= c < _PQ_K for c in used)
 
     def test_arrow_encode_is_bit_identical(self, spark):
-        """pq_encode_arrow must reproduce pq_encode row for row —
-        codes AND q_err doubles — on the whole sf0.001 corpus: the
-        numpy kernel's explicit d-ascending accumulation is the same
-        strict left fold as the Column form, argmin the same
-        first-min, so nothing may differ by even one ulp."""
+        """The IVF-PQ engine's encode kernel against one centroid at
+        the origin (x47b's codes) must reproduce pq_encode's codes per
+        vec_id on the whole sf0.001 corpus: the residual x − 0/10⁴ is
+        x exactly, the numpy kernel's explicit d-ascending
+        accumulation is the same strict left fold as the Column form,
+        and argmin the same first-min, so no code may differ."""
         from pdf_etl_engine_spark.operators.ann_index import (
-            pq_encode_arrow,
+            _ivfpq_encode_arrow,
         )
 
         emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-        a = {
-            r.vec_id: (r.pq_code, r.q_err_raw)
-            for r in pq_encode(emb).collect()
-        }
+        origin = [{"cell": 0, "c": [0] * 64}]
+        a = {r.vec_id: r.pq_code for r in pq_encode(emb).collect()}
         b = {
-            r.vec_id: (r.pq_code, r.q_err_raw)
-            for r in pq_encode_arrow(emb).collect()
+            r.vec_id: r.code
+            for r in _ivfpq_encode_arrow(emb, origin).collect()
         }
         assert a == b and len(a) > 0

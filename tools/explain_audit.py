@@ -69,7 +69,8 @@ AUDITED = {
     "x4k_knn_join_brute": "map-only: one Arrow block kernel per vector "
     "batch against the broadcast matrix (ArrowEvalPython/MapInPandas, "
     "Python BY DESIGN) — zero shuffles; the exact all-kNN baseline the "
-    "x4b/x4e/x4f index probes are graded against.",
+    "LSH probes (x4b in flight, x4f persisted) and the x4e IVF probe "
+    "are graded against.",
     "x4j2_lsh_near_dup_colocated": "the 100 TB near-dup configuration "
     "(r11): candidate generation and rescore FUSED into one "
     "FlatMapGroupsInPandas kernel per (table, bucket) group — NO join "
@@ -117,12 +118,16 @@ AUDITED = {
     "array_position(array_min), packed int64 out — no UDF, no "
     "shuffle; the 8-byte code column is the 32× scan-size win at "
     "10^12 vectors (r12).",
-    "x47b_pq_adc_topk": "queries BroadcastExchange with a "
-    "precomputed per-query 128-entry ADC LUT (the standard PQ "
-    "trick: per-pair work = 8 lookups + adds, measured 30.7→4.3 s "
-    "at sf1); the only keyed exchange is the per-query top-5, "
-    "WindowGroupLimit-partial per partition (r12). r14: the encode "
-    "half is the Arrow kernel (one mapInArrow feeding the LUT join).",
+    "x47b_pq_adc_topk": "the IVF-PQ engine at one origin cell: the "
+    "engine's encode kernel (one mapInArrow, residual = the vector) "
+    "emits packed (vec_id, cell 0, code); the queries ride a "
+    "BroadcastExchange with a precomputed 128-entry mixer ADC LUT each "
+    "(the standard PQ trick: per-pair work = 8 lookups + adds, measured "
+    "30.7→4.3 s at sf1) into the engine's scorer, whose equi-join on "
+    "the constant cell folds to a Filter (cell = 0) and a broadcast "
+    "nested-loop pairing of every code with every query; the only keyed "
+    "exchange is the per-query top-5, WindowGroupLimit-partial per "
+    "partition.",
     "x47d_ivfpq_topk": "IVF-PQ engine, mixer codebook, in flight: the "
     "coarse model trains declaratively (fixed-point Lloyd), then ONE "
     "map-only Arrow kernel assigns + residual-encodes every vector into "
@@ -180,7 +185,8 @@ AUDITED = {
     "per-(vector, subspace) rows, every sum an exact BIGINT.",
     "x55_cluster_keep_best": "keep-best dedup (r13): gram-keyed "
     "equi-join candidate generation (no CartesianProduct), integer "
-    "Jaccard test, star-contraction components, then one "
+    "Jaccard test, star-contraction components (connected_components, "
+    "the engine x14 and x14b label with), then one "
     "(component)-keyed window picks the keep-longest representative.",
     "x55b_keep_best_prefix": "prefix-filtered keep-best dedup (r13): "
     "candidate join keyed on the rarest-prefix grams only (hot grams "
