@@ -30,13 +30,13 @@ from pyspark.sql.window import Window
 
 from pdf_etl_engine_spark.catalog import load_table
 from pdf_etl_engine_spark.functions.stable import stable_round
+from pdf_etl_engine_spark.functions.texthash import (
+    char_codes,
+    kr_roll,
+    kr_roll_sql,
+    words as _words,
+)
 from pdf_etl_engine_spark.registry import query
-
-
-def _words(col: str = "text") -> Column:
-    """Non-empty whitespace tokens, identical to DuckDB
-    ``list_filter(string_split(text,' '), w -> w <> '')``."""
-    return F.filter(F.split(F.col(col), " "), lambda w: w != "")
 
 
 def _ngrams(words: Column, n: int) -> Column:
@@ -534,7 +534,7 @@ def x23_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     source; stage 2's window runs over #sources rows (tens), not the
     corpus. Nothing corpus-wide is ever shuffled or re-read."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.size(F.filter(F.split(F.col("text"), " "), lambda w: w != ""))
+    toks = F.size(_words())
     per_src = docs.groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.sum(toks).alias("n_tokens"),
@@ -602,7 +602,7 @@ def x24_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the text — same groups, narrower wire); the oracle-graded form
     keys on text so both engines compare identical values."""
     docs = load_table(spark, sf_dir, "documents")
-    ws = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
+    ws = _words()
     n_chunks = F.ceil(F.size(ws) / F.lit(20.0)).cast("int")
     # gate on >=1 chunk: sequence(1, 0) runs DESCENDING ([1, 0]) and
     # would emit two phantom empty chunks per zero-word doc where the
@@ -1508,22 +1508,6 @@ def x44_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _SPAN_G = 40  # duplicated-substring detection length (chars)
-_SPAN_M = 2147483647  # Karp-Rabin modulus (2^31 - 1; products stay < 2^39)
-
-
-def _span_roll(arr: Column, base: int, seed: int) -> Column:
-    """Karp-Rabin left fold over char codes, int64-exact (the x9b
-    hash family at a second (base, seed) so two independent 31-bit
-    hashes key the gram — collision probability per position pair
-    ~2^-62, and both engines compute the identical pair so grading is
-    exact regardless)."""
-    b = F.lit(base).cast("long")
-    m = F.lit(_SPAN_M).cast("long")
-    return F.aggregate(
-        arr,
-        F.lit(seed).cast("long"),
-        lambda a, c: (a * b + c.cast("long")) % m,
-    )
 
 
 def substring_dup_spans(
@@ -1565,21 +1549,21 @@ def substring_dup_spans(
     pair up — the window count on the hash key marks them in
     place."""
     g = gram_len
-    codes = F.transform(
-        F.sequence(F.lit(1), F.length("text")),
-        lambda i: F.ascii(F.col("text").substr(i, F.lit(1))),
-    )
     n = F.length("text")
     pos_arr = F.when(
         n >= g, F.sequence(F.lit(0), n - g)
     ).otherwise(F.array().cast("array<int>"))
-    d = docs.select("doc_id", codes.alias("cs"), pos_arr.alias("ps"))
+    d = docs.select(
+        "doc_id", char_codes(F.col("text")).alias("cs"), pos_arr.alias("ps")
+    )
+    # two independent 31-bit hashes key a gram: a false match needs
+    # both to collide (~2^-62 per position pair)
     grams = F.transform(
         F.col("ps"),
         lambda i: F.struct(
             i.cast("long").alias("pos"),
-            _span_roll(F.slice(F.col("cs"), i + 1, g), 131, 7).alias("h1"),
-            _span_roll(F.slice(F.col("cs"), i + 1, g), 137, 11).alias("h2"),
+            kr_roll(F.slice(F.col("cs"), i + 1, g), 131, 7).alias("h1"),
+            kr_roll(F.slice(F.col("cs"), i + 1, g), 137, 11).alias("h2"),
         ),
     )
     gr = d.select("doc_id", F.explode(grams).alias("g")).select(
@@ -1617,21 +1601,17 @@ def _span_gram_cte(g: int = _SPAN_G) -> str:
     """Shared oracle CTE chain: unsampled double-hash grams -> global
     duplicate mark -> per-doc island merge (term-for-term twin of
     substring_dup_spans at sample_mod=1)."""
+    codes = (
+        f"list_transform(range(i + 1, i + {g} + 1), "
+        "j -> CAST(ascii(substr(text, CAST(j AS INTEGER), 1)) AS BIGINT))"
+    )
     return f"""
     WITH c AS (
       SELECT doc_id, text, length(text) AS n FROM documents
     ), g AS (
       SELECT doc_id, CAST(i AS BIGINT) AS pos,
-             list_reduce([CAST(7 AS BIGINT)] || list_transform(
-               range(i + 1, i + {g + 1}),
-               j -> CAST(ascii(substr(text, CAST(j AS INTEGER), 1))
-                         AS BIGINT)),
-               (a, b) -> (a * 131 + b) % {_SPAN_M}) AS h1,
-             list_reduce([CAST(11 AS BIGINT)] || list_transform(
-               range(i + 1, i + {g + 1}),
-               j -> CAST(ascii(substr(text, CAST(j AS INTEGER), 1))
-                         AS BIGINT)),
-               (a, b) -> (a * 137 + b) % {_SPAN_M}) AS h2
+             {kr_roll_sql(codes, 131, 7)} AS h1,
+             {kr_roll_sql(codes, 137, 11)} AS h2
       FROM c, UNNEST(range(0, greatest(n - {g - 1}, 0))) AS t(i)
     ), d AS (
       SELECT doc_id, pos, count(*) OVER (PARTITION BY h1, h2) AS cnt

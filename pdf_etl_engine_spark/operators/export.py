@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from pdf_etl_engine_spark.catalog import load_table
+from pdf_etl_engine_spark.functions.texthash import words as _words
 
 # x33's epoch-salted Knuth multiplicative hash (mod 2^32)
 _KNUTH = 2654435761
@@ -58,7 +59,7 @@ def export_training_shards(
     sorted by pos; same epoch ⇒ same order, next epoch ⇒ a fresh
     permutation from the same corpus."""
     docs = load_table(spark, sf_dir, "documents")
-    words = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
+    words = _words()
     n_tokens = F.size(words)
     stop_arr = F.array(
         *[

@@ -18,6 +18,14 @@ from pyspark.sql.window import Window
 
 from pdf_etl_engine_spark.catalog import load_table, table_path
 from pdf_etl_engine_spark.functions.stable import stable_round
+from pdf_etl_engine_spark.functions.texthash import (
+    M as KR_M,
+    kr_roll,
+    kr_roll_sql,
+    word_hashes,
+    word_hashes_sql,
+    words as _words,
+)
 from pdf_etl_engine_spark.registry import query
 
 # Tiny English stopword list for X1/quality scoring (public knowledge).
@@ -151,19 +159,35 @@ def _shingles(text_col: Column, k: int = 3) -> Column:
     )
 
 
-def minhash_signature(text_col: Column, n_hashes: int = _N_HASHES) -> Column:
-    """MinHash signature: per seed, min over shingles of a seeded
-    64-bit hash. Pure array expressions — computed per-row in codegen,
-    no shuffle, no UDF."""
-    sh = _shingles(text_col)
+def minhash_signature(shingles: Column, n_hashes: int = _N_HASHES) -> Column:
+    """MinHash signature of a shingle-array column: per seed, min over
+    shingles of a seeded 64-bit hash. Pure array expressions — computed
+    per-row in codegen, no shuffle, no UDF. Pass a projected
+    ``_shingles`` column, not the expression: each of the n_hashes
+    seeds reads it, and an attribute is read, not rebuilt, per seed
+    (CollapseProject keeps the projection because the expression is
+    not cheap and is referenced more than once)."""
     return F.array(
         *[
             F.array_min(
-                F.transform(sh, lambda s: F.xxhash64(s, F.lit(seed)))
+                F.transform(shingles, lambda s: F.xxhash64(s, F.lit(seed)))
             )
             for seed in range(n_hashes)
         ]
     )
+
+
+def minhash_bands(sig: str) -> Column:
+    """The _BANDS band signatures of a MinHash signature column: each
+    band's _N_HASHES/_BANDS rows joined and hashed to one 64-bit key."""
+    rows = _N_HASHES // _BANDS
+
+    def band(b: int) -> Column:
+        return F.concat_ws(
+            ",", *[F.element_at(sig, b * rows + r + 1) for r in range(rows)]
+        )
+
+    return F.array(*[F.xxhash64(band(b)) for b in range(_BANDS)])
 
 
 @query("x3_dedup_near_minhash")  # rows-only: hash functions are engine-specific
@@ -180,26 +204,11 @@ def x3_dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-bounded sig relation). The estimated Jaccard (signature
     agreement) filters candidates at the end."""
     docs = load_table(spark, sf_dir, "documents")
-    sig = docs.select("doc_id", minhash_signature(F.col("text")).alias("sig"))
-    rows_per_band = _N_HASHES // _BANDS
+    sig = docs.select("doc_id", _shingles(F.col("text")).alias("sh")).select(
+        "doc_id", minhash_signature(F.col("sh")).alias("sig")
+    )
     bands = sig.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.concat_ws(
-                            ",",
-                            *[
-                                F.element_at("sig", b * rows_per_band + r + 1)
-                                for r in range(rows_per_band)
-                            ],
-                        )
-                    )
-                    for b in range(_BANDS)
-                ]
-            )
-        ).alias("band_id", "band_sig"),
+        "doc_id", F.posexplode(minhash_bands("sig")).alias("band_id", "band_sig")
     )
     left = bands.alias("l")
     right = bands.alias("r")
@@ -235,32 +244,36 @@ def x3_dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("x3b_dedup_simhash")  # rows-only: engine-specific hash
-def x3b_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X3b: 16-bit SimHash buckets — per-word hash votes per bit, sign
-    → bit; near-dups share buckets. Returns bucket histogram (largest
-    first). All array expressions, zero Python."""
-    docs = load_table(spark, sf_dir, "documents")
-    words = F.split(F.col("text"), " ")
+def simhash16(hashes: Column) -> Column:
+    """16-bit SimHash of a per-word hash array: bit b is the sign of
+    the ±1 votes of the hashes' bit b (set when more hashes have it
+    set than clear). Pass a projected column: each of the 16 votes
+    reads it (see minhash_signature)."""
 
     def vote(b: int) -> Column:
-        def merge(acc: Column, w: Column) -> Column:
-            return acc + F.when(
-                F.shiftright(F.xxhash64(w), b).bitwiseAND(F.lit(1)) == 1, 1
-            ).otherwise(-1)
+        return F.aggregate(
+            hashes,
+            F.lit(0).cast("long"),
+            lambda acc, h: acc
+            + F.when(F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1),
+        )
 
-        return F.aggregate(words, F.lit(0), merge)
+    sim = F.lit(0).cast("long")
+    for b in range(16):
+        sim = sim + F.when(vote(b) > 0, 1 << b).otherwise(0)
+    return sim
 
-    bit_terms = [
-        F.when(vote(b) > 0, F.lit(1 << b).cast("long"))
-        .otherwise(F.lit(0).cast("long"))
-        for b in range(16)
-    ]
-    simhash = bit_terms[0]
-    for term in bit_terms[1:]:
-        simhash = simhash + term
+
+@query("x3b_dedup_simhash")  # rows-only: engine-specific hash
+def x3b_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X3b: 16-bit SimHash buckets over xxhash64 word hashes; near-dups
+    share buckets. Returns bucket histogram (largest first). All array
+    expressions, zero Python."""
+    docs = load_table(spark, sf_dir, "documents")
+    hs = F.transform(F.split(F.col("text"), " "), lambda w: F.xxhash64(w))
     return (
-        docs.select(simhash.alias("simhash_bucket"))
+        docs.select(hs.alias("hs"))
+        .select(simhash16(F.col("hs")).alias("simhash_bucket"))
         .groupBy("simhash_bucket")
         .agg(F.count("*").alias("n_docs"))
         .orderBy(F.desc("n_docs"), "simhash_bucket")
@@ -442,7 +455,7 @@ def x6_text_analysis_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     language-ID vote count (x8) — all integer aggregates, so the
     cross-engine comparison is exact. One scan, one shuffle."""
     docs = load_table(spark, sf_dir, "documents")
-    words = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
+    words = _words()
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     n_tokens = F.size(words)
     n_stop = F.size(
@@ -495,7 +508,7 @@ def x7_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     stopword ratio, mean word length, and a pass/fail gate of the kind
     used to filter pretraining corpora. Pure array/scalar expressions."""
     docs = load_table(spark, sf_dir, "documents")
-    words = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
+    words = _words()
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     n_tokens = F.size(words)
     n_stop = F.size(F.filter(words, lambda w: F.array_contains(stop_arr, w)))
@@ -2179,7 +2192,7 @@ def x12_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream writer emits one training sequence per (lang, seq_id)
     group."""
     docs = load_table(spark, sf_dir, "documents")
-    n_tokens = F.size(F.filter(F.split(F.col("text"), " "), lambda w: w != ""))
+    n_tokens = F.size(_words())
     w = (
         Window.partitionBy("lang")
         .orderBy("doc_id")
@@ -2229,7 +2242,7 @@ def x13_text_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     feeds the ANN index builder (x4b) partitioned by (doc_id band)."""
     size_, stride = 32, 24
     docs = load_table(spark, sf_dir, "documents")
-    tokens = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
+    tokens = _words()
     starts = F.sequence(
         F.lit(0), F.greatest(F.size(tokens) - 1, F.lit(0)), F.lit(stride)
     )
@@ -2241,9 +2254,7 @@ def x13_text_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(tokens).alias("n_tokens"),
         F.posexplode(chunks).alias("chunk_id", "chunk_text"),
     )
-    n_chunk = F.size(
-        F.filter(F.split(F.col("chunk_text"), " "), lambda w: w != "")
-    )
+    n_chunk = F.size(_words("chunk_text"))
     return exploded.select(
         "doc_id",
         F.col("chunk_id").cast("long").alias("chunk_id"),
@@ -2468,125 +2479,116 @@ def x14b_dedup_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return connected_components(emb.select("vec_id"), edges)
 
 
+def _word_grams(hs: Column) -> Column:
+    """Karp-Rabin roll of every 5-word window of a word-hash array."""
+    return F.transform(
+        F.sequence(F.lit(1), F.size(hs) - 4),
+        lambda i: kr_roll(F.slice(hs, i, 5)),
+    )
+
+
+_WORD_GRAMS_SQL = (
+    "list_transform(range(1, len(hs) - 3), "
+    f"i -> {kr_roll_sql('list_slice(hs, i, i + 4)')})"
+)
+
+
 @query(
     "x9b_fingerprint_arith",
-    oracle="""
-    WITH w AS (
-      SELECT doc_id,
-             list_filter(string_split(text, ' '), x -> x <> '') AS ws
-      FROM documents
-    ), wh AS (
-      SELECT doc_id,
-             list_transform(ws, x -> list_reduce(
-               [CAST(7 AS BIGINT)] || list_transform(
-                 range(1, len(x) + 1),
-                 i -> CAST(ascii(substr(x, CAST(i AS INTEGER), 1))
-                           AS BIGINT)),
-               (a, b) -> (a * 131 + b) % 2147483647)) AS hs
-      FROM w
-    )
+    oracle=f"""
+    WITH wh AS (SELECT doc_id, {word_hashes_sql()} AS hs FROM documents)
     SELECT doc_id,
-           list_reduce([CAST(7 AS BIGINT)] || hs,
-                       (a, b) -> (a * 131 + b) % 2147483647)
-             AS content_hash,
-           CASE WHEN len(hs) >= 5 THEN
-             list_min(list_transform(range(1, len(hs) - 3), i ->
-               list_reduce([CAST(7 AS BIGINT)] || list_slice(hs, i, i + 4),
-                           (a, b) -> (a * 131 + b) % 2147483647)))
+           {kr_roll_sql('hs')} AS content_hash,
+           CASE WHEN len(hs) >= 5 THEN list_min({_WORD_GRAMS_SQL})
            END AS winnow_fp
     FROM wh
     """,
 )
 def x9b_fingerprint_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X9b: the rolling-hash fingerprint GRADED cross-engine — x9's
-    shape re-expressed in pure integer arithmetic (Karp-Rabin
-    polynomial, base 131, mod 2³¹−1, seed 7) instead of engine-native
-    xxhash64, so DuckDB recomputes bit-identical values: per-word char
-    rolls feed per-5-gram word-hash rolls; content hash rolls over all
-    word hashes; the winnowing fingerprint is the min gram hash. This
-    is the content-defined fingerprint an incremental dedup store
-    (x22) keys on — engine-portable, so a store written by this
-    engine validates against any other implementation.
+    shape re-expressed in pure integer arithmetic (the texthash
+    Karp-Rabin roll, base 131, mod 2³¹−1, seed 7) instead of
+    engine-native xxhash64, so DuckDB recomputes bit-identical values:
+    per-word char rolls feed per-5-gram word-hash rolls; content hash
+    rolls over all word hashes; the winnowing fingerprint is the min
+    gram hash. This is the content-defined fingerprint an incremental
+    dedup store (x22) keys on — engine-portable, so a store written by
+    this engine validates against any other implementation.
 
     Scale shape: entirely per-row array expressions inside codegen —
     no UDF, no shuffle, no join; cost is O(total chars) map-only."""
     docs = load_table(spark, sf_dir, "documents")
-    M = F.lit(2147483647).cast("long")
-    B = F.lit(131).cast("long")
-    seed = F.lit(7).cast("long")
-
-    def roll(arr):
-        return F.aggregate(
-            arr, seed, lambda a, b: (a * B + b.cast("long")) % M
-        )
-
-    words = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
-    wordhash = F.transform(
-        words,
-        lambda x: roll(
-            F.transform(
-                F.sequence(F.lit(1), F.length(x)),
-                lambda i: F.ascii(x.substr(i, F.lit(1))),
-            )
-        ),
-    )
-    d = docs.select("doc_id", wordhash.alias("hs"))
-    nh = F.size("hs")
-    winnow = F.when(
-        nh >= 5,
-        F.array_min(
-            F.transform(
-                F.sequence(F.lit(1), nh - 4),
-                lambda i: roll(F.slice(F.col("hs"), i, 5)),
-            )
-        ),
-    )
+    d = docs.select("doc_id", word_hashes().alias("hs"))
+    winnow = F.when(F.size("hs") >= 5, F.array_min(_word_grams(F.col("hs"))))
     return d.select(
         "doc_id",
-        roll(F.col("hs")).alias("content_hash"),
+        kr_roll(F.col("hs")).alias("content_hash"),
         winnow.alias("winnow_fp"),
     )
 
 
-_MH_P = 2147483647
 _MH_K = 16  # signature length; 4 bands x 4 rows
+
+
+def _arith_band_frame(docs: DataFrame) -> DataFrame:
+    """(doc_id, lang, band_idx, band_hash) rows of the portable
+    MinHash-LSH banding (x3d's machinery, shared with x22c): word
+    Karp-Rabin rolls → 5-gram hashes → 16 universal-hash minima →
+    4 rolled band keys. Docs under 5 words produce no bands (nothing
+    to block on)."""
+    d = docs.select("doc_id", "lang", word_hashes().alias("hs")).filter(
+        F.size("hs") >= 5
+    )
+    d = d.select("doc_id", "lang", _word_grams(F.col("hs")).alias("gs"))
+    sig = F.transform(
+        F.sequence(F.lit(0), F.lit(_MH_K - 1)),
+        lambda k: F.array_min(
+            F.transform(
+                F.col("gs"),
+                lambda g: ((2 * k + 3).cast("long") * g
+                           + (5 * k + 7).cast("long")) % KR_M,
+            )
+        ),
+    )
+    d = d.select("doc_id", "lang", sig.alias("s"))
+    bands = F.explode(
+        F.transform(
+            F.sequence(F.lit(0), F.lit(3)),
+            lambda j: F.struct(
+                j.cast("long").alias("band_idx"),
+                kr_roll(F.slice(F.col("s"), j * 4 + 1, 4)).alias("band_hash"),
+            ),
+        )
+    )
+    return d.select("doc_id", "lang", bands.alias("b")).select(
+        "doc_id", "lang", "b.band_idx", "b.band_hash"
+    )
+
+
+# DuckDB twin of _arith_band_frame: the ``bands`` CTE
+_ARITH_BANDS_SQL = f"""
+    WITH wh AS (
+      SELECT doc_id, lang, {word_hashes_sql()} AS hs FROM documents
+    ), gh AS (
+      SELECT doc_id, lang, {_WORD_GRAMS_SQL} AS gs
+      FROM wh WHERE len(hs) >= 5
+    ), sig AS (
+      SELECT doc_id, lang,
+             list_transform(range(0, {_MH_K}), k ->
+               list_min(list_transform(gs,
+                 g -> ((2 * k + 3) * g + 5 * k + 7) % {KR_M}))) AS s
+      FROM gh
+    ), bands AS (
+      SELECT doc_id, lang, CAST(j AS BIGINT) AS band_idx,
+             {kr_roll_sql('list_slice(s, j * 4 + 1, j * 4 + 4)')} AS band_hash
+      FROM sig, UNNEST(range(0, 4)) AS t(j)
+    )"""
 
 
 @query(
     "x3d_minhash_lsh_arith",
-    oracle=f"""
-    WITH w AS (
-      SELECT doc_id,
-             list_filter(string_split(text, ' '), x -> x <> '') AS ws
-      FROM documents
-    ), wh AS (
-      SELECT doc_id,
-             list_transform(ws, x -> list_reduce(
-               [CAST(7 AS BIGINT)] || list_transform(
-                 range(1, len(x) + 1),
-                 i -> CAST(ascii(substr(x, CAST(i AS INTEGER), 1))
-                           AS BIGINT)),
-               (a, b) -> (a * 131 + b) % {_MH_P})) AS hs
-      FROM w
-    ), gh AS (
-      SELECT doc_id,
-             list_transform(range(1, len(hs) - 3), i ->
-               list_reduce([CAST(7 AS BIGINT)] || list_slice(hs, i, i + 4),
-                           (a, b) -> (a * 131 + b) % {_MH_P})) AS gs
-      FROM wh WHERE len(hs) >= 5
-    ), sig AS (
-      SELECT doc_id,
-             list_transform(range(0, {_MH_K}), k ->
-               list_min(list_transform(gs,
-                 g -> ((2 * k + 3) * g + 5 * k + 7) % {_MH_P}))) AS s
-      FROM gh
-    ), bands AS (
-      SELECT doc_id, CAST(j AS BIGINT) AS band_idx,
-             list_reduce([CAST(7 AS BIGINT)]
-                         || list_slice(s, j * 4 + 1, j * 4 + 4),
-                         (a, b) -> (a * 131 + b) % {_MH_P}) AS band_hash
-      FROM sig, UNNEST(range(0, 4)) AS t(j)
-    )
+    oracle=_ARITH_BANDS_SQL
+    + """
     SELECT band_idx, band_hash, count(*) AS n_docs
     FROM bands GROUP BY 1, 2 HAVING count(*) >= 2
     """,
@@ -2619,19 +2621,8 @@ def x3d_minhash_lsh_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x3e_simhash_arith",
     oracle=f"""
-    WITH w AS (
-      SELECT doc_id, lang,
-             list_filter(string_split(text, ' '), x -> x <> '') AS ws
-      FROM documents
-    ), wh AS (
-      SELECT doc_id, lang,
-             list_transform(ws, x -> list_reduce(
-               [CAST(7 AS BIGINT)] || list_transform(
-                 range(1, len(x) + 1),
-                 i -> CAST(ascii(substr(x, CAST(i AS INTEGER), 1))
-                           AS BIGINT)),
-               (a, b) -> (a * 131 + b) % {_MH_P})) AS hs
-      FROM w
+    WITH wh AS (
+      SELECT doc_id, lang, {word_hashes_sql()} AS hs FROM documents
     ), sig AS (
       SELECT doc_id, lang,
              list_sum(list_transform(range(0, 16), b ->
@@ -2647,157 +2638,29 @@ def x3d_minhash_lsh_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def x3e_simhash_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X3e: SimHash GRADED bit-exact — x3b's bit-vote fingerprint over
+    """X3e: SimHash GRADED bit-exact — x3b's bit vote (simhash16) over
     the portable word hashes (x9b's Karp-Rabin roll) instead of
-    xxhash64: each of 16 bits takes the sign of the ±1 votes across
-    the document's word hashes. The graded result is the collision
-    table (lang, simhash) → count for buckets holding ≥2 documents —
-    identical documents collide identically in both engines.
+    xxhash64. The graded result is the collision table (lang, simhash)
+    → count for buckets holding ≥2 documents — identical documents
+    collide identically in both engines.
 
     Scale shape: map-only array expressions per row, one groupBy on
     the 16-bit bucket key — the same near-dup blocking plan as x3b,
     now independently verifiable."""
     docs = load_table(spark, sf_dir, "documents")
-    M = F.lit(_MH_P).cast("long")
-    B = F.lit(131).cast("long")
-    seed = F.lit(7).cast("long")
-
-    def roll(arr):
-        return F.aggregate(
-            arr, seed, lambda a, b: (a * B + b.cast("long")) % M
-        )
-
-    words = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
-    wordhash = F.transform(
-        words,
-        lambda x: roll(
-            F.transform(
-                F.sequence(F.lit(1), F.length(x)),
-                lambda i: F.ascii(x.substr(i, F.lit(1))),
-            )
-        ),
-    )
-    d = docs.select("doc_id", "lang", wordhash.alias("hs"))
-    vote = lambda b: F.aggregate(  # noqa: E731
-        F.col("hs"),
-        F.lit(0).cast("long"),
-        lambda acc, h: acc
-        + F.when(F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(
-            -1
-        ),
-    )
-    sim = F.lit(0).cast("long")
-    for b in range(16):
-        sim = sim + F.when(
-            vote(b) > 0, F.lit(1 << b).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
     return (
-        d.select("lang", sim.alias("simhash"))
+        docs.select("lang", word_hashes().alias("hs"))
+        .select("lang", simhash16(F.col("hs")).alias("simhash"))
         .groupBy("lang", "simhash")
         .agg(F.count("*").alias("n_docs"))
         .filter(F.col("n_docs") >= 2)
     )
 
 
-def _arith_band_frame(docs: DataFrame) -> DataFrame:
-    """(doc_id, lang, band_idx, band_hash) rows of the portable
-    MinHash-LSH banding (x3d's machinery, shared with x22c): word
-    Karp-Rabin rolls → 5-gram hashes → 16 universal-hash minima →
-    4 rolled band keys. Docs under 5 words produce no bands (nothing
-    to block on)."""
-    M = F.lit(_MH_P).cast("long")
-    B = F.lit(131).cast("long")
-    seed = F.lit(7).cast("long")
-
-    def roll(arr):
-        return F.aggregate(
-            arr, seed, lambda a, b: (a * B + b.cast("long")) % M
-        )
-
-    words = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
-    wordhash = F.transform(
-        words,
-        lambda x: roll(
-            F.transform(
-                F.sequence(F.lit(1), F.length(x)),
-                lambda i: F.ascii(x.substr(i, F.lit(1))),
-            )
-        ),
-    )
-    d = docs.select("doc_id", "lang", wordhash.alias("hs")).filter(
-        F.size("hs") >= 5
-    )
-    gs = F.transform(
-        F.sequence(F.lit(1), F.size("hs") - 4),
-        lambda i: roll(F.slice(F.col("hs"), i, 5)),
-    )
-    d = d.select("doc_id", "lang", gs.alias("gs"))
-    sig = F.transform(
-        F.sequence(F.lit(0), F.lit(_MH_K - 1)),
-        lambda k: F.array_min(
-            F.transform(
-                F.col("gs"),
-                lambda g: ((2 * k + 3).cast("long") * g
-                           + (5 * k + 7).cast("long")) % M,
-            )
-        ),
-    )
-    d = d.select("doc_id", "lang", sig.alias("s"))
-    bands = F.explode(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(3)),
-            lambda j: F.struct(
-                j.cast("long").alias("band_idx"),
-                roll(F.slice(F.col("s"), j * 4 + 1, 4)).alias("band_hash"),
-            ),
-        )
-    )
-    return d.select("doc_id", "lang", bands.alias("b")).select(
-        "doc_id", "lang", "b.band_idx", "b.band_hash"
-    )
-
-
-_X22C_BANDS_SQL = f"""
-    w AS (
-      SELECT doc_id, lang,
-             list_filter(string_split(text, ' '), x -> x <> '') AS ws
-      FROM documents
-    ), wh AS (
-      SELECT doc_id, lang,
-             list_transform(ws, x -> list_reduce(
-               [CAST(7 AS BIGINT)] || list_transform(
-                 range(1, len(x) + 1),
-                 i -> CAST(ascii(substr(x, CAST(i AS INTEGER), 1))
-                           AS BIGINT)),
-               (a, b) -> (a * 131 + b) % {_MH_P})) AS hs
-      FROM w
-    ), gh AS (
-      SELECT doc_id, lang,
-             list_transform(range(1, len(hs) - 3), i ->
-               list_reduce([CAST(7 AS BIGINT)] || list_slice(hs, i, i + 4),
-                           (a, b) -> (a * 131 + b) % {_MH_P})) AS gs
-      FROM wh WHERE len(hs) >= 5
-    ), sig AS (
-      SELECT doc_id, lang,
-             list_transform(range(0, {_MH_K}), k ->
-               list_min(list_transform(gs,
-                 g -> ((2 * k + 3) * g + 5 * k + 7) % {_MH_P}))) AS s
-      FROM gh
-    ), bands AS (
-      SELECT doc_id, lang, CAST(j AS BIGINT) AS band_idx,
-             list_reduce([CAST(7 AS BIGINT)]
-                         || list_slice(s, j * 4 + 1, j * 4 + 4),
-                         (a, b) -> (a * 131 + b) % {_MH_P}) AS band_hash
-      FROM sig, UNNEST(range(0, 4)) AS t(j)
-    )
-"""
-
-
 @query(
     "x22c_incremental_near_dup_arith",
-    oracle=f"""
-    WITH {_X22C_BANDS_SQL}
-    , store AS (
+    oracle=_ARITH_BANDS_SQL
+    + """, store AS (
       SELECT DISTINCT band_idx, band_hash FROM bands WHERE doc_id % 2 = 0
     ), probe AS (
       SELECT b.doc_id, b.lang,

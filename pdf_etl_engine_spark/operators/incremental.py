@@ -17,6 +17,12 @@ against it:
   store's — any shared (band_id, band_sig) marks the batch doc as a
   near-dup candidate and drops it (MinHash banding: collision
   probability ≈ 1-(1-j^r)^b for Jaccard j, r rows/band, b bands).
+  The bands are x3's: ``minhash_signature`` + ``minhash_bands`` from
+  extensions.py.
+
+``surviving_ids`` is the one probe of both layers; the lazily derived
+store (x22/x22b), the bucketed store and the streaming loop
+(streaming/dedupstream.py) all call it.
 
 Both joins shuffle on short fixed-width keys (the fingerprints), never
 on text; the store is ~64 bytes/doc/band, so a 100 TB corpus's store
@@ -35,38 +41,17 @@ from __future__ import annotations
 
 import pathlib
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_etl_engine_spark.catalog import load_table, table_path
 from pdf_etl_engine_spark.operators.extensions import (
-    _BANDS,
-    _N_HASHES,
+    _shingles,
+    minhash_bands,
     minhash_signature,
 )
 from pdf_etl_engine_spark.registry import query
 from pdf_etl_engine_spark.scratch import scratch_dir
-
-_ROWS_PER_BAND = _N_HASHES // _BANDS
-
-
-def _band_sigs(sig_col: str) -> Column:
-    """Hash each band's slice of the MinHash signature to one 64-bit
-    band signature (same banding as x3_dedup_near_minhash)."""
-    return F.array(
-        *[
-            F.xxhash64(
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.element_at(sig_col, b * _ROWS_PER_BAND + r + 1)
-                        for r in range(_ROWS_PER_BAND)
-                    ],
-                )
-            )
-            for b in range(_BANDS)
-        ]
-    )
 
 
 def fingerprints(
@@ -75,6 +60,9 @@ def fingerprints(
     """Per-document fingerprints: one row per LSH band —
     (id, content_sha, band_id, band_sig). This is the ONLY thing the
     store keeps; text never enters it.
+
+    The shingle set is projected once and read by all 16 MinHash
+    seeds (see ``minhash_signature``).
 
     ``bands=False`` (r15, guide §1.2 — don't compute what you throw
     away): the EXACT layer only probes ``content_sha``, so a store
@@ -85,23 +73,49 @@ def fingerprints(
     cleanly into a store that also holds banded deltas, and the
     sentinel can never collide with a real band probe (real band_id
     is >= 0)."""
+    ids = (
+        F.col(id_col).alias("fp_id"),
+        F.sha2(F.col("text"), 256).alias("content_sha"),
+    )
     if not bands:
         return docs.select(
-            F.col(id_col).alias("fp_id"),
-            F.sha2(F.col("text"), 256).alias("content_sha"),
+            *ids,
             F.lit(-1).cast("int").alias("band_id"),
             F.lit(0).cast("long").alias("band_sig"),
         )
-    sig = docs.select(
-        F.col(id_col).alias("fp_id"),
-        F.sha2(F.col("text"), 256).alias("content_sha"),
-        minhash_signature(F.col("text")).alias("sig"),
+    sig = docs.select(*ids, _shingles(F.col("text")).alias("sh")).select(
+        "fp_id", "content_sha", minhash_signature(F.col("sh")).alias("sig")
     )
     return sig.select(
         "fp_id",
         "content_sha",
-        F.posexplode(_band_sigs("sig")).alias("band_id", "band_sig"),
+        F.posexplode(minhash_bands("sig")).alias("band_id", "band_sig"),
     )
+
+
+def surviving_ids(
+    ids: DataFrame,
+    fp: DataFrame,
+    store_shas: DataFrame,
+    store_bands: DataFrame | None,
+) -> DataFrame:
+    """The store probe: ``fp_id`` of the (fp_id, content_sha) rows of
+    ``ids`` whose sha is not in ``store_shas`` and, unless
+    ``store_bands`` is None (exact layer only), none of whose
+    ``fp`` band rows shares a (band_id, band_sig) with ``store_bands``.
+    Both are semi/anti joins on fingerprint columns; the store frames
+    are joined as given, so a pre-deduplicated bucketed table stays an
+    Exchange-free scan."""
+    keep = ids.join(store_shas, "content_sha", "left_anti").select("fp_id")
+    if store_bands is None:
+        return keep
+    near_hit = (
+        fp.join(keep, "fp_id", "left_semi")
+        .join(store_bands, ["band_id", "band_sig"], "left_semi")
+        .select("fp_id")
+        .distinct()
+    )
+    return keep.join(near_hit, "fp_id", "left_anti")
 
 
 def dedup_against_store(
@@ -121,23 +135,12 @@ def dedup_against_store(
     exact path used to pay 16 shingle-hash passes per doc it never
     probed."""
     fp = fingerprints(batch, id_col, bands=near)
-    doc_sha = fp.select("fp_id", "content_sha").distinct()
-    survive_exact = doc_sha.join(
-        store.select("content_sha").distinct(), "content_sha", "left_anti"
+    keep = surviving_ids(
+        fp.select("fp_id", "content_sha").distinct(),
+        fp,
+        store.select("content_sha").distinct(),
+        store.select("band_id", "band_sig").distinct() if near else None,
     )
-    keep = survive_exact.select("fp_id")
-    if near:
-        near_hit = (
-            fp.join(keep, "fp_id", "left_semi")
-            .join(
-                store.select("band_id", "band_sig").distinct(),
-                ["band_id", "band_sig"],
-                "left_semi",
-            )
-            .select("fp_id")
-            .distinct()
-        )
-        keep = keep.join(near_hit, "fp_id", "left_anti")
     return batch.join(
         keep.withColumnRenamed("fp_id", id_col), id_col, "left_semi"
     )
@@ -227,23 +230,12 @@ class BucketedFingerprintStore:
         # near=False probes only the sha table — skip the batch's
         # MinHash pass (Catalyst can't prune through posexplode; r15)
         fp = fingerprints(batch, id_col, bands=near)
-        doc_sha = fp.select("fp_id", "content_sha").distinct()
-        survive_exact = doc_sha.join(
-            self.spark.table(self.sha_table), "content_sha", "left_anti"
+        keep = surviving_ids(
+            fp.select("fp_id", "content_sha").distinct(),
+            fp,
+            self.spark.table(self.sha_table),
+            self.spark.table(self.band_table) if near else None,
         )
-        keep = survive_exact.select("fp_id")
-        if near:
-            near_hit = (
-                fp.join(keep, "fp_id", "left_semi")
-                .join(
-                    self.spark.table(self.band_table),
-                    ["band_id", "band_sig"],
-                    "left_semi",
-                )
-                .select("fp_id")
-                .distinct()
-            )
-            keep = keep.join(near_hit, "fp_id", "left_anti")
         return batch.join(
             keep.withColumnRenamed("fp_id", id_col), id_col, "left_semi"
         )

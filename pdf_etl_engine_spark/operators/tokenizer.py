@@ -33,13 +33,10 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_etl_engine_spark.catalog import load_table
+from pdf_etl_engine_spark.functions.texthash import words as _words
 from pdf_etl_engine_spark.registry import query
 
 _EOW = "_"  # end-of-word marker appended to each word's symbol list
-
-
-def _words(col: str = "text") -> Column:
-    return F.filter(F.split(F.col(col), " "), lambda w: w != "")
 
 
 def word_freq(docs: DataFrame) -> DataFrame:

@@ -38,49 +38,27 @@ from pyspark.sql.window import Window
 
 from pdf_etl_engine_spark.catalog import load_table
 from pdf_etl_engine_spark.functions.stable import stable_round
+from pdf_etl_engine_spark.functions.texthash import (
+    char_codes,
+    char_codes_sql,
+    kr_roll,
+    kr_roll_sql,
+    words as _words,
+    words_sql,
+)
 from pdf_etl_engine_spark.registry import query
-
-# Word-hash family: Karp-Rabin fold over code points mod a Mersenne
-# prime, then mod the feature dimension — the x46 span-hash contract
-# at word granularity, so DuckDB recomputes the identical bucket with
-# list_reduce. Base 31 / seed 7 keeps it distinct from the span grams'
-# (131, 7) / (137, 11) pairs.
-_HASH_M = 2_147_483_647
-_HASH_B = 31
-_HASH_SEED = 7
 
 
 def _word_bucket(w: Column, dim: int) -> Column:
-    """Hash one whitespace token into [0, dim) — identical on both
-    engines (integer fold, no engine hash builtin)."""
-    codes = F.transform(
-        F.sequence(F.lit(1), F.length(w)),
-        lambda i: F.ascii(w.substr(i, F.lit(1))).cast("long"),
-    )
-    h = F.aggregate(
-        codes,
-        F.lit(_HASH_SEED).cast("long"),
-        lambda a, c: (a * _HASH_B + c) % _HASH_M,
-    )
-    return (h % dim).cast("int")
+    """Hash one whitespace token into [0, dim) — the texthash
+    Karp-Rabin roll at base 31 (distinct from the span grams' (131, 7)
+    and (137, 11) pairs), identical on both engines."""
+    return (kr_roll(char_codes(w), 31) % dim).cast("int")
 
 
 def _word_bucket_sql(expr: str, dim: int) -> str:
     """DuckDB twin of _word_bucket over a VARCHAR expression."""
-    return (
-        f"CAST(list_reduce([CAST({_HASH_SEED} AS BIGINT)] || "
-        f"list_transform(range(1, len({expr}) + 1), "
-        f"i -> CAST(ascii(substr({expr}, CAST(i AS INTEGER), 1)) AS BIGINT)), "
-        f"(a, c) -> (a * {_HASH_B} + c) % {_HASH_M}) % {dim} AS INTEGER)"
-    )
-
-
-_TOKS_SQL = "list_filter(string_split(text, ' '), w -> w <> '')"
-
-
-def _words() -> Column:
-    """Non-empty whitespace tokens (the curation.py contract)."""
-    return F.filter(F.split(F.col("text"), " "), lambda w: w != "")
+    return f"CAST({kr_roll_sql(char_codes_sql(expr), 31)} % {dim} AS INTEGER)"
 
 
 # ---------------------------------------------------------------------------
@@ -186,7 +164,7 @@ def mg_merge(counts: dict, batch_counts, cap: int) -> dict:
     "x48_heavy_hitters",
     oracle=f"""
     WITH toks AS (
-      SELECT unnest({_TOKS_SQL}) AS token FROM documents
+      SELECT unnest({words_sql()}) AS token FROM documents
     ),
     tot AS (SELECT count(*) AS n_total FROM toks)
     SELECT token, CAST(count(*) AS BIGINT) AS cnt,
@@ -310,7 +288,7 @@ _PC_CTE = f"""
     WITH ws AS (
       SELECT doc_id,
              CASE WHEN lang = 'en' THEN 1 ELSE -1 END AS y,
-             {_TOKS_SQL} AS toks
+             {words_sql()} AS toks
       FROM documents
     ),
     tok AS (SELECT doc_id, y, unnest(toks) AS w FROM ws),
@@ -496,7 +474,7 @@ _DSIR_DIM = 64
     "x50_dsir_importance",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, lang, unnest({_TOKS_SQL}) AS w FROM documents
+      SELECT doc_id, lang, unnest({words_sql()}) AS w FROM documents
     ),
     b AS (
       SELECT doc_id, lang, {_word_bucket_sql('w', _DSIR_DIM)} AS b
@@ -708,7 +686,7 @@ def assign_quartile_shards(diff: DataFrame) -> DataFrame:
     oracle=f"""
     WITH d AS (
       SELECT doc_id,
-             {_TOKS_SQL} AS toks
+             {words_sql()} AS toks
       FROM documents
     ),
     diff AS (
@@ -763,7 +741,7 @@ def x51_curriculum_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     "x53_curation_pipeline",
     oracle=f"""
     WITH ws AS (
-      SELECT doc_id, text, {_TOKS_SQL} AS toks FROM documents
+      SELECT doc_id, text, {words_sql()} AS toks FROM documents
     ),
     scored AS (
       SELECT doc_id, text, toks, {_DIFF_COLS_SQL}

@@ -43,7 +43,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pdf_etl_engine_spark.operators.incremental import fingerprints
+from pdf_etl_engine_spark.operators.incremental import fingerprints, surviving_ids
 
 
 def _store_deltas(store_dir: str) -> list[str]:
@@ -112,8 +112,8 @@ def dedup_batch_fn(
     batch_id. Returned as a closure so tests can invoke it directly
     with a repeated batch_id to pin replay idempotence.
 
-    Probe semantics per micro-batch (matching the batch-mode
-    dedup_against_store):
+    Probe semantics per micro-batch (``incremental.surviving_ids``,
+    the probe of the batch-mode dedup_against_store):
 
     * exact layer — keep only the min(doc_id) row per content_sha
       within the batch (first-wins), then anti-join the store's shas;
@@ -147,28 +147,14 @@ def dedup_batch_fn(
         # near=False probes only content_sha — skip the MinHash pass
         # (fingerprints(bands=False); schema-compatible sentinel rows)
         fp = fingerprints(batch_df, bands=near)
-        doc_sha = fp.select("fp_id", "content_sha").distinct()
         # within-batch first-wins: one winner per content_sha
-        winners = doc_sha.groupBy("content_sha").agg(
-            F.min("fp_id").alias("fp_id")
-        )
-        survive = winners.join(
+        winners = fp.groupBy("content_sha").agg(F.min("fp_id").alias("fp_id"))
+        survive = surviving_ids(
+            winners,
+            fp,
             store.select("content_sha").distinct(),
-            "content_sha",
-            "left_anti",
-        ).select("fp_id")
-        if near:
-            near_hit = (
-                fp.join(survive, "fp_id", "left_semi")
-                .join(
-                    store.select("band_id", "band_sig").distinct(),
-                    ["band_id", "band_sig"],
-                    "left_semi",
-                )
-                .select("fp_id")
-                .distinct()
-            )
-            survive = survive.join(near_hit, "fp_id", "left_anti")
+            store.select("band_id", "band_sig").distinct() if near else None,
+        )
         # job 1: survivors' fingerprints + lang → the batch delta
         # (fp semi-joined to the survivor ids ≡ fingerprints(accepted):
         # fingerprints are deterministic per doc)
